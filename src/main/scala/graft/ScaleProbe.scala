@@ -599,7 +599,7 @@ object ScaleProbe {
         val t0 = System.nanoTime()
         val (model, emb) = operators.CorpusIndex.buildChunkIndex(
           s"probe-chunkidx-$m", docs)
-        val nChunks = spark.read.parquet(model.indexPath).count()
+        val nChunks = operators.Ivf.readIndex(spark, model).count()
         println(f"PROBE chunkidx_build    mult=$m%-3d ${(System.nanoTime() - t0) / 1e9}%8.2f s  chunks=$nChunks%d")
         // embeddings re-derive from documents lazily; probes only need the
         // query vector from them — materialize it tiny instead of paying
@@ -915,7 +915,7 @@ object ScaleProbe {
         (1 to 3).foreach(i => operators.Ivf.appendToIndex(ivf, hotVecs
           .withColumn("vec_id", col("vec_id") + lit(i.toLong * 50000000L))))
         def ratio(mm: operators.Ivf.IvfModel): Double = {
-          val s = spark.read.parquet(mm.indexPath)
+          val s = operators.Ivf.readIndex(spark, mm)
             .groupBy("list").count().collect().map(_.getLong(1))
           s.max.toDouble / (s.sum.toDouble / s.length)
         }

@@ -582,7 +582,7 @@ object SimilarityQueries {
     "ann_list_sizes" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = operators.Ivf.buildIndex(dir, emb)
-      s.read.parquet(model.indexPath)
+      operators.Ivf.readIndex(s, model)
         .groupBy(col("list").cast("int").as("list"))
         .agg(count(lit(1)).as("n_vectors"))
         .orderBy("list")

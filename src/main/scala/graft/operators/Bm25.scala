@@ -800,7 +800,7 @@ object Bm25 {
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       .withColumn("list", explode(
         Ivf.probeListsExpr(col("q_emb"), chunkModel.centroids, nprobeChunk)))
-    val idx0 = spark.read.parquet(chunkModel.indexPath)
+    val idx0 = Ivf.readIndex(spark, chunkModel)
       .select(col("list"), col("vec_id"), col("embedding"))
     val idx = graft.sources.Sinks.readTombstones(spark,
         Ivf.tombstonesPath(chunkModel.indexPath))

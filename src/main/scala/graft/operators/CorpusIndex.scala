@@ -379,7 +379,7 @@ object CorpusIndex {
         embCurP.join(freshIds.withColumnRenamed("doc_id", "vec_id"),
           Seq("vec_id"), "left_semi"),
         model.centroids))
-      val unchangedRows = spark.read.parquet(model.indexPath)
+      val unchangedRows = Ivf.readIndex(spark, model)
         .select("vec_id", "embedding", "list")
         .join(touched.withColumnRenamed("doc_id", "vec_id"),
           Seq("vec_id"), "left_anti")
@@ -433,7 +433,7 @@ object CorpusIndex {
     */
   private def liveIds(spark: org.apache.spark.sql.SparkSession,
                       model: Ivf.IvfModel): DataFrame = {
-    val rows = spark.read.parquet(model.indexPath).select("vec_id")
+    val rows = Ivf.readIndex(spark, model).select("vec_id")
     graft.sources.Sinks
       .readTombstones(spark, Ivf.tombstonesPath(model.indexPath), None)
       .fold(rows)(t => rows.join(t, Seq("vec_id"), "left_anti"))
@@ -579,7 +579,7 @@ object CorpusIndex {
       val addedChunks = spark.read.parquet(artDir + "/added")
       // tombstone every chunk key of a removed parent: the index IS the
       // key→list mapping, so resolution is one keyed join against it
-      val doomedChunks = spark.read.parquet(chunkModel.indexPath)
+      val doomedChunks = Ivf.readIndex(spark, chunkModel)
         .select("vec_id")
         .join(spark.read.parquet(artDir + "/removed")
             .select(col("doc_id").as("parent_id")),
@@ -605,7 +605,7 @@ object CorpusIndex {
     */
   def minLiveVecId(model: Ivf.IvfModel): Long = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val rows = spark.read.parquet(model.indexPath).select("vec_id")
+    val rows = Ivf.readIndex(spark, model).select("vec_id")
     val live = graft.sources.Sinks
       .readTombstones(spark, Ivf.tombstonesPath(model.indexPath), None)
       .fold(rows)(t => rows.join(t, Seq("vec_id"), "left_anti"))

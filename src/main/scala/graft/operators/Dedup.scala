@@ -911,7 +911,7 @@ object Dedup {
   def semanticDupPairs(embeddings: DataFrame, threshold: Double,
                        indexKey: String, nlist: Int = 16): DataFrame = {
     val model = Ivf.buildIndex(indexKey, embeddings, nlist)
-    val v = embeddings.sparkSession.read.parquet(model.indexPath)
+    val v = Ivf.readIndex(embeddings.sparkSession, model)
       .select(col("list"), col("vec_id"), col("embedding"),
         VectorOps.norm(col("embedding")).as("nrm"))
     val a = v.select(col("list"), col("vec_id").as("vec_a"),

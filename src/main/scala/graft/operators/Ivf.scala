@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import graft.functions.VectorOps
 
 /** IVF (inverted-file) approximate nearest neighbor over `embeddings` —
@@ -57,11 +58,59 @@ object Ivf {
   private val DotScale = 1000.0
 
   /** Trained coarse quantizer: (centroidId, centroid on the 1e-6 long grid)
-    * plus the materialized `list`-partitioned inverted-list table.
+    * plus the materialized `list`-partitioned inverted-list table and that
+    * table's schema (the embeddings' columns plus `list`, as a parquet read
+    * presents them), recorded at build so readers never infer it.
     */
   final case class IvfModel(nlist: Int, iters: Int,
                             centroids: Array[(Int, Array[Long])],
-                            indexPath: String)
+                            indexPath: String,
+                            schema: StructType)
+
+  /** The index table, opened with its recorded schema: no footer-reading
+    * schema-inference job, and partition discovery still types `list`
+    * from the schema. Every reader of an IVF index goes through here.
+    */
+  def readIndex(spark: SparkSession, model: IvfModel): DataFrame =
+    spark.read.schema(model.schema).parquet(model.indexPath)
+
+  /** `dt` with every level nullable — the form a parquet read presents
+    * (file sources relax nullability), so a recorded schema matches what
+    * an inferred read would have produced.
+    */
+  private def nullable(dt: DataType): DataType = dt match {
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case other => other
+  }
+
+  /** `batch` projected by name onto the index's data columns (its recorded
+    * schema minus `list`), failing fast on a missing `vec_id`/`embedding`
+    * or a column of a different type — an append must never land a file
+    * the recorded schema misreads. A payload column the batch lacks (e.g.
+    * a vector stream feeding an index built over a labelled table) lands
+    * as a typed NULL, which is what the recorded read would show for it.
+    */
+  private def conform(model: IvfModel, batch: DataFrame): DataFrame = {
+    val have = batch.schema.fields.map(f => f.name -> f.dataType).toMap
+    batch.select(model.schema.fields.toSeq.filter(_.name != "list").map { f =>
+      have.get(f.name) match {
+        case None if f.name == "vec_id" || f.name == "embedding" =>
+          throw new IllegalArgumentException(
+            s"append batch lacks index column `${f.name}` " +
+              s"(index ${model.indexPath} has ${model.schema.simpleString})")
+        case None => lit(null).cast(f.dataType).as(f.name)
+        case Some(dt) if nullable(dt) != f.dataType =>
+          throw new IllegalArgumentException(
+            s"append batch column `${f.name}` is ${dt.simpleString}, " +
+              s"index ${model.indexPath} stores ${f.dataType.simpleString}")
+        case Some(_) => col(f.name)
+      }
+    }: _*)
+  }
 
   /** Deterministic centroid training on the integer grid. Seeds are the
     * per-bucket min-vec_id vectors (bucket = md5-hash of vec_id mod nlist —
@@ -205,15 +254,16 @@ object Ivf {
         else Curation.hashSample(embeddings, col("vec_id"), trainSamplePct)
       val cents = trainCentroids(trainSet, nlist, iters)
       val path = indexDir(indexKey, nlist, iters)
-      index(embeddings, cents)
-        .write.mode("overwrite").partitionBy("list").parquet(path)
+      val table = index(embeddings, cents)
+      table.write.mode("overwrite").partitionBy("list").parquet(path)
       // a from-scratch build is a NEW index: tombstones from a previous
       // process against the same deterministic path must not outlive it
       // (in-root state — done-markers, _centroids — died with the overwrite)
       val fs = org.apache.hadoop.fs.FileSystem.get(
         embeddings.sparkSession.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(path)), true)
-      val model = IvfModel(nlist, iters, cents, path)
+      val model = IvfModel(nlist, iters, cents, path,
+        nullable(table.schema).asInstanceOf[StructType])
       saveModel(embeddings.sparkSession, model)
       model
     })
@@ -234,11 +284,14 @@ object Ivf {
     * quantizer is the standard IVF deployment contract: centroids drift
     * only under distribution shift, which calls for a rebuild, not an
     * append. NOT idempotent — append each batch exactly once (the memoized
-    * [[buildIncremental]] is the replay-safe form).
+    * [[buildIncremental]] is the replay-safe form). The batch is projected
+    * onto the recorded schema by name; a missing `vec_id`/`embedding` or a
+    * different type fails before anything is written, and a missing
+    * payload column lands as NULL.
     */
   def appendToIndex(model: IvfModel, newBatch: DataFrame): Unit = {
     graft.MutationGuard.claim(model.indexPath)
-    index(newBatch, model.centroids)
+    index(conform(model, newBatch), model.centroids)
       .write.mode("append").partitionBy("list").parquet(model.indexPath)
   }
 
@@ -291,19 +344,11 @@ object Ivf {
                                   exclude: Option[Long] = None,
                                   allowed: Option[DataFrame] = None,
                                   indexFilter: Option[Column] = None): DataFrame = {
-    val probes = model.centroids.map { case (cid, cq) =>
-      val norm2q = cq.map(c => c * c).sum
-      var sq = 0L
-      var d = 0
-      val n = math.min(qVec.length, cq.length)
-      while (d < n) { sq += math.floor(qVec(d) * cq(d) * DotScale + 0.5).toLong; d += 1 }
-      (cid, sq.toDouble / math.sqrt(norm2q.toDouble))
-    }.sortBy { case (cid, s) => (-s, cid) }
-      .take(nprobe).map(_._1)
+    val probes = listRanks(model.centroids, qVec).take(nprobe).map(_._1)
 
     import spark.implicits._
     val q = Seq(qVec.toSeq.map(_.toFloat)).toDF("q_emb")
-    val idx0 = spark.read.parquet(model.indexPath)
+    val idx0 = readIndex(spark, model)
       .filter(col("list").isin(probes.toIndexedSeq: _*))
     val idx = exclude.fold(idx0)(id => idx0.filter(col("vec_id") =!= id))
     val filtered = indexFilter.fold(idx)(f => idx.filter(f))
@@ -526,7 +571,7 @@ object Ivf {
       .groupBy("qid")
       .agg(graft.functions.TopK.topK(k)(col("vec_id"), col("cosine")).as("top"))
       .select(col("qid"), explode(col("top").getField("id")).as("vec_id"))
-    val asg = spark.read.parquet(model.indexPath)
+    val asg = readIndex(spark, model)
       .select(col("vec_id"), col("list").cast("int").as("cid"))
     // per-rank hit counts, persisted so the exact ground-truth corpus pass
     // runs once; the cumulative sum is then a broadcast triangular
@@ -575,7 +620,9 @@ object Ivf {
     * index SELF-DESCRIBING: a restarted process (or the auto-maintaining
     * ingest sink after a mid-stream re-balance) recovers the model that
     * matches the directories instead of trusting a possibly-stale
-    * in-memory copy.
+    * in-memory copy. The second line records the index table's schema
+    * (`schema <json>`), so every reader opens the table without a
+    * schema-inference job ([[readIndex]]).
     */
   def saveModel(spark: org.apache.spark.sql.SparkSession, model: IvfModel): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -585,6 +632,7 @@ object Ivf {
     val out = fs.create(tmp, true)
     try {
       out.write(s"${model.nlist} ${model.iters}\n".getBytes("UTF-8"))
+      out.write(s"schema ${model.schema.json}\n".getBytes("UTF-8"))
       model.centroids.foreach { case (cid, cq) =>
         out.write(s"$cid ${cq.mkString(",")}\n".getBytes("UTF-8"))
       }
@@ -594,7 +642,10 @@ object Ivf {
       throw new java.io.IOException(s"model save rename failed: $dst")
   }
 
-  /** The persisted quantizer for an index directory, if any. */
+  /** The persisted quantizer for an index directory, if any. A `_centroids`
+    * without a recorded schema fails: the index predates schema recording
+    * and must be rebuilt (readers never fall back to inference).
+    */
   def loadModel(spark: org.apache.spark.sql.SparkSession,
                 indexPath: String): Option[IvfModel] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -607,11 +658,15 @@ object Ivf {
         try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
         finally in.close()
       val Array(nlist, iters) = lines.head.split(" ").map(_.toInt)
-      val cents = lines.tail.filter(_.nonEmpty).map { l =>
+      val schema = lines.lift(1).filter(_.startsWith("schema "))
+        .map(l => DataType.fromJson(l.stripPrefix("schema ")).asInstanceOf[StructType])
+        .getOrElse(throw new IllegalStateException(
+          s"$p records no table schema; rebuild the index"))
+      val cents = lines.drop(2).filter(_.nonEmpty).map { l =>
         val Array(cid, vs) = l.split(" ", 2)
         (cid.toInt, vs.split(",").map(_.toLong))
       }.toArray
-      Some(IvfModel(nlist, iters, cents, indexPath))
+      Some(IvfModel(nlist, iters, cents, indexPath, schema))
     }
   }
 
@@ -644,7 +699,7 @@ object Ivf {
   def deleteFromIndex(model: IvfModel, ids: DataFrame, batchId: Long): Unit = {
     graft.MutationGuard.claim(model.indexPath)
     val spark = ids.sparkSession
-    val resolved = spark.read.parquet(model.indexPath)
+    val resolved = readIndex(spark, model)
       .select(col("vec_id"), col("list"))
       .join(ids.select("vec_id"), "vec_id") // no broadcast hint: AQE picks
       // broadcast for small batches; a 100 TB-scale mass takedown must be
@@ -683,7 +738,7 @@ object Ivf {
       s"_ingest_done/$batchId")
     if (fs.exists(marker)) return
     val staging = model.indexPath + s"__ingest_staging_$batchId"
-    index(newBatch, model.centroids).repartition(1)
+    index(conform(model, newBatch), model.centroids).repartition(1)
       .write.mode("overwrite").partitionBy("list").parquet(staging)
     graft.sources.Sinks.ingestStagedLists(spark, staging,
       model.indexPath, batchId)
@@ -818,7 +873,7 @@ object Ivf {
       .filter(d => d.isDirectory && d.getPath.getName.startsWith("list="))
       .filter(d => !known(d.getPath.getName.stripPrefix("list=").toInt))
       .foreach(d => fs.delete(d.getPath, true))
-    val sizes = spark.read.parquet(m0.indexPath)
+    val sizes = readIndex(spark, m0)
       .groupBy("list").count().collect()
       .map(r => (r.getInt(0), r.getLong(1))).toMap
     if (sizes.isEmpty) return m0
@@ -941,7 +996,7 @@ object Ivf {
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       .withColumn("list",
         explode(probeListsCol(col("q_emb"), model.centroids, nprobe)))
-    val idx0 = queries.sparkSession.read.parquet(model.indexPath)
+    val idx0 = readIndex(queries.sparkSession, model)
       .select(col("list"), col("vec_id"), col("embedding"))
     val idx = graft.sources.Sinks.readTombstones(queries.sparkSession,
         tombstonesPath(model.indexPath))

@@ -109,8 +109,8 @@ object Similarity {
     val qVec = docEmb.filter(col("vec_id") === queryVecId)
       .select(transform(col("embedding"), _.cast("double")).as("e"))
       .collect()(0).getSeq[Double](0).toArray
-    val topDocs = Ivf.probe(docModel, docEmb, queryVecId, coarseK, nprobeDoc,
-        allowed = allowed)
+    val topDocs = Ivf.probeWithVec(docModel, spark, qVec, coarseK, nprobeDoc,
+        exclude = Some(queryVecId), allowed = allowed)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     Ivf.probeWithVec(chunkModel, spark, qVec, k, nprobeChunk,
         indexFilter = Some(shiftright(col("vec_id"), chunkShift)
@@ -213,7 +213,7 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       .withColumn("list", explode(
         Ivf.probeListsExpr(col("q_emb"), chunkModel.centroids, nprobeChunk)))
-    val idx0 = spark.read.parquet(chunkModel.indexPath)
+    val idx0 = Ivf.readIndex(spark, chunkModel)
       .select(col("list"), col("vec_id"), col("embedding"))
     val idx = graft.sources.Sinks.readTombstones(spark,
         Ivf.tombstonesPath(chunkModel.indexPath))
@@ -335,7 +335,7 @@ object Similarity {
     import spark.implicits._
     val pool = topKTwoStageIvf(docModel, docEmb, chunkModel, queryVecId,
       coarseK, poolK, nprobeDoc, nprobeChunk)
-    val raw = spark.read.parquet(chunkModel.indexPath)
+    val raw = Ivf.readIndex(spark, chunkModel)
       .select(col("vec_id"), col("embedding"))
     val vecs = graft.sources.Sinks.readTombstones(spark,
         Ivf.tombstonesPath(chunkModel.indexPath))
@@ -423,7 +423,7 @@ object Similarity {
       docEmb.join(queryIds.select(col("query_id").as("vec_id")),
         Seq("vec_id"), "left_semi"),
       coarseK, poolK, nprobeDoc, nprobeChunk)
-    val raw = spark.read.parquet(chunkModel.indexPath)
+    val raw = Ivf.readIndex(spark, chunkModel)
       .select(col("vec_id"), col("embedding"))
     val vecs = graft.sources.Sinks.readTombstones(spark,
         Ivf.tombstonesPath(chunkModel.indexPath))

@@ -311,7 +311,9 @@ object Sinks {
     * None when no tombstones exist (the common case: probes pay only a
     * local existence check). For the `list`-partitioned layouts pass the
     * probed `lists` so the read stays partition-pruned exactly like the
-    * index scan it filters.
+    * index scan it filters. Every layout's tombstones hold one `vec_id`
+    * column, so the read takes that fixed schema instead of launching a
+    * schema-inference job; partition discovery still adds `list`.
     */
   def readTombstones(spark: org.apache.spark.sql.SparkSession, tombDir: String,
                      lists: Option[Seq[Int]] = None): Option[DataFrame] = {
@@ -320,7 +322,7 @@ object Sinks {
     val p = new org.apache.hadoop.fs.Path(tombDir)
     if (!fs.exists(p) || fs.listStatus(p).isEmpty) None
     else {
-      val t = spark.read.parquet(tombDir)
+      val t = spark.read.schema("vec_id BIGINT").parquet(tombDir)
       val pruned = lists match {
         case Some(ls) if t.columns.contains("list") =>
           t.filter(col("list").isin(ls: _*))

@@ -523,7 +523,7 @@ object Streams {
     */
   def semanticDupStream(vectors: DataFrame, model: graft.operators.Ivf.IvfModel,
                         threshold: Double): DataFrame = {
-    val idx = vectors.sparkSession.read.parquet(model.indexPath)
+    val idx = graft.operators.Ivf.readIndex(vectors.sparkSession, model)
       .select(col("list"), col("vec_id").as("corpus_id"),
         col("embedding").as("c_emb"))
     graft.operators.Ivf.index(vectors, model.centroids)

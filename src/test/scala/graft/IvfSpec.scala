@@ -592,4 +592,133 @@ class IvfSpec extends SparkSpec {
       nprobe = docModel.centroids.length)
     assert(ivf.exceptAll(exact).isEmpty && exact.exceptAll(ivf).isEmpty)
   }
+
+  /** Names of the parquet schema-inference jobs `body` launches: footer
+    * reads run as a `parquet at …` job outside any SQL execution (writes
+    * and collects carry an execution id). A marker job drains the
+    * listener: events reach one listener in order.
+    */
+  private def inferenceJobs(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    // (stage name, job description, outside any SQL execution)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Boolean)]()
+    val marker = "ivfspec-drain-" + System.nanoTime()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        seen.add((e.stageInfos.headOption.map(_.name).getOrElse(""),
+          props.flatMap(p => Option(p.getProperty("spark.job.description"))).orNull,
+          props.forall(_.getProperty("spark.sql.execution.id") == null)))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.asScala.exists(_._2 == marker) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(10)
+    } finally sc.removeSparkListener(l)
+    seen.asScala.toSeq.collect {
+      case (name, _, true) if name.startsWith("parquet at") => name
+    }
+  }
+
+  test("build schema is recorded in _centroids and survives saveModel → loadModel") {
+    val model = Ivf.buildIndex(sfDir + "#schema", emb, nlist = 8)
+    // the recorded schema is exactly what an inferred read would produce
+    assert(model.schema === spark.read.parquet(model.indexPath).schema)
+    assert(model.schema.fieldNames.toSeq === emb.columns.toSeq :+ "list")
+    val loaded = Ivf.loadModel(spark, model.indexPath).get
+    assert(loaded.schema === model.schema)
+    // a quantizer file without a recorded schema is refused, never inferred
+    val old = java.nio.file.Files.createTempDirectory("graft-ivf-noschema")
+    java.nio.file.Files.write(old.resolve("_centroids"),
+      "1 2\n0 1,2,3\n".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](Ivf.loadModel(spark, old.toString))
+    assert(e.getMessage.contains("schema"))
+  }
+
+  test("probe, probeAll and deleteFromIndex launch no schema-inference job") {
+    val base = emb.filter($"vec_id" % 5 =!= 0)
+    val model = Ivf.buildIndex(sfDir + "#noinfer", base, nlist = 8)
+    Ivf.appendToIndexIdempotent(model, emb.filter($"vec_id" % 5 === 0), 1L)
+    Ivf.deleteFromIndex(model, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 2L)
+    // the detector sees the inferred read this change removed
+    assert(inferenceJobs(spark.read.parquet(model.indexPath).count()).nonEmpty)
+    val jobs = inferenceJobs {
+      Ivf.probe(model, emb, 0L, 10).collect()
+      Ivf.probeAll(model, emb.filter($"vec_id" < 3), 10).collect()
+      Ivf.deleteFromIndex(model,
+        emb.filter($"vec_id" % 7 === 4).select("vec_id"), 3L)
+    }
+    assert(jobs.isEmpty, s"schema-inference jobs: ${jobs.mkString(", ")}")
+  }
+
+  test("probe and probeAll over the recorded schema equal an inferred-schema read") {
+    val base = emb.filter($"vec_id" % 5 =!= 0)
+    val model = Ivf.buildIndex(sfDir + "#inferparity", base, nlist = 8)
+    Ivf.appendToIndex(model, emb.filter($"vec_id" % 5 === 0))
+    Ivf.deleteFromIndex(model, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 0L)
+    val inferred = spark.read.parquet(model.indexPath)
+    val recorded = Ivf.readIndex(spark, model)
+    assert(recorded.schema === inferred.schema)
+    assert(recorded.exceptAll(inferred).isEmpty && inferred.exceptAll(recorded).isEmpty)
+    // exhaustive probes vs the same ranking over inferred reads of the
+    // index and its tombstones
+    val live = inferred.join(
+      spark.read.parquet(model.indexPath + "__tombstones").select("vec_id"),
+      Seq("vec_id"), "left_anti")
+    def reference(q: Long): Seq[(Long, Double)] = {
+      val qv = emb.filter($"vec_id" === q).select($"embedding".as("q_emb"))
+      live.filter($"vec_id" =!= q).crossJoin(qv)
+        .withColumn("cosine", graft.functions.VectorOps.cosine($"embedding", $"q_emb"))
+        .orderBy(desc("cosine"), $"vec_id").limit(10)
+        .select("vec_id", "cosine").as[(Long, Double)].collect().toSeq
+    }
+    val qids = Seq(0L, 1L, 2L)
+    val all = Ivf.probeAll(model, emb.filter($"vec_id".isin(qids: _*)), 10,
+        nprobe = model.centroids.length)
+      .as[(Long, Long, Double, Int)].collect()
+      .groupBy(_._1).view.mapValues(_.sortBy(_._4).map(r => (r._2, r._3)).toSeq).toMap
+    qids.foreach { q =>
+      val want = reference(q)
+      assert(Ivf.probe(model, emb, q, 10, nprobe = model.centroids.length)
+        .as[(Long, Double)].collect().toSeq === want, s"probe $q")
+      assert(all(q) === want, s"probeAll $q")
+    }
+  }
+
+  test("append fails fast on a batch that does not match the recorded schema") {
+    val model = Ivf.buildIndex(sfDir + "#appendschema", emb, nlist = 8)
+    val before = FileSnapshots.snapshot(model.indexPath)
+    val batch = emb.filter($"vec_id" % 5 === 0)
+      .withColumn("vec_id", $"vec_id" + 90000000L)
+    val missing = intercept[IllegalArgumentException](
+      Ivf.appendToIndex(model, batch.drop("embedding")))
+    assert(missing.getMessage.contains("embedding"))
+    val retyped = batch.withColumn("embedding",
+      transform($"embedding", _.cast("double")))
+    val wrongType = intercept[IllegalArgumentException](
+      Ivf.appendToIndexIdempotent(model, retyped, 9L))
+    assert(wrongType.getMessage.contains("embedding"))
+    assert(FileSnapshots.snapshot(model.indexPath) === before,
+      "a refused append wrote files")
+    // extra columns are projected away; column order does not matter
+    Ivf.appendToIndex(model,
+      batch.select(batch.columns.reverse.map(col) :+ lit("x").as("extra"): _*))
+    assert(Ivf.readIndex(spark, model).filter($"vec_id" >= 90000000L).count()
+      === batch.count())
+    assert(spark.read.parquet(model.indexPath).schema === model.schema)
+    // a payload column the batch lacks lands as NULL (a bare vector stream
+    // into an index built over the labelled table)
+    Ivf.appendToIndexIdempotent(model, batch.drop("label")
+      .withColumn("vec_id", $"vec_id" + 90000000L), 10L)
+    val unlabelled = Ivf.readIndex(spark, model).filter($"vec_id" >= 180000000L)
+    assert(unlabelled.count() === batch.count())
+    assert(unlabelled.filter($"label".isNotNull).isEmpty)
+  }
 }
