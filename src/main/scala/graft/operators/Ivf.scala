@@ -322,13 +322,15 @@ object Ivf {
     */
   def probe(model: IvfModel, embeddings: DataFrame, queryVecId: Long,
             k: Int, nprobe: Int = 4,
-            allowed: Option[DataFrame] = None): DataFrame = {
-    val qVec = embeddings.filter(col("vec_id") === queryVecId)
+            allowed: Option[DataFrame] = None): DataFrame =
+    probeWithVec(model, embeddings.sparkSession, queryVec(embeddings, queryVecId),
+      k, nprobe, exclude = Some(queryVecId), allowed = allowed)
+
+  /** The stored embedding of `queryVecId` as doubles — one collect. */
+  private[graft] def queryVec(embeddings: DataFrame, queryVecId: Long): Array[Double] =
+    embeddings.filter(col("vec_id") === queryVecId)
       .select(transform(col("embedding"), _.cast("double")).as("e"))
       .collect()(0).getSeq[Double](0).toArray
-    probeWithVec(model, embeddings.sparkSession, qVec, k, nprobe,
-      exclude = Some(queryVecId), allowed = allowed)
-  }
 
   /** [[probe]]'s query-vector form — the composition primitive for chains
     * whose query does not live in the probed table (two-stage retrieval
@@ -471,7 +473,15 @@ object Ivf {
     */
   def probeSharded(model: IvfShardedModel, embeddings: DataFrame,
                    queryVecId: Long, k: Int, nprobe: Int = 4): DataFrame =
-    model.shards.map(m => probe(m, embeddings, queryVecId, k, nprobe))
+    probeShardedWithVec(model, embeddings.sparkSession,
+      queryVec(embeddings, queryVecId), k, nprobe, exclude = Some(queryVecId))
+
+  /** [[probeSharded]]'s query-vector form: [[probeWithVec]] per shard. */
+  private[graft] def probeShardedWithVec(model: IvfShardedModel,
+                                         spark: org.apache.spark.sql.SparkSession,
+                                         qVec: Array[Double], k: Int, nprobe: Int,
+                                         exclude: Option[Long]): DataFrame =
+    model.shards.map(m => probeWithVec(m, spark, qVec, k, nprobe, exclude = exclude))
       .reduce(_ unionByName _)
       .orderBy(desc("cosine"), col("vec_id"))
       .limit(k)
@@ -801,15 +811,14 @@ object Ivf {
     val done = fs.listStatus(root).toSeq
       .filter(d => d.isDirectory && d.getPath.getName.startsWith("list="))
       .flatMap { d =>
-        val dataFiles = fs.listStatus(d.getPath).toSeq.filter(s => s.isFile &&
-          !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+        val dataFiles = graft.sources.Sinks.dataFiles(fs, d.getPath)
         // a list is rewritten when fragmented OR when it carries tombstones
         // (the physical-drop half of the delete verb)
         val listTomb = new org.apache.hadoop.fs.Path(tombRoot, d.getPath.getName)
         val hasTomb = fs.exists(listTomb)
         if (dataFiles.size <= maxFilesPerList && !hasTomb) None
         else {
-          val folded = dataFiles.map(_.getPath.getName)
+          val folded = dataFiles.map(_.getName)
             .collect { case IngestFile(id) => id.toLong }.toSet
           val manifest = graft.sources.Sinks.readIngestManifest(fs, d.getPath) ++ folded
           val staging = new org.apache.hadoop.fs.Path(stagingRoot, d.getPath.getName)

@@ -339,33 +339,20 @@ object Pq {
   /** Replay-idempotent append — the exactly-once form of [[appendToIndex]]
     * for streaming ingest (the [[Ivf.appendToIndexIdempotent]] twin over
     * the flat codes table): the batch is encoded with the frozen codebooks
-    * into a per-`batchId` staging dir as ONE file (deterministic layout
-    * across replays) and moved to `codes-ingest-<batchId>.parquet` only if
-    * absent — a crash-replayed batch is a no-op.
+    * and published as ONE `codes-ingest-<batchId>.parquet` through
+    * [[graft.sources.Sinks.appendBatchFileIdempotent]] (move-if-absent) —
+    * a crash-replayed batch is a no-op, and so is one whose file a later
+    * [[compactCodes]] folded away (recorded in the ingest manifest).
     */
   def appendToIndexIdempotent(model: PqModel, newBatch: DataFrame,
                               batchId: Long): Unit = {
     graft.MutationGuard.claim(model.codesPath)
-    val spark = newBatch.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val codesRoot = new org.apache.hadoop.fs.Path(model.codesPath)
-    // batch already ingested AND folded away by compactCodes → no-op
-    if (graft.sources.Sinks.readIngestManifest(fs, codesRoot).contains(batchId))
-      return
-    val staging = model.codesPath + s"__ingest_staging_$batchId"
-    encode(model, newBatch).repartition(1)
-      .write.mode("overwrite").parquet(staging)
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val dataFiles = fs.listStatus(stagingPath).toSeq.filter(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    require(dataFiles.size == 1,
-      s"idempotent ingest expects one staged file, got ${dataFiles.size}")
-    val dst = new org.apache.hadoop.fs.Path(codesRoot,
-      s"codes-ingest-$batchId.parquet")
-    if (!fs.exists(dst) && !fs.rename(dataFiles.head.getPath, dst))
-      throw new java.io.IOException(s"ingest move failed: $dst")
-    fs.delete(stagingPath, true)
+      newBatch.sparkSession.sparkContext.hadoopConfiguration)
+    if (!graft.sources.Sinks.readIngestManifest(fs,
+        new org.apache.hadoop.fs.Path(model.codesPath)).contains(batchId))
+      graft.sources.Sinks.appendBatchFileIdempotent(encode(model, newBatch),
+        model.codesPath, s"codes-ingest-$batchId.parquet")
   }
 
   /** Small-file maintenance for the flat codes table — the [[Ivf.compactLists]]

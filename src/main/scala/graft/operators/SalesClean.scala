@@ -15,8 +15,12 @@ import org.apache.spark.sql.types._
   *   P4 [[castFinal]]            /root/reference/scripts/process_sales.py:55-63
   *
   * Each stage is a pure `DataFrame => DataFrame`, so the whole pipeline stays
-  * one narrow whole-stage-codegen span: no shuffle anywhere, scales linearly
-  * with input splits at any data size.
+  * one narrow whole-stage-codegen span with no shuffle, and it scales
+  * linearly with input splits at any data size. The exactly-once commit
+  * ([[graft.sources.Sinks.appendBatchFileIdempotent]]) adds no shuffle for
+  * a one-split CSV, so a landed file goes from scan to published file
+  * without one; a CSV of several splits gets one `repartition(1)` exchange
+  * there, to publish one file.
   */
 object SalesClean {
 

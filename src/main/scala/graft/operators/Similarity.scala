@@ -106,9 +106,7 @@ object Similarity {
                       nprobeChunk: Int = 4, chunkShift: Int = 20,
                       allowed: Option[DataFrame] = None): DataFrame = {
     val spark = docEmb.sparkSession
-    val qVec = docEmb.filter(col("vec_id") === queryVecId)
-      .select(transform(col("embedding"), _.cast("double")).as("e"))
-      .collect()(0).getSeq[Double](0).toArray
+    val qVec = Ivf.queryVec(docEmb, queryVecId)
     val topDocs = Ivf.probeWithVec(docModel, spark, qVec, coarseK, nprobeDoc,
         exclude = Some(queryVecId), allowed = allowed)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
@@ -135,11 +133,9 @@ object Similarity {
                           nprobeChunk: Int = 4,
                           chunkShift: Int = 20): DataFrame = {
     val spark = docEmb.sparkSession
-    val qVec = docEmb.filter(col("vec_id") === queryVecId)
-      .select(transform(col("embedding"), _.cast("double")).as("e"))
-      .collect()(0).getSeq[Double](0).toArray
-    val topDocs = Ivf.probeSharded(docSharded, docEmb, queryVecId, coarseK,
-        nprobeDoc)
+    val qVec = Ivf.queryVec(docEmb, queryVecId)
+    val topDocs = Ivf.probeShardedWithVec(docSharded, spark, qVec, coarseK,
+        nprobeDoc, exclude = Some(queryVecId))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     Ivf.probeWithVec(chunkModel, spark, qVec, k, nprobeChunk,
         indexFilter = Some(shiftright(col("vec_id"), chunkShift)

@@ -340,32 +340,19 @@ object Sq {
 
   /** Replay-idempotent append for streaming ingest — the
     * [[Pq.appendToIndexIdempotent]] contract verbatim over this layout's
-    * codes table: per-batchId staged single file, move-if-absent,
-    * manifest-consulted so a batch replayed after crash+compact stays a
-    * no-op.
+    * codes table: one published file per batchId through
+    * [[graft.sources.Sinks.appendBatchFileIdempotent]], manifest-consulted
+    * so a batch replayed after crash+compact stays a no-op.
     */
   def appendToIndexIdempotent(model: SqModel, newBatch: DataFrame,
                               batchId: Long): Unit = {
     graft.MutationGuard.claim(model.codesPath)
-    val spark = newBatch.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val codesRoot = new org.apache.hadoop.fs.Path(model.codesPath)
-    if (graft.sources.Sinks.readIngestManifest(fs, codesRoot).contains(batchId))
-      return
-    val staging = model.codesPath + s"__ingest_staging_$batchId"
-    encode(model, newBatch).repartition(1)
-      .write.mode("overwrite").parquet(staging)
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val dataFiles = fs.listStatus(stagingPath).toSeq.filter(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    require(dataFiles.size == 1,
-      s"idempotent ingest expects one staged file, got ${dataFiles.size}")
-    val dst = new org.apache.hadoop.fs.Path(codesRoot,
-      s"codes-ingest-$batchId.parquet")
-    if (!fs.exists(dst) && !fs.rename(dataFiles.head.getPath, dst))
-      throw new java.io.IOException(s"ingest move failed: $dst")
-    fs.delete(stagingPath, true)
+      newBatch.sparkSession.sparkContext.hadoopConfiguration)
+    if (!graft.sources.Sinks.readIngestManifest(fs,
+        new org.apache.hadoop.fs.Path(model.codesPath)).contains(batchId))
+      graft.sources.Sinks.appendBatchFileIdempotent(encode(model, newBatch),
+        model.codesPath, s"codes-ingest-$batchId.parquet")
   }
 
   /** Small-file maintenance — [[Pq.compactCodes]]'s contract over this

@@ -187,10 +187,16 @@ object Sinks {
     finally out.close()
   }
 
-  /** The exactly-once ingest move shared by the index append paths
-    * (`Ivf`/`IvfPq.appendToIndexIdempotent`): a `list`-partitioned staging
-    * dir holding ONE data file per list (the writer repartition(1)s to
-    * keep the layout deterministic across replays) has each file moved to
+  /** Data files directly under `dir`, without `_SUCCESS` / `.crc` files. */
+  private[graft] def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+    fs.listStatus(dir).toSeq.filter(s => s.isFile &&
+      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .map(_.getPath)
+
+  /** The exactly-once ingest move shared by the list-partitioned index
+    * append and delete paths (`Ivf`/`IvfPq`/`IvfSq`): a `list`-partitioned
+    * staging dir holding ONE data file per list has each file moved to
     * `target/list=X/ingest-<batchId>.parquet` ONLY if that name is absent
     * — so a crash-replayed batch regenerates identical staging, finds its
     * destinations present, and is a no-op, and a crash mid-move resumes
@@ -198,6 +204,9 @@ object Sinks {
     * away stay no-ops too: `Ivf.compactLists` records folded batchIds in
     * the per-list [[IngestManifestName]], checked here before the move.
     * Deletes the staging dir when done.
+    * Its writers `repartition(1)` the batch before the `list`-partitioned
+    * write, so each list gets one file, as [[appendBatchFileIdempotent]]
+    * does for a batch not known to be one partition.
     */
   def ingestStagedLists(spark: org.apache.spark.sql.SparkSession,
                         staging: String, target: String, batchId: Long): Unit = {
@@ -207,15 +216,14 @@ object Sinks {
     fs.listStatus(stagingPath).toSeq
       .filter(d => d.isDirectory && d.getPath.getName.startsWith("list="))
       .foreach { d =>
-        val dataFiles = fs.listStatus(d.getPath).toSeq.filter(s => s.isFile &&
-          !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-        require(dataFiles.size == 1,
-          s"idempotent ingest expects one file per list, got ${dataFiles.size}")
+        val files = dataFiles(fs, d.getPath)
+        require(files.size == 1,
+          s"idempotent ingest expects one file per list, got ${files.size}")
         val dstDir = new org.apache.hadoop.fs.Path(target, d.getPath.getName)
         fs.mkdirs(dstDir)
         val dst = new org.apache.hadoop.fs.Path(dstDir, s"ingest-$batchId.parquet")
         if (!readIngestManifest(fs, dstDir).contains(batchId) &&
-            !fs.exists(dst) && !fs.rename(dataFiles.head.getPath, dst))
+            !fs.exists(dst) && !fs.rename(files.head, dst))
           throw new java.io.IOException(s"ingest move failed: $dst")
       }
     fs.delete(stagingPath, true)
@@ -332,36 +340,65 @@ object Sinks {
     }
   }
 
-  /** Idempotent single-file append for foreachBatch RESULT sinks (the
-    * probe sinks' delivery contract): the batch result is staged as one
-    * file and moved to `outDir/<fileName>` only if that name is absent, so
-    * a crash-replayed micro-batch — which regenerates identical rows —
-    * finds its file present and is a no-op. A blind mode("append") write
-    * here would duplicate replayed results; this is the same
-    * staged-move-if-absent idiom as [[ingestStagedLists]], flat-dir form.
-    * Callers pass a batchId-derived `fileName` so the name is stable
-    * across replays. Skips the write entirely when the file already
-    * exists (the cheap replay path).
+  /** [[appendBatchFileIdempotent]]'s fault-injection seam, called with the
+    * destination at `"staged"` (before the rename) and `"published"`
+    * (before the stage is removed); crash-consistency specs make it throw.
+    */
+  @volatile private[graft] var crashPoint: (String, org.apache.hadoop.fs.Path) => Unit =
+    (_, _) => ()
+
+  /** Idempotent single-file append — the delivery contract of the
+    * foreachBatch result sinks, the sales commit, tombstones and the flat
+    * codes-table ingest: the batch is staged as ONE file and moved to
+    * `outDir/<fileName>` by one rename only if that name is absent, so a
+    * crash-replayed batch (identical rows, batchId-derived `fileName`)
+    * finds its file present and is a no-op where a blind mode("append")
+    * would duplicate it. A replay that finds the file present only removes
+    * a stage a crash after the rename left.
+    *
+    * A batch known to be one partition before it runs (one CSV split: see
+    * [[onePartition]]) is staged as it is, in one write job with no
+    * shuffle. Any other batch is staged through a `repartition(1)`
+    * exchange, so its upstream stays parallel and only the write is one
+    * task. Writing it as partitioned and folding the files afterwards
+    * measured about twice as slow: the fold is a second write job.
     */
   def appendBatchFileIdempotent(df: DataFrame, outDir: String,
                                 fileName: String): Unit = {
-    val spark = df.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+      df.sparkSession.sparkContext.hadoopConfiguration)
     val dstDir = new org.apache.hadoop.fs.Path(outDir)
     val dst = new org.apache.hadoop.fs.Path(dstDir, fileName)
-    if (fs.exists(dst)) return
-    val staging = outDir + s"__staging_$fileName"
-    df.repartition(1).write.mode("overwrite").parquet(staging)
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val dataFiles = fs.listStatus(stagingPath).toSeq.filter(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    require(dataFiles.size == 1,
-      s"idempotent append expects one staged file, got ${dataFiles.size}")
-    fs.mkdirs(dstDir)
-    if (!fs.exists(dst) && !fs.rename(dataFiles.head.getPath, dst))
-      throw new java.io.IOException(s"idempotent append move failed: $dst")
-    fs.delete(stagingPath, true)
+    val staging = new org.apache.hadoop.fs.Path(outDir + s"__staging_$fileName")
+    if (!fs.exists(dst)) {
+      (if (onePartition(df)) df else df.repartition(1))
+        .write.mode("overwrite").parquet(staging.toString)
+      val staged = dataFiles(fs, staging)
+      require(staged.size == 1,
+        s"idempotent append expects one staged file, got ${staged.size}")
+      crashPoint("staged", dst)
+      fs.mkdirs(dstDir)
+      if (!fs.exists(dst) && !fs.rename(staged.head, dst))
+        throw new java.io.IOException(s"idempotent append move failed: $dst")
+      crashPoint("published", dst)
+    }
+    fs.delete(staging, true)
+  }
+
+  /** True when `df` computes as one partition, decided without a job or a
+    * code-generation pass: its physical plan has no exchange and no
+    * subquery (so it is not adaptive either) and one leaf, whose RDD has
+    * one partition. Operators above that leaf cannot add partitions
+    * without an exchange.
+    */
+  private[graft] def onePartition(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan
+    !plan.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec] &&
+      plan.find(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]).isEmpty &&
+      plan.subqueriesAll.isEmpty && (plan.collectLeaves() match {
+        case Seq(leaf) => leaf.execute().getNumPartitions == 1
+        case _ => false
+      })
   }
 
   /** Partition-pruned MERGE into a hive-partitioned table: rewrite ONLY the

@@ -454,6 +454,44 @@ class IvfSpec extends SparkSpec {
     assert(pruned.intersect(exact.map(_._1).toSet).size >= 3)
   }
 
+  test("sharded probe and sharded two-stage collect the query vector once") {
+    val docEmb = operators.Embed.hashedTf(Tables.documents(spark, sfDir))
+    val sharded = Ivf.buildShardedIndex(sfDir + "#tsshspec", docEmb,
+      nShards = 3, nlist = 4)
+    val (chunkModel, _) = operators.CorpusIndex.buildChunkIndex(
+      sfDir + "#tschunk", Tables.documents(spark, sfDir))
+    // query-vector collects: one-column `e` results (Ivf.queryVec)
+    def vecCollects(body: => Unit): Int = {
+      import org.apache.spark.sql.util.QueryExecutionListener
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val marker = new java.util.concurrent.atomic.AtomicBoolean()
+      val l = new QueryExecutionListener {
+        override def onSuccess(f: String,
+                               qe: org.apache.spark.sql.execution.QueryExecution,
+                               d: Long): Unit =
+          qe.analyzed.output.map(_.name) match {
+            case Seq("e") => n.incrementAndGet()
+            case Seq("ivfspec_drain") => marker.set(true)
+            case _ =>
+          }
+        override def onFailure(f: String,
+                               qe: org.apache.spark.sql.execution.QueryExecution,
+                               e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        body
+        spark.range(1).toDF("ivfspec_drain").collect()
+        val deadline = System.currentTimeMillis() + 30000
+        while (!marker.get && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      } finally spark.listenerManager.unregister(l)
+      n.get
+    }
+    assert(vecCollects(Ivf.probeSharded(sharded, docEmb, 0L, 5).collect()) === 1)
+    assert(vecCollects(Similarity.topKTwoStageSharded(sharded, docEmb, chunkModel,
+      0L, coarseK = 5, k = 10).collect()) === 1)
+  }
+
   test("set-oriented indexed two-stage equals the single-query form per query") {
     val docs = Tables.documents(spark, sfDir)
     val docEmb = operators.Embed.hashedTf(docs)

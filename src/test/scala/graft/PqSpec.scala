@@ -69,6 +69,7 @@ class PqSpec extends SparkSpec {
     val afterOnce = FileSnapshots.snapshot(model.codesPath)
     Pq.appendToIndexIdempotent(model, b1, batchId = 0L)
     assert(FileSnapshots.snapshot(model.codesPath) === afterOnce)
+    assert(!new java.io.File(model.codesPath + "__staging_codes-ingest-0.parquet").exists())
     Pq.appendToIndexIdempotent(model, b2, batchId = 1L)
     val stored = spark.read.parquet(model.codesPath)
     val expected = Pq.encode(model, emb)
@@ -89,6 +90,7 @@ class PqSpec extends SparkSpec {
     Pq.appendToIndexIdempotent(model, b1, batchId = 7L) // crash replay
     assert(FileSnapshots.snapshot(model.codesPath) === snap,
       "replayed batch re-appended after compactCodes")
+    assert(!new java.io.File(model.codesPath + "__staging_codes-ingest-7.parquet").exists())
     assert(spark.read.parquet(model.codesPath).count() === nBefore)
   }
 

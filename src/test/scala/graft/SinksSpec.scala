@@ -231,6 +231,119 @@ class SinksSpec extends SparkSpec {
     assert(!new java.io.File(out + "__staging_probe-0.parquet").exists())
   }
 
+  /** (jobs, shuffle bytes written) of what `body` runs. A marker job
+    * drains the listener: events reach one listener in order.
+    */
+  private def jobsAndShuffle(body: => Unit): (Int, Long) = {
+    import org.apache.spark.scheduler._
+    val marker = "sinksspec-drain-" + System.nanoTime()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffle = new java.util.concurrent.atomic.AtomicLong()
+    @volatile var drained = false
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          drained = true
+        else jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        shuffle.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!drained && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    } finally sc.removeSparkListener(l)
+    (jobs.get, shuffle.get)
+  }
+
+  /** Data files published under `dir`. */
+  private def published(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => !n.startsWith(".") && !n.startsWith("_")).toSeq
+
+  /** Stage dirs a publish into `dir` left behind. */
+  private def stagingLitter(dir: String): Seq[String] = {
+    val f = new java.io.File(dir)
+    f.getParentFile.listFiles().map(_.getName)
+      .filter(_.startsWith(f.getName + "__staging_")).toSeq
+  }
+
+  test("appendBatchFileIdempotent: a one-split CSV commits in one job with no shuffle") {
+    import graft.operators.SalesClean
+    val out = java.nio.file.Files.createTempDirectory("graft-idem1").toString + "/sales"
+    val audited = SalesClean.readCsvAudited(spark, "fixtures/sales_dirty.csv").cache()
+    try {
+      val cleaned = SalesClean.clean(SalesClean.cleanRows(audited))
+      assert(cleaned.rdd.getNumPartitions === 1)
+      val (jobs, shuffle) = jobsAndShuffle(
+        Sinks.appendBatchFileIdempotent(cleaned, out, "f0.parquet"))
+      assert(jobs === 1, s"$jobs jobs")
+      assert(shuffle === 0L, s"$shuffle shuffle bytes written")
+      assert(published(out) === Seq("f0.parquet"))
+      // processed_at is a wall-clock stamp: compare the rows without it
+      val want = cleaned.drop("processed_at")
+      val got = spark.read.parquet(out).drop("processed_at")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+      // a re-delivery runs no job at all
+      assert(jobsAndShuffle(
+        Sinks.appendBatchFileIdempotent(cleaned, out, "f0.parquet")) === ((0, 0L)))
+    } finally audited.unpersist()
+    assert(stagingLitter(out).isEmpty)
+  }
+
+  test("appendBatchFileIdempotent folds a multi-partition batch into one file") {
+    val root = java.nio.file.Files.createTempDirectory("graft-idem8").toString
+    val wide = spark.range(0, 10000, 1, 8).select($"id", ($"id" % 7).as("m"))
+    val grouped = spark.range(0, 10000, 1, 8)
+      .groupBy(($"id" % 100).as("g")).agg(count(lit(1)).as("n"), sum($"id").as("s"))
+    Seq("wide" -> wide, "grouped" -> grouped).foreach { case (name, df) =>
+      val out = s"$root/$name"
+      Sinks.appendBatchFileIdempotent(df, out, "b0.parquet")
+      assert(published(out) === Seq("b0.parquet"), name)
+      val back = spark.read.parquet(out)
+      assert(back.schema.fieldNames.toSeq === df.columns.toSeq, name)
+      assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty, name)
+      assert(stagingLitter(out).isEmpty, name)
+    }
+    assert(wide.rdd.getNumPartitions === 8)
+  }
+
+  test("onePartition holds only for an exchange-free plan over one one-partition leaf") {
+    val one = spark.range(0, 100, 1, 1).toDF()
+    assert(Sinks.onePartition(one.select(($"id" * 2).as("x")).filter($"x" > 3)))
+    assert(!Sinks.onePartition(spark.range(0, 100, 1, 8).toDF()))
+    assert(!Sinks.onePartition(one.groupBy(($"id" % 2).as("g")).count()))
+    assert(!Sinks.onePartition(one.union(spark.range(0, 100, 1, 1).toDF())))
+  }
+
+  test("appendBatchFileIdempotent publishes an empty batch as one file with its schema") {
+    import graft.operators.SalesClean
+    val root = java.nio.file.Files.createTempDirectory("graft-idem0").toString
+    val csv = s"$root/clean.csv"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(csv),
+      "product,price,quantity,total,ordered_at,delivery_at\n" +
+        "Laptops,50000.0,2,100000.0,2024-01-01 08:00:00,2024-01-03 00:00:00\n")
+    val audited = SalesClean.readCsvAudited(spark, csv).cache()
+    try {
+      // the quarantine side of a clean CSV, and an all-filtered 8-partition frame
+      Seq("quarantine" -> SalesClean.corruptRows(audited),
+          "filtered" -> spark.range(0, 1000, 1, 8).toDF().filter($"id" < 0)).foreach {
+        case (name, df) =>
+          val out = s"$root/$name"
+          Sinks.appendBatchFileIdempotent(df, out, "b0.parquet")
+          assert(published(out) === Seq("b0.parquet"), name)
+          val back = spark.read.parquet(s"$out/b0.parquet")
+          assert(back.schema.fieldNames.toSeq === df.columns.toSeq, name)
+          assert(back.count() === 0, name)
+          assert(stagingLitter(out).isEmpty, name)
+      }
+    } finally audited.unpersist()
+  }
+
   test("upsertPartitions rewrites only touched partitions") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-pupsert").toString

@@ -74,6 +74,7 @@ class SqSpec extends SparkSpec {
     val afterOnce = FileSnapshots.snapshot(model.codesPath)
     Sq.appendToIndexIdempotent(model, b1, batchId = 0L)
     assert(FileSnapshots.snapshot(model.codesPath) === afterOnce)
+    assert(!new java.io.File(model.codesPath + "__staging_codes-ingest-0.parquet").exists())
     Sq.appendToIndexIdempotent(model, b2, batchId = 1L)
     val stored = spark.read.parquet(model.codesPath)
     val expected = Sq.encode(model, emb)
@@ -94,6 +95,7 @@ class SqSpec extends SparkSpec {
     Sq.appendToIndexIdempotent(model, b1, batchId = 7L) // crash replay
     assert(FileSnapshots.snapshot(model.codesPath) === snap,
       "replayed batch re-appended after compactCodes")
+    assert(!new java.io.File(model.codesPath + "__staging_codes-ingest-7.parquet").exists())
     assert(spark.read.parquet(model.codesPath).count() === nBefore)
   }
 
