@@ -827,23 +827,23 @@ object ScaleProbe {
         val t1 = System.nanoTime()
         val pq = operators.Pq.buildIndex(s"probe-pq-$m", vecs)
         println(f"PROBE pq_build          mult=$m%-3d ${(System.nanoTime() - t1) / 1e9}%8.2f s")
-        time("pq_probe", m, operators.Pq.probe(pq, vecs, 0L, 10))
+        time("pq_probe", m, operators.CodesIndex.probe(pq, vecs, 0L, 10))
         val t2 = System.nanoTime()
         val ivfpq = operators.IvfPq.buildIndex(s"probe-ivfpq-$m", vecs)
         println(f"PROBE ivfpq_build       mult=$m%-3d ${(System.nanoTime() - t2) / 1e9}%8.2f s")
-        time("ivfpq_probe", m, operators.IvfPq.probe(ivfpq, vecs, 0L, 10))
+        time("ivfpq_probe", m, operators.CodesIndex.probe(ivfpq, vecs, 0L, 10))
         // SQ8: training is one min/max aggregation (cheapest build of the
         // four), the probe scans 64-byte codes — near-flat per unit
         val t2s = System.nanoTime()
         val sq = operators.Sq.buildIndex(s"probe-sq-$m", vecs)
         println(f"PROBE sq_build          mult=$m%-3d ${(System.nanoTime() - t2s) / 1e9}%8.2f s")
-        time("sq_probe", m, operators.Sq.probe(sq, vecs, 0L, 10))
+        time("sq_probe", m, operators.CodesIndex.probe(sq, vecs, 0L, 10))
         // IVF-SQ8 composite: pruned lists × 64-byte residual codes — the
         // probe reads nprobe/nlist of the codes, so it must stay flat
         val t2i = System.nanoTime()
         val ivfsq = operators.IvfSq.buildIndex(s"probe-ivfsq-$m", vecs)
         println(f"PROBE ivfsq_build       mult=$m%-3d ${(System.nanoTime() - t2i) / 1e9}%8.2f s")
-        time("ivfsq_probe", m, operators.IvfSq.probe(ivfsq, vecs, 0L, 10))
+        time("ivfsq_probe", m, operators.CodesIndex.probe(ivfsq, vecs, 0L, 10))
         // SemDeDup within-cluster pairs: Σ|cluster|² — at fixed nlist the
         // per-cluster size grows with the corpus, so the probe shows the
         // documented super-linear drift that raising nlist (the knob,
@@ -869,16 +869,16 @@ object ScaleProbe {
         operators.Ivf.appendToIndex(ivf, batch)
         println(f"PROBE ivf_append        mult=$m%-3d ${(System.nanoTime() - t3) / 1e9}%8.2f s")
         val t4 = System.nanoTime()
-        operators.Pq.appendToIndex(pq, batch)
+        operators.CodesIndex.appendToIndex(pq, batch)
         println(f"PROBE pq_append         mult=$m%-3d ${(System.nanoTime() - t4) / 1e9}%8.2f s")
         val t5 = System.nanoTime()
-        operators.IvfPq.appendToIndex(ivfpq, batch)
+        operators.CodesIndex.appendToIndex(ivfpq, batch)
         println(f"PROBE ivfpq_append      mult=$m%-3d ${(System.nanoTime() - t5) / 1e9}%8.2f s")
         val t5s = System.nanoTime()
-        operators.Sq.appendToIndex(sq, batch)
+        operators.CodesIndex.appendToIndex(sq, batch)
         println(f"PROBE sq_append         mult=$m%-3d ${(System.nanoTime() - t5s) / 1e9}%8.2f s")
         val t5i = System.nanoTime()
-        operators.IvfSq.appendToIndex(ivfsq, batch)
+        operators.CodesIndex.appendToIndex(ivfsq, batch)
         println(f"PROBE ivfsq_append      mult=$m%-3d ${(System.nanoTime() - t5i) / 1e9}%8.2f s")
         batch.unpersist()
         // delete: a FIXED tombstone batch against the mult-m index — list
@@ -892,16 +892,16 @@ object ScaleProbe {
         operators.Ivf.deleteFromIndex(ivf, delIds, batchId = 1L)
         println(f"PROBE ivf_delete        mult=$m%-3d ${(System.nanoTime() - t6) / 1e9}%8.2f s")
         val t7 = System.nanoTime()
-        operators.Pq.deleteFromIndex(pq, delIds, batchId = 1L)
+        operators.CodesIndex.deleteFromIndex(pq, delIds, batchId = 1L)
         println(f"PROBE pq_delete         mult=$m%-3d ${(System.nanoTime() - t7) / 1e9}%8.2f s")
         val t8 = System.nanoTime()
-        operators.IvfPq.deleteFromIndex(ivfpq, delIds, batchId = 1L)
+        operators.CodesIndex.deleteFromIndex(ivfpq, delIds, batchId = 1L)
         println(f"PROBE ivfpq_delete      mult=$m%-3d ${(System.nanoTime() - t8) / 1e9}%8.2f s")
         val t8s = System.nanoTime()
-        operators.Sq.deleteFromIndex(sq, delIds, batchId = 1L)
+        operators.CodesIndex.deleteFromIndex(sq, delIds, batchId = 1L)
         println(f"PROBE sq_delete         mult=$m%-3d ${(System.nanoTime() - t8s) / 1e9}%8.2f s")
         val t8i = System.nanoTime()
-        operators.IvfSq.deleteFromIndex(ivfsq, delIds, batchId = 1L)
+        operators.CodesIndex.deleteFromIndex(ivfsq, delIds, batchId = 1L)
         println(f"PROBE ivfsq_delete      mult=$m%-3d ${(System.nanoTime() - t8i) / 1e9}%8.2f s")
         delIds.unpersist()
         // drift: a deliberately-skewed append stream (3× clones of the

@@ -557,7 +557,7 @@ object SimilarityQueries {
       val emb = Tables.embeddings(s, dir)
       val m = operators.IvfPq.buildShardedIndex(dir + "#shardpq", emb,
         nShards = 4, nlist = 8)
-      operators.IvfPq.probeShardedAll(m, emb, emb.filter(col("vec_id") < 10),
+      operators.CodesIndex.probeShardedAll(m, emb, emb.filter(col("vec_id") < 10),
           3, nprobe = 8, rerank = Int.MaxValue)
         .withColumnRenamed("vec_id", "neighbor_id")
         .orderBy("query_id", "rn")
@@ -570,7 +570,7 @@ object SimilarityQueries {
     // ranking as CTEs; determinism/recall/compression are PqSpec'd.
     "ann_topk_pq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      operators.Pq.probe(operators.Pq.buildIndex(dir, emb), emb, 0L, 10)
+      operators.CodesIndex.probe(operators.Pq.buildIndex(dir, emb), emb, 0L, 10)
     }),
 
     // IVF list-size histogram — the index-balance diagnostic: a probe reads
@@ -595,7 +595,7 @@ object SimilarityQueries {
     // per-subspace Lloyd → per-list LUTs → exact-integer ADC).
     "ann_topk_ivfpq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      operators.IvfPq.probe(operators.IvfPq.buildIndex(dir, emb), emb, 0L, 10)
+      operators.CodesIndex.probe(operators.IvfPq.buildIndex(dir, emb), emb, 0L, 10)
     }),
 
     // Incremental IVF maintenance — the growing-corpus path: train + build
@@ -622,7 +622,7 @@ object SimilarityQueries {
       val model = operators.IvfPq.buildIncremental(dir,
         emb.filter(col("vec_id") % 5 =!= 0),
         emb.filter(col("vec_id") % 5 === 0))
-      operators.IvfPq.probe(model, emb, 0L, 10)
+      operators.CodesIndex.probe(model, emb, 0L, 10)
     }),
 
     // The full index LIFECYCLE under the gate: build on base → append the
@@ -671,9 +671,9 @@ object SimilarityQueries {
     "ann_delete_pq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = operators.Pq.buildIndex(dir + "#del", emb)
-      operators.Pq.deleteFromIndex(model,
+      operators.CodesIndex.deleteFromIndex(model,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), batchId = 0L)
-      operators.Pq.probe(model, emb, 0L, 10)
+      operators.CodesIndex.probe(model, emb, 0L, 10)
     }),
 
     // The composite twin: per-list tombstones, pruned anti-join before
@@ -681,9 +681,9 @@ object SimilarityQueries {
     "ann_delete_ivfpq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = operators.IvfPq.buildIndex(dir + "#del", emb)
-      operators.IvfPq.deleteFromIndex(model,
+      operators.CodesIndex.deleteFromIndex(model,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), batchId = 0L)
-      operators.IvfPq.probe(model, emb, 0L, 10)
+      operators.CodesIndex.probe(model, emb, 0L, 10)
     }),
 
     // THE LIFECYCLE CAPSTONE: every maintenance verb chained under one
@@ -714,10 +714,10 @@ object SimilarityQueries {
       val model = operators.Pq.buildIncremental(dir + "#life",
         emb.filter(col("vec_id") % 5 =!= 0),
         emb.filter(col("vec_id") % 5 === 0))
-      operators.Pq.deleteFromIndex(model,
+      operators.CodesIndex.deleteFromIndex(model,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), batchId = 0L)
-      operators.Pq.compactCodes(s, model)
-      operators.Pq.probe(model, emb, 0L, 10)
+      operators.CodesIndex.compactIndex(s, model)
+      operators.CodesIndex.probe(model, emb, 0L, 10)
     }),
 
     // The composite-layout capstone completes the trio: incremental
@@ -731,11 +731,10 @@ object SimilarityQueries {
       val model = operators.IvfPq.buildIncremental(dir + "#life",
         emb.filter(col("vec_id") % 5 =!= 0),
         emb.filter(col("vec_id") % 5 === 0))
-      operators.IvfPq.deleteFromIndex(model,
+      operators.CodesIndex.deleteFromIndex(model,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), batchId = 0L)
-      operators.Ivf.compactLists(s, model.indexPath,
-        maxFilesPerList = Int.MaxValue)
-      operators.IvfPq.probe(model, emb, 0L, 10)
+      operators.CodesIndex.compactIndex(s, model, maxFilesPerList = Int.MaxValue)
+      operators.CodesIndex.probe(model, emb, 0L, 10)
     }),
 
     // The PQ twin of ann_incremental: frozen codebooks encode the new
@@ -746,7 +745,7 @@ object SimilarityQueries {
       val model = operators.Pq.buildIncremental(dir,
         emb.filter(col("vec_id") % 5 =!= 0),
         emb.filter(col("vec_id") % 5 === 0))
-      operators.Pq.probe(model, emb, 0L, 10)
+      operators.CodesIndex.probe(model, emb, 0L, 10)
     }),
 
     // SQ8 scalar quantization — the FOURTH index layout (per-dimension
@@ -757,13 +756,13 @@ object SimilarityQueries {
     // (sqSql below); determinism/saturation/lifecycle are SqSpec'd.
     "ann_topk_sq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      operators.Sq.probe(operators.Sq.buildIndex(dir, emb), emb, 0L, 10)
+      operators.CodesIndex.probe(operators.Sq.buildIndex(dir, emb), emb, 0L, 10)
     }),
 
     // SQ recall@10 — ann_recall_ivf's discipline for the scalar layout.
     "ann_recall_sq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val sq = operators.Sq
+      val sq = operators.CodesIndex
         .probe(operators.Sq.buildIndex(dir, emb), emb, 0L, 10)
         .select("vec_id")
       val exact = Similarity.topK(emb, 0L, 10).select("vec_id")
@@ -782,31 +781,31 @@ object SimilarityQueries {
       val model = operators.Sq.buildIncremental(dir,
         emb.filter(col("vec_id") % 5 =!= 0),
         emb.filter(col("vec_id") % 5 === 0))
-      operators.Sq.probe(model, emb, 0L, 10)
+      operators.CodesIndex.probe(model, emb, 0L, 10)
     }),
 
     // Tombstone delete over the flat codes table — masked BEFORE the
-    // rerank cut, Pq.deleteFromIndex's contract.
+    // rerank cut, CodesIndex.deleteFromIndex's contract.
     "ann_delete_sq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = operators.Sq.buildIndex(dir + "#del", emb)
-      operators.Sq.deleteFromIndex(model,
+      operators.CodesIndex.deleteFromIndex(model,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), batchId = 0L)
-      operators.Sq.probe(model, emb, 0L, 10)
+      operators.CodesIndex.probe(model, emb, 0L, 10)
     }),
 
     // The scalar-layout capstone: build on base → frozen append →
-    // tombstone delete → compactCodes (physical drop, manifest carried)
+    // tombstone delete → compaction (physical drop, manifest carried)
     // → probe, against the train-on-base + candidates-minus-deleted twin.
     "ann_lifecycle_sq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = operators.Sq.buildIncremental(dir + "#life",
         emb.filter(col("vec_id") % 5 =!= 0),
         emb.filter(col("vec_id") % 5 === 0))
-      operators.Sq.deleteFromIndex(model,
+      operators.CodesIndex.deleteFromIndex(model,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), batchId = 0L)
-      operators.Sq.compactCodes(s, model)
-      operators.Sq.probe(model, emb, 0L, 10)
+      operators.CodesIndex.compactIndex(s, model)
+      operators.CodesIndex.probe(model, emb, 0L, 10)
     }),
 
     // IVF-SQ8 — the coarse-pruning composite over scalar-quantized
@@ -817,13 +816,13 @@ object SimilarityQueries {
     // composing the coarse Lloyd replay with the residual min/max chain.
     "ann_topk_ivfsq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      operators.IvfSq.probe(operators.IvfSq.buildIndex(dir, emb), emb, 0L, 10)
+      operators.CodesIndex.probe(operators.IvfSq.buildIndex(dir, emb), emb, 0L, 10)
     }),
 
     // recall@10 for the composite — the family health discipline.
     "ann_recall_ivfsq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val apx = operators.IvfSq
+      val apx = operators.CodesIndex
         .probe(operators.IvfSq.buildIndex(dir, emb), emb, 0L, 10)
         .select("vec_id")
       val exact = Similarity.topK(emb, 0L, 10).select("vec_id")
@@ -843,11 +842,10 @@ object SimilarityQueries {
       val model = operators.IvfSq.buildIncremental(dir + "#life",
         emb.filter(col("vec_id") % 5 =!= 0),
         emb.filter(col("vec_id") % 5 === 0))
-      operators.IvfSq.deleteFromIndex(model,
+      operators.CodesIndex.deleteFromIndex(model,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), batchId = 0L)
-      operators.Ivf.compactLists(s, model.indexPath,
-        maxFilesPerList = Int.MaxValue)
-      operators.IvfSq.probe(model, emb, 0L, 10)
+      operators.CodesIndex.compactIndex(s, model, maxFilesPerList = Int.MaxValue)
+      operators.CodesIndex.probe(model, emb, 0L, 10)
     }),
 
     // FILTERED vector search — "nearest neighbors WHERE <predicate>", the
@@ -862,8 +860,8 @@ object SimilarityQueries {
 
     "ann_topk_sq_filtered" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      operators.Sq.probeFiltered(operators.Sq.buildIndex(dir, emb), emb, 0L, 10,
-        emb.filter(col("label") === 3).select("vec_id"))
+      operators.CodesIndex.probe(operators.Sq.buildIndex(dir, emb), emb, 0L, 10,
+        allowed = Some(emb.filter(col("label") === 3).select("vec_id")))
     }),
 
     // The pruned-lists mechanism: allow-list semi-join on the probed
@@ -902,14 +900,14 @@ object SimilarityQueries {
     // ADC + re-rank. The batch engines under the composite probe sinks.
     "ann_knn_ivfpq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      operators.IvfPq.probeAll(operators.IvfPq.buildIndex(dir, emb), emb,
+      operators.CodesIndex.probeAll(operators.IvfPq.buildIndex(dir, emb), emb,
         emb.filter(col("vec_id") < 10), 10)
         .orderBy("query_id", "rn")
     }),
 
     "ann_knn_ivfsq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      operators.IvfSq.probeAll(operators.IvfSq.buildIndex(dir, emb), emb,
+      operators.CodesIndex.probeAll(operators.IvfSq.buildIndex(dir, emb), emb,
         emb.filter(col("vec_id") < 10), 10)
         .orderBy("query_id", "rn")
     }),
@@ -929,7 +927,7 @@ object SimilarityQueries {
     // ten queries, query-keyed ADC ranking, per-query re-rank.
     "ann_knn_sq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      operators.Sq.probeAll(operators.Sq.buildIndex(dir, emb), emb,
+      operators.CodesIndex.probeAll(operators.Sq.buildIndex(dir, emb), emb,
         emb.filter(col("vec_id") < 10), 10)
         .orderBy("query_id", "rn")
     }),
@@ -949,11 +947,11 @@ object SimilarityQueries {
     // kNN join THROUGH the PQ codes — the set-oriented ADC probe (the
     // ann_knn_ivf twin for the compressed index): distributed query LUTs,
     // one codes scan joined to the broadcast LUT, query-keyed ADC rank +
-    // exact re-rank. Per-query rows bit-identical to Pq.probe (PqSpec).
+    // exact re-rank. Per-query rows bit-identical to CodesIndex.probe (PqSpec).
     "ann_knn_pq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = operators.Pq.buildIndex(dir, emb)
-      operators.Pq.probeAll(model, emb, emb.filter(col("vec_id") < 10), 10)
+      operators.CodesIndex.probeAll(model, emb, emb.filter(col("vec_id") < 10), 10)
         .orderBy("query_id", "rn")
     }),
 
@@ -963,7 +961,7 @@ object SimilarityQueries {
     // the spec-level floor in PqSpec.
     "ann_recall_pq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val pq = operators.Pq
+      val pq = operators.CodesIndex
         .probe(operators.Pq.buildIndex(dir, emb), emb, 0L, 10)
         .select("vec_id")
       val exact = Similarity.topK(emb, 0L, 10).select("vec_id")
@@ -976,7 +974,7 @@ object SimilarityQueries {
     // IVF-PQ recall@10 — same contract for the composite index.
     "ann_recall_ivfpq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val ivfpq = operators.IvfPq
+      val ivfpq = operators.CodesIndex
         .probe(operators.IvfPq.buildIndex(dir, emb), emb, 0L, 10)
         .select("vec_id")
       val exact = Similarity.topK(emb, 0L, 10).select("vec_id")
@@ -995,7 +993,7 @@ object SimilarityQueries {
     "ann_pq_code_sizes" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = operators.Pq.buildIndex(dir, emb)
-      val counts = s.read.parquet(model.codesPath)
+      val counts = operators.CodesIndex.readIndex(s, model)
         .select(posexplode(col("codes")).as(Seq("sub", "cid")))
         .groupBy("sub", "cid").agg(count(lit(1)).as("n_codes"))
       operators.Stats.log2Histogram(counts, "sub", "n_codes")
@@ -1715,7 +1713,7 @@ object SimilarityQueries {
   /** The PQ probe chain over [[pqCoreCtes]]' `c2`/`a2`: query LUT, ADC
     * ranking, top-`rerank` candidates, query vector. `deleteWhere`
     * excludes ids from the ADC ranking BEFORE the rerank cut (deleted
-    * vectors must not consume rerank slots) — Pq.deleteFromIndex's
+    * vectors must not consume rerank slots) — CodesIndex.deleteFromIndex's
     * semantics.
     */
   private def pqProbeCtes(rerank: Int = 50, deleteWhere: String = ""): String = {
@@ -1938,7 +1936,7 @@ object SimilarityQueries {
   /** The SQ probe chain over [[sqCoreCtes]]' `codes`: reconstruct each
     * code on the ×255 long grid, integer-ADC rank, top-`rerank`
     * candidates, query vector. `deleteWhere` excludes ids BEFORE the
-    * rerank cut — Sq.deleteFromIndex's semantics.
+    * rerank cut — CodesIndex.deleteFromIndex's semantics.
     */
   private def sqProbeCtes(rerank: Int = 50, deleteWhere: String = ""): String = {
     val adcNot = if (deleteWhere.isEmpty) "" else s" AND NOT ($deleteWhere)"

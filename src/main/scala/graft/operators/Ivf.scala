@@ -78,7 +78,7 @@ object Ivf {
     * (file sources relax nullability), so a recorded schema matches what
     * an inferred read would have produced.
     */
-  private def nullable(dt: DataType): DataType = dt match {
+  private[operators] def nullable(dt: DataType): DataType = dt match {
     case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
     case m: MapType =>
       MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
@@ -763,15 +763,18 @@ object Ivf {
     * list holds hundreds of small files whose per-file open/footer cost
     * dominates the probe scan ([[graft.sources.Sinks.fileReport]] is the
     * read that shows it). Delegates to [[compactLists]] (shared with the
-    * IVF-PQ layout); returns the compacted list ids.
+    * listed codes layouts); returns the compacted list ids.
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, model: IvfModel,
                    maxFilesPerList: Int = 8,
                    targetRowsPerFile: Long = 4000000L): Seq[Int] =
-    compactLists(spark, model.indexPath, maxFilesPerList, targetRowsPerFile)
+    compactLists(spark, model.indexPath, model.schema, maxFilesPerList,
+      targetRowsPerFile)
 
   /** Compact any `list`-partitioned index table (IVF raw vectors, IVF-PQ
-    * codes): rewrites ONLY lists whose data-file count exceeds
+    * and IVF-SQ8 codes) whose recorded table `schema` (with `list`) is
+    * given: each hot list and its tombstones are read with it, never
+    * inferred. Rewrites ONLY lists whose data-file count exceeds
     * `maxFilesPerList` — cold lists are never opened. Each hot list is
     * rewritten into a SIBLING staging tree (`<root>__compact_staging/
     * list=X`, never inside the table root, where partition discovery would
@@ -794,15 +797,15 @@ object Ivf {
     * (the `compactAboveFiles` knob on the streaming sinks) is safe:
     * micro-batches are serialized, so nothing can land mid-compact. Two
     * ingest streams sharing one index would genuinely race — stop all but
-    * one first. The flat PQ codes table has the same verb as
-    * [[Pq.compactCodes]].
+    * one first. Flat codes tables compact through
+    * [[CodesIndex.compactIndex]].
     */
   def compactLists(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                   maxFilesPerList: Int = 8,
+                   schema: StructType, maxFilesPerList: Int = 8,
                    targetRowsPerFile: Long = 4000000L): Seq[Int] = {
     graft.MutationGuard.claim(indexPath)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = graft.sources.Sinks.fileSystem(spark, indexPath)
+    val listSchema = StructType(schema.filterNot(_.name == "list"))
     val stagingRoot = new org.apache.hadoop.fs.Path(indexPath + "__compact_staging")
     fs.delete(stagingRoot, true)
     val root = new org.apache.hadoop.fs.Path(indexPath)
@@ -822,9 +825,9 @@ object Ivf {
             .collect { case IngestFile(id) => id.toLong }.toSet
           val manifest = graft.sources.Sinks.readIngestManifest(fs, d.getPath) ++ folded
           val staging = new org.apache.hadoop.fs.Path(stagingRoot, d.getPath.getName)
-          val rows0 = spark.read.parquet(d.getPath.toString)
+          val rows0 = spark.read.schema(listSchema).parquet(d.getPath.toString)
           val rows = if (!hasTomb) rows0
-            else rows0.join(spark.read.parquet(listTomb.toString).select("vec_id"),
+            else rows0.join(spark.read.schema("vec_id BIGINT").parquet(listTomb.toString),
               Seq("vec_id"), "left_anti")
           val n = rows.count()
           val files = math.max(1L, (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
@@ -966,8 +969,8 @@ object Ivf {
 
   /** [[probeListsCol]] keeping the exact integer q·c term per probed list
     * — structs (cid, baseq) — for the composite layouts whose ADC ranking
-    * needs the coarse score as its base term ([[IvfPq.probeAll]] /
-    * [[IvfSq.probeAll]]). Identical ranking and tie-break. Fused
+    * needs the coarse score as its base term ([[CodesIndex.probeAll]]).
+    * Identical ranking and tie-break. Fused
     * [[graft.plans.QuantTopLists]] kernel for the same reason
     * [[assignList]] fused: the slice(array_sort(array(struct…))) form's
     * generated code grows with nlist and drops to interpreted eval past a

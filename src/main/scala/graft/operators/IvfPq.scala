@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import graft.functions.VectorOps
+import org.apache.spark.sql.DataFrame
+import CodesIndex.{CodesModel, Coarse, ShardedModel}
+import Pq.PqCodec
 
 /** IVF-PQ — the canonical composite vector index ([[Ivf]] × [[Pq]]), the
   * layout billion-vector deployments actually run:
@@ -25,45 +25,9 @@ import graft.functions.VectorOps
   * so PQ training over them re-quantizes losslessly, and the DuckDB oracle
   * (SimilarityQueries.ivfPqSql) replays coarse training, residuals, PQ
   * training, encoding, per-list LUTs and the ADC ranking bit-for-bit.
+  * Lifecycle and probes are [[CodesIndex]]'s; this object trains.
   */
 object IvfPq {
-
-  private val VecScale = 1000000.0
-  private val DotScale = 1000.0
-
-  final case class IvfPqModel(nlist: Int, m: Int, ksub: Int, subDim: Int,
-                              iters: Int,
-                              coarse: Array[(Int, Array[Long])],
-                              books: Array[Array[(Int, Array[Long])]],
-                              indexPath: String)
-
-  /** (vec_id, list, embedding = residual as array<double>): each vector's
-    * exact-grid residual against its assigned coarse centroid. rq = vq − cq
-    * is an exact long on the 1e-6 grid; the double value rq/1e6 re-quantizes
-    * losslessly inside [[Pq.trainCodebooks]].
-    */
-  def residuals(embeddings: DataFrame,
-                coarse: Array[(Int, Array[Long])]): DataFrame = {
-    val cqByList = map(coarse.flatMap { case (cid, cq) =>
-      Seq(lit(cid), array(cq.toIndexedSeq.map(lit(_)): _*))
-    }.toIndexedSeq: _*)
-    Ivf.index(embeddings, coarse)
-      .withColumn("embedding",
-        zip_with(
-          transform(col("embedding"), x =>
-            floor(x.cast("double") * VecScale + 0.5).cast("long")),
-          element_at(cqByList, col("list")),
-          (vq, cq) => (vq - cq).cast("double") / VecScale))
-      .select("vec_id", "list", "embedding")
-  }
-
-  private val models =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int, Int, Int, Int), IvfPqModel]()
-
-  private def indexDir(key: String, nlist: Int, m: Int, ksub: Int, iters: Int): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-ivfpq-" + Ivf.dirToken(key) +
-        s"-$nlist-$m-$ksub-$iters").getAbsolutePath
 
   /** Index BUILD, memoized: coarse training, residual PQ training (ONE
     * codebook set shared across lists, trained on all residuals — standard
@@ -76,325 +40,34 @@ object IvfPq {
   def buildIndex(indexKey: String, embeddings: DataFrame,
                  nlist: Int = 16, m: Int = 8, ksub: Int = 16,
                  iters: Int = 2, dim: Int = 64,
-                 trainSamplePct: Int = 100): IvfPqModel =
-    models.computeIfAbsent((indexKey, nlist, m, ksub, iters, dim, trainSamplePct), _ => {
-      val subDim = dim / m
-      val trainSet =
-        if (trainSamplePct >= 100) embeddings
-        else Curation.hashSample(embeddings, col("vec_id"), trainSamplePct)
+                 trainSamplePct: Int = 100): CodesModel[PqCodec] =
+    CodesIndex.build("ivfpq", indexKey,
+        Seq(nlist, m, ksub, iters, dim, trainSamplePct), embeddings) {
+      val trainSet = CodesIndex.trainSet(embeddings, trainSamplePct)
       val coarse = Ivf.trainCentroids(trainSet, nlist, iters)
-      val resid = residuals(embeddings, coarse)
-      val books = Pq.trainCodebooks(residuals(trainSet, coarse), m, ksub, iters, dim)
-      val path = indexDir(indexKey, nlist, m, ksub, iters)
-      resid
-        .withColumn("codes", Pq.codesCol(col("embedding"), subDim, books))
-        .select("vec_id", "codes", "list")
-        .write.mode("overwrite").partitionBy("list").parquet(path)
-      // a from-scratch build is a new index: drop stale tombstones
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        embeddings.sparkSession.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(Ivf.tombstonesPath(path)), true)
-      val model = IvfPqModel(nlist, m, ksub, subDim, iters, coarse, books, path)
-      saveModel(embeddings.sparkSession, model)
-      model
-    })
-
-  /** Persist coarse quantizer + residual codebooks as a hidden `_model`
-    * file at the table root (tmp+rename) — the [[Ivf.saveModel]] story for
-    * the composite layout.
-    */
-  def saveModel(spark: org.apache.spark.sql.SparkSession,
-                model: IvfPqModel): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(model.indexPath, "_model.tmp")
-    val dst = new org.apache.hadoop.fs.Path(model.indexPath, "_model")
-    val out = fs.create(tmp, true)
-    try {
-      out.write((s"${model.nlist} ${model.m} ${model.ksub} ${model.subDim} " +
-        s"${model.iters}\n").getBytes("UTF-8"))
-      model.coarse.foreach { case (cid, cq) =>
-        out.write(s"C $cid ${cq.mkString(",")}\n".getBytes("UTF-8"))
-      }
-      for (s <- model.books.indices; (cid, cq) <- model.books(s))
-        out.write(s"P $s $cid ${cq.mkString(",")}\n".getBytes("UTF-8"))
-    } finally out.close()
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"model save rename failed: $dst")
-  }
-
-  /** The persisted composite model for an index directory, if any. */
-  def loadModel(spark: org.apache.spark.sql.SparkSession,
-                indexPath: String): Option[IvfPqModel] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(indexPath, "_model")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-        finally in.close()
-      val Array(nlist, m, ksub, subDim, iters) = lines.head.split(" ").map(_.toInt)
-      val coarse = lines.tail.filter(_.startsWith("C ")).map { l =>
-        val Array(_, cid, vs) = l.split(" ", 3)
-        (cid.toInt, vs.split(",").map(_.toLong))
-      }.toArray
-      val bySub = lines.tail.filter(_.startsWith("P ")).map { l =>
-        val Array(_, s, cid, vs) = l.split(" ", 4)
-        (s.toInt, (cid.toInt, vs.split(",").map(_.toLong)))
-      }.groupBy(_._1)
-      val books = Array.tabulate(m)(s =>
-        bySub.getOrElse(s, Vector.empty).map(_._2).sortBy(_._1).toArray)
-      Some(IvfPqModel(nlist, m, ksub, subDim, iters, coarse, books, indexPath))
+      val books = Pq.trainCodebooks(CodesIndex.residuals(trainSet, coarse),
+        m, ksub, iters, dim)
+      (PqCodec(m, ksub, dim / m, iters, books), Some(Coarse(nlist, iters, coarse)))
     }
-  }
 
-  /** The logical (vec_id, codes, list) encoding of vectors under a trained
-    * model — assign with the frozen coarse quantizer, residual-encode with
-    * the frozen codebooks, no write. [[buildIndex]] materializes this;
-    * [[appendToIndex]] appends it for a new batch; exposed for tests.
-    */
-  def encode(model: IvfPqModel, vectors: DataFrame): DataFrame =
-    residuals(vectors, model.coarse)
-      .withColumn("codes", Pq.codesCol(col("embedding"), model.subDim, model.books))
-      .select("vec_id", "codes", "list")
-
-  /** Incremental index maintenance — completes the [[Ivf.appendToIndex]] /
-    * [[Pq.appendToIndex]] trio for the composite index: the new batch is
-    * coarse-assigned and residual-encoded with the FROZEN model (no
-    * retrain) and its code rows append into the existing `list`
-    * directories. Untouched lists are never opened, existing files stay
-    * byte-identical (IvfPqSpec), cost tracks the batch. Per-row exact
-    * integer encoding makes the appended table equal a from-scratch
-    * encode of base∪batch with the same model (the `ann_incremental_ivfpq`
-    * oracle). NOT idempotent — [[buildIncremental]] is the replay-safe
-    * memoized form.
-    */
-  def appendToIndex(model: IvfPqModel, newBatch: DataFrame): Unit = {
-    graft.MutationGuard.claim(model.indexPath)
-    encode(model, newBatch)
-      .write.mode("append").partitionBy("list").parquet(model.indexPath)
-  }
-
-  private val incModels =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int, Int, Int), IvfPqModel]()
-
-  /** Memoized build-on-base + one append (see [[Ivf.buildIncremental]] for
-    * the replay-safety contract). The memo key covers every model-shaping
-    * parameter including `dim`; the base/batch FRAMES are not — use
-    * distinct indexKeys per (corpus, batch) pair.
+  /** Memoized build-on-base + one frozen-model append: the batch is
+    * coarse-assigned and residual-encoded with the base's model, so the
+    * table equals a from-scratch encode of base ∪ batch with it (the
+    * `ann_incremental_ivfpq` oracle).
     */
   def buildIncremental(indexKey: String, base: DataFrame, newBatch: DataFrame,
                        nlist: Int = 16, m: Int = 8, ksub: Int = 16,
-                       iters: Int = 2, dim: Int = 64): IvfPqModel =
-    incModels.computeIfAbsent((indexKey, nlist, m, ksub, iters, dim), _ => {
-      val model = buildIndex(indexKey + "#inc", base, nlist, m, ksub, iters, dim)
-      appendToIndex(model, newBatch)
-      model
-    })
-
-  /** Replay-idempotent append — the exactly-once streaming-ingest form
-    * (the [[Ivf.appendToIndexIdempotent]] contract over the composite
-    * index): frozen-model encode into per-`batchId` staging, one file per
-    * touched list, moved to `list=X/ingest-<batchId>.parquet` only if
-    * absent. Crash-replay is a no-op; mid-move crashes resume per file.
-    */
-  def appendToIndexIdempotent(model: IvfPqModel, newBatch: DataFrame,
-                              batchId: Long): Unit = {
-    graft.MutationGuard.claim(model.indexPath)
-    val staging = model.indexPath + s"__ingest_staging_$batchId"
-    encode(model, newBatch).repartition(1)
-      .write.mode("overwrite").partitionBy("list").parquet(staging)
-    graft.sources.Sinks.ingestStagedLists(newBatch.sparkSession, staging,
-      model.indexPath, batchId)
-  }
-
-  /** DELETE for the composite index — [[Ivf.deleteFromIndex]] over the
-    * list-partitioned codes table: resolve lists by joining the delete
-    * batch against the index's (vec_id, list) columns (AQE broadcasts
-    * small batches; mass takedowns shuffle), write
-    * per-list tombstones exactly-once into the sibling `__tombstones`
-    * table; [[probe]] anti-joins them pruned to the probed lists, and
-    * [[Ivf.compactLists]] over `model.indexPath` physically drops them.
-    */
-  def deleteFromIndex(model: IvfPqModel, ids: DataFrame, batchId: Long): Unit = {
-    graft.MutationGuard.claim(model.indexPath)
-    val spark = ids.sparkSession
-    val resolved = spark.read.parquet(model.indexPath)
-      .select(col("vec_id"), col("list"))
-      .join(ids.select("vec_id"), "vec_id") // no broadcast hint: AQE picks
-      // broadcast for small batches; a 100 TB-scale mass takedown must be
-      // allowed to shuffle instead of materializing on the driver
-    val tomb = Ivf.tombstonesPath(model.indexPath)
-    val staging = tomb + s"__ingest_staging_$batchId"
-    resolved.repartition(1)
-      .write.mode("overwrite").partitionBy("list").parquet(staging)
-    graft.sources.Sinks.ingestStagedLists(spark, staging, tomb, batchId)
-  }
-
-  /** PROBE: coarse probe selection (driver math, keeps each probed list's
-    * integer IVF score as the ADC base term), per-list residual LUTs
-    * (driver math on the tiny codebooks), then ONE pruned scan of the codes
-    * table — broadcast LUT join + partial agg — and the exact re-rank of
-    * the top `rerank` ADC candidates.
-    */
-  def probe(model: IvfPqModel, embeddings: DataFrame, queryVecId: Long,
-            k: Int, nprobe: Int = 4, rerank: Int = 50,
-            allowed: Option[DataFrame] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val qVec = embeddings.filter(col("vec_id") === queryVecId)
-      .select(transform(col("embedding"), _.cast("double")).as("e"))
-      .collect()(0).getSeq[Double](0).toArray
-
-    // coarse ranking — identical math to Ivf.probe, but keep sq (the exact
-    // ×1e9-grid q·c term) per probed list
-    val probes = model.coarse.map { case (cid, cq) =>
-      val norm2q = cq.map(c => c * c).sum
-      var sq = 0L
-      var d = 0
-      val n = math.min(qVec.length, cq.length)
-      while (d < n) { sq += math.floor(qVec(d) * cq(d) * DotScale + 0.5).toLong; d += 1 }
-      (cid, sq, sq.toDouble / math.sqrt(norm2q.toDouble))
-    }.sortBy { case (cid, _, s) => (-s, cid) }.take(nprobe)
-
-    // per-list LUTs over the query's residual against that list's centroid
-    val coarseByCid = model.coarse.toMap
-    val lut = for {
-      (list, _, _) <- probes.toSeq
-      cq = coarseByCid(list)
-      s <- 0 until model.m
-      (pcid, pcq) <- model.books(s)
-    } yield {
-      var dq = 0L
-      var d = 0
-      while (d < model.subDim) {
-        val i = s * model.subDim + d
-        val qr = qVec(i) - cq(i).toDouble / VecScale
-        dq += math.floor(qr * pcq(d) * DotScale + 0.5).toLong
-        d += 1
-      }
-      (list, s, pcid, dq)
-    }
-    val lutDf = lut.toDF("list", "sub", "cid", "dotq")
-    val baseDf = probes.toSeq.map { case (cid, sq, _) => (cid, sq) }
-      .toDF("list", "baseq")
-
-    val idx = spark.read.parquet(model.indexPath)
-      .filter(col("list").isin(probes.map(_._1).toIndexedSeq: _*) &&
-        col("vec_id") =!= queryVecId)
-    val live = graft.sources.Sinks.readTombstones(spark,
-        Ivf.tombstonesPath(model.indexPath), Some(probes.map(_._1).toIndexedSeq))
-      .fold(idx)(t => idx.join(t, Seq("vec_id"), "left_anti"))
-    // filtered search: mask BEFORE the ADC ranking (see Pq.probe)
-    val cand = allowed.fold(live)(a =>
-        live.join(a.select("vec_id").distinct(), Seq("vec_id"), "left_semi"))
-      .select(col("vec_id"), col("list"),
-        posexplode(col("codes")).as(Seq("sub", "cid")))
-      .join(broadcast(lutDf), Seq("list", "sub", "cid"))
-      .groupBy("vec_id", "list").agg(sum("dotq").as("rq"))
-      .join(broadcast(baseDf), "list")
-      .select(col("vec_id"), (col("rq") + col("baseq")).as("adcq"))
-      .orderBy(desc("adcq"), col("vec_id"))
-      .limit(rerank)
-
-    val q = embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_emb"))
-    cand.join(embeddings.select("vec_id", "embedding"), "vec_id")
-      .crossJoin(broadcast(q))
-      .withColumn("cosine", VectorOps.cosine(col("embedding"), col("q_emb")))
-      .orderBy(desc("cosine"), col("vec_id"))
-      .select("vec_id", "cosine")
-      .limit(k)
-  }
-
-  /** Set-oriented probe — pruned residual-ADC top-k for EVERY row of
-    * `queries` in one plan (the [[Pq.probeAll]] shape over the composite):
-    * per-row probe selection via `Ivf.probeStructsCol` (keeping each
-    * probed list's integer q·c base term), distributed per-(query, list)
-    * residual LUTs against the broadcast codebook rows, ONE keyed join
-    * against the probed lists of the codes table, query-keyed ADC ranking
-    * (baseq + Σlut, exact longs), exact re-rank. Per-query rows equal
-    * [[probe]]'s bit-for-bit (IvfPqSpec). Scale: candidate work is
-    * |queries| × nprobe/nlist of the ~4-byte codes; LUTs are
-    * |queries|·nprobe·m·ksub rows — broadcast-tiny for micro-batch query
-    * sets; ranking windows are keyed by query.
-    */
-  def probeAll(model: IvfPqModel, corpus: DataFrame, queries: DataFrame,
-               k: Int, nprobe: Int = 4, rerank: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val qp = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("p",
-        explode(Ivf.probeStructsCol(col("q_emb"), model.coarse, nprobe)))
-      .select(col("query_id"), col("q_emb"),
-        col("p.cid").as("list"), col("p.baseq").as("baseq"))
-    val centDf = model.coarse.toSeq.flatMap { case (cid, cq) =>
-      cq.indices.map(d => (cid, d, cq(d)))
-    }.toDF("list", "dim", "cq")
-    // per-(query, list, sub, cid) LUT: the query's residual against the
-    // list centroid, dotted with every codebook entry on the shared grid
-    val booksDf = (for {
-      s <- model.books.indices
-      (pcid, pcq) <- model.books(s)
-      d <- 0 until model.subDim
-    } yield (s, pcid, d, pcq(d))).toDF("sub", "cid", "sdim", "pcq")
-    val lut = qp
-      .select(col("query_id"), col("list"), col("baseq"),
-        posexplode(col("q_emb")).as(Seq("dim", "f")))
-      .join(broadcast(centDf), Seq("list", "dim"))
-      .select(col("query_id"), col("list"), col("baseq"),
-        (col("dim") / model.subDim).cast("int").as("sub"),
-        pmod(col("dim"), lit(model.subDim)).as("sdim"),
-        (col("f").cast("double") - col("cq").cast("double") / lit(VecScale))
-          .as("qr"))
-      .join(broadcast(booksDf), Seq("sub", "sdim"))
-      .groupBy("query_id", "list", "baseq", "sub", "cid")
-      .agg(sum(floor(col("qr") * col("pcq").cast("double") * lit(DotScale)
-        + lit(0.5)).cast("long")).as("dotq"))
-
-    val idx0 = spark.read.parquet(model.indexPath)
-      .select(col("vec_id"), col("codes"), col("list").cast("int").as("list"))
-    val idx = graft.sources.Sinks.readTombstones(spark,
-        Ivf.tombstonesPath(model.indexPath))
-      .fold(idx0)(t => idx0.join(t, Seq("vec_id"), "left_anti"))
-    val wAdc = Window.partitionBy("query_id").orderBy(desc("adcq"), col("vec_id"))
-    val cand = idx
-      .select(col("vec_id"), col("list"),
-        posexplode(col("codes")).as(Seq("sub", "cid")))
-      .join(broadcast(lut), Seq("list", "sub", "cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy("query_id", "vec_id", "baseq").agg(sum("dotq").as("rq"))
-      .select(col("query_id"), col("vec_id"),
-        (col("rq") + col("baseq")).as("adcq"))
-      .withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= rerank)
-      .select("query_id", "vec_id")
-
-    val qe = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"))
-    val wK = Window.partitionBy("query_id").orderBy(desc("cosine"), col("vec_id"))
-    cand.join(corpus.select("vec_id", "embedding"), "vec_id")
-      .join(qe, "query_id")
-      .withColumn("cosine", VectorOps.cosine(col("embedding"), col("q_emb")))
-      .withColumn("rn", row_number().over(wK))
-      .filter(col("rn") <= k)
-      .select("query_id", "vec_id", "cosine", "rn")
-  }
+                       iters: Int = 2, dim: Int = 64): CodesModel[PqCodec] =
+    CodesIndex.buildIncremental("ivfpq", indexKey, Seq(nlist, m, ksub, iters, dim),
+        newBatch)(buildIndex(indexKey + "#inc", base, nlist, m, ksub, iters, dim))
 
   /** One-shot convenience: memoized build (under `indexKey`) + probe. */
   def topKIvfPq(embeddings: DataFrame, queryVecId: Long, k: Int,
                 nlist: Int = 16, m: Int = 8, ksub: Int = 16,
                 nprobe: Int = 4, rerank: Int = 50,
                 indexKey: String = "adhoc"): DataFrame =
-    probe(buildIndex(indexKey, embeddings, nlist, m, ksub),
+    CodesIndex.probe(buildIndex(indexKey, embeddings, nlist, m, ksub),
       embeddings, queryVecId, k, nprobe, rerank)
-
-  // ---- sharded composite layout (past the broadcast-cap frontier) ----
 
   /** The sharded coarse quantizer lifted to the COMPOSITE layout: at the
     * 10¹¹-vector plan (746 shards × 65 454 lists) raw float lists are the
@@ -402,90 +75,14 @@ object IvfPq {
     * coarse quantizer AND its own residual codebooks, trained on the slice
     * only, so no artifact anywhere grows with the corpus. Same shard law
     * as [[Ivf.buildShardedIndex]] (hashBucket on vec_id), so Flat and PQ
-    * shards of one corpus route identically.
-    */
-  final case class IvfPqShardedModel(nShards: Int, shards: Seq[IvfPqModel])
-
-  private val shardedModels = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Int, Int, Int), IvfPqShardedModel]()
-
-  /** Build `nShards` independent IVF-PQ indexes over disjoint md5-hash
-    * slices, concurrently ([[Ivf.buildShardedIndex]]'s thread-pool
-    * discipline — per-shard builds are independent Spark jobs and
-    * hash-seeded exact integer math, so results are byte-identical at any
-    * parallelism).
+    * shards of one corpus route identically. Append, delete and the
+    * fan-out probe are [[CodesIndex]]'s sharded verbs.
     */
   def buildShardedIndex(indexKey: String, embeddings: DataFrame,
                         nShards: Int, nlist: Int = 16, m: Int = 8,
                         ksub: Int = 16, iters: Int = 2,
-                        parallelism: Int = 8): IvfPqShardedModel = {
-    require(nShards > 0, s"nShards=$nShards must be positive")
-    require(parallelism > 0, s"parallelism=$parallelism must be positive")
-    // iters is part of the key (round-11 advice): the per-shard index dirs
-    // encode it, so a hit under a different iters would hand back a model
-    // whose parameter the caller thinks they changed
-    shardedModels.computeIfAbsent((indexKey, nShards, nlist, m, ksub, iters), _ => {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, nShards))
-      try {
-        val futs = (0 until nShards).map { sh =>
-          pool.submit(new java.util.concurrent.Callable[IvfPqModel] {
-            def call(): IvfPqModel =
-              buildIndex(s"$indexKey#shard$sh/$nShards",
-                embeddings.filter(
-                  Curation.hashBucket(col("vec_id"), nShards) === sh),
-                nlist, m, ksub, iters)
-          })
-        }
-        IvfPqShardedModel(nShards, futs.map(_.get()))
-      } finally pool.shutdown()
-    })
-  }
-
-  /** Frozen-model append across the sharded PQ layout — rows route to
-    * their owning shard by the build's hash law and land through the
-    * per-shard idempotent encode-and-append ([[appendToIndexIdempotent]]):
-    * the grown sharded index is indistinguishable from one built on
-    * base ∪ batch under the same per-shard models.
-    */
-  def appendToShardedIndexIdempotent(model: IvfPqShardedModel,
-                                     newBatch: DataFrame,
-                                     batchId: Long): Unit =
-    model.shards.zipWithIndex.foreach { case (m, sh) =>
-      appendToIndexIdempotent(m,
-        newBatch.filter(Curation.hashBucket(col("vec_id"), model.nShards) === sh),
-        batchId)
-    }
-
-  /** DELETE across the sharded PQ layout: ids route by the hash law, land
-    * as per-shard tombstones; probes mask immediately.
-    */
-  def deleteFromShardedIndex(model: IvfPqShardedModel, ids: DataFrame,
-                             batchId: Long): Unit =
-    model.shards.zipWithIndex.foreach { case (m, sh) =>
-      deleteFromIndex(m,
-        ids.filter(Curation.hashBucket(col("vec_id"), model.nShards) === sh),
-        batchId)
-    }
-
-  /** Set-oriented fan-out probe — [[probeAll]] on every shard (each shard
-    * ranks lists with its OWN coarse quantizer, LUTs against its OWN
-    * codebooks, ADC over its codes only) and one query-keyed window
-    * re-cutting the global top-k from the ≤ nShards·k survivors. At
-    * exhaustive settings (nprobe = nlist, rerank ≥ slice) the union is
-    * the exact kNN join — the `ann_knn_sharded_pq` oracle gate.
-    */
-  def probeShardedAll(model: IvfPqShardedModel, corpus: DataFrame,
-                      queries: DataFrame, k: Int, nprobe: Int = 4,
-                      rerank: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("cosine"), col("vec_id"))
-    model.shards
-      .map(m => probeAll(m, corpus, queries, k, nprobe, rerank).drop("rn"))
-      .reduce(_ unionByName _)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select("query_id", "vec_id", "cosine", "rn")
-  }
+                        parallelism: Int = 8): ShardedModel[PqCodec] =
+    CodesIndex.buildSharded("ivfpq", indexKey, Seq(nlist, m, ksub, iters),
+        embeddings, nShards, parallelism)(
+      (key, slice) => buildIndex(key, slice, nlist, m, ksub, iters))
 }

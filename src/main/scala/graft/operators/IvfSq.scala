@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame}
-import org.apache.spark.sql.functions._
-import graft.functions.VectorOps
+import org.apache.spark.sql.DataFrame
+import CodesIndex.{CodesModel, Coarse}
+import Sq.SqCodec
 
 /** IVF-SQ8 — the coarse-pruning composite over SCALAR-quantized residuals
   * ([[Ivf]] × [[Sq]]), FAISS's `IVF,SQ8` layout and the standard middle
@@ -28,30 +28,10 @@ import graft.functions.VectorOps
   * Residuals are EXACT on the 1e-6 grid (rq = vq − cq, two on-grid longs)
   * and re-quantize losslessly inside [[Sq.trainParams]], so the DuckDB
   * oracle (SimilarityQueries.ivfSqSql) replays coarse training, residuals,
-  * the min/max pass, encoding and the ADC ranking bit-for-bit.
-  *
-  * Lifecycle verbs are the composite's ([[IvfPq]]'s) verbatim: frozen-model
-  * [[appendToIndex]] / idempotent form, per-list tombstone
-  * [[deleteFromIndex]], physical drop via the shared `Ivf.compactLists`
-  * (the codes dir IS a list-partitioned table), durable `_model`.
+  * the min/max pass, encoding and the ADC ranking bit-for-bit. Lifecycle
+  * and probes are [[CodesIndex]]'s; this object trains.
   */
 object IvfSq {
-
-  private val VecScale = 1000000.0
-  private val DotScale = 1000.0
-
-  final case class IvfSqModel(nlist: Int, dim: Int, iters: Int,
-                              coarse: Array[(Int, Array[Long])],
-                              mins: Array[Long], spans: Array[Long],
-                              indexPath: String)
-
-  private val models =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int), IvfSqModel]()
-
-  private def indexDir(key: String, nlist: Int, iters: Int): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-ivfsq-" + Ivf.dirToken(key) +
-        s"-$nlist-$iters").getAbsolutePath
 
   /** Index BUILD, memoized: coarse training, residual min/max training
     * (ONE per-dim grid shared across lists, trained on all residuals —
@@ -60,286 +40,26 @@ object IvfSq {
     * AND read only 64-byte codes.
     */
   def buildIndex(indexKey: String, embeddings: DataFrame,
-                 nlist: Int = 16, iters: Int = 2, dim: Int = 64): IvfSqModel =
-    models.computeIfAbsent((indexKey, nlist, iters, dim), _ => {
+                 nlist: Int = 16, iters: Int = 2, dim: Int = 64): CodesModel[SqCodec] =
+    CodesIndex.build("ivfsq", indexKey, Seq(nlist, iters, dim), embeddings) {
       val coarse = Ivf.trainCentroids(embeddings, nlist, iters)
-      val resid = IvfPq.residuals(embeddings, coarse)
-      val (mins, spans) = Sq.trainParams(resid, dim)
-      val path = indexDir(indexKey, nlist, iters)
-      resid
-        .withColumn("codes", Sq.codesCol(col("embedding"), mins, spans))
-        .select("vec_id", "codes", "list")
-        .write.mode("overwrite").partitionBy("list").parquet(path)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        embeddings.sparkSession.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(Ivf.tombstonesPath(path)), true)
-      val model = IvfSqModel(nlist, dim, iters, coarse, mins, spans, path)
-      saveModel(embeddings.sparkSession, model)
-      model
-    })
-
-  /** Persist coarse quantizer + residual grid as a hidden `_model` file at
-    * the table root (tmp+rename) — the [[IvfPq.saveModel]] story.
-    */
-  def saveModel(spark: org.apache.spark.sql.SparkSession,
-                model: IvfSqModel): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(model.indexPath, "_model.tmp")
-    val dst = new org.apache.hadoop.fs.Path(model.indexPath, "_model")
-    val out = fs.create(tmp, true)
-    try {
-      out.write(s"${model.nlist} ${model.dim} ${model.iters}\n".getBytes("UTF-8"))
-      model.coarse.foreach { case (cid, cq) =>
-        out.write(s"C $cid ${cq.mkString(",")}\n".getBytes("UTF-8"))
-      }
-      for (d <- 0 until model.dim)
-        out.write(s"S $d ${model.mins(d)} ${model.spans(d)}\n".getBytes("UTF-8"))
-    } finally out.close()
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"model save rename failed: $dst")
-  }
-
-  /** The persisted composite model for an index directory, if any. */
-  def loadModel(spark: org.apache.spark.sql.SparkSession,
-                indexPath: String): Option[IvfSqModel] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(indexPath, "_model")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-        finally in.close()
-      val Array(nlist, dim, iters) = lines.head.split(" ").map(_.toInt)
-      val coarse = lines.tail.filter(_.startsWith("C ")).map { l =>
-        val Array(_, cid, vs) = l.split(" ", 3)
-        (cid.toInt, vs.split(",").map(_.toLong))
-      }.toArray
-      val mins = new Array[Long](dim)
-      val spans = new Array[Long](dim)
-      lines.tail.filter(_.startsWith("S ")).foreach { l =>
-        val Array(_, d, mn, sp) = l.split(" ", 4)
-        mins(d.toInt) = mn.toLong; spans(d.toInt) = sp.toLong
-      }
-      Some(IvfSqModel(nlist, dim, iters, coarse, mins, spans, indexPath))
+      val (mins, spans) = Sq.trainParams(CodesIndex.residuals(embeddings, coarse), dim)
+      (SqCodec(dim, mins, spans), Some(Coarse(nlist, iters, coarse)))
     }
-  }
 
-  /** The logical (vec_id, codes, list) encoding of vectors under a trained
-    * model — frozen coarse assign, frozen-grid residual encode (out-of-
-    * range values saturate), no write.
-    */
-  def encode(model: IvfSqModel, vectors: DataFrame): DataFrame =
-    IvfPq.residuals(vectors, model.coarse)
-      .withColumn("codes", Sq.codesCol(col("embedding"), model.mins, model.spans))
-      .select("vec_id", "codes", "list")
-
-  /** Frozen-model append — [[IvfPq.appendToIndex]]'s contract: code rows
-    * append into the existing `list` directories, untouched lists never
-    * opened, cost tracks the batch. NOT idempotent; see
-    * [[appendToIndexIdempotent]].
-    */
-  def appendToIndex(model: IvfSqModel, newBatch: DataFrame): Unit = {
-    graft.MutationGuard.claim(model.indexPath)
-    encode(model, newBatch)
-      .write.mode("append").partitionBy("list").parquet(model.indexPath)
-  }
-
-  private val incModels =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int), IvfSqModel]()
-
-  /** Memoized build-on-base + one append (replay-safe form; frames are not
-    * part of the key — distinct indexKeys per (corpus, batch) pair).
+  /** Memoized build-on-base + one frozen-model append (replay-safe; frames
+    * are not part of the key — distinct indexKeys per (corpus, batch) pair).
     */
   def buildIncremental(indexKey: String, base: DataFrame, newBatch: DataFrame,
                        nlist: Int = 16, iters: Int = 2,
-                       dim: Int = 64): IvfSqModel =
-    incModels.computeIfAbsent((indexKey, nlist, iters, dim), _ => {
-      val model = buildIndex(indexKey + "#inc", base, nlist, iters, dim)
-      appendToIndex(model, newBatch)
-      model
-    })
-
-  /** Replay-idempotent append — the exactly-once streaming-ingest form
-    * over the list-partitioned codes table ([[IvfPq]]'s contract).
-    */
-  def appendToIndexIdempotent(model: IvfSqModel, newBatch: DataFrame,
-                              batchId: Long): Unit = {
-    graft.MutationGuard.claim(model.indexPath)
-    val staging = model.indexPath + s"__ingest_staging_$batchId"
-    encode(model, newBatch).repartition(1)
-      .write.mode("overwrite").partitionBy("list").parquet(staging)
-    graft.sources.Sinks.ingestStagedLists(newBatch.sparkSession, staging,
-      model.indexPath, batchId)
-  }
-
-  /** DELETE — per-list tombstones resolved from the index's own
-    * (vec_id, list) columns, exactly-once; probes anti-join pruned to the
-    * probed lists; `Ivf.compactLists` physically drops.
-    */
-  def deleteFromIndex(model: IvfSqModel, ids: DataFrame, batchId: Long): Unit = {
-    graft.MutationGuard.claim(model.indexPath)
-    val spark = ids.sparkSession
-    val resolved = spark.read.parquet(model.indexPath)
-      .select(col("vec_id"), col("list"))
-      .join(ids.select("vec_id"), "vec_id") // no broadcast hint: AQE picks
-      // broadcast for small batches; a 100 TB-scale mass takedown must be
-      // allowed to shuffle instead of materializing on the driver
-    val tomb = Ivf.tombstonesPath(model.indexPath)
-    val staging = tomb + s"__ingest_staging_$batchId"
-    resolved.repartition(1)
-      .write.mode("overwrite").partitionBy("list").parquet(staging)
-    graft.sources.Sinks.ingestStagedLists(spark, staging, tomb, batchId)
-  }
-
-  /** PROBE: coarse probe selection (driver math, keeps each probed list's
-    * exact integer IVF score as the ADC base term), broadcast per-(list,
-    * dim) query-residual table, then ONE pruned scan of the codes table —
-    * per-dim reconstruction + partial agg — and the exact re-rank of the
-    * top `rerank` ADC candidates. The corpus-sized work is nprobe/nlist of
-    * the 64-byte codes.
-    */
-  def probe(model: IvfSqModel, embeddings: DataFrame, queryVecId: Long,
-            k: Int, nprobe: Int = 4, rerank: Int = 50,
-            allowed: Option[DataFrame] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val qVec = embeddings.filter(col("vec_id") === queryVecId)
-      .select(transform(col("embedding"), _.cast("double")).as("e"))
-      .collect()(0).getSeq[Double](0).toArray
-
-    // coarse ranking — identical math to Ivf.probe, keeping sq per list
-    val probes = model.coarse.map { case (cid, cq) =>
-      val norm2q = cq.map(c => c * c).sum
-      var sq = 0L
-      var d = 0
-      val n = math.min(qVec.length, cq.length)
-      while (d < n) { sq += math.floor(qVec(d) * cq(d) * DotScale + 0.5).toLong; d += 1 }
-      (cid, sq, sq.toDouble / math.sqrt(norm2q.toDouble))
-    }.sortBy { case (cid, _, s) => (-s, cid) }.take(nprobe)
-
-    // per-(list, dim) query residual + the grid params — broadcast-tiny
-    val coarseByCid = model.coarse.toMap
-    val qr = for {
-      (list, _, _) <- probes.toSeq
-      cq = coarseByCid(list)
-      d <- 0 until model.dim
-    } yield (list, d, qVec(d) - cq(d).toDouble / VecScale,
-      model.mins(d), model.spans(d))
-    val qrDf = qr.toDF("list", "dim", "qr", "mn", "sp")
-    val baseDf = probes.toSeq.map { case (cid, sq, _) => (cid, sq) }
-      .toDF("list", "baseq")
-
-    val idx = spark.read.parquet(model.indexPath)
-      .filter(col("list").isin(probes.map(_._1).toIndexedSeq: _*) &&
-        col("vec_id") =!= queryVecId)
-    val live = graft.sources.Sinks.readTombstones(spark,
-        Ivf.tombstonesPath(model.indexPath), Some(probes.map(_._1).toIndexedSeq))
-      .fold(idx)(t => idx.join(t, Seq("vec_id"), "left_anti"))
-    // filtered search: mask BEFORE the ADC ranking (see Pq.probe)
-    val cand = allowed.fold(live)(a =>
-        live.join(a.select("vec_id").distinct(), Seq("vec_id"), "left_semi"))
-      .select(col("vec_id"), col("list"),
-        posexplode(col("codes")).as(Seq("dim", "code")))
-      .join(broadcast(qrDf), Seq("list", "dim"))
-      .withColumn("term", floor(col("qr")
-        * (col("mn") * lit(255L) + col("code").cast("long") * col("sp"))
-          .cast("double")
-        * lit(DotScale) + lit(0.5)).cast("long"))
-      .groupBy("vec_id", "list").agg(sum("term").as("rq"))
-      .join(broadcast(baseDf), "list")
-      // common ×(255·1e9) grid: coarse term scaled by the code grid's 255
-      .select(col("vec_id"), (col("rq") + lit(255L) * col("baseq")).as("adcq"))
-      .orderBy(desc("adcq"), col("vec_id"))
-      .limit(rerank)
-
-    val q = embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_emb"))
-    cand.join(embeddings.select("vec_id", "embedding"), "vec_id")
-      .crossJoin(broadcast(q))
-      .withColumn("cosine", VectorOps.cosine(col("embedding"), col("q_emb")))
-      .orderBy(desc("cosine"), col("vec_id"))
-      .select("vec_id", "cosine")
-      .limit(k)
-  }
-
-  /** Set-oriented probe — pruned residual-ADC top-k for EVERY row of
-    * `queries` in one plan (the [[Sq.probeAll]] shape over the composite):
-    * per-row probe selection via `Ivf.probeStructsCol` (keeping each
-    * probed list's integer q·c base term), query residuals against the
-    * broadcast centroid rows, ONE keyed join against the probed lists of
-    * the codes table, query-keyed ADC ranking on the ×(255·1e9) grid,
-    * exact re-rank. Per-query rows equal [[probe]]'s bit-for-bit
-    * (IvfSqSpec). Scale: candidate work is |queries| × nprobe/nlist of
-    * the 64-byte codes; ranking windows are keyed by query.
-    */
-  def probeAll(model: IvfSqModel, corpus: DataFrame, queries: DataFrame,
-               k: Int, nprobe: Int = 4, rerank: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // (query_id, list, baseq) probe table + per-(list, dim) residual grid
-    val qp = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("p",
-        explode(Ivf.probeStructsCol(col("q_emb"), model.coarse, nprobe)))
-      .select(col("query_id"), col("q_emb"),
-        col("p.cid").as("list"), col("p.baseq").as("baseq"))
-    val centDf = model.coarse.toSeq.flatMap { case (cid, cq) =>
-      cq.indices.map(d => (cid, d, cq(d)))
-    }.toDF("list", "dim", "cq")
-    val mnLit = typedLit(model.mins.toSeq)
-    val spLit = typedLit(model.spans.toSeq)
-    val qd = qp
-      .select(col("query_id"), col("list"), col("baseq"),
-        posexplode(col("q_emb")).as(Seq("dim", "f")))
-      .join(broadcast(centDf), Seq("list", "dim"))
-      .select(col("query_id"), col("list"), col("baseq"), col("dim"),
-        (col("f").cast("double") - col("cq").cast("double") / lit(VecScale))
-          .as("qr"),
-        element_at(mnLit, col("dim") + 1).as("mn"),
-        element_at(spLit, col("dim") + 1).as("sp"))
-
-    val idx0 = spark.read.parquet(model.indexPath)
-      .select(col("vec_id"), col("codes"), col("list").cast("int").as("list"))
-    val idx = graft.sources.Sinks.readTombstones(spark,
-        Ivf.tombstonesPath(model.indexPath))
-      .fold(idx0)(t => idx0.join(t, Seq("vec_id"), "left_anti"))
-    val wAdc = Window.partitionBy("query_id").orderBy(desc("adcq"), col("vec_id"))
-    val cand = idx
-      .select(col("vec_id"), col("list"),
-        posexplode(col("codes")).as(Seq("dim", "code")))
-      .join(broadcast(qd), Seq("list", "dim"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("term", floor(col("qr")
-        * (col("mn") * lit(255L) + col("code").cast("long") * col("sp"))
-          .cast("double")
-        * lit(DotScale) + lit(0.5)).cast("long"))
-      .groupBy("query_id", "vec_id", "baseq").agg(sum("term").as("rq"))
-      .select(col("query_id"), col("vec_id"),
-        (col("rq") + lit(255L) * col("baseq")).as("adcq"))
-      .withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= rerank)
-      .select("query_id", "vec_id")
-
-    val qe = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"))
-    val wK = Window.partitionBy("query_id").orderBy(desc("cosine"), col("vec_id"))
-    cand.join(corpus.select("vec_id", "embedding"), "vec_id")
-      .join(qe, "query_id")
-      .withColumn("cosine", VectorOps.cosine(col("embedding"), col("q_emb")))
-      .withColumn("rn", row_number().over(wK))
-      .filter(col("rn") <= k)
-      .select("query_id", "vec_id", "cosine", "rn")
-  }
+                       dim: Int = 64): CodesModel[SqCodec] =
+    CodesIndex.buildIncremental("ivfsq", indexKey, Seq(nlist, iters, dim), newBatch)(
+      buildIndex(indexKey + "#inc", base, nlist, iters, dim))
 
   /** One-shot convenience: memoized build (under `indexKey`) + probe. */
   def topKIvfSq(embeddings: DataFrame, queryVecId: Long, k: Int,
                 nlist: Int = 16, nprobe: Int = 4, rerank: Int = 50,
                 indexKey: String = "adhoc"): DataFrame =
-    probe(buildIndex(indexKey, embeddings, nlist),
+    CodesIndex.probe(buildIndex(indexKey, embeddings, nlist),
       embeddings, queryVecId, k, nprobe, rerank)
 }

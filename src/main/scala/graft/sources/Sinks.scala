@@ -112,14 +112,22 @@ object Sinks {
           .as("n_small_files"))
   }
 
+  /** The filesystem that holds `path`, resolved from the path's own scheme
+    * (a `gs://` or `file:` dir keeps its filesystem whatever
+    * `fs.defaultFS` names). Every staged verb here, and the codes indexes,
+    * resolve through it.
+    */
+  private[graft] def fileSystem(spark: org.apache.spark.sql.SparkSession,
+                                path: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** Replace `target` with `staging` (delete + rename through the Hadoop
     * filesystem — the swap step after [[compact]] or a foreachBatch
     * rewrite).
     */
   def swapDirs(spark: org.apache.spark.sql.SparkSession,
                staging: String, target: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, target)
     fs.delete(new org.apache.hadoop.fs.Path(target), true)
     if (!fs.rename(new org.apache.hadoop.fs.Path(staging),
         new org.apache.hadoop.fs.Path(target)))
@@ -141,8 +149,7 @@ object Sinks {
   def readForSwap(spark: org.apache.spark.sql.SparkSession,
                   tableDir: String, stagingSuffix: String = ".staging")
       : Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tableDir)
     val target = new org.apache.hadoop.fs.Path(tableDir)
     val staging = new org.apache.hadoop.fs.Path(tableDir + stagingSuffix)
     if (!fs.exists(target) && fs.exists(staging) && !fs.rename(staging, target))
@@ -195,8 +202,9 @@ object Sinks {
       .map(_.getPath)
 
   /** The exactly-once ingest move shared by the list-partitioned index
-    * append and delete paths (`Ivf`/`IvfPq`/`IvfSq`): a `list`-partitioned
-    * staging dir holding ONE data file per list has each file moved to
+    * append and delete paths (`Ivf` and the listed `CodesIndex` layouts):
+    * a `list`-partitioned staging dir holding ONE data file per list has
+    * each file moved to
     * `target/list=X/ingest-<batchId>.parquet` ONLY if that name is absent
     * — so a crash-replayed batch regenerates identical staging, finds its
     * destinations present, and is a no-op, and a crash mid-move resumes
@@ -210,8 +218,7 @@ object Sinks {
     */
   def ingestStagedLists(spark: org.apache.spark.sql.SparkSession,
                         staging: String, target: String, batchId: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, target)
     val stagingPath = new org.apache.hadoop.fs.Path(staging)
     fs.listStatus(stagingPath).toSeq
       .filter(d => d.isDirectory && d.getPath.getName.startsWith("list="))
@@ -262,14 +269,13 @@ object Sinks {
     *
     * The lease lives in a SIBLING `<dir>__lock/` directory, not inside
     * `dir`: compaction verbs atomically swap the whole data dir
-    * ([[swapDirs]] on `Pq.compactCodes`' codes table), which would delete
+    * ([[swapDirs]] on a flat `CodesIndex` table), which would delete
     * an in-dir lease out from under its live holder.
     */
   def withDirLease[T](spark: org.apache.spark.sql.SparkSession, dir: String,
                       owner: String = java.util.UUID.randomUUID().toString,
                       staleMs: Long = 15L * 60 * 1000)(body: => T): T = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, dir)
     val dirPath = new org.apache.hadoop.fs.Path(dir.stripSuffix("/") + "__lock")
     fs.mkdirs(dirPath)
     val lease = new org.apache.hadoop.fs.Path(dirPath, LeaseName)
@@ -325,8 +331,7 @@ object Sinks {
     */
   def readTombstones(spark: org.apache.spark.sql.SparkSession, tombDir: String,
                      lists: Option[Seq[Int]] = None): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tombDir)
     val p = new org.apache.hadoop.fs.Path(tombDir)
     if (!fs.exists(p) || fs.listStatus(p).isEmpty) None
     else {
@@ -340,9 +345,10 @@ object Sinks {
     }
   }
 
-  /** [[appendBatchFileIdempotent]]'s fault-injection seam, called with the
-    * destination at `"staged"` (before the rename) and `"published"`
-    * (before the stage is removed); crash-consistency specs make it throw.
+  /** Fault-injection seam of the staged publishes, called with the
+    * destination at `"staged"` (before the rename or swap) and, by
+    * [[appendBatchFileIdempotent]], at `"published"` (before the stage is
+    * removed); crash-consistency specs make it throw.
     */
   @volatile private[graft] var crashPoint: (String, org.apache.hadoop.fs.Path) => Unit =
     (_, _) => ()
@@ -365,8 +371,7 @@ object Sinks {
     */
   def appendBatchFileIdempotent(df: DataFrame, outDir: String,
                                 fileName: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      df.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(df.sparkSession, outDir)
     val dstDir = new org.apache.hadoop.fs.Path(outDir)
     val dst = new org.apache.hadoop.fs.Path(dstDir, fileName)
     val staging = new org.apache.hadoop.fs.Path(outDir + s"__staging_$fileName")
@@ -439,9 +444,7 @@ object Sinks {
     touched.foreach { v =>
       swapDirs(spark, s"$staging/$partCol=$v", s"$targetPath/$partCol=$v")
     }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    fileSystem(spark, staging).delete(new org.apache.hadoop.fs.Path(staging), true)
     touched
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.Row
 import graft.operators.SalesClean
+import graft.operators.CodesIndex.{Codec, CodesModel}
 
 /** Structured Streaming surface of the engine.
   *
@@ -832,83 +833,6 @@ object Streams {
           outDir, s"probe-$batchId.parquet")
       })
 
-  /** Streaming ANN probe over the COMPRESSED index — [[ivfProbeSink]]'s
-    * twin for the PQ codes table: each micro-batch of query vectors runs
-    * the set-oriented ADC engine ([[graft.operators.Pq.probeAll]], per-
-    * query-bit-identical to `Pq.probe`) and delivers (query_id, vec_id,
-    * cosine, rn) exactly-once — same deterministic per-batchId file
-    * contract as [[ivfProbeSink]]. Same foreachBatch rationale: top-k per
-    * query is a ranking, and the micro-batch is its closed candidate set.
-    */
-  def pqProbeSink(queries: DataFrame, model: graft.operators.Pq.PqModel,
-                  corpus: DataFrame, outDir: String, checkpointDir: String,
-                  k: Int = 10, rerank: Int = 50): DataStreamWriter[Row] =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.appendBatchFileIdempotent(
-          graft.operators.Pq.probeAll(model, corpus, batch, k, rerank),
-          outDir, s"probe-$batchId.parquet")
-      })
-
-  /** [[ivfIngestSink]]'s twin for the compressed index: each micro-batch
-    * of new vectors is encoded with the frozen codebooks and appended to
-    * the codes table exactly-once (`Pq.appendToIndexIdempotent` —
-    * deterministic per-batch file names, replay is a no-op). Pairs with
-    * [[pqProbeSink]] to close the growing-corpus loop for the PQ layout.
-    */
-  def pqIngestSink(vectors: DataFrame, model: graft.operators.Pq.PqModel,
-                   checkpointDir: String,
-                   compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
-    val writerId = java.util.UUID.randomUUID().toString
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.withDirLease(batch.sparkSession, model.codesPath,
-          writerId) {
-          graft.operators.Pq.appendToIndexIdempotent(model, batch, batchId)
-          // auto-compaction (see ivfIngestSink): fold the flat codes table
-          // once its data-file count exceeds the threshold
-          if (compactAboveFiles > 0) {
-            val fs = org.apache.hadoop.fs.FileSystem.get(
-              batch.sparkSession.sparkContext.hadoopConfiguration)
-            val n = fs.listStatus(
-                new org.apache.hadoop.fs.Path(model.codesPath))
-              .count(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-                !s.getPath.getName.startsWith("."))
-            if (n > compactAboveFiles)
-              graft.operators.Pq.compactCodes(batch.sparkSession, model)
-            ()
-          }
-        }
-      })
-  }
-
-  /** [[ivfIngestSink]] for the composite IVF-PQ index: frozen coarse
-    * assign + frozen residual encode per micro-batch, exactly-once into
-    * the list directories (`IvfPq.appendToIndexIdempotent` — the same
-    * `Sinks.ingestStagedLists` contract spec'd for the IVF and PQ sinks).
-    */
-  def ivfPqIngestSink(vectors: DataFrame,
-                      model: graft.operators.IvfPq.IvfPqModel,
-                      checkpointDir: String,
-                      compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
-    val writerId = java.util.UUID.randomUUID().toString
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.withDirLease(batch.sparkSession, model.indexPath,
-          writerId) {
-          graft.operators.IvfPq.appendToIndexIdempotent(model, batch, batchId)
-          // auto-compaction (see ivfIngestSink) over the list directories
-          if (compactAboveFiles > 0)
-            graft.operators.Ivf.compactLists(batch.sparkSession, model.indexPath,
-              maxFilesPerList = compactAboveFiles)
-        }
-        ()
-      })
-  }
-
   /** Streaming index maintenance — the WRITE-side twin of [[ivfProbeSink]]
     * and the streaming form of `Ivf.appendToIndex`: each micro-batch of
     * new vectors is assigned with the FROZEN quantizer and appended into
@@ -949,7 +873,7 @@ object Streams {
           writerId) {
           graft.operators.Ivf.appendToIndexIdempotent(model, batch, batchId)
           if (compactAboveFiles > 0)
-            graft.operators.Ivf.compactLists(batch.sparkSession, model.indexPath,
+            graft.operators.Ivf.compactIndex(batch.sparkSession, model,
               maxFilesPerList = compactAboveFiles)
         }
         ()
@@ -980,7 +904,7 @@ object Streams {
           graft.operators.Ivf.appendToIndexIdempotent(model,
             graft.operators.Embed.hashedTf(batch), batchId)
           if (compactAboveFiles > 0)
-            graft.operators.Ivf.compactLists(batch.sparkSession, model.indexPath,
+            graft.operators.Ivf.compactIndex(batch.sparkSession, model,
               maxFilesPerList = compactAboveFiles)
         }
         ()
@@ -1015,7 +939,7 @@ object Streams {
                 .hashBucket(col("vec_id"), model.nShards) === sh),
               batchId)
             if (compactAboveFiles > 0)
-              graft.operators.Ivf.compactLists(batch.sparkSession, m.indexPath,
+              graft.operators.Ivf.compactIndex(batch.sparkSession, m,
                 maxFilesPerList = compactAboveFiles)
           }
           ()
@@ -1046,7 +970,7 @@ object Streams {
           graft.operators.Ivf.appendToIndexIdempotent(model,
             graft.operators.CorpusIndex.chunkEmbeddings(batch), batchId)
           if (compactAboveFiles > 0)
-            graft.operators.Ivf.compactLists(batch.sparkSession, model.indexPath,
+            graft.operators.Ivf.compactIndex(batch.sparkSession, model,
               maxFilesPerList = compactAboveFiles)
         }
         ()
@@ -1071,40 +995,18 @@ object Streams {
         graft.operators.Ivf.deleteFromIndex(model, batch, batchId)
       })
 
-  /** [[ivfDeleteSink]] for the compressed-codes layout — same per-batchId
-    * staged-move tombstone contract, so the three-layout takedown story is
-    * symmetric: `Pq.deleteFromIndex` resolves nothing (the codes table is
-    * flat), it just lands the batch's ids as a tombstone file the ADC
-    * probe masks BEFORE its rerank cut.
+  /** Streaming ANN probe over a compressed-codes index (PQ, SQ8, IVF-PQ
+    * or IVF-SQ8) — [[ivfProbeSink]]'s twin: each micro-batch of query
+    * vectors runs the set-oriented ADC engine
+    * ([[graft.operators.CodesIndex.probeAll]], per-query bit-identical to
+    * `CodesIndex.probe`; `nprobe` applies to the listed layouts) and
+    * delivers (query_id, vec_id, cosine, rn) exactly-once under the same
+    * deterministic per-batchId file contract. Same foreachBatch rationale:
+    * top-k per query is a ranking, and the micro-batch is its closed
+    * candidate set.
     */
-  def pqDeleteSink(ids: DataFrame, model: graft.operators.Pq.PqModel,
-                   checkpointDir: String): DataStreamWriter[Row] =
-    ids.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Pq.deleteFromIndex(model, batch, batchId)
-      })
-
-  /** [[ivfDeleteSink]] for the composite layout — tombstones land per
-    * coarse list (resolved by the same column-pruned (vec_id, list) join),
-    * pruned-list probes anti-join only the tombstones of probed lists.
-    */
-  def ivfPqDeleteSink(ids: DataFrame, model: graft.operators.IvfPq.IvfPqModel,
-                      checkpointDir: String): DataStreamWriter[Row] =
-    ids.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.IvfPq.deleteFromIndex(model, batch, batchId)
-      })
-
-  /** [[pqProbeSink]] for the IVF-PQ composite — each micro-batch of query
-    * vectors runs the set-oriented pruned residual-ADC engine
-    * (`IvfPq.probeAll`, per-query-bit-identical to `IvfPq.probe`) and
-    * delivers (query_id, vec_id, cosine, rn) exactly-once via the same
-    * deterministic per-batchId file contract.
-    */
-  def ivfPqProbeSink(queries: DataFrame,
-                     model: graft.operators.IvfPq.IvfPqModel,
+  def codesProbeSink(queries: DataFrame,
+                     model: CodesModel[Codec],
                      corpus: DataFrame, outDir: String, checkpointDir: String,
                      k: Int = 10, nprobe: Int = 4,
                      rerank: Int = 50): DataStreamWriter[Row] =
@@ -1112,34 +1014,20 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.Sinks.appendBatchFileIdempotent(
-          graft.operators.IvfPq.probeAll(model, corpus, batch, k, nprobe, rerank),
+          graft.operators.CodesIndex.probeAll(model, corpus, batch, k, nprobe, rerank),
           outDir, s"probe-$batchId.parquet")
       })
 
-  /** [[ivfPqProbeSink]] for the IVF-SQ8 composite — with this, all five
-    * materialized layouts drive ingest, probe AND takedown from streams.
+  /** [[ivfIngestSink]] for a compressed-codes index: each micro-batch of
+    * new vectors is encoded with the frozen model and lands exactly-once
+    * (`CodesIndex.appendToIndexIdempotent` — deterministic per-batch file
+    * names, replay is a no-op) under the index's writer lease.
+    * `compactAboveFiles > 0` arms in-stream auto-compaction: after each
+    * batch, `CodesIndex.compactIndex` folds the flat table, or each list,
+    * holding more data files than that (or carrying tombstones).
     */
-  def ivfSqProbeSink(queries: DataFrame,
-                     model: graft.operators.IvfSq.IvfSqModel,
-                     corpus: DataFrame, outDir: String, checkpointDir: String,
-                     k: Int = 10, nprobe: Int = 4,
-                     rerank: Int = 50): DataStreamWriter[Row] =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.appendBatchFileIdempotent(
-          graft.operators.IvfSq.probeAll(model, corpus, batch, k, nprobe, rerank),
-          outDir, s"probe-$batchId.parquet")
-      })
-
-  /** [[ivfPqIngestSink]] for the IVF-SQ8 composite: frozen coarse assign +
-    * frozen-grid residual encode per micro-batch (out-of-range values
-    * saturate), exactly-once into the list directories via the shared
-    * `Sinks.ingestStagedLists` contract; `compactAboveFiles > 0` arms the
-    * same in-stream auto-compaction over the lists.
-    */
-  def ivfSqIngestSink(vectors: DataFrame,
-                      model: graft.operators.IvfSq.IvfSqModel,
+  def codesIngestSink(vectors: DataFrame,
+                      model: CodesModel[Codec],
                       checkpointDir: String,
                       compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
     val writerId = java.util.UUID.randomUUID().toString
@@ -1148,87 +1036,27 @@ object Streams {
       .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.Sinks.withDirLease(batch.sparkSession, model.indexPath,
           writerId) {
-          graft.operators.IvfSq.appendToIndexIdempotent(model, batch, batchId)
+          graft.operators.CodesIndex.appendToIndexIdempotent(model, batch, batchId)
           if (compactAboveFiles > 0)
-            graft.operators.Ivf.compactLists(batch.sparkSession, model.indexPath,
+            graft.operators.CodesIndex.compactIndex(batch.sparkSession, model,
               maxFilesPerList = compactAboveFiles)
         }
         ()
       })
   }
 
-  /** [[ivfPqDeleteSink]] for the IVF-SQ8 composite — per-list tombstones
-    * resolved by the same column-pruned (vec_id, list) join; pruned-list
-    * probes anti-join only the tombstones of probed lists. Ingest and
-    * takedown are now stream-drivable on all five materialized layouts.
+  /** [[ivfDeleteSink]] for a compressed-codes index: each micro-batch of
+    * (vec_id) rows lands as per-batchId tombstones
+    * (`CodesIndex.deleteFromIndex`; per list when listed), so replays are
+    * no-ops and the ADC probes mask the ids before their rerank cut.
     */
-  def ivfSqDeleteSink(ids: DataFrame, model: graft.operators.IvfSq.IvfSqModel,
+  def codesDeleteSink(ids: DataFrame,
+                      model: CodesModel[Codec],
                       checkpointDir: String): DataStreamWriter[Row] =
     ids.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.IvfSq.deleteFromIndex(model, batch, batchId)
-      })
-
-  /** [[pqProbeSink]] for the scalar-quantized (SQ8) layout — the fourth
-    * index's streaming probe: each micro-batch of query vectors runs the
-    * set-oriented integer-ADC engine (`Sq.probeAll`, per-query-
-    * bit-identical to `Sq.probe`) and delivers (query_id, vec_id, cosine,
-    * rn) exactly-once via the same deterministic per-batchId file
-    * contract.
-    */
-  def sqProbeSink(queries: DataFrame, model: graft.operators.Sq.SqModel,
-                  corpus: DataFrame, outDir: String, checkpointDir: String,
-                  k: Int = 10, rerank: Int = 50): DataStreamWriter[Row] =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.appendBatchFileIdempotent(
-          graft.operators.Sq.probeAll(model, corpus, batch, k, rerank),
-          outDir, s"probe-$batchId.parquet")
-      })
-
-  /** [[pqIngestSink]] for the SQ8 codes table: frozen per-dim params
-    * encode each micro-batch (out-of-range values saturate), exactly-once
-    * via `Sq.appendToIndexIdempotent`; `compactAboveFiles > 0` arms the
-    * same in-stream auto-compaction over the flat codes table.
-    */
-  def sqIngestSink(vectors: DataFrame, model: graft.operators.Sq.SqModel,
-                   checkpointDir: String,
-                   compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
-    val writerId = java.util.UUID.randomUUID().toString
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.withDirLease(batch.sparkSession, model.codesPath,
-          writerId) {
-          graft.operators.Sq.appendToIndexIdempotent(model, batch, batchId)
-          if (compactAboveFiles > 0) {
-            val fs = org.apache.hadoop.fs.FileSystem.get(
-              batch.sparkSession.sparkContext.hadoopConfiguration)
-            val n = fs.listStatus(
-                new org.apache.hadoop.fs.Path(model.codesPath))
-              .count(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-                !s.getPath.getName.startsWith("."))
-            if (n > compactAboveFiles)
-              graft.operators.Sq.compactCodes(batch.sparkSession, model)
-            ()
-          }
-        }
-      })
-  }
-
-  /** [[pqDeleteSink]] for the SQ8 layout — flat codes table, so the
-    * tombstone batch needs no list resolution; the ADC probe masks the
-    * ids BEFORE its rerank cut. Completes the four-layout symmetry:
-    * ingest / probe / delete drivable from streams on every index.
-    */
-  def sqDeleteSink(ids: DataFrame, model: graft.operators.Sq.SqModel,
-                   checkpointDir: String): DataStreamWriter[Row] =
-    ids.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Sq.deleteFromIndex(model, batch, batchId)
+        graft.operators.CodesIndex.deleteFromIndex(model, batch, batchId)
       })
 
   /** Self-maintaining ingest — [[ivfIngestSink]] plus DRIFT handling: each
@@ -1265,7 +1093,7 @@ object Streams {
           val m = graft.operators.Ivf.currentModel(spark, model)
           graft.operators.Ivf.appendToIndexIdempotent(m, batch, batchId)
           if (compactAboveFiles > 0)
-            graft.operators.Ivf.compactLists(spark, m.indexPath,
+            graft.operators.Ivf.compactIndex(spark, m,
               maxFilesPerList = compactAboveFiles)
           if (rebalanceAboveRatio > 0.0)
             graft.operators.Ivf.rebalanceIndex(spark, m, rebalanceAboveRatio)

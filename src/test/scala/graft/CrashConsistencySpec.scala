@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.{CodesIndex, Pq}
 import graft.sources.Sinks
 
 /** Fault injection for the staged publish verbs: a simulated crash at each
@@ -45,4 +46,33 @@ class CrashConsistencySpec extends SparkSpec {
       assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
       assert(!staging.exists(), "replay left the staging dir behind")
     }
+
+  test("flat codes compaction: crash between the staged rewrite and the swap, rerun converges") {
+    val emb = Tables.embeddings(spark, sfDir)
+    def lifecycle(key: String) = {
+      val m = Pq.buildIndex(key, emb.filter($"vec_id" % 5 =!= 0))
+      CodesIndex.appendToIndexIdempotent(m, emb.filter($"vec_id" % 5 === 0), 3L)
+      CodesIndex.deleteFromIndex(m, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 4L)
+      m
+    }
+    val clean = lifecycle(sfDir + "#crashcompact-clean")
+    CodesIndex.compactIndex(spark, clean)
+    val model = lifecycle(sfDir + "#crashcompact")
+    val root = new java.io.File(model.indexPath)
+    val staging = new java.io.File(model.indexPath + "__compact_staging")
+    crashingAt("staged", root.getParent, root.getName) {
+      CodesIndex.compactIndex(spark, model)
+    }
+    assert(staging.exists())
+    CodesIndex.compactIndex(spark, model) // rerun
+    def manifest(m: CodesIndex.CodesModel[CodesIndex.Codec]) = Sinks.readIngestManifest(
+      Sinks.fileSystem(spark, m.indexPath), new org.apache.hadoop.fs.Path(m.indexPath))
+    assert(manifest(model) === Set(3L) && manifest(model) === manifest(clean))
+    val got = CodesIndex.readIndex(spark, model)
+    val want = CodesIndex.readIndex(spark, clean)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    assert(!staging.exists(), "rerun left the staging dir behind")
+    assert(!new java.io.File(model.indexPath + "__tombstones").exists())
+    assert(CodesIndex.loadModel[CodesIndex.Codec](spark, model.indexPath).nonEmpty)
+  }
 }

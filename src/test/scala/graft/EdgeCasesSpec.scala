@@ -81,8 +81,8 @@ class EdgeCasesSpec extends SparkSpec {
       (2L, Array.tabulate(64)(i => if (i == 0) -1.0f else 0.5f))
     ).toDF("vec_id", "embedding")
     val m = Sq.buildIndex("edge-sq-tiny", tiny)
-    assert(m.spans.drop(1).forall(_ === 0L), "dims 1..63 must have span 0")
-    val got = Sq.probe(m, tiny, 0L, 2, rerank = 10)
+    assert(m.codec.spans.drop(1).forall(_ === 0L), "dims 1..63 must have span 0")
+    val got = CodesIndex.probe(m, tiny, 0L, 2, rerank = 10)
       .select("vec_id").as[Long].collect().toSeq
     val exact = Similarity.topK(tiny, 0L, 2)
       .select("vec_id").as[Long].collect().toSeq
@@ -98,8 +98,8 @@ class EdgeCasesSpec extends SparkSpec {
       (2L, Array.tabulate(64)(i => if (i == 0) -1.0f else 0.5f))
     ).toDF("vec_id", "embedding")
     val m = IvfSq.buildIndex("edge-ivfsq-tiny", tiny)
-    val got = IvfSq.probe(m, tiny, 0L, 2,
-      nprobe = m.coarse.length, rerank = 10)
+    val got = CodesIndex.probe(m, tiny, 0L, 2,
+      nprobe = m.coarse.get.centroids.length, rerank = 10)
       .select("vec_id").as[Long].collect().toSeq
     val exact = Similarity.topK(tiny, 0L, 2)
       .select("vec_id").as[Long].collect().toSeq
@@ -111,7 +111,7 @@ class EdgeCasesSpec extends SparkSpec {
     val none = emb.filter($"label" === -999).select("vec_id")
     assert(Similarity.topKWhere(emb, 0L, 10, $"label" === -999).count() === 0)
     val sq = Sq.buildIndex(sfDir + "#edgespec", emb)
-    assert(Sq.probeFiltered(sq, emb, 0L, 10, none).count() === 0)
+    assert(CodesIndex.probe(sq, emb, 0L, 10, allowed = Some(none)).count() === 0)
   }
 
   test("similarity on a single-vector corpus yields no neighbors") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{IvfPq, Similarity}
+import graft.operators.{CodesIndex, IvfPq, Pq, Similarity}
 
 class IvfPqSpec extends SparkSpec {
   import spark.implicits._
@@ -16,7 +16,7 @@ class IvfPqSpec extends SparkSpec {
     val n = emb.count().toInt
     val exact = Similarity.topK(emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
-    val got = IvfPq.probe(model, emb, 0L, 10, nprobe = model.nlist, rerank = n)
+    val got = CodesIndex.probe(model, emb, 0L, 10, nprobe = model.coarse.get.nlist, rerank = n)
       .select("vec_id").as[Long].collect().toSeq
     assert(got === exact)
   }
@@ -26,7 +26,7 @@ class IvfPqSpec extends SparkSpec {
     val batch = emb.filter($"vec_id" % 5 === 0)
     val incModel = IvfPq.buildIndex(sfDir + "#appendspec", base)
     val before = FileSnapshots.snapshot(incModel.indexPath)
-    IvfPq.appendToIndex(incModel, batch)
+    CodesIndex.appendToIndex(incModel, batch)
     val after = FileSnapshots.snapshot(incModel.indexPath)
     before.foreach { case (p, sig) =>
       assert(after.get(p).contains(sig), s"pre-existing file changed: $p")
@@ -36,7 +36,7 @@ class IvfPqSpec extends SparkSpec {
     // of the whole union
     val stored = spark.read.parquet(incModel.indexPath)
       .select($"vec_id", $"codes", $"list".cast("int").as("list"))
-    val expected = IvfPq.encode(incModel, emb)
+    val expected = CodesIndex.encode(incModel, emb)
     assert(stored.exceptAll(expected).isEmpty, "stored has codes a fresh encode lacks")
     assert(expected.exceptAll(stored).isEmpty, "fresh encode has codes the stored index lacks")
   }
@@ -46,14 +46,14 @@ class IvfPqSpec extends SparkSpec {
     val incModel = IvfPq.buildIndex(sfDir + "#idemspec", base)
     val b1 = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 === 0)
     val b2 = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 =!= 0)
-    IvfPq.appendToIndexIdempotent(incModel, b1, batchId = 0L)
+    CodesIndex.appendToIndexIdempotent(incModel, b1, batchId = 0L)
     val afterOnce = FileSnapshots.snapshot(incModel.indexPath)
-    IvfPq.appendToIndexIdempotent(incModel, b1, batchId = 0L)
+    CodesIndex.appendToIndexIdempotent(incModel, b1, batchId = 0L)
     assert(FileSnapshots.snapshot(incModel.indexPath) === afterOnce)
-    IvfPq.appendToIndexIdempotent(incModel, b2, batchId = 1L)
+    CodesIndex.appendToIndexIdempotent(incModel, b2, batchId = 1L)
     val stored = spark.read.parquet(incModel.indexPath)
       .select($"vec_id", $"codes", $"list".cast("int").as("list"))
-    val expected = IvfPq.encode(incModel, emb)
+    val expected = CodesIndex.encode(incModel, emb)
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
   }
@@ -63,8 +63,8 @@ class IvfPqSpec extends SparkSpec {
       emb.filter($"vec_id" % 5 =!= 0), emb.filter($"vec_id" % 5 === 0))
     val exact = Similarity.topK(emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
-    val got = IvfPq.probe(incModel, emb, 0L, 10,
-        nprobe = incModel.nlist, rerank = emb.count().toInt)
+    val got = CodesIndex.probe(incModel, emb, 0L, 10,
+        nprobe = incModel.coarse.get.nlist, rerank = emb.count().toInt)
       .select("vec_id").as[Long].collect().toSeq
     assert(got === exact)
   }
@@ -72,7 +72,7 @@ class IvfPqSpec extends SparkSpec {
   test("partial probing keeps useful recall") {
     val exact = Similarity.topK(emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSet
-    val got = IvfPq.probe(model, emb, 0L, 10, nprobe = 8)
+    val got = CodesIndex.probe(model, emb, 0L, 10, nprobe = 8)
       .select("vec_id").as[Long].collect().toSet
     val recall = (exact & got).size.toDouble / exact.size
     assert(recall >= 0.5, s"IVF-PQ recall@10 at nprobe=8 was $recall")
@@ -98,30 +98,30 @@ class IvfPqSpec extends SparkSpec {
   test("probeAll equals the single-query probe for every query") {
     val emb = Tables.embeddings(spark, sfDir)
     val model = IvfPq.buildIndex(sfDir, emb)
-    val all = IvfPq.probeAll(model, emb, emb.filter($"vec_id" < 5), 10)
+    val all = CodesIndex.probeAll(model, emb, emb.filter($"vec_id" < 5), 10)
       .select("query_id", "vec_id", "cosine")
       .as[(Long, Long, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSet).toMap
     (0L until 5L).foreach { qid =>
-      val single = IvfPq.probe(model, emb, qid, 10)
+      val single = CodesIndex.probe(model, emb, qid, 10)
         .as[(Long, Double)].collect().toSet
       assert(all(qid) === single, s"query $qid diverged")
     }
   }
 
   test("persisted composite model round-trips exactly") {
-    val loaded = IvfPq.loadModel(spark, model.indexPath).get
-    assert(loaded.nlist === model.nlist && loaded.m === model.m &&
-      loaded.ksub === model.ksub && loaded.subDim === model.subDim)
-    assert(loaded.coarse.map(_._1).toSeq === model.coarse.map(_._1).toSeq)
-    assert(loaded.coarse.zip(model.coarse)
+    val loaded = CodesIndex.loadModel[Pq.PqCodec](spark, model.indexPath).get
+    assert(loaded.coarse.get.nlist === model.coarse.get.nlist && loaded.codec.m === model.codec.m &&
+      loaded.codec.ksub === model.codec.ksub && loaded.codec.subDim === model.codec.subDim)
+    assert(loaded.coarse.get.centroids.map(_._1).toSeq === model.coarse.get.centroids.map(_._1).toSeq)
+    assert(loaded.coarse.get.centroids.zip(model.coarse.get.centroids)
       .forall { case ((_, a), (_, b)) => a.toSeq == b.toSeq })
-    loaded.books.zip(model.books).foreach { case (a, b) =>
+    loaded.codec.codebooks.zip(model.codec.codebooks).foreach { case (a, b) =>
       assert(a.map(_._1).toSeq === b.map(_._1).toSeq)
       assert(a.zip(b).forall { case ((_, x), (_, y)) => x.toSeq == y.toSeq })
     }
-    val p = IvfPq.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
-    assert(IvfPq.probe(loaded, emb, 0L, 10)
+    val p = CodesIndex.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
+    assert(CodesIndex.probe(loaded, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === p)
   }
 
@@ -132,34 +132,34 @@ class IvfPqSpec extends SparkSpec {
       nShards = 3, nlist = 4)
     val qs = emb.filter($"vec_id" < 8)
     // the fan-out set-probe equals the hand-rolled per-shard union re-cut
-    val got = IvfPq.probeShardedAll(sm, emb, qs, 5, nprobe = 2, rerank = 20)
+    val got = CodesIndex.probeShardedAll(sm, emb, qs, 5, nprobe = 2, rerank = 20)
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(desc("cosine"), col("vec_id"))
     val byHand = sm.shards
-      .map(m => IvfPq.probeAll(m, emb, qs, 5, nprobe = 2, rerank = 20).drop("rn"))
+      .map(m => CodesIndex.probeAll(m, emb, qs, 5, nprobe = 2, rerank = 20).drop("rn"))
       .reduce(_ unionByName _)
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
     assert(got === byHand)
     // exhaustive fan-out over base+appended batch ≡ brute force: routing,
     // per-shard frozen-model encode, ADC and the re-cut lose nothing
-    IvfPq.appendToShardedIndexIdempotent(sm, batch, batchId = 5L)
-    IvfPq.appendToShardedIndexIdempotent(sm, batch, batchId = 5L) // replay no-op
+    CodesIndex.appendToShardedIndexIdempotent(sm, batch, batchId = 5L)
+    CodesIndex.appendToShardedIndexIdempotent(sm, batch, batchId = 5L) // replay no-op
     assert(sm.shards.map(m => spark.read.parquet(m.indexPath).count()).sum
       === emb.count())
     val exact = Similarity.knnJoin(emb, qs, 5)
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
-    val exh = IvfPq.probeShardedAll(sm, emb, qs, 5, nprobe = 4,
+    val exh = CodesIndex.probeShardedAll(sm, emb, qs, 5, nprobe = 4,
         rerank = Int.MaxValue)
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
     assert(exh === exact)
     // routed delete masks across shards
     val doomed = emb.filter($"vec_id" % 7 === 1).select("vec_id")
-    IvfPq.deleteFromShardedIndex(sm, doomed, batchId = 6L)
+    CodesIndex.deleteFromShardedIndex(sm, doomed, batchId = 6L)
     val exactLive = Similarity.knnJoin(emb.filter($"vec_id" % 7 =!= 1), qs, 5)
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
-    val after = IvfPq.probeShardedAll(sm, emb, qs, 5, nprobe = 4,
+    val after = CodesIndex.probeShardedAll(sm, emb, qs, 5, nprobe = 4,
         rerank = Int.MaxValue)
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
     assert(after === exactLive)

@@ -631,40 +631,6 @@ class IvfSpec extends SparkSpec {
     assert(ivf.exceptAll(exact).isEmpty && exact.exceptAll(ivf).isEmpty)
   }
 
-  /** Names of the parquet schema-inference jobs `body` launches: footer
-    * reads run as a `parquet at …` job outside any SQL execution (writes
-    * and collects carry an execution id). A marker job drains the
-    * listener: events reach one listener in order.
-    */
-  private def inferenceJobs(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    // (stage name, job description, outside any SQL execution)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Boolean)]()
-    val marker = "ivfspec-drain-" + System.nanoTime()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        seen.add((e.stageInfos.headOption.map(_.name).getOrElse(""),
-          props.flatMap(p => Option(p.getProperty("spark.job.description"))).orNull,
-          props.forall(_.getProperty("spark.sql.execution.id") == null)))
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen.asScala.exists(_._2 == marker) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(10)
-    } finally sc.removeSparkListener(l)
-    seen.asScala.toSeq.collect {
-      case (name, _, true) if name.startsWith("parquet at") => name
-    }
-  }
-
   test("build schema is recorded in _centroids and survives saveModel → loadModel") {
     val model = Ivf.buildIndex(sfDir + "#schema", emb, nlist = 8)
     // the recorded schema is exactly what an inferred read would produce
@@ -686,12 +652,13 @@ class IvfSpec extends SparkSpec {
     Ivf.appendToIndexIdempotent(model, emb.filter($"vec_id" % 5 === 0), 1L)
     Ivf.deleteFromIndex(model, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 2L)
     // the detector sees the inferred read this change removed
-    assert(inferenceJobs(spark.read.parquet(model.indexPath).count()).nonEmpty)
-    val jobs = inferenceJobs {
+    assert(InferenceJobs.of(spark)(spark.read.parquet(model.indexPath).count()).nonEmpty)
+    val jobs = InferenceJobs.of(spark) {
       Ivf.probe(model, emb, 0L, 10).collect()
       Ivf.probeAll(model, emb.filter($"vec_id" < 3), 10).collect()
       Ivf.deleteFromIndex(model,
         emb.filter($"vec_id" % 7 === 4).select("vec_id"), 3L)
+      Ivf.compactIndex(spark, model, maxFilesPerList = Int.MaxValue)
     }
     assert(jobs.isEmpty, s"schema-inference jobs: ${jobs.mkString(", ")}")
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{IvfSq, Ivf, Similarity}
+import graft.operators.{CodesIndex, IvfSq, Sq, Similarity}
 
 class IvfSqSpec extends SparkSpec {
   import spark.implicits._
@@ -14,8 +14,8 @@ class IvfSqSpec extends SparkSpec {
     val model = IvfSq.buildIndex(sfDir + "#spec", emb)
     val exact = Similarity.topK(emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
-    val got = IvfSq.probe(model, emb, 0L, 10,
-      nprobe = model.nlist, rerank = emb.count().toInt + 10)
+    val got = CodesIndex.probe(model, emb, 0L, 10,
+      nprobe = model.coarse.get.nlist, rerank = emb.count().toInt + 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(got === exact)
   }
@@ -25,7 +25,7 @@ class IvfSqSpec extends SparkSpec {
     val batch = emb.filter($"vec_id" % 5 === 0)
     val model = IvfSq.buildIndex(sfDir + "#appendspec", base)
     val before = FileSnapshots.snapshot(model.indexPath)
-    IvfSq.appendToIndex(model, batch)
+    CodesIndex.appendToIndex(model, batch)
     val after = FileSnapshots.snapshot(model.indexPath)
     before.foreach { case (p, sig) =>
       assert(after.get(p).contains(sig), s"pre-existing file changed: $p")
@@ -33,7 +33,7 @@ class IvfSqSpec extends SparkSpec {
     assert((after.keySet -- before.keySet).nonEmpty)
     val stored = spark.read.parquet(model.indexPath)
       .select($"vec_id", $"codes", $"list".cast("int").as("list"))
-    val expected = IvfSq.encode(model, emb)
+    val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty, "stored has codes a fresh encode lacks")
     assert(expected.exceptAll(stored).isEmpty, "fresh encode has codes the stored table lacks")
   }
@@ -43,14 +43,14 @@ class IvfSqSpec extends SparkSpec {
     val model = IvfSq.buildIndex(sfDir + "#idemspec", base)
     val b1 = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 === 0)
     val b2 = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 =!= 0)
-    IvfSq.appendToIndexIdempotent(model, b1, batchId = 0L)
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 0L)
     val afterOnce = FileSnapshots.snapshot(model.indexPath)
-    IvfSq.appendToIndexIdempotent(model, b1, batchId = 0L)
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 0L)
     assert(FileSnapshots.snapshot(model.indexPath) === afterOnce)
-    IvfSq.appendToIndexIdempotent(model, b2, batchId = 1L)
+    CodesIndex.appendToIndexIdempotent(model, b2, batchId = 1L)
     val stored = spark.read.parquet(model.indexPath)
       .select($"vec_id", $"codes", $"list".cast("int").as("list"))
-    val expected = IvfSq.encode(model, emb)
+    val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
   }
@@ -58,45 +58,45 @@ class IvfSqSpec extends SparkSpec {
   test("deleteFromIndex masks the ADC ranking; compactLists drops physically") {
     val model = IvfSq.buildIndex(sfDir + "#delspec", emb)
     val before = FileSnapshots.snapshot(model.indexPath)
-    IvfSq.deleteFromIndex(model,
+    CodesIndex.deleteFromIndex(model,
       emb.filter($"vec_id" % 7 === 3).select("vec_id"), batchId = 0L)
     assert(FileSnapshots.snapshot(model.indexPath) === before,
       "delete must not touch the codes table")
-    val got = IvfSq.probe(model, emb, 0L, 10)
+    val got = CodesIndex.probe(model, emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(got.forall(_ % 7 != 3), "deleted ids still probed")
-    val pBefore = IvfSq.probe(model, emb, 0L, 10)
+    val pBefore = CodesIndex.probe(model, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq
-    Ivf.compactLists(spark, model.indexPath, maxFilesPerList = Int.MaxValue)
+    CodesIndex.compactIndex(spark, model, maxFilesPerList = Int.MaxValue)
     assert(spark.read.parquet(model.indexPath)
       .filter($"vec_id" % 7 === 3).count() === 0)
-    assert(IvfSq.probe(model, emb, 0L, 10)
+    assert(CodesIndex.probe(model, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === pBefore)
   }
 
   test("persisted composite model round-trips exactly") {
     val model = IvfSq.buildIndex(sfDir + "#persist", emb)
-    val loaded = IvfSq.loadModel(spark, model.indexPath).get
-    assert(loaded.nlist === model.nlist && loaded.dim === model.dim &&
-      loaded.iters === model.iters)
-    assert(loaded.mins.toSeq === model.mins.toSeq)
-    assert(loaded.spans.toSeq === model.spans.toSeq)
-    assert(loaded.coarse.map(_._1).toSeq === model.coarse.map(_._1).toSeq)
-    assert(loaded.coarse.zip(model.coarse)
+    val loaded = CodesIndex.loadModel[Sq.SqCodec](spark, model.indexPath).get
+    assert(loaded.coarse.get.nlist === model.coarse.get.nlist && loaded.codec.dim === model.codec.dim &&
+      loaded.coarse.get.iters === model.coarse.get.iters)
+    assert(loaded.codec.mins.toSeq === model.codec.mins.toSeq)
+    assert(loaded.codec.spans.toSeq === model.codec.spans.toSeq)
+    assert(loaded.coarse.get.centroids.map(_._1).toSeq === model.coarse.get.centroids.map(_._1).toSeq)
+    assert(loaded.coarse.get.centroids.zip(model.coarse.get.centroids)
       .forall { case ((_, a), (_, b)) => a.toSeq == b.toSeq })
-    val p = IvfSq.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
-    assert(IvfSq.probe(loaded, emb, 0L, 10)
+    val p = CodesIndex.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
+    assert(CodesIndex.probe(loaded, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === p)
   }
 
   test("probeAll equals the single-query probe for every query") {
     val model = IvfSq.buildIndex(sfDir, emb)
-    val all = IvfSq.probeAll(model, emb, emb.filter($"vec_id" < 5), 10)
+    val all = CodesIndex.probeAll(model, emb, emb.filter($"vec_id" < 5), 10)
       .select("query_id", "vec_id", "cosine")
       .as[(Long, Long, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSet).toMap
     (0L until 5L).foreach { qid =>
-      val single = IvfSq.probe(model, emb, qid, 10)
+      val single = CodesIndex.probe(model, emb, qid, 10)
         .as[(Long, Double)].collect().toSet
       assert(all(qid) === single, s"query $qid diverged")
     }

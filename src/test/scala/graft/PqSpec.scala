@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Pq, Similarity}
+import graft.operators.{CodesIndex, Pq, Similarity}
 
 class PqSpec extends SparkSpec {
   import spark.implicits._
@@ -22,7 +22,7 @@ class PqSpec extends SparkSpec {
 
   test("codes table is m small ints per vector (the compressed index)") {
     val model = Pq.buildIndex(sfDir + "#spec", emb)
-    val codes = spark.read.parquet(model.codesPath)
+    val codes = spark.read.parquet(model.indexPath)
     assert(codes.count() === emb.count())
     val rows = codes.select("codes").as[Seq[Int]].collect()
     assert(rows.forall(_.length === 8))
@@ -33,16 +33,16 @@ class PqSpec extends SparkSpec {
     val base = emb.filter($"vec_id" % 5 =!= 0)
     val batch = emb.filter($"vec_id" % 5 === 0)
     val model = Pq.buildIndex(sfDir + "#appendspec", base)
-    val before = FileSnapshots.snapshot(model.codesPath)
-    Pq.appendToIndex(model, batch)
-    val after = FileSnapshots.snapshot(model.codesPath)
+    val before = FileSnapshots.snapshot(model.indexPath)
+    CodesIndex.appendToIndex(model, batch)
+    val after = FileSnapshots.snapshot(model.indexPath)
     before.foreach { case (p, sig) =>
       assert(after.get(p).contains(sig), s"pre-existing file changed: $p")
     }
     assert((after.keySet -- before.keySet).nonEmpty)
     // stored codes == encoding the union with the frozen codebooks
-    val stored = spark.read.parquet(model.codesPath)
-    val expected = Pq.encode(model, emb)
+    val stored = spark.read.parquet(model.indexPath)
+    val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty, "stored has codes a fresh encode lacks")
     assert(expected.exceptAll(stored).isEmpty, "fresh encode has codes the stored table lacks")
   }
@@ -55,7 +55,7 @@ class PqSpec extends SparkSpec {
       emb.filter($"vec_id" % 5 =!= 0), emb.filter($"vec_id" % 5 === 0))
     val exact = Similarity.topK(emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
-    val got = Pq.probe(model, emb, 0L, 10, rerank = emb.count().toInt + 10)
+    val got = CodesIndex.probe(model, emb, 0L, 10, rerank = emb.count().toInt + 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(got === exact)
   }
@@ -65,14 +65,14 @@ class PqSpec extends SparkSpec {
     val model = Pq.buildIndex(sfDir + "#idemspec", base)
     val b1 = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 === 0)
     val b2 = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 =!= 0)
-    Pq.appendToIndexIdempotent(model, b1, batchId = 0L)
-    val afterOnce = FileSnapshots.snapshot(model.codesPath)
-    Pq.appendToIndexIdempotent(model, b1, batchId = 0L)
-    assert(FileSnapshots.snapshot(model.codesPath) === afterOnce)
-    assert(!new java.io.File(model.codesPath + "__staging_codes-ingest-0.parquet").exists())
-    Pq.appendToIndexIdempotent(model, b2, batchId = 1L)
-    val stored = spark.read.parquet(model.codesPath)
-    val expected = Pq.encode(model, emb)
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 0L)
+    val afterOnce = FileSnapshots.snapshot(model.indexPath)
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 0L)
+    assert(FileSnapshots.snapshot(model.indexPath) === afterOnce)
+    assert(!new java.io.File(model.indexPath + "__staging_codes-ingest-0.parquet").exists())
+    CodesIndex.appendToIndexIdempotent(model, b2, batchId = 1L)
+    val stored = spark.read.parquet(model.indexPath)
+    val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
   }
@@ -81,27 +81,27 @@ class PqSpec extends SparkSpec {
     val base = emb.filter($"vec_id" % 5 =!= 0)
     val model = Pq.buildIndex(sfDir + "#compactspec", base)
     val b1 = emb.filter($"vec_id" % 5 === 0)
-    Pq.appendToIndexIdempotent(model, b1, batchId = 7L)
-    val nBefore = spark.read.parquet(model.codesPath).count()
-    Pq.compactCodes(spark, model, targetRowsPerFile = 1000000L)
-    val snap = FileSnapshots.snapshot(model.codesPath)
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 7L)
+    val nBefore = spark.read.parquet(model.indexPath).count()
+    CodesIndex.compactIndex(spark, model, targetRowsPerFile = 1000000L)
+    val snap = FileSnapshots.snapshot(model.indexPath)
     assert(snap.keys.forall(!_.contains("codes-ingest-7")),
       "marker file should be folded away")
-    Pq.appendToIndexIdempotent(model, b1, batchId = 7L) // crash replay
-    assert(FileSnapshots.snapshot(model.codesPath) === snap,
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 7L) // crash replay
+    assert(FileSnapshots.snapshot(model.indexPath) === snap,
       "replayed batch re-appended after compactCodes")
-    assert(!new java.io.File(model.codesPath + "__staging_codes-ingest-7.parquet").exists())
-    assert(spark.read.parquet(model.codesPath).count() === nBefore)
+    assert(!new java.io.File(model.indexPath + "__staging_codes-ingest-7.parquet").exists())
+    assert(spark.read.parquet(model.indexPath).count() === nBefore)
   }
 
   test("probeAll equals the single-query probe for every query") {
     val model = Pq.buildIndex(sfDir, emb)
-    val all = Pq.probeAll(model, emb, emb.filter($"vec_id" < 5), 10)
+    val all = CodesIndex.probeAll(model, emb, emb.filter($"vec_id" < 5), 10)
       .select("query_id", "vec_id", "cosine")
       .as[(Long, Long, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSet).toMap
     (0L until 5L).foreach { qid =>
-      val single = Pq.probe(model, emb, qid, 10)
+      val single = CodesIndex.probe(model, emb, qid, 10)
         .as[(Long, Double)].collect().toSet
       assert(all(qid) === single, s"query $qid diverged")
     }
@@ -109,39 +109,39 @@ class PqSpec extends SparkSpec {
 
   test("deleteFromIndex masks the ADC ranking; compactCodes drops physically") {
     val model = Pq.buildIndex(sfDir + "#delspec", emb)
-    val before = FileSnapshots.snapshot(model.codesPath)
-    Pq.deleteFromIndex(model,
+    val before = FileSnapshots.snapshot(model.indexPath)
+    CodesIndex.deleteFromIndex(model,
       emb.filter($"vec_id" % 7 === 3).select("vec_id"), batchId = 0L)
-    assert(FileSnapshots.snapshot(model.codesPath) === before,
+    assert(FileSnapshots.snapshot(model.indexPath) === before,
       "delete must not touch the codes table")
-    val got = Pq.probe(model, emb, 0L, 10)
+    val got = CodesIndex.probe(model, emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(got.forall(_ % 7 != 3), "deleted ids still probed")
-    val pBefore = Pq.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
-    Pq.compactCodes(spark, model)
-    assert(!new java.io.File(model.codesPath + "__tombstones").exists())
-    assert(spark.read.parquet(model.codesPath)
+    val pBefore = CodesIndex.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
+    CodesIndex.compactIndex(spark, model)
+    assert(!new java.io.File(model.indexPath + "__tombstones").exists())
+    assert(spark.read.parquet(model.indexPath)
       .filter($"vec_id" % 7 === 3).count() === 0)
-    assert(Pq.probe(model, emb, 0L, 10)
+    assert(CodesIndex.probe(model, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === pBefore)
   }
 
   test("persisted codebooks round-trip exactly and survive compaction") {
     val model = Pq.buildIndex(sfDir + "#persist", emb)
-    val loaded = Pq.loadModel(spark, model.codesPath).get
-    assert(loaded.m === model.m && loaded.ksub === model.ksub &&
-      loaded.subDim === model.subDim)
-    assert(loaded.codebooks.length === model.codebooks.length)
-    loaded.codebooks.zip(model.codebooks).foreach { case (a, b) =>
+    val loaded = CodesIndex.loadModel[Pq.PqCodec](spark, model.indexPath).get
+    assert(loaded.codec.m === model.codec.m && loaded.codec.ksub === model.codec.ksub &&
+      loaded.codec.subDim === model.codec.subDim)
+    assert(loaded.codec.codebooks.length === model.codec.codebooks.length)
+    loaded.codec.codebooks.zip(model.codec.codebooks).foreach { case (a, b) =>
       assert(a.map(_._1).toSeq === b.map(_._1).toSeq)
       assert(a.zip(b).forall { case ((_, x), (_, y)) => x.toSeq == y.toSeq })
     }
-    val p = Pq.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
-    assert(Pq.probe(loaded, emb, 0L, 10)
+    val p = CodesIndex.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
+    assert(CodesIndex.probe(loaded, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === p)
     // compactCodes swaps the whole dir — the codebooks must come back
-    Pq.compactCodes(spark, model)
-    assert(Pq.loadModel(spark, model.codesPath).nonEmpty,
+    CodesIndex.compactIndex(spark, model)
+    assert(CodesIndex.loadModel[Pq.PqCodec](spark, model.indexPath).nonEmpty,
       "codebooks lost across compaction swap")
   }
 

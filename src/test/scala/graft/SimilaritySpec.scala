@@ -361,7 +361,8 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Double)].collect().toSeq
 
     val sq = graft.operators.Sq.buildIndex(sfDir + "#fspec", emb)
-    assert(graft.operators.Sq.probeFiltered(sq, emb, 0L, 10, allow, rerank = all)
+    assert(graft.operators.CodesIndex.probe(sq, emb, 0L, 10, rerank = all,
+        allowed = Some(allow))
       .as[(Long, Double)].collect().toSeq === exact, "SQ diverged")
 
     val ivf = graft.operators.Ivf.buildIndex(sfDir + "#fspec", emb)
@@ -370,18 +371,18 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Double)].collect().toSeq === exact, "IVF diverged")
 
     val pq = graft.operators.Pq.buildIndex(sfDir + "#fspec", emb)
-    assert(graft.operators.Pq.probe(pq, emb, 0L, 10, rerank = all,
+    assert(graft.operators.CodesIndex.probe(pq, emb, 0L, 10, rerank = all,
         allowed = Some(allow))
       .as[(Long, Double)].collect().toSeq === exact, "PQ diverged")
 
     val isq = graft.operators.IvfSq.buildIndex(sfDir + "#fspec", emb)
-    assert(graft.operators.IvfSq.probe(isq, emb, 0L, 10,
-        nprobe = isq.nlist, rerank = all, allowed = Some(allow))
+    assert(graft.operators.CodesIndex.probe(isq, emb, 0L, 10,
+        nprobe = isq.coarse.get.nlist, rerank = all, allowed = Some(allow))
       .as[(Long, Double)].collect().toSeq === exact, "IVF-SQ diverged")
 
     val ipq = graft.operators.IvfPq.buildIndex(sfDir + "#fspec", emb)
-    assert(graft.operators.IvfPq.probe(ipq, emb, 0L, 10,
-        nprobe = ipq.nlist, rerank = all, allowed = Some(allow))
+    assert(graft.operators.CodesIndex.probe(ipq, emb, 0L, 10,
+        nprobe = ipq.coarse.get.nlist, rerank = all, allowed = Some(allow))
       .as[(Long, Double)].collect().toSeq === exact, "IVF-PQ diverged")
   }
 

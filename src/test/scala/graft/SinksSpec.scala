@@ -434,4 +434,19 @@ class SinksSpec extends SparkSpec {
       Sinks.withDirLease(spark, dir, "writer-b", staleMs = 60000) { fail("must not run") }
     }
   }
+
+  test("staged verbs take the filesystem from the path, not fs.defaultFS") {
+    // the default filesystem names a scheme no staged write may touch: a
+    // verb that resolves it instead of the path's own scheme fails
+    val conf = spark.sparkContext.hadoopConfiguration
+    val prev = conf.get("fs.defaultFS")
+    val root = "file:" + java.nio.file.Files.createTempDirectory("graft-fsscheme")
+    val ids = spark.range(0, 20, 1, 1).select($"id".as("vec_id"))
+    conf.set("fs.defaultFS", "graftnofs:///")
+    try {
+      Sinks.appendBatchFileIdempotent(ids, s"$root/t__tombstones", "tombstone-0.parquet")
+      val back = Sinks.readTombstones(spark, s"$root/t__tombstones")
+      assert(back.get.as[Long].collect().sorted.toSeq === (0L until 20L))
+    } finally conf.set("fs.defaultFS", prev)
+  }
 }

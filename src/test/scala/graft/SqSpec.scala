@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Sq, Similarity}
+import graft.operators.{CodesIndex, Sq, Similarity}
 
 class SqSpec extends SparkSpec {
   import spark.implicits._
@@ -19,7 +19,7 @@ class SqSpec extends SparkSpec {
 
   test("codes table is dim uint8 codes per vector (4x compression)") {
     val model = Sq.buildIndex(sfDir + "#spec", emb)
-    val codes = spark.read.parquet(model.codesPath)
+    val codes = spark.read.parquet(model.indexPath)
     assert(codes.count() === emb.count())
     val rows = codes.select("codes").as[Seq[Int]].collect()
     assert(rows.forall(_.length === 64))
@@ -34,7 +34,7 @@ class SqSpec extends SparkSpec {
     // outside the base min/max must clamp to 0/255, never wrap or throw
     val base = emb.filter($"vec_id" % 5 =!= 0)
     val model = Sq.buildIndex(sfDir + "#satspec", base)
-    val codes = Sq.encode(model, emb).select("codes").as[Seq[Int]].collect()
+    val codes = CodesIndex.encode(model, emb).select("codes").as[Seq[Int]].collect()
     assert(codes.forall(_.forall(c => c >= 0 && c <= 255)))
   }
 
@@ -42,15 +42,15 @@ class SqSpec extends SparkSpec {
     val base = emb.filter($"vec_id" % 5 =!= 0)
     val batch = emb.filter($"vec_id" % 5 === 0)
     val model = Sq.buildIndex(sfDir + "#appendspec", base)
-    val before = FileSnapshots.snapshot(model.codesPath)
-    Sq.appendToIndex(model, batch)
-    val after = FileSnapshots.snapshot(model.codesPath)
+    val before = FileSnapshots.snapshot(model.indexPath)
+    CodesIndex.appendToIndex(model, batch)
+    val after = FileSnapshots.snapshot(model.indexPath)
     before.foreach { case (p, sig) =>
       assert(after.get(p).contains(sig), s"pre-existing file changed: $p")
     }
     assert((after.keySet -- before.keySet).nonEmpty)
-    val stored = spark.read.parquet(model.codesPath)
-    val expected = Sq.encode(model, emb)
+    val stored = spark.read.parquet(model.indexPath)
+    val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty, "stored has codes a fresh encode lacks")
     assert(expected.exceptAll(stored).isEmpty, "fresh encode has codes the stored table lacks")
   }
@@ -60,7 +60,7 @@ class SqSpec extends SparkSpec {
       emb.filter($"vec_id" % 5 =!= 0), emb.filter($"vec_id" % 5 === 0))
     val exact = Similarity.topK(emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
-    val got = Sq.probe(model, emb, 0L, 10, rerank = emb.count().toInt + 10)
+    val got = CodesIndex.probe(model, emb, 0L, 10, rerank = emb.count().toInt + 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(got === exact)
   }
@@ -70,14 +70,14 @@ class SqSpec extends SparkSpec {
     val model = Sq.buildIndex(sfDir + "#idemspec", base)
     val b1 = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 === 0)
     val b2 = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 =!= 0)
-    Sq.appendToIndexIdempotent(model, b1, batchId = 0L)
-    val afterOnce = FileSnapshots.snapshot(model.codesPath)
-    Sq.appendToIndexIdempotent(model, b1, batchId = 0L)
-    assert(FileSnapshots.snapshot(model.codesPath) === afterOnce)
-    assert(!new java.io.File(model.codesPath + "__staging_codes-ingest-0.parquet").exists())
-    Sq.appendToIndexIdempotent(model, b2, batchId = 1L)
-    val stored = spark.read.parquet(model.codesPath)
-    val expected = Sq.encode(model, emb)
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 0L)
+    val afterOnce = FileSnapshots.snapshot(model.indexPath)
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 0L)
+    assert(FileSnapshots.snapshot(model.indexPath) === afterOnce)
+    assert(!new java.io.File(model.indexPath + "__staging_codes-ingest-0.parquet").exists())
+    CodesIndex.appendToIndexIdempotent(model, b2, batchId = 1L)
+    val stored = spark.read.parquet(model.indexPath)
+    val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
   }
@@ -86,27 +86,27 @@ class SqSpec extends SparkSpec {
     val base = emb.filter($"vec_id" % 5 =!= 0)
     val model = Sq.buildIndex(sfDir + "#compactspec", base)
     val b1 = emb.filter($"vec_id" % 5 === 0)
-    Sq.appendToIndexIdempotent(model, b1, batchId = 7L)
-    val nBefore = spark.read.parquet(model.codesPath).count()
-    Sq.compactCodes(spark, model, targetRowsPerFile = 1000000L)
-    val snap = FileSnapshots.snapshot(model.codesPath)
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 7L)
+    val nBefore = spark.read.parquet(model.indexPath).count()
+    CodesIndex.compactIndex(spark, model, targetRowsPerFile = 1000000L)
+    val snap = FileSnapshots.snapshot(model.indexPath)
     assert(snap.keys.forall(!_.contains("codes-ingest-7")),
       "marker file should be folded away")
-    Sq.appendToIndexIdempotent(model, b1, batchId = 7L) // crash replay
-    assert(FileSnapshots.snapshot(model.codesPath) === snap,
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 7L) // crash replay
+    assert(FileSnapshots.snapshot(model.indexPath) === snap,
       "replayed batch re-appended after compactCodes")
-    assert(!new java.io.File(model.codesPath + "__staging_codes-ingest-7.parquet").exists())
-    assert(spark.read.parquet(model.codesPath).count() === nBefore)
+    assert(!new java.io.File(model.indexPath + "__staging_codes-ingest-7.parquet").exists())
+    assert(spark.read.parquet(model.indexPath).count() === nBefore)
   }
 
   test("probeAll equals the single-query probe for every query") {
     val model = Sq.buildIndex(sfDir, emb)
-    val all = Sq.probeAll(model, emb, emb.filter($"vec_id" < 5), 10)
+    val all = CodesIndex.probeAll(model, emb, emb.filter($"vec_id" < 5), 10)
       .select("query_id", "vec_id", "cosine")
       .as[(Long, Long, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSet).toMap
     (0L until 5L).foreach { qid =>
-      val single = Sq.probe(model, emb, qid, 10)
+      val single = CodesIndex.probe(model, emb, qid, 10)
         .as[(Long, Double)].collect().toSet
       assert(all(qid) === single, s"query $qid diverged")
     }
@@ -114,34 +114,34 @@ class SqSpec extends SparkSpec {
 
   test("deleteFromIndex masks the ADC ranking; compactCodes drops physically") {
     val model = Sq.buildIndex(sfDir + "#delspec", emb)
-    val before = FileSnapshots.snapshot(model.codesPath)
-    Sq.deleteFromIndex(model,
+    val before = FileSnapshots.snapshot(model.indexPath)
+    CodesIndex.deleteFromIndex(model,
       emb.filter($"vec_id" % 7 === 3).select("vec_id"), batchId = 0L)
-    assert(FileSnapshots.snapshot(model.codesPath) === before,
+    assert(FileSnapshots.snapshot(model.indexPath) === before,
       "delete must not touch the codes table")
-    val got = Sq.probe(model, emb, 0L, 10)
+    val got = CodesIndex.probe(model, emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(got.forall(_ % 7 != 3), "deleted ids still probed")
-    val pBefore = Sq.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
-    Sq.compactCodes(spark, model)
-    assert(!new java.io.File(model.codesPath + "__tombstones").exists())
-    assert(spark.read.parquet(model.codesPath)
+    val pBefore = CodesIndex.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
+    CodesIndex.compactIndex(spark, model)
+    assert(!new java.io.File(model.indexPath + "__tombstones").exists())
+    assert(spark.read.parquet(model.indexPath)
       .filter($"vec_id" % 7 === 3).count() === 0)
-    assert(Sq.probe(model, emb, 0L, 10)
+    assert(CodesIndex.probe(model, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === pBefore)
   }
 
   test("persisted params round-trip exactly and survive compaction") {
     val model = Sq.buildIndex(sfDir + "#persist", emb)
-    val loaded = Sq.loadModel(spark, model.codesPath).get
-    assert(loaded.dim === model.dim)
-    assert(loaded.mins.toSeq === model.mins.toSeq)
-    assert(loaded.spans.toSeq === model.spans.toSeq)
-    val p = Sq.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
-    assert(Sq.probe(loaded, emb, 0L, 10)
+    val loaded = CodesIndex.loadModel[Sq.SqCodec](spark, model.indexPath).get
+    assert(loaded.codec.dim === model.codec.dim)
+    assert(loaded.codec.mins.toSeq === model.codec.mins.toSeq)
+    assert(loaded.codec.spans.toSeq === model.codec.spans.toSeq)
+    val p = CodesIndex.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
+    assert(CodesIndex.probe(loaded, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === p)
-    Sq.compactCodes(spark, model)
-    assert(Sq.loadModel(spark, model.codesPath).nonEmpty,
+    CodesIndex.compactIndex(spark, model)
+    assert(CodesIndex.loadModel[Sq.SqCodec](spark, model.indexPath).nonEmpty,
       "params lost across compaction swap")
   }
 

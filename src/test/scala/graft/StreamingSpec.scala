@@ -1023,15 +1023,15 @@ class StreamingSpec extends SparkSpec {
 
     val input = MemoryStream[(Long, Seq[Float])]
     input.addData(rows.take(rows.length / 2))
-    val q = Streams.pqIngestSink(
+    val q = Streams.codesIngestSink(
       input.toDF().toDF("vec_id", "embedding"), model, ckpt).start()
     q.processAllAvailable()
     input.addData(rows.drop(rows.length / 2))
     q.processAllAvailable()
     q.stop()
 
-    val stored = spark.read.parquet(model.codesPath)
-    val expected = graft.operators.Pq.encode(model, emb)
+    val stored = spark.read.parquet(model.indexPath)
+    val expected = graft.operators.CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
   }
@@ -1115,37 +1115,37 @@ class StreamingSpec extends SparkSpec {
     // the same corpus is identical — the batch-path twin for exact parity
     val pqS = graft.operators.Pq.buildIndex(sfDir + "#pqdelsink", emb)
     val pqB = graft.operators.Pq.buildIndex(sfDir + "#pqdelbatch", emb)
-    graft.operators.Pq.deleteFromIndex(pqB,
+    graft.operators.CodesIndex.deleteFromIndex(pqB,
       emb.filter($"vec_id" % 9 === 1).select("vec_id"), batchId = 0L)
     val pin = MemoryStream[Long]
     pin.addData(doomed.take(doomed.length / 2))
-    val pq1 = Streams.pqDeleteSink(pin.toDF().toDF("vec_id"), pqS,
+    val pq1 = Streams.codesDeleteSink(pin.toDF().toDF("vec_id"), pqS,
       java.nio.file.Files.createTempDirectory("graft-pds-c").toString).start()
     pq1.processAllAvailable()
     pin.addData(doomed.drop(doomed.length / 2))
     pq1.processAllAvailable()
     pq1.stop()
-    val pGot = graft.operators.Pq.probe(pqS, emb, 0L, 10)
+    val pGot = graft.operators.CodesIndex.probe(pqS, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq
     assert(pGot.map(_._1).forall(_ % 9 != 1), "PQ streamed delete not masking")
-    assert(pGot === graft.operators.Pq.probe(pqB, emb, 0L, 10)
+    assert(pGot === graft.operators.CodesIndex.probe(pqB, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq, "PQ stream/batch delete diverged")
 
     val ipS = graft.operators.IvfPq.buildIndex(sfDir + "#ipdelsink", emb)
     val ipB = graft.operators.IvfPq.buildIndex(sfDir + "#ipdelbatch", emb)
-    graft.operators.IvfPq.deleteFromIndex(ipB,
+    graft.operators.CodesIndex.deleteFromIndex(ipB,
       emb.filter($"vec_id" % 9 === 1).select("vec_id"), batchId = 0L)
     val iin = MemoryStream[Long]
     iin.addData(doomed)
-    val ip1 = Streams.ivfPqDeleteSink(iin.toDF().toDF("vec_id"), ipS,
+    val ip1 = Streams.codesDeleteSink(iin.toDF().toDF("vec_id"), ipS,
       java.nio.file.Files.createTempDirectory("graft-ids-c").toString).start()
     ip1.processAllAvailable()
     ip1.stop()
-    val iGot = graft.operators.IvfPq.probe(ipS, emb, 0L, 10)
+    val iGot = graft.operators.CodesIndex.probe(ipS, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq
     assert(iGot.map(_._1).forall(_ % 9 != 1),
       "IVF-PQ streamed delete not masking")
-    assert(iGot === graft.operators.IvfPq.probe(ipB, emb, 0L, 10)
+    assert(iGot === graft.operators.CodesIndex.probe(ipB, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq,
       "IVF-PQ stream/batch delete diverged")
   }
@@ -1624,7 +1624,7 @@ class StreamingSpec extends SparkSpec {
 
     val input = MemoryStream[(Long, Seq[Float])]
     input.addData(rows.take(2))
-    val q = Streams.pqProbeSink(
+    val q = Streams.codesProbeSink(
       input.toDF().toDF("vec_id", "embedding"), model, emb, out, ckpt).start()
     q.processAllAvailable()
     input.addData(rows.drop(2))
@@ -1637,7 +1637,7 @@ class StreamingSpec extends SparkSpec {
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSet).toMap
     assert(got.keySet === (0L until 4L).toSet)
     (0L until 4L).foreach { qid =>
-      val batch = graft.operators.Pq.probe(model, emb, qid, 10)
+      val batch = graft.operators.CodesIndex.probe(model, emb, qid, 10)
         .as[(Long, Double)].collect().toSet
       assert(got(qid) === batch, s"query $qid diverged from batch probe")
     }
@@ -1904,7 +1904,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-isqi-c").toString
     val input = MemoryStream[(Long, Seq[Float])]
     input.addData(batchRows.take(batchRows.length / 2))
-    val q = Streams.ivfSqIngestSink(
+    val q = Streams.codesIngestSink(
       input.toDF().toDF("vec_id", "embedding"), model, ckpt).start()
     q.processAllAvailable()
     input.addData(batchRows.drop(batchRows.length / 2))
@@ -1912,7 +1912,7 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     val stored = spark.read.parquet(model.indexPath)
       .select($"vec_id", $"codes", $"list".cast("int").as("list"))
-    val expected = graft.operators.IvfSq.encode(model, emb)
+    val expected = graft.operators.CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
 
@@ -1921,18 +1921,18 @@ class StreamingSpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSeq
     val sS = graft.operators.IvfSq.buildIndex(sfDir + "#isqdelsink", emb)
     val sB = graft.operators.IvfSq.buildIndex(sfDir + "#isqdelbatch", emb)
-    graft.operators.IvfSq.deleteFromIndex(sB,
+    graft.operators.CodesIndex.deleteFromIndex(sB,
       emb.filter($"vec_id" % 9 === 1).select("vec_id"), batchId = 0L)
     val din = MemoryStream[Long]
     din.addData(doomed)
-    val dq = Streams.ivfSqDeleteSink(din.toDF().toDF("vec_id"), sS,
+    val dq = Streams.codesDeleteSink(din.toDF().toDF("vec_id"), sS,
       java.nio.file.Files.createTempDirectory("graft-isqd-c").toString).start()
     dq.processAllAvailable()
     dq.stop()
-    val got = graft.operators.IvfSq.probe(sS, emb, 0L, 10)
+    val got = graft.operators.CodesIndex.probe(sS, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq
     assert(got.map(_._1).forall(_ % 9 != 1), "IVF-SQ streamed delete not masking")
-    assert(got === graft.operators.IvfSq.probe(sB, emb, 0L, 10)
+    assert(got === graft.operators.CodesIndex.probe(sB, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq, "IVF-SQ stream/batch delete diverged")
   }
 
@@ -1960,22 +1960,22 @@ class StreamingSpec extends SparkSpec {
 
     val pqM = graft.operators.IvfPq.buildIndex(sfDir, emb)
     val out1 = java.nio.file.Files.createTempDirectory("graft-ipqp").toString + "/res"
-    val got1 = drive(in => Streams.ivfPqProbeSink(
+    val got1 = drive(in => Streams.codesProbeSink(
       in.toDF().toDF("vec_id", "embedding"), pqM, emb, out1,
       java.nio.file.Files.createTempDirectory("graft-ipqp-c").toString), out1)
     (0L until 4L).foreach { qid =>
-      val batch = graft.operators.IvfPq.probe(pqM, emb, qid, 10)
+      val batch = graft.operators.CodesIndex.probe(pqM, emb, qid, 10)
         .as[(Long, Double)].collect().toSet
       assert(got1(qid) === batch, s"IVF-PQ query $qid diverged")
     }
 
     val sqM = graft.operators.IvfSq.buildIndex(sfDir, emb)
     val out2 = java.nio.file.Files.createTempDirectory("graft-isqp").toString + "/res"
-    val got2 = drive(in => Streams.ivfSqProbeSink(
+    val got2 = drive(in => Streams.codesProbeSink(
       in.toDF().toDF("vec_id", "embedding"), sqM, emb, out2,
       java.nio.file.Files.createTempDirectory("graft-isqp-c").toString), out2)
     (0L until 4L).foreach { qid =>
-      val batch = graft.operators.IvfSq.probe(sqM, emb, qid, 10)
+      val batch = graft.operators.CodesIndex.probe(sqM, emb, qid, 10)
         .as[(Long, Double)].collect().toSet
       assert(got2(qid) === batch, s"IVF-SQ query $qid diverged")
     }
@@ -1993,15 +1993,15 @@ class StreamingSpec extends SparkSpec {
 
     val input = MemoryStream[(Long, Seq[Float])]
     input.addData(rows.take(rows.length / 2))
-    val q = Streams.sqIngestSink(
+    val q = Streams.codesIngestSink(
       input.toDF().toDF("vec_id", "embedding"), model, ckpt).start()
     q.processAllAvailable()
     input.addData(rows.drop(rows.length / 2))
     q.processAllAvailable()
     q.stop()
 
-    val stored = spark.read.parquet(model.codesPath)
-    val expected = graft.operators.Sq.encode(model, emb)
+    val stored = spark.read.parquet(model.indexPath)
+    val expected = graft.operators.CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
   }
@@ -2018,7 +2018,7 @@ class StreamingSpec extends SparkSpec {
       .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSeq
     val input = MemoryStream[(Long, Seq[Float])]
     input.addData(rows.take(2))
-    val q = Streams.sqProbeSink(
+    val q = Streams.codesProbeSink(
       input.toDF().toDF("vec_id", "embedding"), model, emb, out, ckpt).start()
     q.processAllAvailable()
     input.addData(rows.drop(2))
@@ -2030,7 +2030,7 @@ class StreamingSpec extends SparkSpec {
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSet).toMap
     assert(got.keySet === (0L until 4L).toSet)
     (0L until 4L).foreach { qid =>
-      val batch = graft.operators.Sq.probe(model, emb, qid, 10)
+      val batch = graft.operators.CodesIndex.probe(model, emb, qid, 10)
         .as[(Long, Double)].collect().toSet
       assert(got(qid) === batch, s"query $qid diverged from batch probe")
     }
@@ -2041,20 +2041,20 @@ class StreamingSpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSeq
     val sqS = graft.operators.Sq.buildIndex(sfDir + "#sqdelsink", emb)
     val sqB = graft.operators.Sq.buildIndex(sfDir + "#sqdelbatch", emb)
-    graft.operators.Sq.deleteFromIndex(sqB,
+    graft.operators.CodesIndex.deleteFromIndex(sqB,
       emb.filter($"vec_id" % 9 === 1).select("vec_id"), batchId = 0L)
     val din = MemoryStream[Long]
     din.addData(doomed.take(doomed.length / 2))
-    val dq = Streams.sqDeleteSink(din.toDF().toDF("vec_id"), sqS,
+    val dq = Streams.codesDeleteSink(din.toDF().toDF("vec_id"), sqS,
       java.nio.file.Files.createTempDirectory("graft-sds-c").toString).start()
     dq.processAllAvailable()
     din.addData(doomed.drop(doomed.length / 2))
     dq.processAllAvailable()
     dq.stop()
-    val sGot = graft.operators.Sq.probe(sqS, emb, 0L, 10)
+    val sGot = graft.operators.CodesIndex.probe(sqS, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq
     assert(sGot.map(_._1).forall(_ % 9 != 1), "SQ streamed delete not masking")
-    assert(sGot === graft.operators.Sq.probe(sqB, emb, 0L, 10)
+    assert(sGot === graft.operators.CodesIndex.probe(sqB, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq, "SQ stream/batch delete diverged")
   }
 
