@@ -245,7 +245,7 @@ object CurationQueries {
       val qid = b.emb.join(b.doomed, Seq("vec_id"), "left_anti")
         .agg(min("vec_id")).head().getLong(0)
       operators.Ivf.probe(b.model, b.emb, qid, 10,
-        nprobe = b.model.centroids.length)
+        nprobe = b.model.coarse.get.centroids.length)
     }),
 
     // The idf flagship — same gate → embed → build → SemDeDup → probe
@@ -270,7 +270,7 @@ object CurationQueries {
       val qid = b.emb.join(b.doomed, Seq("vec_id"), "left_anti")
         .agg(min("vec_id")).head().getLong(0)
       operators.Ivf.probe(b.model, b.emb, qid, 10,
-        nprobe = b.model.centroids.length)
+        nprobe = b.model.coarse.get.centroids.length)
     }),
 
     // The refresh sibling — the production nightly shape: the previous
@@ -299,7 +299,7 @@ object CurationQueries {
         dir + "#pretrain", dir + "#flagidxr", scope = scope)
       operators.Ivf.probe(model, embCur,
         operators.CorpusIndex.minLiveVecId(model), 10,
-        nprobe = model.centroids.length)
+        nprobe = model.coarse.get.centroids.length)
     }),
 
     // The refresh flagship on the IDF embedder — with the key discipline
@@ -335,7 +335,7 @@ object CurationQueries {
         embedTag = "tfidf10")
       operators.Ivf.probe(model, embCur,
         operators.CorpusIndex.minLiveVecId(model), 10,
-        nprobe = model.centroids.length)
+        nprobe = model.coarse.get.centroids.length)
     }),
 
     // END-TO-END RAG SERVING flagship — the serving twin of

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * The driver ships fixtures only up to sf0.1 (~17 MB), where scan-bound
   * bench queries sit inside the host's ±10% noise band; this blows every
-  * table up `mult`× with the ScaleProbe realism rules so the 2× bench gate
-  * can be exercised outside the noise floor:
+  * table up `mult`× with the realism rules below so the 2× bench gate can
+  * be exercised outside the noise floor:
   *
   *  - fact/dim copies are RE-KEYED with consistent foreign-key offsets
   *    (more customers/orders/users — per-key group sizes stay constant,

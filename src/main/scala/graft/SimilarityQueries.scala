@@ -43,7 +43,7 @@ object SimilarityQueries {
     "ann_topk_chunks" -> ((s, dir) => {
       val (model, emb) = chunkIndex(s, dir)
       operators.Ivf.probe(model, emb, 0L, 10,
-        nprobe = model.centroids.length)
+        nprobe = model.coarse.get.centroids.length)
     }),
 
     // The PRUNED chunk-index probe — the plan that survives 100× scale:
@@ -225,8 +225,8 @@ object SimilarityQueries {
       val (chunkModel, _) = chunkIndex(s, dir)
       Similarity.topKTwoStageSharded(sharded, docEmb, chunkModel, 0L,
         coarseK = 20, k = 10,
-        nprobeDoc = sharded.shards.map(_.centroids.length).max,
-        nprobeChunk = chunkModel.centroids.length)
+        nprobeDoc = sharded.shards.map(_.coarse.get.centroids.length).max,
+        nprobeChunk = chunkModel.coarse.get.centroids.length)
     }),
 
     // RAW-TEXT serving — the entry point a deployment actually exposes:
@@ -415,7 +415,7 @@ object SimilarityQueries {
     "ann_rebalance" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val m = operators.Ivf.buildRebalanced(dir, emb, maxRatio = 1.01)
-      operators.Ivf.probe(m, emb, 0L, 10, nprobe = m.centroids.length)
+      operators.Ivf.probe(m, emb, 0L, 10, nprobe = m.coarse.get.centroids.length)
     }),
 
     // Exact kNN join: top-3 neighbors for each of the first 10 vectors.
@@ -582,7 +582,7 @@ object SimilarityQueries {
     "ann_list_sizes" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = operators.Ivf.buildIndex(dir, emb)
-      operators.Ivf.readIndex(s, model)
+      operators.CodesIndex.readIndex(s, model)
         .groupBy(col("list").cast("int").as("list"))
         .agg(count(lit(1)).as("n_vectors"))
         .orderBy("list")
@@ -636,7 +636,7 @@ object SimilarityQueries {
       val model = operators.Ivf.buildIncremental(dir + "#compact",
         emb.filter(col("vec_id") % 5 =!= 0),
         emb.filter(col("vec_id") % 5 === 0))
-      operators.Ivf.compactIndex(s, model, maxFilesPerList = 1)
+      operators.CodesIndex.compactIndex(s, model, maxFilesPerList = 1)
       operators.Ivf.probe(model, emb, 0L, 10)
     }),
 
@@ -648,7 +648,7 @@ object SimilarityQueries {
     "ann_delete" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = operators.Ivf.buildIndex(dir + "#del", emb)
-      operators.Ivf.deleteFromIndex(model,
+      operators.CodesIndex.deleteFromIndex(model,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), batchId = 0L)
       operators.Ivf.probe(model, emb, 0L, 10)
     }),
@@ -660,9 +660,9 @@ object SimilarityQueries {
     "ann_delete_compact" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val model = operators.Ivf.buildIndex(dir + "#delc", emb)
-      operators.Ivf.deleteFromIndex(model,
+      operators.CodesIndex.deleteFromIndex(model,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), batchId = 0L)
-      operators.Ivf.compactIndex(s, model, maxFilesPerList = Int.MaxValue)
+      operators.CodesIndex.compactIndex(s, model, maxFilesPerList = Int.MaxValue)
       operators.Ivf.probe(model, emb, 0L, 10)
     }),
 
@@ -699,11 +699,11 @@ object SimilarityQueries {
       val model = operators.Ivf.buildIncremental(dir + "#life",
         emb.filter(col("vec_id") % 5 =!= 0),
         emb.filter(col("vec_id") % 5 === 0))
-      operators.Ivf.deleteFromIndex(model,
+      operators.CodesIndex.deleteFromIndex(model,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), batchId = 0L)
-      operators.Ivf.compactIndex(s, model, maxFilesPerList = Int.MaxValue)
+      operators.CodesIndex.compactIndex(s, model, maxFilesPerList = Int.MaxValue)
       val m2 = operators.Ivf.rebalanceIndex(s, model, maxRatio = 1.05)
-      operators.Ivf.probe(m2, emb, 0L, 10, nprobe = m2.centroids.length)
+      operators.Ivf.probe(m2, emb, 0L, 10, nprobe = m2.coarse.get.centroids.length)
     }),
 
     // The compressed-layout capstone: incremental encode → delete →
@@ -721,7 +721,7 @@ object SimilarityQueries {
     }),
 
     // The composite-layout capstone completes the trio: incremental
-    // residual encode → per-list tombstone delete → compactLists' physical
+    // residual encode → per-list tombstone delete → compactIndex's per-list physical
     // drop (the IVF-PQ codes dir IS a list-partitioned table, so the verb
     // is shared; Int.MaxValue threshold → only tombstoned lists rewrite)
     // → pruned residual-ADC probe. Replay-safe like the others: the
@@ -833,7 +833,7 @@ object SimilarityQueries {
     }),
 
     // The fifth-layout capstone: build on base → frozen append → tombstone
-    // delete → compactLists' physical drop (the codes dir IS a
+    // delete → compactIndex's per-list physical drop (the codes dir IS a
     // list-partitioned table, so the verb is shared with IVF/IVF-PQ) →
     // pruned residual-ADC probe, against the train-on-base +
     // candidates-minus-deleted twin.

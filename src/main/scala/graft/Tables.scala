@@ -76,7 +76,7 @@ object Tables {
     withSyntheticUrl(documents(spark, dir))
 
   /** The dirty-URL law applied to any (doc_id, lang, source) table — split
-    * out so ScaleProbe can attach URLs to blown-up corpora.
+    * out so blown-up or derived corpora get the same URLs.
     */
   def withSyntheticUrl(d: DataFrame): DataFrame = {
     val id = col("doc_id")
@@ -118,7 +118,7 @@ object Tables {
     asMarkupLines(documents(spark, dir))
 
   /** The markup-line law applied to any (doc_id, text) table — split out so
-    * ScaleProbe can line-ify blown-up corpora.
+    * blown-up or derived corpora line-ify the same way.
     */
   def asMarkupLines(d: DataFrame, lineWidth: Int = 8): DataFrame = {
     val w = lineWidth

@@ -57,7 +57,7 @@ object WebQueries {
     // exactByKey's shape with canon_url as the content key.
     "web_url_dedup" -> ((s, dir) => {
       val base = Tables.documentsWithUrls(s, dir)
-      // alias ids use the 10_000_000 re-key stride (ScaleProbe's convention)
+      // alias ids use the 10_000_000 re-key stride (the GenSf re-key convention)
       // so they can never collide with genuine doc_ids on a larger fixture
       val ali = base.filter(col("doc_id") % 25 === 0)
         .withColumn("doc_id", col("doc_id") + 10000000L)

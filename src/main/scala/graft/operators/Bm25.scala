@@ -759,9 +759,7 @@ object Bm25 {
         Seq(queryVecId).toDF("query_id"), coarseK, rrfPoolK, nprobeDoc,
         scope, postings)
       .select("doc_id").collect().map(_.getLong(0)).toSeq
-    val qVec = docEmb.filter(col("vec_id") === queryVecId)
-      .select(transform(col("embedding"), _.cast("double")).as("e"))
-      .collect()(0).getSeq[Double](0).toArray
+    val qVec = Ivf.queryVec(docEmb, queryVecId)
     Similarity.ragContextFrom(
       Ivf.probeWithVec(chunkModel, spark, qVec, poolK, nprobeChunk,
           indexFilter = Some(shiftright(col("vec_id"), chunkShift)
@@ -799,12 +797,9 @@ object Bm25 {
         "left_semi")
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       .withColumn("list", explode(
-        Ivf.probeListsExpr(col("q_emb"), chunkModel.centroids, nprobeChunk)))
-    val idx0 = Ivf.readIndex(spark, chunkModel)
+        Ivf.probeListsExpr(col("q_emb"), chunkModel.coarse.get.centroids, nprobeChunk)))
+    val idx = CodesIndex.liveRows(spark, chunkModel, None)
       .select(col("list"), col("vec_id"), col("embedding"))
-    val idx = graft.sources.Sinks.readTombstones(spark,
-        Ivf.tombstonesPath(chunkModel.indexPath))
-      .fold(idx0)(t => idx0.join(t, Seq("vec_id"), "left_anti"))
     val w = Window.partitionBy("query_id")
       .orderBy(desc("cosine"), col("vec_id"))
     val pool = idx.join(q, "list")

@@ -123,7 +123,7 @@ object Bpe {
     * the superseded round (the nearDupClusters rule), regardless of batch
     * size — driver cost per ROUND stays flat, and rounds shrink 64×.
     *
-    * MEASURED at production depth (`ScaleProbe bpe salt=32 …` on the
+    * MEASURED at production depth (a timing harness on the
     * 32×-salted sf1 corpus, 1.76 M docs): 1 000 merges in 24.1 s
     * (0.024 s/merge), 5 000 in 77.0 s (0.015), 8 000 in 49.4 s (0.006)
     * at batch 256 — per-merge cost FALLS with depth as the replace pass

@@ -183,7 +183,7 @@ object CorpusIndex {
     val emb = spark.read.parquet(embPath)
     val model = Ivf.buildIndex(indexKey, emb)
     val doomed = spark.read.parquet(doomedPath)
-    Ivf.deleteFromIndex(model, doomed, batchId = 0L)
+    CodesIndex.deleteFromIndex(model, doomed, batchId = 0L)
     Built(model, emb, doomed)
   }
 
@@ -378,8 +378,8 @@ object CorpusIndex {
       val freshAssigned = scope.persist(Ivf.index(
         embCurP.join(freshIds.withColumnRenamed("doc_id", "vec_id"),
           Seq("vec_id"), "left_semi"),
-        model.centroids))
-      val unchangedRows = Ivf.readIndex(spark, model)
+        model.coarse.get.centroids))
+      val unchangedRows = CodesIndex.readIndex(spark, model)
         .select("vec_id", "embedding", "list")
         .join(touched.withColumnRenamed("doc_id", "vec_id"),
           Seq("vec_id"), "left_anti")
@@ -407,18 +407,18 @@ object CorpusIndex {
         .select(col("doc_id").as("vec_id")))
       // 5. mutate: delete → compact (drops leavers/changed AND doomedPrev
       // physically) → append fresh + resurrected → current tombstones
-      Ivf.deleteFromIndex(model,
+      CodesIndex.deleteFromIndex(model,
         touched.select(col("doc_id").as("vec_id")), batchId = 1L)
-      Ivf.compactIndex(spark, model, maxFilesPerList = Int.MaxValue)
+      CodesIndex.compactIndex(spark, model, maxFilesPerList = Int.MaxValue)
       val resurrected = doomedPrev
         .join(doomedCur, Seq("vec_id"), "left_anti")
         .join(diff.gCurIds.select(col("doc_id").as("vec_id")),
           Seq("vec_id"), "left_semi")
       val appendIds = freshIds.withColumnRenamed("doc_id", "vec_id")
         .unionByName(resurrected).distinct()
-      Ivf.appendToIndex(model,
+      CodesIndex.appendToIndex(model,
         embCurP.join(appendIds, Seq("vec_id"), "left_semi"))
-      Ivf.deleteFromIndex(model, doomedCur, batchId = 2L)
+      CodesIndex.deleteFromIndex(model, doomedCur, batchId = 2L)
       modelOut = model
       ()
     })
@@ -432,12 +432,8 @@ object CorpusIndex {
     * reads instead of re-deriving gates and closures.
     */
   private def liveIds(spark: org.apache.spark.sql.SparkSession,
-                      model: Ivf.IvfModel): DataFrame = {
-    val rows = Ivf.readIndex(spark, model).select("vec_id")
-    graft.sources.Sinks
-      .readTombstones(spark, Ivf.tombstonesPath(model.indexPath), None)
-      .fold(rows)(t => rows.join(t, Seq("vec_id"), "left_anti"))
-  }
+                      model: Ivf.IvfModel): DataFrame =
+    CodesIndex.liveRows(spark, model, None).select("vec_id")
 
   /** The refreshed serving stack: doc index + chunk index + the chunk
     * text store, all at the CURRENT corpus version.
@@ -493,8 +489,8 @@ object CorpusIndex {
     * (small) removed-parent set, compaction rewrites only tombstoned
     * lists, the append chunks/embeds only entering docs, and the text
     * store is touched only at its diff — nothing re-chunks, re-embeds or
-    * re-trains over the surviving corpus ([[graft.ScaleProbe]]'s
-    * `ragrefresh` mode measures the flat cost across corpus decades).
+    * re-trains over the surviving corpus (measured flat in cost across
+    * corpus decades).
     */
   /** The PREV serving state — what last night's run left behind: gates +
     * doc index + semantic tombstones ([[build]]), the live corpus's chunk
@@ -579,14 +575,14 @@ object CorpusIndex {
       val addedChunks = spark.read.parquet(artDir + "/added")
       // tombstone every chunk key of a removed parent: the index IS the
       // key→list mapping, so resolution is one keyed join against it
-      val doomedChunks = Ivf.readIndex(spark, chunkModel)
+      val doomedChunks = CodesIndex.readIndex(spark, chunkModel)
         .select("vec_id")
         .join(spark.read.parquet(artDir + "/removed")
             .select(col("doc_id").as("parent_id")),
           shiftright(col("vec_id"), 20) === col("parent_id"), "left_semi")
-      Ivf.deleteFromIndex(chunkModel, doomedChunks, batchId = 1L)
-      Ivf.compactIndex(spark, chunkModel, maxFilesPerList = Int.MaxValue)
-      Ivf.appendToIndex(chunkModel, chunkEmbeddingsOf(addedChunks, dim))
+      CodesIndex.deleteFromIndex(chunkModel, doomedChunks, batchId = 1L)
+      CodesIndex.compactIndex(spark, chunkModel, maxFilesPerList = Int.MaxValue)
+      CodesIndex.appendToIndex(chunkModel, chunkEmbeddingsOf(addedChunks, dim))
       artDir
     })
     // text store at the current version: survivors of the prev store plus
@@ -605,10 +601,6 @@ object CorpusIndex {
     */
   def minLiveVecId(model: Ivf.IvfModel): Long = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val rows = Ivf.readIndex(spark, model).select("vec_id")
-    val live = graft.sources.Sinks
-      .readTombstones(spark, Ivf.tombstonesPath(model.indexPath), None)
-      .fold(rows)(t => rows.join(t, Seq("vec_id"), "left_anti"))
-    live.agg(min("vec_id")).head().getLong(0)
+    CodesIndex.liveRows(spark, model, None).agg(min("vec_id")).head().getLong(0)
   }
 }

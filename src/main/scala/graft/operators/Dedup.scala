@@ -911,7 +911,7 @@ object Dedup {
   def semanticDupPairs(embeddings: DataFrame, threshold: Double,
                        indexKey: String, nlist: Int = 16): DataFrame = {
     val model = Ivf.buildIndex(indexKey, embeddings, nlist)
-    val v = Ivf.readIndex(embeddings.sparkSession, model)
+    val v = CodesIndex.readIndex(embeddings.sparkSession, model)
       .select(col("list"), col("vec_id"), col("embedding"),
         VectorOps.norm(col("embedding")).as("nrm"))
     val a = v.select(col("list"), col("vec_id").as("vec_a"),
@@ -961,7 +961,7 @@ object Dedup {
     * of every task binary, deserialized per TASK. Fine up to a few MB
     * (Spark's own runtime filters cap at 8 MB for the same reason); a
     * window-sized filter × 32 concurrent tasks is an executor OOM
-    * (measured: 12 MB × 32 threads killed a 1 GiB ScaleProbe run). For
+    * (measured: 12 MB × 32 threads killed a 1 GiB scaling run). For
     * big filters use [[bloomMightContainBroadcast]] — [[bloomNovel]]
     * switches automatically at [[BloomLiteralMaxBytes]].
     */

@@ -188,58 +188,6 @@ object Pretrain {
     })
   }
 
-  /** Diagnostic twin of [[full]] with a hard materialization barrier after
-    * every stage, returning (stage, seconds, rows) — the wall-time
-    * breakdown behind the flagship's bench number (`ScaleProbe pretrain`
-    * drives it; BASELINE.md records the table). The barriers make stage
-    * attribution honest (lazy evaluation would otherwise bill stage 1's
-    * work to whichever later stage first materializes it) at the price of
-    * persisting each boundary — the same persists [[state]]/[[pack]]
-    * already place, so the summed cost tracks the real query's.
-    */
-  def stageTimings(docs0: DataFrame, probe: DataFrame,
-                   scope: graft.CacheScope): Seq[(String, Double, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long)]
-    def t(name: String)(f: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      val df = scope.persist(f)
-      val n = df.count()
-      out += ((name, (System.nanoTime() - t0) / 1e9, n))
-      df
-    }
-    val pairs = t("1a_minhash_pairs")(Dedup.minhashPairs(docs0, 0.5, scope = scope))
-    val collapsed = t("1b_collapse")(
-      Dedup.collapseNearDups(docs0, pairs, col("n_chars"), scope))
-    val stripped = t("2_substr_strip")(
-      Dedup.cutSubstrSpans(collapsed, scope = scope)
-        .filter(col("clean_text") =!= "")
-        .join(collapsed.select("doc_id", "lang"), "doc_id")
-        .select(col("doc_id"), col("clean_text").as("text"), col("lang")))
-    val decon = t("3_decontaminate")(
-      stripped.join(
-        TextAnalysis.contaminationHits(stripped, probe)
-          .filter(col("n_hits") >= 5),
-        Seq("doc_id"), "left_anti"))
-    val gated0 = t("4_quality_gate")(decon
-      .join(TextAnalysis.qualityScore(decon).select("doc_id", "quality"),
-        "doc_id")
-      .filter(col("quality") >= 0.5)
-      .select(col("doc_id"), col("lang"), col("text"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens")))
-    // mirror [[state]]'s lineage cut (data already cached, so this is a
-    // cache read + partition store, billed to no stage)
-    val gated = scope.checkpoint(gated0)
-    val sel = t("5_tempered_mixture")(
-      Curation.mixtureSample(gated, "lang", col("doc_id"), col("n_tokens"),
-        Curation.temperedBudgets(gated, "lang", col("n_tokens"), 8000L),
-        scope = scope))
-    t("6_pack")(
-      Curation.packSequences(
-          Curation.chunk(gated.join(sel.select("doc_id"), "doc_id"), 64, 8),
-          256, 8))
-    out.toSeq
-  }
-
   /** Stage-1 increment + the affected-document frontier (see object
     * scaladoc for the soundness argument). `affected` ⊆ cur survivors is
     * the exact set whose stage-2..4 results may differ from the previous
@@ -250,8 +198,7 @@ object Pretrain {
 
   /** Dev probe: GRAFT_STAGE_TRACE=1 prints wall time between the eager
     * boundaries of [[increment]] to stderr (the breakdown behind
-    * `cur_pretrain_incr`'s bench number; `ScaleProbe pretrainIncr` wraps
-    * it). No-op otherwise.
+    * `cur_pretrain_incr`'s bench number). No-op otherwise.
     */
   private val stageTrace = sys.env.contains("GRAFT_STAGE_TRACE")
   private def traced(tag: String, t0: Long): Long = {
@@ -372,12 +319,9 @@ object Pretrain {
   // _latest and never observe a torn version — the same staged-commit
   // discipline as the ANN index sinks, lifted to a multi-table state.
 
-  private def fsOf(spark: org.apache.spark.sql.SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
   private def latestVersion(spark: org.apache.spark.sql.SparkSession,
                             stateDir: String): Option[Long] = {
-    val fs = fsOf(spark)
+    val fs = graft.sources.Sinks.fileSystem(spark, stateDir)
     val p = new org.apache.hadoop.fs.Path(stateDir, "_latest")
     if (!fs.exists(p)) None
     else {
@@ -390,7 +334,7 @@ object Pretrain {
 
   private def commitPointer(spark: org.apache.spark.sql.SparkSession,
                             stateDir: String, batchId: Long): Unit = {
-    val fs = fsOf(spark)
+    val fs = graft.sources.Sinks.fileSystem(spark, stateDir)
     val tmp = new org.apache.hadoop.fs.Path(stateDir, "_latest.tmp")
     val dst = new org.apache.hadoop.fs.Path(stateDir, "_latest")
     val out = fs.create(tmp, true)
@@ -422,7 +366,7 @@ object Pretrain {
                   batchId: Long): Unit = {
     graft.MutationGuard.claim(stateDir)
     val spark = batch0.sparkSession
-    val fs = fsOf(spark)
+    val fs = graft.sources.Sinks.fileSystem(spark, stateDir)
     val vdir = s"$stateDir/v$batchId"
     val done = new org.apache.hadoop.fs.Path(vdir, "_done")
     if (fs.exists(done)) { commitPointer(spark, stateDir, batchId); return }

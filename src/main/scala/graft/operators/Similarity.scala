@@ -208,12 +208,9 @@ object Similarity {
     val q = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       .withColumn("list", explode(
-        Ivf.probeListsExpr(col("q_emb"), chunkModel.centroids, nprobeChunk)))
-    val idx0 = Ivf.readIndex(spark, chunkModel)
+        Ivf.probeListsExpr(col("q_emb"), chunkModel.coarse.get.centroids, nprobeChunk)))
+    val idx = CodesIndex.liveRows(spark, chunkModel, None)
       .select(col("list"), col("vec_id"), col("embedding"))
-    val idx = graft.sources.Sinks.readTombstones(spark,
-        Ivf.tombstonesPath(chunkModel.indexPath))
-      .fold(idx0)(t => idx0.join(t, Seq("vec_id"), "left_anti"))
     val w = Window.partitionBy("query_id")
       .orderBy(desc("cosine"), col("vec_id"))
     idx.join(q, "list")
@@ -331,11 +328,8 @@ object Similarity {
     import spark.implicits._
     val pool = topKTwoStageIvf(docModel, docEmb, chunkModel, queryVecId,
       coarseK, poolK, nprobeDoc, nprobeChunk)
-    val raw = Ivf.readIndex(spark, chunkModel)
+    val vecs = CodesIndex.liveRows(spark, chunkModel, None)
       .select(col("vec_id"), col("embedding"))
-    val vecs = graft.sources.Sinks.readTombstones(spark,
-        Ivf.tombstonesPath(chunkModel.indexPath))
-      .fold(raw)(t => raw.join(t, Seq("vec_id"), "left_anti"))
     val rows = pool.join(vecs, Seq("vec_id"))
       .select("vec_id", "parent_id", "cosine", "embedding")
       .collect() // ≤ poolK rows — the k-bounded collect discipline
@@ -419,11 +413,8 @@ object Similarity {
       docEmb.join(queryIds.select(col("query_id").as("vec_id")),
         Seq("vec_id"), "left_semi"),
       coarseK, poolK, nprobeDoc, nprobeChunk)
-    val raw = Ivf.readIndex(spark, chunkModel)
+    val vecs = CodesIndex.liveRows(spark, chunkModel, None)
       .select(col("vec_id"), col("embedding"))
-    val vecs = graft.sources.Sinks.readTombstones(spark,
-        Ivf.tombstonesPath(chunkModel.indexPath))
-      .fold(raw)(t => raw.join(t, Seq("vec_id"), "left_anti"))
     val rows = pool.join(vecs, Seq("vec_id"))
       .select("query_id", "vec_id", "parent_id", "cosine", "embedding")
       .collect() // ≤ |queries| × poolK rows — k-bounded per query
@@ -1111,7 +1102,7 @@ object Similarity {
   /** Hyperplane-LSH banding planner — the [[Dedup.lshPlan]] twin for the
     * ANN side: the closed-form detection-probability curve for a
     * (tables, bits) configuration, the table read BEFORE tuning
-    * [[annTopKLsh]]/[[knnJoinLsh]] (ScaleProbe measures the cost knob;
+    * [[annTopKLsh]]/[[knnJoinLsh]] (a timing run measures the cost knob;
     * this is the recall knob). For vectors at angle θ, one random
     * hyperplane separates them with probability θ/π (Goemans–Williamson),
     * so a b-bit table collides with p1^b where p1 = 1 − θ/π, and any of T

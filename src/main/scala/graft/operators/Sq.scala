@@ -154,8 +154,8 @@ object Sq {
     * is the natural point). One linear pass over the batch, 64-row output.
     */
   def saturationReport(model: CodesModel[SqCodec], batch: DataFrame): DataFrame = {
-    val mnLit = typedLit(model.codec.mins.toSeq)
-    val spLit = typedLit(model.codec.spans.toSeq)
+    val mnLit = typedLit(model.layout.mins.toSeq)
+    val spLit = typedLit(model.layout.spans.toSeq)
     batch.select(posexplode(col("embedding")).as(Seq("dim", "f")))
       .select(col("dim"),
         floor(col("f").cast("double") * VecScale + 0.5).cast("long").as("vq"))

@@ -204,8 +204,8 @@ object Stats {
     // fully lazy chain plans every downstream join/window against
     // UNMATERIALIZED caches — size-unknown inputs — and re-derives the
     // cached subtrees inside sibling broadcast legs; measured 11.9 s lazy
-    // vs 5.0 s eager for the identical stages at sf0.1 (ScaleProbe
-    // madsplit). The counts() are aggregate-only actions on bounded
+    // vs 5.0 s eager for the identical stages at sf0.1 (a per-stage
+    // timing harness). The counts() are aggregate-only actions on bounded
     // tables — the Pretrain-chain eager-cut discipline.
     counts.count()
     val med = exactQuantilesFromCounts(counts, groupCol, Seq(0.5))

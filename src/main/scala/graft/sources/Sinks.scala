@@ -201,17 +201,18 @@ object Sinks {
       !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
       .map(_.getPath)
 
-  /** The exactly-once ingest move shared by the list-partitioned index
-    * append and delete paths (`Ivf` and the listed `CodesIndex` layouts):
+  /** The exactly-once ingest move shared by the listed index append and
+    * delete paths (`CodesIndex` with an IVF partitioner):
     * a `list`-partitioned staging dir holding ONE data file per list has
     * each file moved to
     * `target/list=X/ingest-<batchId>.parquet` ONLY if that name is absent
     * — so a crash-replayed batch regenerates identical staging, finds its
     * destinations present, and is a no-op, and a crash mid-move resumes
     * file-by-file. Batches whose marker files a later compaction folded
-    * away stay no-ops too: `Ivf.compactLists` records folded batchIds in
-    * the per-list [[IngestManifestName]], checked here before the move.
-    * Deletes the staging dir when done.
+    * away stay no-ops too: `CodesIndex.compactIndex` records folded
+    * batchIds in the per-list [[IngestManifestName]], checked here before
+    * the move. [[crashPoint]] `"moved"` fires with each list's target dir
+    * after its move. Deletes the staging dir when done.
     * Its writers `repartition(1)` the batch before the `list`-partitioned
     * write, so each list gets one file, as [[appendBatchFileIdempotent]]
     * does for a batch not known to be one partition.
@@ -232,6 +233,7 @@ object Sinks {
         if (!readIngestManifest(fs, dstDir).contains(batchId) &&
             !fs.exists(dst) && !fs.rename(files.head, dst))
           throw new java.io.IOException(s"ingest move failed: $dst")
+        crashPoint("moved", dstDir)
       }
     fs.delete(stagingPath, true)
   }
@@ -346,9 +348,10 @@ object Sinks {
   }
 
   /** Fault-injection seam of the staged publishes, called with the
-    * destination at `"staged"` (before the rename or swap) and, by
-    * [[appendBatchFileIdempotent]], at `"published"` (before the stage is
-    * removed); crash-consistency specs make it throw.
+    * destination at `"staged"` (before the rename or swap), by
+    * [[appendBatchFileIdempotent]] at `"published"` (before the stage is
+    * removed), and by [[ingestStagedLists]] at `"moved"` (after each
+    * list's move); crash-consistency specs make it throw.
     */
   @volatile private[graft] var crashPoint: (String, org.apache.hadoop.fs.Path) => Unit =
     (_, _) => ()

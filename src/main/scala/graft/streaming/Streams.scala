@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.Row
 import graft.operators.SalesClean
-import graft.operators.CodesIndex.{Codec, CodesModel}
+import graft.operators.CodesIndex
+import graft.operators.CodesIndex.{Codec, CodesModel, Layout, ShardedModel}
 
 /** Structured Streaming surface of the engine.
   *
@@ -524,10 +525,10 @@ object Streams {
     */
   def semanticDupStream(vectors: DataFrame, model: graft.operators.Ivf.IvfModel,
                         threshold: Double): DataFrame = {
-    val idx = graft.operators.Ivf.readIndex(vectors.sparkSession, model)
+    val idx = CodesIndex.readIndex(vectors.sparkSession, model)
       .select(col("list"), col("vec_id").as("corpus_id"),
         col("embedding").as("c_emb"))
-    graft.operators.Ivf.index(vectors, model.centroids)
+    graft.operators.Ivf.index(vectors, model.coarse.get.centroids)
       .join(idx, "list")
       .filter(col("vec_id") =!= col("corpus_id"))
       .withColumn("cosine",
@@ -554,7 +555,7 @@ object Streams {
     * ([[graft.sources.Sinks.appendBatchFileIdempotent]]) — a replayed
     * batch regenerates identical rows and is a no-op, where a blind
     * append would duplicate them. The stream composes with incremental
-    * maintenance: `Ivf.appendToIndex` grows the same index directory
+    * maintenance: [[codesIngestSink]] grows the same index directory
     * between micro-batches.
     */
   def ivfProbeSink(queries: DataFrame, model: graft.operators.Ivf.IvfModel,
@@ -834,53 +835,36 @@ object Streams {
       })
 
   /** Streaming index maintenance — the WRITE-side twin of [[ivfProbeSink]]
-    * and the streaming form of `Ivf.appendToIndex`: each micro-batch of
-    * new vectors is assigned with the FROZEN quantizer and appended into
-    * the materialized index's list directories. Together the pair closes
-    * the growing-corpus loop: this sink ingests, [[ivfProbeSink]] (or any
-    * batch probe) immediately sees every landed batch, and no rebuild ever
-    * rewrites standing lists.
+    * and [[codesProbeSink]], for any of the five layouts: each micro-batch
+    * of new vectors is written as the layout's rows with the FROZEN model
+    * (`CodesIndex.appendToIndexIdempotent`: a raw IVF batch assigned by
+    * the quantizer, a codes batch encoded), so a probe immediately sees
+    * every landed batch and no rebuild ever rewrites standing lists.
     *
     * Delivery: EXACTLY-ONCE — each micro-batch lands as deterministic
-    * `ingest-<batchId>.parquet` files per touched list
-    * (`Ivf.appendToIndexIdempotent`), so a crash-replayed batch finds its
-    * files already present and is a no-op; a crash mid-move resumes
-    * file-by-file. After many micro-batches, run `Ivf.compactIndex` to
-    * fold the per-batch files (the maintenance verb this sink creates the
-    * need for).
+    * per-batch files (per touched list when listed), so a crash-replayed
+    * batch is a no-op and a crash mid-move resumes list by list. Each
+    * batch re-takes the index's writer lease, so a SECOND ingest stream on
+    * the same index fails fast with a ConcurrentWriterException instead of
+    * silently racing the manifest.
     *
     * `compactAboveFiles > 0` arms AUTO-COMPACTION: after each batch
-    * commits, any list whose data-file count exceeds the threshold is
-    * folded by `Ivf.compactLists` — the lifecycle automation that keeps a
-    * long-running ingest stream's file counts bounded without an external
-    * maintenance job ([[graft.sources.Sinks.fileReport]] is the diagnostic
-    * twin of the same decision). Safe inside foreachBatch: compaction is
-    * serialized with the ingest (no concurrent writer), and a batch
-    * replayed after a crash-between-compact-and-checkpoint stays a no-op
-    * via the ingest manifest.
+    * commits, `CodesIndex.compactIndex` folds the flat table, or each list,
+    * holding more data files than that (or carrying tombstones) — the
+    * lifecycle automation that keeps a long-running stream's file counts
+    * bounded without an external maintenance job
+    * ([[graft.sources.Sinks.fileReport]] is the diagnostic twin). Safe
+    * inside foreachBatch: compaction is serialized with the ingest, and a
+    * batch replayed after a crash between compaction and checkpoint stays
+    * a no-op via the ingest manifest.
     */
-  def ivfIngestSink(vectors: DataFrame, model: graft.operators.Ivf.IvfModel,
-                    checkpointDir: String,
-                    compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
-    // one writer identity per sink instance: each batch re-takes the index
-    // lease, so a SECOND ingest stream on the same index fails fast with
-    // ConcurrentWriterException instead of silently racing the manifest
-    val writerId = java.util.UUID.randomUUID().toString
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.withDirLease(batch.sparkSession, model.indexPath,
-          writerId) {
-          graft.operators.Ivf.appendToIndexIdempotent(model, batch, batchId)
-          if (compactAboveFiles > 0)
-            graft.operators.Ivf.compactIndex(batch.sparkSession, model,
-              maxFilesPerList = compactAboveFiles)
-        }
-        ()
-      })
-  }
+  def codesIngestSink(vectors: DataFrame,
+                      model: CodesModel[Layout],
+                      checkpointDir: String,
+                      compactAboveFiles: Int = 0): DataStreamWriter[Row] =
+    ingestSink(vectors, model, checkpointDir, compactAboveFiles)(identity)
 
-  /** SELF-FED streaming ingest — [[ivfIngestSink]] fed by raw DOCUMENTS
+  /** SELF-FED streaming ingest — [[codesIngestSink]] fed by raw DOCUMENTS
     * instead of precomputed vectors: each micro-batch of (doc_id, text)
     * rows embeds IN-FLIGHT with [[graft.operators.Embed.hashedTf]] (the
     * model-free hashing-trick embedder, so a crash-replayed batch
@@ -894,58 +878,9 @@ object Streams {
   def embedIngestSink(documents: DataFrame,
                       model: graft.operators.Ivf.IvfModel,
                       checkpointDir: String,
-                      compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
-    val writerId = java.util.UUID.randomUUID().toString
-    documents.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.withDirLease(batch.sparkSession, model.indexPath,
-          writerId) {
-          graft.operators.Ivf.appendToIndexIdempotent(model,
-            graft.operators.Embed.hashedTf(batch), batchId)
-          if (compactAboveFiles > 0)
-            graft.operators.Ivf.compactIndex(batch.sparkSession, model,
-              maxFilesPerList = compactAboveFiles)
-        }
-        ()
-      })
-  }
-
-  /** [[ivfIngestSink]] for the SHARDED layout — the lifecycle symmetry
-    * the 10¹¹-vector deployment needs (the sharded quantizer is exactly
-    * where such a deployment lives): each micro-batch routes rows to
-    * their owning shard by the build's own md5 hash law and lands
-    * exactly-once per (shard, batchId) via the per-shard
-    * `Ivf.appendToIndexIdempotent` contract — a crash replay finds every
-    * shard's deterministic ingest files present and no-ops shard by
-    * shard. The batch is persisted across the per-shard filters (one
-    * source read per batch, not per shard — scopedBatch releases it);
-    * each shard append runs under its own index lease.
-    */
-  def ivfShardedIngestSink(vectors: DataFrame,
-                           model: graft.operators.Ivf.IvfShardedModel,
-                           checkpointDir: String,
-                           compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
-    val writerId = java.util.UUID.randomUUID().toString
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(scopedBatch { (batch: DataFrame, batchId: Long) =>
-        val b = graft.CacheScope.global.persist(batch)
-        model.shards.zipWithIndex.foreach { case (m, sh) =>
-          graft.sources.Sinks.withDirLease(batch.sparkSession, m.indexPath,
-            writerId) {
-            graft.operators.Ivf.appendToIndexIdempotent(m,
-              b.filter(graft.operators.Curation
-                .hashBucket(col("vec_id"), model.nShards) === sh),
-              batchId)
-            if (compactAboveFiles > 0)
-              graft.operators.Ivf.compactIndex(batch.sparkSession, m,
-                maxFilesPerList = compactAboveFiles)
-          }
-          ()
-        }
-      })
-  }
+                      compactAboveFiles: Int = 0): DataStreamWriter[Row] =
+    ingestSink(documents, model, checkpointDir, compactAboveFiles)(
+      graft.operators.Embed.hashedTf(_))
 
   /** [[embedIngestSink]] at CHUNK granularity — the streaming half of the
     * chunk-retrieval flagship: each micro-batch of raw (doc_id, text)
@@ -960,39 +895,83 @@ object Streams {
   def chunkEmbedIngestSink(documents: DataFrame,
                            model: graft.operators.Ivf.IvfModel,
                            checkpointDir: String,
-                           compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
+                           compactAboveFiles: Int = 0): DataStreamWriter[Row] =
+    ingestSink(documents, model, checkpointDir, compactAboveFiles)(
+      graft.operators.CorpusIndex.chunkEmbeddings(_))
+
+  /** The ingest loop of the sinks above: `vectorsOf(batch)` appended
+    * exactly-once under the index's writer lease, then the optional
+    * in-stream compaction.
+    */
+  private def ingestSink(source: DataFrame, model: CodesModel[Layout],
+                         checkpointDir: String, compactAboveFiles: Int)
+                        (vectorsOf: DataFrame => DataFrame): DataStreamWriter[Row] = {
     val writerId = java.util.UUID.randomUUID().toString
-    documents.writeStream
+    source.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch(scopedBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.Sinks.withDirLease(batch.sparkSession, model.indexPath,
           writerId) {
-          graft.operators.Ivf.appendToIndexIdempotent(model,
-            graft.operators.CorpusIndex.chunkEmbeddings(batch), batchId)
+          CodesIndex.appendToIndexIdempotent(model, vectorsOf(batch), batchId)
           if (compactAboveFiles > 0)
-            graft.operators.Ivf.compactIndex(batch.sparkSession, model,
+            CodesIndex.compactIndex(batch.sparkSession, model,
               maxFilesPerList = compactAboveFiles)
         }
         ()
       })
   }
 
+  /** [[codesIngestSink]] for the SHARDED layout — the lifecycle symmetry
+    * the 10¹¹-vector deployment needs (the sharded quantizer is exactly
+    * where such a deployment lives): each micro-batch routes rows to
+    * their owning shard by the build's own md5 hash law and lands
+    * exactly-once per (shard, batchId) via the per-shard
+    * `CodesIndex.appendToIndexIdempotent` contract — a crash replay finds
+    * every shard's deterministic ingest files present and no-ops shard by
+    * shard. The batch is persisted across the per-shard filters (one
+    * source read per batch, not per shard — scopedBatch releases it);
+    * each shard append runs under its own index lease.
+    */
+  def ivfShardedIngestSink(vectors: DataFrame,
+                           model: ShardedModel[Layout],
+                           checkpointDir: String,
+                           compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
+    val writerId = java.util.UUID.randomUUID().toString
+    vectors.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(scopedBatch { (batch: DataFrame, batchId: Long) =>
+        val b = graft.CacheScope.global.persist(batch)
+        model.shards.zipWithIndex.foreach { case (m, sh) =>
+          graft.sources.Sinks.withDirLease(batch.sparkSession, m.indexPath,
+            writerId) {
+            CodesIndex.appendToIndexIdempotent(m, CodesIndex.shardSlice(model, b, sh),
+              batchId)
+            if (compactAboveFiles > 0)
+              CodesIndex.compactIndex(batch.sparkSession, m,
+                maxFilesPerList = compactAboveFiles)
+          }
+          ()
+        }
+      })
+  }
+
   /** Streaming takedown sink — the DELETE verb's streaming form, closing
     * the index lifecycle loop (ingest / probe / delete all drivable from
-    * streams): each micro-batch of (vec_id) rows is applied with
-    * `Ivf.deleteFromIndex`, whose per-batchId staged-move tombstone write
-    * makes crash-replays no-ops, and whose list resolution reads only the
-    * index's two id columns. Probes mask the deleted ids immediately; the
-    * next compaction (or an armed [[ivfIngestSinkAuto]]) drops them
-    * physically. One checkpoint per index — batchIds key the tombstone
-    * files.
+    * streams) for any of the five layouts: each micro-batch of (vec_id)
+    * rows lands as per-batchId tombstones (`CodesIndex.deleteFromIndex`;
+    * per list when listed, resolved from the index's two id columns), so
+    * replays are no-ops. Probes mask the deleted ids immediately (the ADC
+    * probes before their rerank cut); the next compaction (or an armed
+    * [[ivfIngestSinkAuto]]) drops them physically. One checkpoint per
+    * index — batchIds key the tombstone files.
     */
-  def ivfDeleteSink(ids: DataFrame, model: graft.operators.Ivf.IvfModel,
-                    checkpointDir: String): DataStreamWriter[Row] =
+  def codesDeleteSink(ids: DataFrame,
+                      model: CodesModel[Layout],
+                      checkpointDir: String): DataStreamWriter[Row] =
     ids.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Ivf.deleteFromIndex(model, batch, batchId)
+        CodesIndex.deleteFromIndex(model, batch, batchId)
       })
 
   /** Streaming ANN probe over a compressed-codes index (PQ, SQ8, IVF-PQ
@@ -1014,67 +993,24 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.Sinks.appendBatchFileIdempotent(
-          graft.operators.CodesIndex.probeAll(model, corpus, batch, k, nprobe, rerank),
+          CodesIndex.probeAll(model, corpus, batch, k, nprobe, rerank),
           outDir, s"probe-$batchId.parquet")
       })
 
-  /** [[ivfIngestSink]] for a compressed-codes index: each micro-batch of
-    * new vectors is encoded with the frozen model and lands exactly-once
-    * (`CodesIndex.appendToIndexIdempotent` — deterministic per-batch file
-    * names, replay is a no-op) under the index's writer lease.
-    * `compactAboveFiles > 0` arms in-stream auto-compaction: after each
-    * batch, `CodesIndex.compactIndex` folds the flat table, or each list,
-    * holding more data files than that (or carrying tombstones).
-    */
-  def codesIngestSink(vectors: DataFrame,
-                      model: CodesModel[Codec],
-                      checkpointDir: String,
-                      compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
-    val writerId = java.util.UUID.randomUUID().toString
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.withDirLease(batch.sparkSession, model.indexPath,
-          writerId) {
-          graft.operators.CodesIndex.appendToIndexIdempotent(model, batch, batchId)
-          if (compactAboveFiles > 0)
-            graft.operators.CodesIndex.compactIndex(batch.sparkSession, model,
-              maxFilesPerList = compactAboveFiles)
-        }
-        ()
-      })
-  }
-
-  /** [[ivfDeleteSink]] for a compressed-codes index: each micro-batch of
-    * (vec_id) rows lands as per-batchId tombstones
-    * (`CodesIndex.deleteFromIndex`; per list when listed), so replays are
-    * no-ops and the ADC probes mask the ids before their rerank cut.
-    */
-  def codesDeleteSink(ids: DataFrame,
-                      model: CodesModel[Codec],
-                      checkpointDir: String): DataStreamWriter[Row] =
-    ids.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.CodesIndex.deleteFromIndex(model, batch, batchId)
-      })
-
-  /** Self-maintaining ingest — [[ivfIngestSink]] plus DRIFT handling: each
-    * batch loads the PERSISTED quantizer (`Ivf.currentModel` — the
-    * committed truth that survives restarts and reflects every earlier
-    * split), appends with it, optionally compacts, and when the max/mean
-    * list ratio exceeds `rebalanceAboveRatio` runs `Ivf.rebalanceIndex`,
-    * which persists the updated model for the NEXT batch. This is the
-    * sink that keeps nprobe pruning effective under a drifting corpus
-    * without any external maintenance job.
+  /** Self-maintaining ingest — [[codesIngestSink]] plus DRIFT handling for
+    * a raw IVF index: each batch loads the PERSISTED model
+    * (`CodesIndex.currentModel` — the committed truth that survives
+    * restarts and reflects every earlier split), appends with it,
+    * optionally compacts, and when the max/mean list ratio exceeds
+    * `rebalanceAboveRatio` runs `Ivf.rebalanceIndex`, which persists the
+    * updated model for the NEXT batch. This is the sink that keeps nprobe
+    * pruning effective under a drifting corpus without any external
+    * maintenance job.
     *
     * Exactly-once under evolution: the batch-level `_ingest_done` marker
     * makes a replayed batch a no-op even though a post-append re-balance
-    * moved its rows across lists (the per-list move-if-absent alone could
-    * not guarantee that); a crash before the marker implies the same
-    * batch's re-balance never ran, so the replay regenerates identical
-    * staging. Probe-side readers should resolve `Ivf.currentModel` rather
-    * than hold the initial model.
+    * moved its rows across lists. Probe-side readers should resolve
+    * `CodesIndex.currentModel` rather than hold the initial model.
     */
   def ivfIngestSinkAuto(vectors: DataFrame,
                         model: graft.operators.Ivf.IvfModel,
@@ -1090,11 +1026,10 @@ object Streams {
         // re-balance between currentModel and the append would otherwise
         // hand this batch a stale quantizer
         graft.sources.Sinks.withDirLease(spark, model.indexPath, writerId) {
-          val m = graft.operators.Ivf.currentModel(spark, model)
-          graft.operators.Ivf.appendToIndexIdempotent(m, batch, batchId)
+          val m = CodesIndex.currentModel(spark, model)
+          CodesIndex.appendToIndexIdempotent(m, batch, batchId)
           if (compactAboveFiles > 0)
-            graft.operators.Ivf.compactIndex(spark, m,
-              maxFilesPerList = compactAboveFiles)
+            CodesIndex.compactIndex(spark, m, maxFilesPerList = compactAboveFiles)
           if (rebalanceAboveRatio > 0.0)
             graft.operators.Ivf.rebalanceIndex(spark, m, rebalanceAboveRatio)
         }

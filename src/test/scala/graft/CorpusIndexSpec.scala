@@ -27,7 +27,7 @@ class CorpusIndexSpec extends SparkSpec {
     val embCur = embCur0.persist()
     // from-scratch semantics: frozen-quantizer assignment over the CUR
     // embeddings, within-list pairs at 0.8, full closure, min-id reps
-    val assigned = Ivf.index(embCur, model.centroids)
+    val assigned = Ivf.index(embCur, model.coarse.get.centroids)
       .select("vec_id", "embedding", "list").persist()
     val pairs = assigned.select(col("list"), col("vec_id").as("ia"),
         col("embedding").as("ea"))
@@ -51,7 +51,7 @@ class CorpusIndexSpec extends SparkSpec {
     // 2. probe ≡ brute force over the from-scratch survivors
     val qid = CorpusIndex.minLiveVecId(model)
     val probed = Ivf.probe(model, embCur, qid, 10,
-      nprobe = model.centroids.length).as[(Long, Double)].collect().toSeq
+      nprobe = model.coarse.get.centroids.length).as[(Long, Double)].collect().toSeq
     val exact = Similarity.topK(survivors, qid, 10)
       .as[(Long, Double)].collect().toSeq
     assert(probed === exact)
@@ -64,7 +64,7 @@ class CorpusIndexSpec extends SparkSpec {
     val (m2, embCur2) = CorpusIndex.refresh(prev, cur, probe,
       sfDir + "#cispec", sfDir + "#cispecidx")
     val probed2 = Ivf.probe(m2, embCur2, qid, 10,
-      nprobe = m2.centroids.length).as[(Long, Double)].collect().toSeq
+      nprobe = m2.coarse.get.centroids.length).as[(Long, Double)].collect().toSeq
     assert(probed2 === probed)
     embCur.unpersist(); assigned.unpersist()
   }

@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.{CodesIndex, Pq}
+import org.apache.spark.sql.DataFrame
+import graft.operators.{CodesIndex, Ivf, IvfPq, Pq}
+import graft.operators.CodesIndex.{CodesModel, Layout}
 import graft.sources.Sinks
 
 /** Fault injection for the staged publish verbs: a simulated crash at each
@@ -75,4 +77,36 @@ class CrashConsistencySpec extends SparkSpec {
     assert(!new java.io.File(model.indexPath + "__tombstones").exists())
     assert(CodesIndex.loadModel[CodesIndex.Codec](spark, model.indexPath).nonEmpty)
   }
+
+  private val listed: Seq[(String, (String, DataFrame) => CodesModel[Layout])] = Seq(
+    "raw IVF" -> ((key, df) => Ivf.buildIndex(key, df, nlist = 8)),
+    "IVF-PQ" -> ((key, df) => IvfPq.buildIndex(key, df, nlist = 8)))
+
+  for ((name, build) <- listed)
+    test(s"listed ingest ($name): crash after the first list's move, replay converges") {
+      val emb = Tables.embeddings(spark, sfDir)
+      val base = emb.filter($"vec_id" % 5 =!= 0)
+      val batch = emb.filter($"vec_id" % 5 === 0)
+      val clean = build(s"$sfDir#crashingest-clean-$name", base)
+      CodesIndex.appendToIndexIdempotent(clean, batch, 3L)
+      val model = build(s"$sfDir#crashingest-$name", base)
+      val root = new org.apache.hadoop.fs.Path(model.indexPath)
+      val staging = new java.io.File(model.indexPath + "__ingest_staging_3")
+      val marker = new java.io.File(model.indexPath, "_ingest_done/3")
+      Sinks.crashPoint = (p, d) => if (p == "moved" && d.getParent == root) throw new InjectedCrash
+      try intercept[InjectedCrash](CodesIndex.appendToIndexIdempotent(model, batch, 3L))
+      finally Sinks.crashPoint = (_, _) => ()
+      // one list landed, the rest are still staged, and the batch is not done
+      assert(staging.exists() && !marker.exists())
+      assert(new java.io.File(model.indexPath).listFiles().toSeq
+        .exists(d => new java.io.File(d, "ingest-3.parquet").exists()))
+
+      CodesIndex.appendToIndexIdempotent(model, batch, 3L) // replay
+      val got = CodesIndex.readIndex(spark, model)
+      val want = CodesIndex.readIndex(spark, clean)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+      assert(got.count() === emb.count())
+      assert(!staging.exists(), "replay left the staging dir behind")
+      assert(marker.exists(), "replay wrote no _ingest_done marker")
+    }
 }

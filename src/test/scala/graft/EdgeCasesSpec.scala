@@ -81,7 +81,7 @@ class EdgeCasesSpec extends SparkSpec {
       (2L, Array.tabulate(64)(i => if (i == 0) -1.0f else 0.5f))
     ).toDF("vec_id", "embedding")
     val m = Sq.buildIndex("edge-sq-tiny", tiny)
-    assert(m.codec.spans.drop(1).forall(_ === 0L), "dims 1..63 must have span 0")
+    assert(m.layout.spans.drop(1).forall(_ === 0L), "dims 1..63 must have span 0")
     val got = CodesIndex.probe(m, tiny, 0L, 2, rerank = 10)
       .select("vec_id").as[Long].collect().toSeq
     val exact = Similarity.topK(tiny, 0L, 2)

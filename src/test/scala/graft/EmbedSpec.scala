@@ -158,7 +158,7 @@ class EmbedSpec extends SparkSpec {
     val emb = Embed.hashedTf(docs)
     val model = Ivf.buildIndex(sfDir + "#embed", emb, nlist = 8)
     // exhaustive probe (nprobe = all lists) must equal brute force exactly
-    val probed = Ivf.probe(model, emb, 0L, 10, nprobe = model.centroids.length)
+    val probed = Ivf.probe(model, emb, 0L, 10, nprobe = model.coarse.get.centroids.length)
       .as[(Long, Double)].collect().toSeq
     val exact = Similarity.topK(emb, 0L, 10).as[(Long, Double)].collect().toSeq
     assert(probed === exact)

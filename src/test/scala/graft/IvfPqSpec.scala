@@ -111,12 +111,12 @@ class IvfPqSpec extends SparkSpec {
 
   test("persisted composite model round-trips exactly") {
     val loaded = CodesIndex.loadModel[Pq.PqCodec](spark, model.indexPath).get
-    assert(loaded.coarse.get.nlist === model.coarse.get.nlist && loaded.codec.m === model.codec.m &&
-      loaded.codec.ksub === model.codec.ksub && loaded.codec.subDim === model.codec.subDim)
+    assert(loaded.coarse.get.nlist === model.coarse.get.nlist && loaded.layout.m === model.layout.m &&
+      loaded.layout.ksub === model.layout.ksub && loaded.layout.subDim === model.layout.subDim)
     assert(loaded.coarse.get.centroids.map(_._1).toSeq === model.coarse.get.centroids.map(_._1).toSeq)
     assert(loaded.coarse.get.centroids.zip(model.coarse.get.centroids)
       .forall { case ((_, a), (_, b)) => a.toSeq == b.toSeq })
-    loaded.codec.codebooks.zip(model.codec.codebooks).foreach { case (a, b) =>
+    loaded.layout.codebooks.zip(model.layout.codebooks).foreach { case (a, b) =>
       assert(a.map(_._1).toSeq === b.map(_._1).toSeq)
       assert(a.zip(b).forall { case ((_, x), (_, y)) => x.toSeq == y.toSeq })
     }

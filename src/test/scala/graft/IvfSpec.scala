@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Ivf, Similarity}
+import graft.operators.{CodesIndex, Ivf, Similarity}
 
 class IvfSpec extends SparkSpec {
   import spark.implicits._
@@ -93,7 +93,7 @@ class IvfSpec extends SparkSpec {
     val batch = emb.filter($"vec_id" % 5 === 0)
     val model = Ivf.buildIndex(sfDir + "#appendspec", base, nlist = 8)
     val before = FileSnapshots.snapshot(model.indexPath)
-    Ivf.appendToIndex(model, batch)
+    CodesIndex.appendToIndex(model, batch)
     val after = FileSnapshots.snapshot(model.indexPath)
     // every pre-existing file still present, byte-identical — append never
     // rewrites the standing index
@@ -101,7 +101,7 @@ class IvfSpec extends SparkSpec {
       assert(after.get(p).contains(sig), s"pre-existing file changed: $p")
     }
     // new part-files land only under lists the batch actually maps to
-    val batchLists = Ivf.index(batch, model.centroids)
+    val batchLists = Ivf.index(batch, model.coarse.get.centroids)
       .select("list").distinct().as[Int].collect().toSet
     val newFiles = (after.keySet -- before.keySet)
       .filter(_.contains("list="))
@@ -113,7 +113,7 @@ class IvfSpec extends SparkSpec {
     // stored index == frozen re-assignment of the whole union
     val stored = spark.read.parquet(model.indexPath)
       .select($"vec_id", $"list".cast("int").as("list"))
-    val expected = Ivf.index(emb, model.centroids).select($"vec_id", $"list")
+    val expected = Ivf.index(emb, model.coarse.get.centroids).select($"vec_id", $"list")
     assert(stored.exceptAll(expected).isEmpty, "stored has rows a fresh assignment lacks")
     assert(expected.exceptAll(stored).isEmpty, "fresh assignment has rows the stored index lacks")
   }
@@ -123,16 +123,16 @@ class IvfSpec extends SparkSpec {
     val model = Ivf.buildIndex(sfDir + "#idemspec", base, nlist = 8)
     val b1 = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 === 0)
     val b2 = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 =!= 0)
-    Ivf.appendToIndexIdempotent(model, b1, batchId = 0L)
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 0L)
     val afterOnce = FileSnapshots.snapshot(model.indexPath)
     // crash-replay of the SAME batch: byte-identical index, no duplicates
-    Ivf.appendToIndexIdempotent(model, b1, batchId = 0L)
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 0L)
     assert(FileSnapshots.snapshot(model.indexPath) === afterOnce)
     // a NEW batch lands; content equals one frozen assignment of the union
-    Ivf.appendToIndexIdempotent(model, b2, batchId = 1L)
+    CodesIndex.appendToIndexIdempotent(model, b2, batchId = 1L)
     val stored = spark.read.parquet(model.indexPath)
       .select($"vec_id", $"list".cast("int").as("list"))
-    val expected = Ivf.index(emb, model.centroids).select($"vec_id", $"list")
+    val expected = Ivf.index(emb, model.coarse.get.centroids).select($"vec_id", $"list")
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
   }
@@ -142,7 +142,7 @@ class IvfSpec extends SparkSpec {
     val base = emb.filter($"vec_id" % 5 =!= 0)
     val model = Ivf.buildIndex(sfDir + "#compactspec", base, nlist = 8)
     (0 until 4).foreach { j =>
-      Ivf.appendToIndex(model, emb.filter($"vec_id" % 5 === 0 &&
+      CodesIndex.appendToIndex(model, emb.filter($"vec_id" % 5 === 0 &&
         $"vec_id" % 4 === j))
     }
     val before = Ivf.probe(model, emb, 0L, 10, nprobe = 8)
@@ -153,7 +153,7 @@ class IvfSpec extends SparkSpec {
         .groupBy(_.split("/")(0)).view.mapValues(_.size).toMap
     val preCounts = filesPerList(preSnap)
     assert(preCounts.values.max > 4, "appends should have fragmented a list")
-    val compacted = Ivf.compactIndex(spark, model, maxFilesPerList = 4)
+    val compacted = CodesIndex.compactIndex(spark, model, maxFilesPerList = 4)
     assert(compacted.nonEmpty)
     val postSnap = FileSnapshots.snapshot(model.indexPath)
     val postCounts = filesPerList(postSnap)
@@ -180,14 +180,14 @@ class IvfSpec extends SparkSpec {
     val base = emb.filter($"vec_id" % 5 =!= 0)
     val model = Ivf.buildIndex(sfDir + "#manifestspec", base, nlist = 8)
     val b1 = emb.filter($"vec_id" % 5 === 0)
-    Ivf.appendToIndexIdempotent(model, b1, batchId = 42L)
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 42L)
     val nBefore = spark.read.parquet(model.indexPath).count()
     // fold every list (threshold 0 ⇒ every non-empty list rewrites)
-    Ivf.compactIndex(spark, model, maxFilesPerList = 0)
+    CodesIndex.compactIndex(spark, model, maxFilesPerList = 0)
     assert(FileSnapshots.snapshot(model.indexPath).keys
       .forall(!_.contains("ingest-42")), "markers should be folded away")
     val afterCompact = FileSnapshots.snapshot(model.indexPath)
-    Ivf.appendToIndexIdempotent(model, b1, batchId = 42L) // crash replay
+    CodesIndex.appendToIndexIdempotent(model, b1, batchId = 42L) // crash replay
     assert(FileSnapshots.snapshot(model.indexPath) === afterCompact,
       "replayed batch re-appended after compaction")
     assert(spark.read.parquet(model.indexPath).count() === nBefore)
@@ -212,12 +212,12 @@ class IvfSpec extends SparkSpec {
     val model = Ivf.buildIndex(sfDir + "#delspec", emb, nlist = 8)
     val before = FileSnapshots.snapshot(model.indexPath)
     val ids = emb.filter($"vec_id" % 7 === 3).select("vec_id")
-    Ivf.deleteFromIndex(model, ids, batchId = 0L)
+    CodesIndex.deleteFromIndex(model, ids, batchId = 0L)
     // deletes are sibling-table metadata: not one index byte changes
     assert(FileSnapshots.snapshot(model.indexPath) === before)
     // replayed delete batch is a no-op on the tombstone table too
     val tombSnap = FileSnapshots.snapshot(model.indexPath + "__tombstones")
-    Ivf.deleteFromIndex(model, ids, batchId = 0L)
+    CodesIndex.deleteFromIndex(model, ids, batchId = 0L)
     assert(FileSnapshots.snapshot(model.indexPath + "__tombstones") === tombSnap)
     // exhaustive probe over base+tombstones equals brute force over survivors
     val exact = Similarity.topK(
@@ -228,7 +228,7 @@ class IvfSpec extends SparkSpec {
     // compaction physically drops the rows, consumes tombstones, and the
     // probe result is unchanged through the swap
     val pBefore = Ivf.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
-    Ivf.compactIndex(spark, model, maxFilesPerList = Int.MaxValue)
+    CodesIndex.compactIndex(spark, model, maxFilesPerList = Int.MaxValue)
     assert(!new java.io.File(model.indexPath + "__tombstones").exists())
     assert(spark.read.parquet(model.indexPath)
       .filter($"vec_id" % 7 === 3).count() === 0)
@@ -241,12 +241,12 @@ class IvfSpec extends SparkSpec {
     // drift: clone the biggest list's vectors 3× (re-keyed, identical
     // embeddings ⇒ identical frozen assignment) and append — that list
     // now dwarfs the mean, the exact shape sustained skewed appends create
-    val assigned = Ivf.index(emb, model.centroids)
+    val assigned = Ivf.index(emb, model.coarse.get.centroids)
     val hotList = assigned.groupBy("list").count()
       .orderBy(desc("count"), $"list").first().getInt(0)
     val hotVecs = assigned.filter($"list" === hotList).drop("list")
     (1 to 3).foreach { i =>
-      Ivf.appendToIndex(model, hotVecs
+      CodesIndex.appendToIndex(model, hotVecs
         .withColumn("vec_id", $"vec_id" + lit(i.toLong * 10000000L)))
     }
     def ratio(m: Ivf.IvfModel): Double = {
@@ -259,9 +259,9 @@ class IvfSpec extends SparkSpec {
     val exhaustive = Ivf.probe(model, emb, 0L, 10, nprobe = 8)
       .as[(Long, Double)].collect().toSeq
     val m2 = Ivf.rebalanceIndex(spark, model, maxRatio = 2.0)
-    assert(m2.centroids.length > model.centroids.length, "no list was split")
+    assert(m2.coarse.get.centroids.length > model.coarse.get.centroids.length, "no list was split")
     // content-preserving: exhaustive probe identical through the split
-    assert(Ivf.probe(m2, emb, 0L, 10, nprobe = m2.centroids.length)
+    assert(Ivf.probe(m2, emb, 0L, 10, nprobe = m2.coarse.get.centroids.length)
       .as[(Long, Double)].collect().toSeq === exhaustive)
     assert(ratio(m2) < before, s"ratio did not improve: $before -> ${ratio(m2)}")
     // row set unchanged
@@ -271,25 +271,25 @@ class IvfSpec extends SparkSpec {
 
   test("persisted model round-trips exactly and survives the lifecycle verbs") {
     val model = Ivf.buildIndex(sfDir + "#persist", emb, nlist = 8)
-    val loaded = Ivf.loadModel(spark, model.indexPath).get
-    assert(loaded.nlist === model.nlist && loaded.iters === model.iters)
-    assert(loaded.centroids.map(_._1).toSeq === model.centroids.map(_._1).toSeq)
-    assert(loaded.centroids.zip(model.centroids)
+    val loaded = CodesIndex.loadModel[Ivf.Flat.type](spark, model.indexPath).get
+    assert(loaded.coarse.get.nlist === model.coarse.get.nlist && loaded.coarse.get.iters === model.coarse.get.iters)
+    assert(loaded.coarse.get.centroids.map(_._1).toSeq === model.coarse.get.centroids.map(_._1).toSeq)
+    assert(loaded.coarse.get.centroids.zip(model.coarse.get.centroids)
       .forall { case ((_, a), (_, b)) => a.toSeq == b.toSeq })
     // a probe with the LOADED model is bit-identical — the restart story
     val a = Ivf.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
     assert(Ivf.probe(loaded, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === a)
     // append + compact keep the persisted file intact; rebalance updates it
-    Ivf.appendToIndexIdempotent(model,
+    CodesIndex.appendToIndexIdempotent(model,
       emb.filter($"vec_id" % 11 === 0)
         .withColumn("vec_id", $"vec_id" + 77000000L), batchId = 5L)
-    Ivf.compactIndex(spark, model, maxFilesPerList = 0)
-    assert(Ivf.loadModel(spark, model.indexPath).get.centroids.length ===
-      model.centroids.length)
+    CodesIndex.compactIndex(spark, model, maxFilesPerList = 0)
+    assert(CodesIndex.loadModel[Ivf.Flat.type](spark, model.indexPath).get.coarse.get.centroids.length ===
+      model.coarse.get.centroids.length)
     val m2 = Ivf.rebalanceIndex(spark, model, maxRatio = 1.01)
-    assert(Ivf.loadModel(spark, model.indexPath).get.centroids.map(_._1).toSeq ===
-      m2.centroids.map(_._1).toSeq)
+    assert(CodesIndex.loadModel[Ivf.Flat.type](spark, model.indexPath).get.coarse.get.centroids.map(_._1).toSeq ===
+      m2.coarse.get.centroids.map(_._1).toSeq)
   }
 
   test("probeAll equals the single-query probe for every query") {
@@ -317,7 +317,7 @@ class IvfSpec extends SparkSpec {
     // cumulative hits never decrease, and the exhaustive width is exact:
     // an IVF-Flat probe at nprobe = nlist IS the brute-force search
     assert(curve.sliding(2).forall(w => w.length < 2 || w(0)._2 <= w(1)._2))
-    assert(curve.last._1 <= model.centroids.length.toLong)
+    assert(curve.last._1 <= model.coarse.get.centroids.length.toLong)
     assert(curve.last._3 === 1.0, s"curve tail ${curve.last} not exact")
     // the auto knob meets its floor at BOTH corpus sizes and actually
     // prunes (chosen width strictly below nlist — not a scan in disguise)
@@ -327,7 +327,7 @@ class IvfSpec extends SparkSpec {
       val (np, hits) = Ivf.autoNprobe(m, corpus, qids, 10, 90)
       val recall = hits.toDouble / (10 * qids.length)
       assert(recall >= 0.9, s"$tag: recall $recall under target at nprobe $np")
-      assert(np < m.centroids.length, s"$tag: auto nprobe $np does not prune")
+      assert(np < m.coarse.get.centroids.length, s"$tag: auto nprobe $np does not prune")
     }
   }
 
@@ -379,8 +379,8 @@ class IvfSpec extends SparkSpec {
     }
     assert(all === single)
     // routed idempotent append: replay is a no-op, content = base ∪ batch
-    Ivf.appendToShardedIndexIdempotent(m, batch, batchId = 7L)
-    Ivf.appendToShardedIndexIdempotent(m, batch, batchId = 7L)
+    CodesIndex.appendToShardedIndexIdempotent(m, batch, batchId = 7L)
+    CodesIndex.appendToShardedIndexIdempotent(m, batch, batchId = 7L)
     assert(m.shards.map(s => spark.read.parquet(s.indexPath).count()).sum
       === emb.count())
     val probed = Ivf.probeSharded(m, emb, 0L, 10, nprobe = 4)
@@ -389,7 +389,7 @@ class IvfSpec extends SparkSpec {
     assert(probed === exact)
     // routed delete: probes mask the ids immediately, across shards
     val doomed = emb.filter($"vec_id" % 7 === 1).select("vec_id")
-    Ivf.deleteFromShardedIndex(m, doomed, batchId = 8L)
+    CodesIndex.deleteFromShardedIndex(m, doomed, batchId = 8L)
     val after = Ivf.probeSharded(m, emb, 0L, 10, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     val exactLive = Similarity.topK(emb.filter($"vec_id" % 7 =!= 1), 0L, 10)
@@ -407,8 +407,8 @@ class IvfSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSeq
     val ivf = Similarity.topKTwoStageIvf(docModel, docEmb, chunkModel, 0L,
         coarseK = 5, k = 10,
-        nprobeDoc = docModel.centroids.length,
-        nprobeChunk = chunkModel.centroids.length)
+        nprobeDoc = docModel.coarse.get.centroids.length,
+        nprobeChunk = chunkModel.coarse.get.centroids.length)
       .as[(Long, Long, Double)].collect().toSeq
     assert(ivf === exact)
     // pruned probes still deliver useful recall on the fixture
@@ -442,8 +442,8 @@ class IvfSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSeq
     val got = Similarity.topKTwoStageSharded(sharded, docEmb, chunkModel, 0L,
         coarseK = 5, k = 10,
-        nprobeDoc = sharded.shards.map(_.centroids.length).max,
-        nprobeChunk = chunkModel.centroids.length)
+        nprobeDoc = sharded.shards.map(_.coarse.get.centroids.length).max,
+        nprobeChunk = chunkModel.coarse.get.centroids.length)
       .as[(Long, Long, Double)].collect().toSeq
     assert(got === exact)
     // pruned per-shard probes still deliver useful recall (the production
@@ -627,7 +627,7 @@ class IvfSpec extends SparkSpec {
     val exact = Bm25.hybridTopKAll(docs, qids, 10,
       embeddings = Some(docEmb))
     val ivf = Bm25.hybridTopKIvf(docs, docModel, docEmb, qids, 10,
-      nprobe = docModel.centroids.length)
+      nprobe = docModel.coarse.get.centroids.length)
     assert(ivf.exceptAll(exact).isEmpty && exact.exceptAll(ivf).isEmpty)
   }
 
@@ -636,29 +636,34 @@ class IvfSpec extends SparkSpec {
     // the recorded schema is exactly what an inferred read would produce
     assert(model.schema === spark.read.parquet(model.indexPath).schema)
     assert(model.schema.fieldNames.toSeq === emb.columns.toSeq :+ "list")
-    val loaded = Ivf.loadModel(spark, model.indexPath).get
+    val loaded = CodesIndex.loadModel[Ivf.Flat.type](spark, model.indexPath).get
     assert(loaded.schema === model.schema)
     // a quantizer file without a recorded schema is refused, never inferred
     val old = java.nio.file.Files.createTempDirectory("graft-ivf-noschema")
-    java.nio.file.Files.write(old.resolve("_centroids"),
-      "1 2\n0 1,2,3\n".getBytes("UTF-8"))
-    val e = intercept[IllegalStateException](Ivf.loadModel(spark, old.toString))
+    java.nio.file.Files.write(old.resolve("_model"),
+      "ivfflat\ncoarse 1 2\nC 0 1,2,3\n".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](CodesIndex.loadModel[Ivf.Flat.type](spark, old.toString))
     assert(e.getMessage.contains("schema"))
   }
 
   test("probe, probeAll and deleteFromIndex launch no schema-inference job") {
     val base = emb.filter($"vec_id" % 5 =!= 0)
     val model = Ivf.buildIndex(sfDir + "#noinfer", base, nlist = 8)
-    Ivf.appendToIndexIdempotent(model, emb.filter($"vec_id" % 5 === 0), 1L)
-    Ivf.deleteFromIndex(model, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 2L)
+    CodesIndex.appendToIndexIdempotent(model, emb.filter($"vec_id" % 5 === 0), 1L)
+    CodesIndex.deleteFromIndex(model, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 2L)
     // the detector sees the inferred read this change removed
     assert(InferenceJobs.of(spark)(spark.read.parquet(model.indexPath).count()).nonEmpty)
     val jobs = InferenceJobs.of(spark) {
       Ivf.probe(model, emb, 0L, 10).collect()
       Ivf.probeAll(model, emb.filter($"vec_id" < 3), 10).collect()
-      Ivf.deleteFromIndex(model,
+      CodesIndex.deleteFromIndex(model,
         emb.filter($"vec_id" % 7 === 4).select("vec_id"), 3L)
-      Ivf.compactIndex(spark, model, maxFilesPerList = Int.MaxValue)
+      CodesIndex.compactIndex(spark, model, maxFilesPerList = Int.MaxValue)
+      // a re-balance reads each split list and its tombstones
+      CodesIndex.deleteFromIndex(model,
+        emb.filter($"vec_id" % 7 === 5).select("vec_id"), 4L)
+      assert(Ivf.rebalanceIndex(spark, model, maxRatio = 1.01).coarse.get.centroids.length >
+        model.coarse.get.centroids.length, "no list was split")
     }
     assert(jobs.isEmpty, s"schema-inference jobs: ${jobs.mkString(", ")}")
   }
@@ -666,10 +671,10 @@ class IvfSpec extends SparkSpec {
   test("probe and probeAll over the recorded schema equal an inferred-schema read") {
     val base = emb.filter($"vec_id" % 5 =!= 0)
     val model = Ivf.buildIndex(sfDir + "#inferparity", base, nlist = 8)
-    Ivf.appendToIndex(model, emb.filter($"vec_id" % 5 === 0))
-    Ivf.deleteFromIndex(model, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 0L)
+    CodesIndex.appendToIndex(model, emb.filter($"vec_id" % 5 === 0))
+    CodesIndex.deleteFromIndex(model, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 0L)
     val inferred = spark.read.parquet(model.indexPath)
-    val recorded = Ivf.readIndex(spark, model)
+    val recorded = CodesIndex.readIndex(spark, model)
     assert(recorded.schema === inferred.schema)
     assert(recorded.exceptAll(inferred).isEmpty && inferred.exceptAll(recorded).isEmpty)
     // exhaustive probes vs the same ranking over inferred reads of the
@@ -686,12 +691,12 @@ class IvfSpec extends SparkSpec {
     }
     val qids = Seq(0L, 1L, 2L)
     val all = Ivf.probeAll(model, emb.filter($"vec_id".isin(qids: _*)), 10,
-        nprobe = model.centroids.length)
+        nprobe = model.coarse.get.centroids.length)
       .as[(Long, Long, Double, Int)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._4).map(r => (r._2, r._3)).toSeq).toMap
     qids.foreach { q =>
       val want = reference(q)
-      assert(Ivf.probe(model, emb, q, 10, nprobe = model.centroids.length)
+      assert(Ivf.probe(model, emb, q, 10, nprobe = model.coarse.get.centroids.length)
         .as[(Long, Double)].collect().toSeq === want, s"probe $q")
       assert(all(q) === want, s"probeAll $q")
     }
@@ -703,26 +708,26 @@ class IvfSpec extends SparkSpec {
     val batch = emb.filter($"vec_id" % 5 === 0)
       .withColumn("vec_id", $"vec_id" + 90000000L)
     val missing = intercept[IllegalArgumentException](
-      Ivf.appendToIndex(model, batch.drop("embedding")))
+      CodesIndex.appendToIndex(model, batch.drop("embedding")))
     assert(missing.getMessage.contains("embedding"))
     val retyped = batch.withColumn("embedding",
       transform($"embedding", _.cast("double")))
     val wrongType = intercept[IllegalArgumentException](
-      Ivf.appendToIndexIdempotent(model, retyped, 9L))
+      CodesIndex.appendToIndexIdempotent(model, retyped, 9L))
     assert(wrongType.getMessage.contains("embedding"))
     assert(FileSnapshots.snapshot(model.indexPath) === before,
       "a refused append wrote files")
     // extra columns are projected away; column order does not matter
-    Ivf.appendToIndex(model,
+    CodesIndex.appendToIndex(model,
       batch.select(batch.columns.reverse.map(col) :+ lit("x").as("extra"): _*))
-    assert(Ivf.readIndex(spark, model).filter($"vec_id" >= 90000000L).count()
+    assert(CodesIndex.readIndex(spark, model).filter($"vec_id" >= 90000000L).count()
       === batch.count())
     assert(spark.read.parquet(model.indexPath).schema === model.schema)
     // a payload column the batch lacks lands as NULL (a bare vector stream
     // into an index built over the labelled table)
-    Ivf.appendToIndexIdempotent(model, batch.drop("label")
+    CodesIndex.appendToIndexIdempotent(model, batch.drop("label")
       .withColumn("vec_id", $"vec_id" + 90000000L), 10L)
-    val unlabelled = Ivf.readIndex(spark, model).filter($"vec_id" >= 180000000L)
+    val unlabelled = CodesIndex.readIndex(spark, model).filter($"vec_id" >= 180000000L)
     assert(unlabelled.count() === batch.count())
     assert(unlabelled.filter($"label".isNotNull).isEmpty)
   }

@@ -77,10 +77,10 @@ class IvfSqSpec extends SparkSpec {
   test("persisted composite model round-trips exactly") {
     val model = IvfSq.buildIndex(sfDir + "#persist", emb)
     val loaded = CodesIndex.loadModel[Sq.SqCodec](spark, model.indexPath).get
-    assert(loaded.coarse.get.nlist === model.coarse.get.nlist && loaded.codec.dim === model.codec.dim &&
+    assert(loaded.coarse.get.nlist === model.coarse.get.nlist && loaded.layout.dim === model.layout.dim &&
       loaded.coarse.get.iters === model.coarse.get.iters)
-    assert(loaded.codec.mins.toSeq === model.codec.mins.toSeq)
-    assert(loaded.codec.spans.toSeq === model.codec.spans.toSeq)
+    assert(loaded.layout.mins.toSeq === model.layout.mins.toSeq)
+    assert(loaded.layout.spans.toSeq === model.layout.spans.toSeq)
     assert(loaded.coarse.get.centroids.map(_._1).toSeq === model.coarse.get.centroids.map(_._1).toSeq)
     assert(loaded.coarse.get.centroids.zip(model.coarse.get.centroids)
       .forall { case ((_, a), (_, b)) => a.toSeq == b.toSeq })

@@ -129,10 +129,10 @@ class PqSpec extends SparkSpec {
   test("persisted codebooks round-trip exactly and survive compaction") {
     val model = Pq.buildIndex(sfDir + "#persist", emb)
     val loaded = CodesIndex.loadModel[Pq.PqCodec](spark, model.indexPath).get
-    assert(loaded.codec.m === model.codec.m && loaded.codec.ksub === model.codec.ksub &&
-      loaded.codec.subDim === model.codec.subDim)
-    assert(loaded.codec.codebooks.length === model.codec.codebooks.length)
-    loaded.codec.codebooks.zip(model.codec.codebooks).foreach { case (a, b) =>
+    assert(loaded.layout.m === model.layout.m && loaded.layout.ksub === model.layout.ksub &&
+      loaded.layout.subDim === model.layout.subDim)
+    assert(loaded.layout.codebooks.length === model.layout.codebooks.length)
+    loaded.layout.codebooks.zip(model.layout.codebooks).foreach { case (a, b) =>
       assert(a.map(_._1).toSeq === b.map(_._1).toSeq)
       assert(a.zip(b).forall { case ((_, x), (_, y)) => x.toSeq == y.toSeq })
     }

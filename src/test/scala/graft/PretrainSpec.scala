@@ -84,16 +84,35 @@ class PretrainSpec extends SparkSpec {
       .nearDupClusters(Dedup.semanticDupPairs(emb, 0.8, key), "vec_a", "vec_b")
       .filter(col("cluster_id") =!= col("doc_id"))
       .select(col("doc_id").as("vec_id"))
-    operators.Ivf.deleteFromIndex(model, doomed, batchId = 0L)
+    operators.CodesIndex.deleteFromIndex(model, doomed, batchId = 0L)
     val survivors = emb.join(doomed, Seq("vec_id"), "left_anti")
     val qid = survivors.agg(min("vec_id")).head().getLong(0)
     val probed = operators.Ivf
-      .probe(model, emb, qid, 10, nprobe = model.centroids.length)
+      .probe(model, emb, qid, 10, nprobe = model.coarse.get.centroids.length)
       .as[(Long, Double)].collect().toSeq
     val exact = operators.Similarity.topK(survivors, qid, 10)
       .as[(Long, Double)].collect().toSeq
     assert(probed === exact)
     val doomedIds = doomed.as[Long].collect().toSet
     assert(probed.forall { case (id, _) => !doomedIds.contains(id) })
+  }
+
+  test("pretrain state commits take the filesystem from the path, not fs.defaultFS") {
+    val docs = Tables.documents(spark, sfDir).filter(col("doc_id") % 4 === 0)
+    val want = Pretrain.full(docs, probe, new CacheScope)
+      .orderBy("doc_id", "chunk_no").collect().toSeq
+    val stateDir =
+      "file:" + java.nio.file.Files.createTempDirectory("graft-ptfs") + "/state"
+    // the default filesystem names a scheme no commit may touch
+    val conf = spark.sparkContext.hadoopConfiguration
+    val prev = conf.get("fs.defaultFS")
+    conf.set("fs.defaultFS", "graftnofs:///")
+    val got =
+      try {
+        Pretrain.absorbBatch(docs, probe, stateDir, 0L)
+        Pretrain.packedSnapshot(spark, stateDir).get
+          .orderBy("doc_id", "chunk_no").collect().toSeq
+      } finally conf.set("fs.defaultFS", prev)
+    assert(got.nonEmpty && got === want)
   }
 }

@@ -367,7 +367,7 @@ class SimilaritySpec extends SparkSpec {
 
     val ivf = graft.operators.Ivf.buildIndex(sfDir + "#fspec", emb)
     assert(graft.operators.Ivf.probe(ivf, emb, 0L, 10,
-        nprobe = ivf.centroids.length, allowed = Some(allow))
+        nprobe = ivf.coarse.get.centroids.length, allowed = Some(allow))
       .as[(Long, Double)].collect().toSeq === exact, "IVF diverged")
 
     val pq = graft.operators.Pq.buildIndex(sfDir + "#fspec", emb)

@@ -449,4 +449,21 @@ class SinksSpec extends SparkSpec {
       assert(back.get.as[Long].collect().sorted.toSeq === (0L until 20L))
     } finally conf.set("fs.defaultFS", prev)
   }
+
+  test("no library source resolves the default filesystem") {
+    // FileSystem.get(conf) is fs.defaultFS, not the path's own scheme;
+    // library code resolves through Sinks.fileSystem(spark, path)
+    val root = new java.io.File("src/main")
+    assert(root.isDirectory, s"run from the repository root, not ${new java.io.File(".").getAbsolutePath}")
+    val stream = java.nio.file.Files.walk(root.toPath)
+    val offenders =
+      try {
+        import scala.jdk.CollectionConverters._
+        stream.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+            .contains("FileSystem.get("))
+          .map(_.toString).toSeq.sorted
+      } finally stream.close()
+    assert(offenders.isEmpty, s"FileSystem.get( in ${offenders.mkString(", ")}")
+  }
 }

@@ -134,9 +134,9 @@ class SqSpec extends SparkSpec {
   test("persisted params round-trip exactly and survive compaction") {
     val model = Sq.buildIndex(sfDir + "#persist", emb)
     val loaded = CodesIndex.loadModel[Sq.SqCodec](spark, model.indexPath).get
-    assert(loaded.codec.dim === model.codec.dim)
-    assert(loaded.codec.mins.toSeq === model.codec.mins.toSeq)
-    assert(loaded.codec.spans.toSeq === model.codec.spans.toSeq)
+    assert(loaded.layout.dim === model.layout.dim)
+    assert(loaded.layout.mins.toSeq === model.layout.mins.toSeq)
+    assert(loaded.layout.spans.toSeq === model.layout.spans.toSeq)
     val p = CodesIndex.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
     assert(CodesIndex.probe(loaded, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === p)

@@ -837,7 +837,7 @@ class StreamingSpec extends SparkSpec {
 
     val input = MemoryStream[(Long, Seq[Float])]
     input.addData(rows.take(rows.length / 2))
-    val q = Streams.ivfIngestSink(
+    val q = Streams.codesIngestSink(
       input.toDF().toDF("vec_id", "embedding"), model, ckpt).start()
     q.processAllAvailable()
     input.addData(rows.drop(rows.length / 2))
@@ -847,7 +847,7 @@ class StreamingSpec extends SparkSpec {
     // the streamed-in index == one frozen assignment of base ∪ batch
     val stored = spark.read.parquet(model.indexPath)
       .select($"vec_id", $"list".cast("int").as("list"))
-    val expected = graft.operators.Ivf.index(emb, model.centroids)
+    val expected = graft.operators.Ivf.index(emb, model.coarse.get.centroids)
       .select($"vec_id", $"list")
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
@@ -882,7 +882,7 @@ class StreamingSpec extends SparkSpec {
     val embAll = graft.operators.Embed.hashedTf(docs)
     val stored = spark.read.parquet(model.indexPath)
       .select($"vec_id", $"list".cast("int").as("list"))
-    val expected = graft.operators.Ivf.index(embAll, model.centroids)
+    val expected = graft.operators.Ivf.index(embAll, model.coarse.get.centroids)
       .select($"vec_id", $"list")
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
@@ -922,7 +922,7 @@ class StreamingSpec extends SparkSpec {
         .hashBucket($"vec_id", model.nShards) === sh)
       val stored = spark.read.parquet(m.indexPath)
         .select($"vec_id", $"list".cast("int").as("list"))
-      val expected = graft.operators.Ivf.index(slice, m.centroids)
+      val expected = graft.operators.Ivf.index(slice, m.coarse.get.centroids)
         .select($"vec_id", $"list")
       assert(stored.exceptAll(expected).isEmpty, s"shard $sh extra rows")
       assert(expected.exceptAll(stored).isEmpty, s"shard $sh missing rows")
@@ -958,7 +958,7 @@ class StreamingSpec extends SparkSpec {
     val embAll = graft.operators.CorpusIndex.chunkEmbeddings(docs)
     val stored = spark.read.parquet(model.indexPath)
       .select($"vec_id", $"list".cast("int").as("list"))
-    val expected = graft.operators.Ivf.index(embAll, model.centroids)
+    val expected = graft.operators.Ivf.index(embAll, model.coarse.get.centroids)
       .select($"vec_id", $"list")
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
@@ -985,7 +985,7 @@ class StreamingSpec extends SparkSpec {
     graft.sources.Sinks.withDirLease(spark, model.indexPath, "writer-a") {
       val input = MemoryStream[(Long, Seq[Float])]
       input.addData(rows)
-      val q = Streams.ivfIngestSink(
+      val q = Streams.codesIngestSink(
         input.toDF().toDF("vec_id", "embedding"), model, ckpt).start()
       val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q.processAllAvailable()
@@ -1003,7 +1003,7 @@ class StreamingSpec extends SparkSpec {
     // with the lease free, the same stream replays its batch and lands it
     val input2 = MemoryStream[(Long, Seq[Float])]
     input2.addData(rows)
-    val q2 = Streams.ivfIngestSink(
+    val q2 = Streams.codesIngestSink(
       input2.toDF().toDF("vec_id", "embedding"), model, ckpt).start()
     q2.processAllAvailable()
     assert(q2.exception.isEmpty, s"replay after lease release failed: ${q2.exception}")
@@ -1049,7 +1049,7 @@ class StreamingSpec extends SparkSpec {
     // 12 micro-batches, auto-compaction armed at 3 files/list: without it
     // each touched list would accumulate up to 12 ingest files
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = Streams.ivfIngestSink(
+    val q = Streams.codesIngestSink(
       input.toDF().toDF("vec_id", "embedding"), model, ckpt,
       compactAboveFiles = 3).start()
     batchRows.grouped(math.max(1, batchRows.length / 12)).foreach { chunk =>
@@ -1073,7 +1073,7 @@ class StreamingSpec extends SparkSpec {
     // content parity through all the folds: stored == frozen re-assignment
     val stored = spark.read.parquet(model.indexPath)
       .select($"vec_id", $"list".cast("int").as("list"))
-    val expected = graft.operators.Ivf.index(emb, model.centroids)
+    val expected = graft.operators.Ivf.index(emb, model.coarse.get.centroids)
       .select($"vec_id", $"list")
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
@@ -1089,7 +1089,7 @@ class StreamingSpec extends SparkSpec {
 
     val input = MemoryStream[Long]
     input.addData(doomed.take(doomed.length / 2))
-    val q = Streams.ivfDeleteSink(
+    val q = Streams.codesDeleteSink(
       input.toDF().toDF("vec_id"), model, ckpt).start()
     q.processAllAvailable()
     input.addData(doomed.drop(doomed.length / 2))
@@ -1158,7 +1158,7 @@ class StreamingSpec extends SparkSpec {
       nlist = 8)
     // drift stream: every batch clones the SAME list's vectors (re-keyed),
     // the shape that defeats a frozen quantizer's pruning
-    val assigned = graft.operators.Ivf.index(emb, model.centroids)
+    val assigned = graft.operators.Ivf.index(emb, model.coarse.get.centroids)
     val hotList = assigned.groupBy("list").count()
       .orderBy(org.apache.spark.sql.functions.desc("count"), $"list")
       .first().getInt(0)
@@ -1177,8 +1177,8 @@ class StreamingSpec extends SparkSpec {
     q.stop()
 
     // drift absorbed: the persisted model grew lists and the ratio is bounded
-    val m2 = graft.operators.Ivf.currentModel(spark, model)
-    assert(m2.centroids.length > model.centroids.length, "no split happened")
+    val m2 = graft.operators.CodesIndex.currentModel(spark, model)
+    assert(m2.coarse.get.centroids.length > model.coarse.get.centroids.length, "no split happened")
     val listSizes = spark.read.parquet(model.indexPath)
       .groupBy("list").count().as[(Int, Long)].collect().map(_._2)
     val ratio = listSizes.max.toDouble / (listSizes.sum.toDouble / listSizes.length)
@@ -1200,7 +1200,7 @@ class StreamingSpec extends SparkSpec {
     val exact = graft.operators.Similarity.topK(survivors, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
     val got = graft.operators.Ivf.probe(m2, emb, 0L, 10,
-        nprobe = m2.centroids.length)
+        nprobe = m2.coarse.get.centroids.length)
       .select("vec_id").as[Long].collect().toSeq
     assert(got === exact, "evolved-index probe diverged from brute force")
   }
@@ -1605,7 +1605,7 @@ class StreamingSpec extends SparkSpec {
       assert(got(qid) === batch, s"query $qid diverged from the sharded fan-out")
     }
     // maintenance symmetry: per-shard compaction is content-preserving
-    graft.operators.Ivf.compactShardedIndex(spark, model, maxFilesPerList = 1)
+    graft.operators.CodesIndex.compactShardedIndex(spark, model, maxFilesPerList = 1)
     (0L until 6L).foreach { qid =>
       val after = graft.operators.Ivf.probeSharded(model, emb, qid, 5, nprobe = 2)
         .as[(Long, Double)].collect().toSet
