@@ -103,6 +103,12 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // what the run reused or built, per artifact store
+    System.err.println(Artifacts.stats.toSeq.sortBy(_._1).map { case (tag, s) =>
+      val keys = s.tokensPerKey.toSeq.sorted.map { case (k, n) => s"${jq(k)}: $n" }
+      s"""${jq(tag)}: {"hits": ${s.hits}, "builds": ${s.builds}, "build_ms": ${s.buildMs}, """ +
+        s""""tokens_per_key": ${keys.mkString("{", ", ", "}")}}"""
+    }.mkString("[verify] artifacts {", ", ", "}"))
     spark.stop()
   }
 

@@ -38,34 +38,29 @@ import graft.functions.VectorOps
   */
 object Bm25 {
 
-  private val postingStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialized postings — the inverted index as a first-class artifact
     * (the lexical analog of [[Embed.materializedHashedTf]]): the
     * (doc_id, t, tf) table written once per corpus key and read by every
     * BM25 consumer (df, dl and the scoring join all derive from it).
+    * Memoized per (storeKey, corpus content) ([[graft.Artifacts]]).
     * Deterministic, so materialization changes cost only, never results.
     */
   def materializedPostings(storeKey: String,
                            documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    val path = postingStores.computeIfAbsent(storeKey, _ => {
-      val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft-postings-" + Ivf.dirToken(storeKey)).getAbsolutePath
+    val path = graft.Artifacts.dir("postings", storeKey, Seq(documents)) { p =>
       documents.select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
         .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
         .write.mode("overwrite").parquet(p)
-      p
-    })
+    }
     spark.read.parquet(path)
   }
 
-  /** Resolved store path of a materialized postings key (exists only
-    * after [[materializedPostings]] built the base in this JVM).
+  /** Resolved store path of a materialized postings key: the latest
+    * [[materializedPostings]] build under it in this JVM, if any.
     */
   def storePath(storeKey: String): Option[String] =
-    Option(postingStores.get(storeKey))
+    graft.Artifacts.latest[String]("postings", storeKey)
 
   /** Append-only postings maintenance — the lexical analog of the ANN
     * frozen-model append: the inverted index grows by tokenizing ONLY the
@@ -78,7 +73,7 @@ object Bm25 {
     * equality cross-engine).
     */
   def appendPostings(storeKey: String, newDocs: DataFrame, batchId: Long): Unit = {
-    val path = postingStores.get(storeKey)
+    val path = storePath(storeKey).orNull
     require(path != null, s"no materialized postings store under key " +
       s"'$storeKey' — build the base with materializedPostings first")
     graft.MutationGuard.claim(path)
@@ -98,9 +93,6 @@ object Bm25 {
     documents.select(col("doc_id"),
       posexplode(split(col("text"), " ")).as(Seq("pos", "t")))
 
-  private val posStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialized positional postings — the phrase index as a write-once
     * artifact (the [[materializedPostings]] treatment for the positional
     * table): at 100 TB the corpus is tokenized ONCE and every phrase
@@ -111,21 +103,18 @@ object Bm25 {
   def materializedPositionalPostings(storeKey: String,
                                      documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    val path = posStores.computeIfAbsent(storeKey, _ => {
-      val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft-pospostings-" + Ivf.dirToken(storeKey)).getAbsolutePath
+    val path = graft.Artifacts.dir("pospostings", storeKey, Seq(documents)) { p =>
       positionalPostings(documents).write.mode("overwrite").parquet(p)
-      p
-    })
+    }
     spark.read.parquet(path)
   }
 
-  /** Resolved store path of a materialized positional-postings key (exists
-    * only after [[materializedPositionalPostings]] built the base in this
-    * JVM).
+  /** Resolved store path of a materialized positional-postings key: the
+    * latest [[materializedPositionalPostings]] build under it in this JVM,
+    * if any.
     */
   def posStorePath(storeKey: String): Option[String] =
-    Option(posStores.get(storeKey))
+    graft.Artifacts.latest[String]("pospostings", storeKey)
 
   /** Append-only positional-postings maintenance — the [[appendPostings]]
     * law carried over: positions are PER-DOCUMENT offsets, so tokenizing
@@ -136,7 +125,7 @@ object Bm25 {
     */
   def appendPositionalPostings(storeKey: String, newDocs: DataFrame,
                                batchId: Long): Unit = {
-    val path = posStores.get(storeKey)
+    val path = posStorePath(storeKey).orNull
     require(path != null, s"no materialized positional-postings store under " +
       s"key '$storeKey' — build the base with materializedPositionalPostings first")
     graft.MutationGuard.claim(path)
@@ -204,9 +193,6 @@ object Bm25 {
   }
 
 
-  private val statsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, Long, Double)]()
-
   /** (dl, idf, nDocs, avgdl) derived from a postings table — the scoring
     * constants every BM25 probe needs. These are corpus-version artifacts
     * exactly like the postings themselves (they derive from nothing else),
@@ -240,16 +226,12 @@ object Bm25 {
       (dl, scope.persist(idf), n, a)
     } else {
       val spark = tf.sparkSession
-      val (dlP, idfP, n, a) = statsMemo.computeIfAbsent(
-        Ivf.contentToken(tf), key => {
-          val (dl, idf, n0, a0) = derive()
-          val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-            "graft-bm25stats-" + Ivf.dirToken(key) + "-" + Ivf.pidToken)
-            .getAbsolutePath
-          dl.write.mode("overwrite").parquet(dir + "/dl")
-          idf.write.mode("overwrite").parquet(dir + "/idf")
-          (dir + "/dl", dir + "/idf", n0, a0)
-        })
+      val (dlP, idfP, n, a) = graft.Artifacts.withDir("bm25stats", "", Seq(tf)) { dir =>
+        val (dl, idf, n0, a0) = derive()
+        dl.write.mode("overwrite").parquet(dir + "/dl")
+        idf.write.mode("overwrite").parquet(dir + "/idf")
+        (dir + "/dl", dir + "/idf", n0, a0)
+      }
       (spark.read.parquet(dlP), spark.read.parquet(idfP), n, a)
     }
   }

@@ -167,18 +167,15 @@ object Bpe {
     out.toSeq
   }
 
-  // Memoized training per (corpusKey, nMerges): the learned table is
-  // nMerges tuples — driver-tiny, like the IVF quantizer memo — so every
-  // query over the same corpus reuses one training run.
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Merge]]()
-
+  // Memoized training per (corpusKey, corpus content, nMerges): the
+  // learned table is nMerges tuples — driver-tiny, like the IVF quantizer
+  // memo — so every query over the same corpus reuses one training run.
   def trainMergesCached(corpusKey: String, documents: DataFrame,
                         nMerges: Int = 8): Seq[Merge] =
-    memo.computeIfAbsent((corpusKey, nMerges), _ => {
+    graft.Artifacts.value("bpe", corpusKey, Seq(documents), nMerges) {
       val sc = new graft.CacheScope
       try trainMerges(documents, nMerges, sc) finally sc.release()
-    })
+    }
 
   /** Persist a trained merge table — the tokenizer artifact a pipeline
     * trains once and ships everywhere (the BPE analog of the materialized

@@ -164,50 +164,45 @@ object CodesIndex {
   def encode(model: CodesModel[Layout], vectors: DataFrame): DataFrame =
     model.layout.rows(vectors, model.coarse, Some(model.schema))
 
-  private val models =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Seq[Int]), AnyRef]()
-
-  /** Index BUILD, memoized per (tag, indexKey, params): `params` must hold
-    * every parameter that shapes the model, and callers use distinct
-    * indexKeys per corpus (the DataFrame is not part of the key). `train`
-    * runs once; the corpus is written once as the scan target of every
-    * probe (`list`-partitioned when listed), stale tombstones of a previous
-    * index at the same path are dropped (in-root state died with the
-    * overwrite), and the model persists.
+  /** Index BUILD, memoized through [[graft.Artifacts]] per (tag,
+    * indexKey, the content of `embeddings`, params): `params` must hold
+    * every parameter that shapes the model, and a changed corpus under a
+    * reused indexKey builds afresh. `train` runs once; the corpus is
+    * written once, into the build's own directory, as the scan target of
+    * every probe (`list`-partitioned when listed), and the model persists.
     */
   private[operators] def build[L <: Layout](tag: String, indexKey: String,
                                             params: Seq[Int], embeddings: DataFrame)
                                            (train: => (L, Option[Coarse])): CodesModel[L] =
-    models.computeIfAbsent((tag, indexKey, params), _ => {
-      val (layout, coarse) = train
-      val spark = embeddings.sparkSession
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft-$tag-${Ivf.dirToken(indexKey)}-${params.mkString("-")}").getAbsolutePath
-      val table = layout.rows(embeddings, coarse, None)
-      val w = table.write.mode("overwrite")
-      (if (coarse.isDefined) w.partitionBy("list") else w).parquet(path)
-      Sinks.fileSystem(spark, path).delete(new Path(tombstonesPath(path)), true)
-      val model = CodesModel(layout, coarse, path,
-        nullable(table.schema).asInstanceOf[StructType])
-      saveModel(spark, model, path)
-      model
-    }).asInstanceOf[CodesModel[L]]
+    graft.Artifacts.withDir(tag, indexKey, Seq(embeddings), params: _*) { path =>
+      materialize(path, embeddings, train)
+    }
 
-  private val incModels =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Seq[Int]), AnyRef]()
+  private def materialize[L <: Layout](path: String, embeddings: DataFrame,
+                                       trained: (L, Option[Coarse])): CodesModel[L] = {
+    val (layout, coarse) = trained
+    val table = layout.rows(embeddings, coarse, None)
+    val w = table.write.mode("overwrite")
+    (if (coarse.isDefined) w.partitionBy("list") else w).parquet(path)
+    val model = CodesModel(layout, coarse, path,
+      nullable(table.schema).asInstanceOf[StructType])
+    saveModel(embeddings.sparkSession, model, path)
+    model
+  }
 
-  /** Memoized build-on-base + one [[appendToIndex]] of `newBatch`, so a
-    * replayed call appends nothing. `base` builds under `indexKey#inc`; as
-    * with [[build]], the frames are not part of the key.
+  /** Memoized build-on-`base` + one [[appendToIndex]] of `newBatch`, keyed
+    * by both frames' content, so a replayed call appends nothing. The base
+    * table is the incremental build's own, trained by `train` on `base`.
     */
   private[operators] def buildIncremental[L <: Layout](tag: String, indexKey: String,
-                                                       params: Seq[Int], newBatch: DataFrame)
-                                                      (base: => CodesModel[L]): CodesModel[L] =
-    incModels.computeIfAbsent((tag, indexKey, params), _ => {
-      val model = base
+                                                       params: Seq[Int], base: DataFrame,
+                                                       newBatch: DataFrame)
+                                                      (train: => (L, Option[Coarse])): CodesModel[L] =
+    graft.Artifacts.withDir(tag + ".inc", indexKey, Seq(base, newBatch), params: _*) { path =>
+      val model = materialize(path, base, train)
       appendToIndex(model, newBatch)
       model
-    }).asInstanceOf[CodesModel[L]]
+    }
 
   /** Persist `model` as `_model` in `dir` (its table root, or a staged
     * rewrite of it) by tmp+rename, so readers never see a torn file.
@@ -232,10 +227,12 @@ object CodesIndex {
       throw new java.io.IOException(s"model save rename failed: $dst")
   }
 
-  /** The persisted model of an index, if any; a restarted process probes
-    * it without retraining, and it reflects every committed re-balance. A
-    * `_model` without a recorded schema fails (rebuild the index: readers
-    * never infer), and so does one whose layout is not an `L`.
+  /** The persisted model of an index, if any; it reflects every committed
+    * re-balance. Memoized builds live for the process (their directories
+    * go with [[graft.Artifacts]]' root at exit), so this reads an index
+    * another verb of this process changed, or one at a caller-owned path.
+    * A `_model` without a recorded schema fails (rebuild the index:
+    * readers never infer), and so does one whose layout is not an `L`.
     */
   def loadModel[L <: Layout](spark: SparkSession, indexPath: String)
                             (implicit ct: scala.reflect.ClassTag[L]): Option[CodesModel[L]] = {
@@ -577,9 +574,6 @@ object CodesIndex {
       .select("query_id", "vec_id", "cosine", "rn")
   }
 
-  private val shardedModels =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Seq[Int]), AnyRef]()
-
   /** `nShards` independent indexes over disjoint md5-hash slices (shard =
     * [[Curation.hashBucket]] of vec_id: engine-portable and batch-stable),
     * built by `buildShard(key, slice)` concurrently on `parallelism`
@@ -596,7 +590,8 @@ object CodesIndex {
       : ShardedModel[L] = {
     require(nShards > 0, s"nShards=$nShards must be positive")
     require(parallelism > 0, s"parallelism=$parallelism must be positive")
-    shardedModels.computeIfAbsent((tag, indexKey, nShards +: params), _ => {
+    graft.Artifacts.value(tag + ".sharded", indexKey, Seq(embeddings),
+        nShards +: params: _*) {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(parallelism, nShards))
       try {
@@ -609,7 +604,7 @@ object CodesIndex {
         }
         ShardedModel(nShards, futs.map(_.get()))
       } finally pool.shutdown()
-    }).asInstanceOf[ShardedModel[L]]
+    }
   }
 
   /** The rows of `df` that shard `sh` owns, by the build's hash law. */

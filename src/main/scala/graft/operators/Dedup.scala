@@ -374,9 +374,6 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  private val pairStores =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double), String]()
-
   /** [[minhashPairs]] as a write-once store — the "materialized signature
     * table" the scaladoc above names, promoted to a first-class artifact
     * (the [[Embed.materializedHashedTf]] / postings-store discipline): a
@@ -384,28 +381,19 @@ object Dedup {
     * version and serves every clustering/collapse/split consumer from it,
     * instead of re-hashing + re-banding the corpus per consumer (three
     * registered queries ran the identical pair build back to back).
-    * Memoized per (storeKey, corpus content token, threshold) within a
-    * process; a fresh process rewrites. The content token
-    * ([[Ivf.contentToken]]) keeps a changed corpus from being served a
-    * stale pair table under a reused key, and the per-process directory
-    * token keeps two concurrent JVMs on the same key from racing
-    * overwrite-vs-read on one path. Deterministic, so materialization
-    * changes COST only, never results — consumers keep their compute twins.
+    * Memoized per (storeKey, corpus content, threshold) within a process
+    * ([[graft.Artifacts]]); a fresh process rewrites. Deterministic, so
+    * materialization changes COST only, never results — consumers keep
+    * their compute twins.
     */
   def materializedMinhashPairs(storeKey: String, documents: DataFrame,
                                threshold: Double,
                                scope: graft.CacheScope = graft.CacheScope.global): DataFrame = {
     val spark = documents.sparkSession
-    val vkey = storeKey + "#" + Ivf.contentToken(documents)
-    val path = pairStores.computeIfAbsent((vkey, threshold), _ => {
-      val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft-pairstore-" + Ivf.dirToken(f"$vkey%s#$threshold%.3f") +
-          "-" + Ivf.pidToken)
-        .getAbsolutePath
+    val path = graft.Artifacts.dir("pairstore", storeKey, Seq(documents), threshold) { p =>
       minhashPairs(documents, threshold, scope = scope)
         .write.mode("overwrite").parquet(p)
-      p
-    })
+    }
     spark.read.parquet(path)
   }
 
@@ -934,21 +922,19 @@ object Dedup {
     * Size law: ~1.2 MB per million keys at fpp 0.01 — at 100 TB you bloom
     * the dedup WINDOW (the recent partitions a crawl batch is checked
     * against), or shard filters by key range; `expectedItems` is that
-    * window's cardinality knob. Memoized per (indexKey, expectedItems,
-    * fpp) like the ANN indexes: build once per corpus, probe per batch.
+    * window's cardinality knob. Memoized per (indexKey, corpus content,
+    * key column, expectedItems, fpp) like the ANN indexes: build once per
+    * corpus, probe per batch.
     */
-  private val blooms = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Double), Array[Byte]]
-
   def bloomIndex(indexKey: String, corpus: DataFrame, key: Column,
                  expectedItems: Long, fpp: Double = 0.01): Array[Byte] =
-    blooms.computeIfAbsent((indexKey, expectedItems, fpp), _ => {
+    graft.Artifacts.value("bloom", indexKey, Seq(corpus), key.toString, expectedItems, fpp) {
       val bf = corpus.select(xxhash64(key).as("fp"))
         .stat.bloomFilter("fp", expectedItems, fpp)
       val out = new java.io.ByteArrayOutputStream()
       bf.writeTo(out)
       out.toByteArray
-    })
+    }
 
   /** Codegen'd membership probe against a serialized [[bloomIndex]]:
     * true = the key MIGHT be in the corpus (verify exactly), false = the

@@ -204,28 +204,22 @@ object Embed {
       .collect()(0).getSeq[Double](0).toArray
   }
 
-  private val stores =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
   /** Materialized embedding store — embed once, retrieve many: the
     * documents→vectors analog of the materialized IVF lists. A 100 TB
     * deployment never re-embeds its corpus per query; the embedding table
     * is a first-class artifact written once and served to every retrieval
     * consumer (brute-force anchors, index builds, fusion legs). Memoized
-    * per (storeKey, dim) within a process; a fresh process rewrites
-    * (mode overwrite). The embedder is deterministic, so materialization
-    * changes COST only, never results — consumers keep their existing
-    * compute-twin oracles.
+    * per (storeKey, corpus content, dim) within a process
+    * ([[graft.Artifacts]]); a fresh process rewrites. The embedder is
+    * deterministic, so materialization changes COST only, never results —
+    * consumers keep their existing compute-twin oracles.
     */
   def materializedHashedTf(storeKey: String, documents: DataFrame,
                            dim: Int = 64): DataFrame = {
     val spark = documents.sparkSession
-    val path = stores.computeIfAbsent((storeKey, dim), _ => {
-      val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft-embstore-" + Ivf.dirToken(storeKey) + s"-$dim").getAbsolutePath
+    val path = graft.Artifacts.dir("embstore", storeKey, Seq(documents), dim) { p =>
       hashedTf(documents, dim).write.mode("overwrite").parquet(p)
-      p
-    })
+    }
     spark.read.parquet(path)
   }
 

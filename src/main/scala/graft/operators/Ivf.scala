@@ -170,52 +170,14 @@ object Ivf {
   def index(embeddings: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame =
     embeddings.withColumn("list", assignList(col("embedding"), cents))
 
-  /** Filesystem-safe AND injective directory token for an index key: the
-    * readable sanitized form plus an md5 prefix of the RAW key. Sanitizing
-    * alone maps distinct keys ("a/b", "a_b") to one directory, silently
-    * sharing/overwriting an index — the hash makes the mapping injective
-    * while keeping the name human-readable.
-    */
-  private[graft] def dirToken(key: String): String =
-    key.replaceAll("[^A-Za-z0-9._-]", "_") + "-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(4).map("%02x".format(_)).mkString
-
-  /** Content fingerprint for the write-once corpus stores (pair table,
-    * covered positions, build parts, pretrain state): the canonicalized
-    * logical plan's semantic hash plus a hash of the plan's input file
-    * list. Folding this into a store key catches the two staleness
-    * hazards the caller-supplied string key cannot — a DIFFERENT corpus
-    * derivation reusing a key within one process, and the same path
-    * re-pointed at new files in a long-lived session — without paying a
-    * data pass (both are driver-side metadata). Two references to the
-    * same source built the same way canonicalize identically, so
-    * consumers that intentionally share a store keep sharing it.
-    */
-  private[graft] def contentToken(df: org.apache.spark.sql.DataFrame): String = {
-    val plan = df.queryExecution.analyzed.canonicalized.semanticHash()
-    val files = df.inputFiles.sorted.mkString("\n").hashCode
-    f"$plan%08x$files%08x"
-  }
-
-  /** Per-process token folded into store DIRECTORY names: two concurrent
-    * JVMs on the same corpus key write disjoint directories instead of
-    * racing overwrite-vs-read on one (torn parquet reads), and a fresh
-    * process can never serve a previous process's artifacts — every run
-    * recomputes its stores from the inputs (the no-cross-run-caching
-    * contract the bench relies on).
-    */
-  private[graft] val pidToken: String =
-    "p" + ProcessHandle.current().pid()
-
-  /** Index BUILD, memoized per (indexKey, nlist, iters, trainSamplePct)
-    * through [[CodesIndex.build]]: training runs once per corpus key, the
+  /** Index BUILD, memoized per (indexKey, corpus content, nlist, iters,
+    * trainSamplePct) through [[CodesIndex.build]]: training runs once per
+    * corpus, the
     * inverted lists are written once as a `list`-partitioned parquet table
     * (the reorganized corpus — what an IVF index IS), and the model is
     * reused by every subsequent probe. Training is deterministic
     * (hash-seeded, exact integer decisions), so memoization changes cost
-    * only, never results. `indexKey` should identify the corpus (e.g. its
+    * only, never results. `indexKey` names the index (e.g. the corpus
     * path); the in-memory cached value is nlist × dim longs — bounded,
     * driver-side.
     *
@@ -228,13 +190,16 @@ object Ivf {
   def buildIndex(indexKey: String, embeddings: DataFrame,
                  nlist: Int = 16, iters: Int = 2,
                  trainSamplePct: Int = 100): IvfModel =
-    CodesIndex.build("ivf", indexKey, Seq(nlist, iters, trainSamplePct), embeddings) {
-      val cents = trainCentroids(CodesIndex.trainSet(embeddings, trainSamplePct), nlist, iters)
-      (Flat, Some(Coarse(nlist, iters, cents)))
-    }
+    CodesIndex.build("ivf", indexKey, Seq(nlist, iters, trainSamplePct), embeddings)(
+      trained(embeddings, nlist, iters, trainSamplePct))
 
-  /** Memoized build-on-base + one frozen-quantizer append (the base index
-    * is keyed `indexKey#inc`): a probe over it equals one over a
+  private def trained(embeddings: DataFrame, nlist: Int, iters: Int,
+                      trainSamplePct: Int): (Flat.type, Option[Coarse]) =
+    (Flat, Some(Coarse(nlist, iters,
+      trainCentroids(CodesIndex.trainSet(embeddings, trainSamplePct), nlist, iters))))
+
+  /** Memoized build-on-base + one frozen-quantizer append
+    * ([[CodesIndex.buildIncremental]]): a probe over it equals one over a
     * from-scratch write of base ∪ batch with the same centroids (the
     * `ann_incremental` oracle). Freezing the quantizer is the standard IVF
     * deployment contract: centroids drift only under distribution shift,
@@ -242,8 +207,8 @@ object Ivf {
     */
   def buildIncremental(indexKey: String, base: DataFrame, newBatch: DataFrame,
                        nlist: Int = 16, iters: Int = 2): IvfModel =
-    CodesIndex.buildIncremental("ivf", indexKey, Seq(nlist, iters), newBatch)(
-      buildIndex(indexKey + "#inc", base, nlist, iters))
+    CodesIndex.buildIncremental("ivf", indexKey, Seq(nlist, iters), base, newBatch)(
+      trained(base, nlist, iters, 100))
 
   /** PROBE: approximate top-k cosine neighbors of a stored vector against a
     * prebuilt [[IvfModel]]. Probe selection is driver-side math on the
@@ -580,18 +545,15 @@ object Ivf {
     cur
   }
 
-  private val rebalModels =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), IvfModel]()
-
   /** Memoized build + one re-balance pass — the harness-facing form (the
     * [[buildIncremental]] pattern): replayed calls get the REBALANCED
     * model, never a second mutation of the same directory with a stale
-    * centroid set. A fresh JVM rebuilds (mode overwrite) then re-splits —
-    * deterministic, so results never change across replays.
+    * centroid set. A fresh JVM rebuilds then re-splits — deterministic,
+    * so results never change across replays.
     */
   def buildRebalanced(indexKey: String, embeddings: DataFrame,
                       nlist: Int = 16, maxRatio: Double = 4.0): IvfModel =
-    rebalModels.computeIfAbsent((indexKey, nlist, (maxRatio * 1000).toInt), _ =>
+    graft.Artifacts.value("ivf.rebalanced", indexKey, Seq(embeddings), nlist, maxRatio)(
       rebalanceIndex(embeddings.sparkSession,
         buildIndex(indexKey + "#rb", embeddings, nlist), maxRatio))
 

@@ -42,13 +42,16 @@ object IvfPq {
                  iters: Int = 2, dim: Int = 64,
                  trainSamplePct: Int = 100): CodesModel[PqCodec] =
     CodesIndex.build("ivfpq", indexKey,
-        Seq(nlist, m, ksub, iters, dim, trainSamplePct), embeddings) {
-      val trainSet = CodesIndex.trainSet(embeddings, trainSamplePct)
-      val coarse = Ivf.trainCentroids(trainSet, nlist, iters)
-      val books = Pq.trainCodebooks(CodesIndex.residuals(trainSet, coarse),
-        m, ksub, iters, dim)
-      (PqCodec(m, ksub, dim / m, iters, books), Some(Coarse(nlist, iters, coarse)))
-    }
+        Seq(nlist, m, ksub, iters, dim, trainSamplePct), embeddings)(
+      trained(CodesIndex.trainSet(embeddings, trainSamplePct), nlist, m, ksub, iters, dim))
+
+  private def trained(trainSet: DataFrame, nlist: Int, m: Int, ksub: Int,
+                      iters: Int, dim: Int): (PqCodec, Option[Coarse]) = {
+    val coarse = Ivf.trainCentroids(trainSet, nlist, iters)
+    val books = Pq.trainCodebooks(CodesIndex.residuals(trainSet, coarse),
+      m, ksub, iters, dim)
+    (PqCodec(m, ksub, dim / m, iters, books), Some(Coarse(nlist, iters, coarse)))
+  }
 
   /** Memoized build-on-base + one frozen-model append: the batch is
     * coarse-assigned and residual-encoded with the base's model, so the
@@ -59,7 +62,7 @@ object IvfPq {
                        nlist: Int = 16, m: Int = 8, ksub: Int = 16,
                        iters: Int = 2, dim: Int = 64): CodesModel[PqCodec] =
     CodesIndex.buildIncremental("ivfpq", indexKey, Seq(nlist, m, ksub, iters, dim),
-        newBatch)(buildIndex(indexKey + "#inc", base, nlist, m, ksub, iters, dim))
+        base, newBatch)(trained(base, nlist, m, ksub, iters, dim))
 
   /** One-shot convenience: memoized build (under `indexKey`) + probe. */
   def topKIvfPq(embeddings: DataFrame, queryVecId: Long, k: Int,

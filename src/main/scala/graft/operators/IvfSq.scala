@@ -41,20 +41,24 @@ object IvfSq {
     */
   def buildIndex(indexKey: String, embeddings: DataFrame,
                  nlist: Int = 16, iters: Int = 2, dim: Int = 64): CodesModel[SqCodec] =
-    CodesIndex.build("ivfsq", indexKey, Seq(nlist, iters, dim), embeddings) {
-      val coarse = Ivf.trainCentroids(embeddings, nlist, iters)
-      val (mins, spans) = Sq.trainParams(CodesIndex.residuals(embeddings, coarse), dim)
-      (SqCodec(dim, mins, spans), Some(Coarse(nlist, iters, coarse)))
-    }
+    CodesIndex.build("ivfsq", indexKey, Seq(nlist, iters, dim), embeddings)(
+      trained(embeddings, nlist, iters, dim))
 
-  /** Memoized build-on-base + one frozen-model append (replay-safe; frames
-    * are not part of the key — distinct indexKeys per (corpus, batch) pair).
+  private def trained(embeddings: DataFrame, nlist: Int, iters: Int,
+                      dim: Int): (SqCodec, Option[Coarse]) = {
+    val coarse = Ivf.trainCentroids(embeddings, nlist, iters)
+    val (mins, spans) = Sq.trainParams(CodesIndex.residuals(embeddings, coarse), dim)
+    (SqCodec(dim, mins, spans), Some(Coarse(nlist, iters, coarse)))
+  }
+
+  /** Memoized build-on-base + one frozen-model append (replay-safe; keyed
+    * by both frames' content).
     */
   def buildIncremental(indexKey: String, base: DataFrame, newBatch: DataFrame,
                        nlist: Int = 16, iters: Int = 2,
                        dim: Int = 64): CodesModel[SqCodec] =
-    CodesIndex.buildIncremental("ivfsq", indexKey, Seq(nlist, iters, dim), newBatch)(
-      buildIndex(indexKey + "#inc", base, nlist, iters, dim))
+    CodesIndex.buildIncremental("ivfsq", indexKey, Seq(nlist, iters, dim), base, newBatch)(
+      trained(base, nlist, iters, dim))
 
   /** One-shot convenience: memoized build (under `indexKey`) + probe. */
   def topKIvfSq(embeddings: DataFrame, queryVecId: Long, k: Int,

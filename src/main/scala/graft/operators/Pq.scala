@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import CodesIndex.{CodesModel, DotScale, VecScale}
+import CodesIndex.{CodesModel, Coarse, DotScale, VecScale}
 
 /** Product quantization (PQ) approximate nearest neighbor — the
   * COMPRESSED-CODES path, complementing [[Ivf]] (pruned lists) and the
@@ -199,11 +199,11 @@ object Pq {
                  m: Int = 8, ksub: Int = 16, iters: Int = 2,
                  dim: Int = 64, trainSamplePct: Int = 100): CodesModel[PqCodec] =
     CodesIndex.build("pq", indexKey, Seq(m, ksub, iters, dim, trainSamplePct),
-        embeddings) {
-      val books = trainCodebooks(CodesIndex.trainSet(embeddings, trainSamplePct),
-        m, ksub, iters, dim)
-      (PqCodec(m, ksub, dim / m, iters, books), None)
-    }
+      embeddings)(trained(CodesIndex.trainSet(embeddings, trainSamplePct), m, ksub, iters, dim))
+
+  private def trained(trainSet: DataFrame, m: Int, ksub: Int, iters: Int,
+                      dim: Int): (PqCodec, Option[Coarse]) =
+    (PqCodec(m, ksub, dim / m, iters, trainCodebooks(trainSet, m, ksub, iters, dim)), None)
 
   /** Memoized build-on-base + one frozen-codebook append
     * ([[CodesIndex.buildIncremental]]): the appended table equals a
@@ -213,8 +213,8 @@ object Pq {
   def buildIncremental(indexKey: String, base: DataFrame, newBatch: DataFrame,
                        m: Int = 8, ksub: Int = 16, iters: Int = 2,
                        dim: Int = 64): CodesModel[PqCodec] =
-    CodesIndex.buildIncremental("pq", indexKey, Seq(m, ksub, iters, dim), newBatch)(
-      buildIndex(indexKey + "#inc", base, m, ksub, iters, dim))
+    CodesIndex.buildIncremental("pq", indexKey, Seq(m, ksub, iters, dim), base, newBatch)(
+      trained(base, m, ksub, iters, dim))
 
   /** One-shot convenience: memoized build (under `indexKey`) + probe. */
   def topKPq(embeddings: DataFrame, queryVecId: Long, k: Int,

@@ -151,31 +151,19 @@ object Pretrain {
            scope: graft.CacheScope = graft.CacheScope.global): DataFrame =
     pack(state(docs0, probe, scope).gated, scope)
 
-  private val states =
-    new java.util.concurrent.ConcurrentHashMap[String, State]()
-
-  /** [[state]] MATERIALIZED: the three artifacts written once as parquet
-    * tables keyed by `stateKey` (tmp-dir, injective token — the
-    * [[Ivf.buildIndex]] discipline) and read back, so a later refresh pays
+  /** [[state]] MATERIALIZED: the artifacts written once as parquet tables
+    * in a [[graft.Artifacts]] directory keyed by (`stateKey`, the content
+    * of `docs0` and `probe`) and read back, so a later refresh pays
     * artifact READS, not a pipeline recompute — this is literally the
     * "previous nightly run's output" the incremental contract assumes, and
     * what makes `cur_pretrain_incr`'s bench time measure the increment
-    * rather than two full builds. Memoized per key; deterministic, so the
-    * memo changes cost only, never results.
+    * rather than two full builds. Memoized; deterministic, so the memo
+    * changes cost only, never results.
     */
   def buildState(stateKey: String, docs0: DataFrame, probe: DataFrame,
-                 scope: graft.CacheScope = graft.CacheScope.global): State = {
-    // corpus/probe content tokens in the key: a changed corpus under a
-    // reused stateKey builds fresh state instead of being served the old
-    // run's artifacts; the per-process dir keeps concurrent JVMs on the
-    // same key from overwriting each other's parquet mid-read
-    val vkey =
-      s"$stateKey#${Ivf.contentToken(docs0)}#${Ivf.contentToken(probe)}"
-    states.computeIfAbsent(vkey, _ => {
+                 scope: graft.CacheScope = graft.CacheScope.global): State =
+    graft.Artifacts.withDir("pretrain", stateKey, Seq(docs0, probe)) { dir =>
       val st = state(docs0, probe, scope)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft-pretrain-" + Ivf.dirToken(vkey) + "-" + Ivf.pidToken)
-        .getAbsolutePath
       st.pairs.write.mode("overwrite").parquet(dir + "/pairs")
       st.survivors.write.mode("overwrite").parquet(dir + "/survivors")
       st.gated.write.mode("overwrite").parquet(dir + "/gated")
@@ -185,8 +173,7 @@ object Pretrain {
         spark.read.parquet(dir + "/survivors"),
         spark.read.parquet(dir + "/gated"),
         spark.read.parquet(dir + "/occ"))
-    })
-  }
+    }
 
   /** Stage-1 increment + the affected-document frontier (see object
     * scaladoc for the soundness argument). `affected` ⊆ cur survivors is
@@ -312,36 +299,28 @@ object Pretrain {
   // The streaming flagship's durability model: each absorbed micro-batch
   // commits a COMPLETE state version directory
   //   stateDir/v<batchId>/{corpus,pairs,survivors,gated,packed} + _done
-  // and then atomically repoints stateDir/_latest (tmp+rename) at it.
-  // Crash anywhere before _done ⇒ the replayed batch recomputes into the
-  // same version dir (mode overwrite); crash between _done and _latest ⇒
-  // the replay sees _done and only rewrites the pointer. Readers resolve
-  // _latest and never observe a torn version — the same staged-commit
+  // and the committed state is the highest v<N> whose _done exists. The
+  // _done create is the single commit point: a crash anywhere before it
+  // leaves a version readers skip, and the replayed batch recomputes into
+  // the same version dir (mode overwrite); a replay after it is a no-op.
+  // Readers never observe a torn version — the same staged-commit
   // discipline as the ANN index sinks, lifted to a multi-table state.
+
+  private def versions(spark: org.apache.spark.sql.SparkSession,
+                       stateDir: String): Seq[Long] = {
+    val fs = graft.sources.Sinks.fileSystem(spark, stateDir)
+    val root = new org.apache.hadoop.fs.Path(stateDir)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(n => n.length > 1 && n.startsWith("v") && n.drop(1).forall(_.isDigit))
+      .map(_.drop(1).toLong)
+  }
 
   private def latestVersion(spark: org.apache.spark.sql.SparkSession,
                             stateDir: String): Option[Long] = {
     val fs = graft.sources.Sinks.fileSystem(spark, stateDir)
-    val p = new org.apache.hadoop.fs.Path(stateDir, "_latest")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      Some(s.stripPrefix("v").toLong)
-    }
-  }
-
-  private def commitPointer(spark: org.apache.spark.sql.SparkSession,
-                            stateDir: String, batchId: Long): Unit = {
-    val fs = graft.sources.Sinks.fileSystem(spark, stateDir)
-    val tmp = new org.apache.hadoop.fs.Path(stateDir, "_latest.tmp")
-    val dst = new org.apache.hadoop.fs.Path(stateDir, "_latest")
-    val out = fs.create(tmp, true)
-    try out.write(s"v$batchId".getBytes("UTF-8")) finally out.close()
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"pretrain state pointer rename failed: $dst")
+    versions(spark, stateDir).sorted.reverse
+      .find(v => fs.exists(new org.apache.hadoop.fs.Path(s"$stateDir/v$v", "_done")))
   }
 
   /** The latest committed packed training set in `stateDir` (what a
@@ -369,10 +348,11 @@ object Pretrain {
     val fs = graft.sources.Sinks.fileSystem(spark, stateDir)
     val vdir = s"$stateDir/v$batchId"
     val done = new org.apache.hadoop.fs.Path(vdir, "_done")
-    if (fs.exists(done)) { commitPointer(spark, stateDir, batchId); return }
+    if (fs.exists(done)) return
     val scope = new graft.CacheScope
     try {
-      val (cur, pairs, survivors, gated, occ) = latestVersion(spark, stateDir) match {
+      val prevV = latestVersion(spark, stateDir)
+      val (cur, pairs, survivors, gated, occ) = prevV match {
         case None =>
           val cur = scope.persist(batch0)
           val st = state(cur, probe, scope)
@@ -404,16 +384,10 @@ object Pretrain {
       occ.write.mode("overwrite").parquet(s"$vdir/occ")
       pack(gated, scope).write.mode("overwrite").parquet(s"$vdir/packed")
       fs.create(done, true).close()
-      val prevV = latestVersion(spark, stateDir)
-      commitPointer(spark, stateDir, batchId)
       // retention: keep the previous version (crash safety), drop older
       prevV.foreach { pv =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(stateDir))
-          .map(_.getPath).filter { p =>
-            p.getName.startsWith("v") &&
-              p.getName.stripPrefix("v").forall(_.isDigit) &&
-              p.getName.stripPrefix("v").toLong < pv
-          }.foreach(fs.delete(_, true))
+        versions(spark, stateDir).filter(_ < pv)
+          .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v$v"), true))
       }
     } finally scope.release()
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import CodesIndex.{CodesModel, DotScale, VecScale}
+import CodesIndex.{CodesModel, Coarse, DotScale, VecScale}
 
 /** Scalar quantization (SQ8) approximate nearest neighbor — the fourth
   * index layout, completing the family: hyperplane LSH (bucketed recall,
@@ -130,10 +130,12 @@ object Sq {
     */
   def buildIndex(indexKey: String, embeddings: DataFrame,
                  dim: Int = 64): CodesModel[SqCodec] =
-    CodesIndex.build("sq", indexKey, Seq(dim), embeddings) {
-      val (mins, spans) = trainParams(embeddings, dim)
-      (SqCodec(dim, mins, spans), None)
-    }
+    CodesIndex.build("sq", indexKey, Seq(dim), embeddings)(trained(embeddings, dim))
+
+  private def trained(embeddings: DataFrame, dim: Int): (SqCodec, Option[Coarse]) = {
+    val (mins, spans) = trainParams(embeddings, dim)
+    (SqCodec(dim, mins, spans), None)
+  }
 
   /** Memoized build-on-base + one frozen-params append
     * ([[CodesIndex.buildIncremental]]); out-of-range batch values saturate
@@ -141,8 +143,8 @@ object Sq {
     */
   def buildIncremental(indexKey: String, base: DataFrame, newBatch: DataFrame,
                        dim: Int = 64): CodesModel[SqCodec] =
-    CodesIndex.buildIncremental("sq", indexKey, Seq(dim), newBatch)(
-      buildIndex(indexKey + "#inc", base, dim))
+    CodesIndex.buildIncremental("sq", indexKey, Seq(dim), base, newBatch)(
+      trained(base, dim))
 
   /** Drift health check — the [[Ivf]] `ann_list_sizes` story for the
     * scalar layout: per dimension, how many of a batch's values fall

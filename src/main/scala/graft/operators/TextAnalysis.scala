@@ -382,32 +382,22 @@ object TextAnalysis {
       .distinct()
   }
 
-  private val coverStores =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), String]()
-
   /** [[coveredPositions]] as a write-once store (the materialized-pair-
     * store discipline): the cross-document 3-gram df pass and cover
     * explode depend only on (corpus, n, minDocs), and three registered
     * queries (coverage report, strip, the pipeline flagship's strip
-    * stage) each re-ran it. Deterministic — materialization changes cost
-    * only, never results.
+    * stage) each re-ran it. Memoized per (storeKey, corpus content, n,
+    * minDocs) ([[graft.Artifacts]]). Deterministic — materialization
+    * changes cost only, never results.
     */
   def materializedCoveredPositions(storeKey: String, documents: DataFrame,
                                    n: Int = 3, minDocs: Int = 4,
                                    scope: graft.CacheScope = graft.CacheScope.global): DataFrame = {
     val spark = documents.sparkSession
-    // content token + per-process dir: no stale store under a reused key,
-    // no cross-JVM overwrite race (see materializedMinhashPairs)
-    val vkey = storeKey + "#" + graft.operators.Ivf.contentToken(documents)
-    val path = coverStores.computeIfAbsent((vkey, n, minDocs), _ => {
-      val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft-coverstore-" + graft.operators.Ivf.dirToken(s"$vkey#$n#$minDocs") +
-          "-" + graft.operators.Ivf.pidToken)
-        .getAbsolutePath
+    val path = graft.Artifacts.dir("coverstore", storeKey, Seq(documents), n, minDocs) { p =>
       coveredPositions(documents, n, minDocs, scope)
         .write.mode("overwrite").parquet(p)
-      p
-    })
+    }
     spark.read.parquet(path)
   }
 

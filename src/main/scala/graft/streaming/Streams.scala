@@ -1103,8 +1103,9 @@ object Streams {
     * stages, the standing corpus's artifacts are reused, and the
     * metadata-sized global stages (budgets, packing) are recomputed —
     * then committed as a new state version
-    * ([[graft.operators.Pretrain.absorbBatch]]'s versioned-dir + pointer
-    * protocol, exactly-once under crash replay). After any batch,
+    * ([[graft.operators.Pretrain.absorbBatch]]'s versioned-dir protocol:
+    * the highest version with a `_done` marker is the committed state, so
+    * it is exactly-once under crash replay). After any batch,
     * [[graft.operators.Pretrain.packedSnapshot]] equals the batch
     * `Pretrain.full` over every document ingested so far (parity in
     * StreamingSpec) — a training set that is always current and never

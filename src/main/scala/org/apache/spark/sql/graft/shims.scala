@@ -50,3 +50,11 @@ object CheckpointBridge {
     }
   }
 }
+
+/** Spark's `private[spark]` temp-dir helper: a fresh directory under the
+  * JVM's temp directory, deleted by Spark's shutdown hook.
+  */
+object TempDirs {
+  def create(namePrefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = namePrefix)
+}

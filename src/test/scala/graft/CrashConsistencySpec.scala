@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.operators.{CodesIndex, Ivf, IvfPq, Pq}
+import graft.operators.{CodesIndex, Ivf, IvfPq, Pq, Pretrain}
 import graft.operators.CodesIndex.{CodesModel, Layout}
 import graft.sources.Sinks
 
@@ -109,4 +109,30 @@ class CrashConsistencySpec extends SparkSpec {
       assert(!staging.exists(), "replay left the staging dir behind")
       assert(marker.exists(), "replay wrote no _ingest_done marker")
     }
+
+  test("pretrain state: a version without _done is skipped, and replay converges") {
+    val docs = Tables.documents(spark, sfDir).filter($"doc_id" % 4 === 0)
+    val probe = Tables.documents(spark, sfDir).filter($"doc_id" % 100 === 0)
+    def batch(b: Int) = docs.filter($"doc_id" / 4 % 3 === b)
+    def packed(stateDir: String) = Pretrain.packedSnapshot(spark, stateDir)
+      .map(_.orderBy("doc_id", "chunk_no").collect().toSeq)
+    val root = java.nio.file.Files.createTempDirectory("graft-crashpt").toString
+    val clean = s"$root/clean"
+    (0 until 3).foreach(b => Pretrain.absorbBatch(batch(b), probe, clean, b.toLong))
+    val v1 = spark.read.parquet(s"$clean/v1/packed").orderBy("doc_id", "chunk_no")
+      .collect().toSeq
+
+    val state = s"$root/crashed"
+    (0 until 2).foreach(b => Pretrain.absorbBatch(batch(b), probe, state, b.toLong))
+    assert(packed(state) === Some(v1))
+    // a crash mid-version: v2 holds a table but no _done
+    batch(2).write.parquet(s"$state/v2/corpus")
+    assert(packed(state) === Some(v1))
+    // no pointer file decides what is committed
+    new java.io.File(s"$state/_latest").delete()
+    assert(packed(state) === Some(v1))
+
+    Pretrain.absorbBatch(batch(2), probe, state, 2L) // replay
+    assert(packed(state).nonEmpty && packed(state) === packed(clean))
+  }
 }

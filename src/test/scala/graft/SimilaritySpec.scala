@@ -402,8 +402,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("index directory naming is injective for colliding sanitized keys") {
-    val d1 = graft.operators.Ivf.dirToken("a/b")
-    val d2 = graft.operators.Ivf.dirToken("a_b")
+    val d1 = graft.Artifacts.dirToken("a/b")
+    val d2 = graft.Artifacts.dirToken("a_b")
     assert(d1 !== d2, "distinct keys must not share an index directory")
     // still filesystem-safe and readable
     assert(d1.matches("[A-Za-z0-9._-]+"))

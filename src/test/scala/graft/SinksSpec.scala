@@ -455,15 +455,30 @@ class SinksSpec extends SparkSpec {
     // library code resolves through Sinks.fileSystem(spark, path)
     val root = new java.io.File("src/main")
     assert(root.isDirectory, s"run from the repository root, not ${new java.io.File(".").getAbsolutePath}")
-    val stream = java.nio.file.Files.walk(root.toPath)
-    val offenders =
+    def sources(dir: String): Seq[(String, String)] = {
+      val stream = java.nio.file.Files.walk(new java.io.File(dir).toPath)
       try {
         import scala.jdk.CollectionConverters._
         stream.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-          .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-            .contains("FileSystem.get("))
-          .map(_.toString).toSeq.sorted
+          .map(p => (p.toString, new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+          .toSeq.sortBy(_._1)
       } finally stream.close()
+    }
+    val offenders = sources("src/main").filter(_._2.contains("FileSystem.get(")).map(_._1)
     assert(offenders.isEmpty, s"FileSystem.get( in ${offenders.mkString(", ")}")
+    // artifact stores and temp dirs go through graft.Artifacts; the one
+    // other map is Dedup's executor-side decode cache, allowed by name
+    val store = Seq("operators", "streaming", "sources")
+      .flatMap(d => sources(s"src/main/scala/graft/$d"))
+      .filterNot(_._1.endsWith("/Artifacts.scala"))
+    val tmpdir = store.filter(_._2.contains("java.io.tmpdir")).map(_._1)
+    assert(tmpdir.isEmpty, s"java.io.tmpdir in ${tmpdir.mkString(", ")}")
+    val maps = store.filter { case (p, text) =>
+      val allowed = if (p.endsWith("/operators/Dedup.scala"))
+        text.replaceAll("bloomCache\\s*=\\s*new java\\.util\\.concurrent\\.ConcurrentHashMap", "")
+      else text
+      allowed.contains("new java.util.concurrent.ConcurrentHashMap")
+    }.map(_._1)
+    assert(maps.isEmpty, s"ConcurrentHashMap memo in ${maps.mkString(", ")}")
   }
 }
