@@ -795,7 +795,7 @@ object SimilarityQueries {
     }),
 
     // The scalar-layout capstone: build on base → frozen append →
-    // tombstone delete → compaction (physical drop, manifest carried)
+    // tombstone delete → compaction (physical drop, batch ids carried)
     // → probe, against the train-on-base + candidates-minus-deleted twin.
     "ann_lifecycle_sq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)

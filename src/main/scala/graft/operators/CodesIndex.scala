@@ -1,17 +1,16 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField, StructType}
 import graft.functions.VectorOps
-import graft.sources.Sinks
+import graft.sources.Snapshot
 
 /** The one lifecycle of the five ANN index layouts: raw-vector IVF
   * ([[Ivf]]) and the compressed-codes layouts ([[Pq]], [[Sq]], [[IvfPq]],
   * [[IvfSq]]). A layout is a [[Layout]] — the rows a batch writes, plus
-  * its `_model` identity — and an optional IVF coarse partitioner
+  * its model identity — and an optional IVF coarse partitioner
   * ([[Coarse]]: [[Ivf.trainCentroids]] centroids). This is the split
   * REPOSE (ICDE 2021) builds distributed top-k from: a global partitioner
   * plus a local index.
@@ -31,11 +30,13 @@ import graft.sources.Sinks
   * top `rerank` ADC candidates get an exact-cosine re-rank against the raw
   * vectors.
   *
-  * Persistence: `_model` at the table root (hidden from scans, tmp+rename)
-  * holds the layout tag and parameters, the table's `schema <json>` (so no
-  * reader infers it), the coarse centroids when listed, and the layout's
-  * lines. Deletes are tombstones in the sibling `__tombstones` table;
-  * compaction drops them physically.
+  * Persistence: a [[graft.sources.Snapshot]] per committed version,
+  * `_snapshots/<v>` at the table root, is the index: the model lines (the
+  * layout tag and parameters, the table's `schema <json>` so no reader
+  * infers it, the coarse centroids when listed, and the layout's lines),
+  * the data and tombstone files, and the absorbed batch ids. Every verb
+  * commits through [[graft.sources.Snapshot.commit]]; deletes are
+  * tombstone files, which compaction drops physically.
   */
 object CodesIndex {
 
@@ -48,15 +49,15 @@ object CodesIndex {
     */
   private[operators] val DotScale = 1000.0
 
-  /** What the lifecycle needs of a layout: its `_model` identity and the
+  /** What the lifecycle needs of a layout: its model identity and the
     * rows a batch writes.
     */
   trait Layout {
     /** "flat", "pq" or "sq"; a listed layout's tag is "ivf" + this. */
     def tag: String
-    /** Integer parameters, on the `_model` header line. */
+    /** Integer parameters, on the model header line. */
     def params: Seq[Int]
-    /** Trained parameters as `_model` lines (read back by [[loadModel]]). */
+    /** Trained parameters as model lines (read back by [[loadModel]]). */
     def lines: Seq[String]
     /** The table rows of `vectors` under partitioner `coarse` (`list`
       * included when listed). `schema` is the table's recorded schema,
@@ -169,7 +170,8 @@ object CodesIndex {
     * every parameter that shapes the model, and a changed corpus under a
     * reused indexKey builds afresh. `train` runs once; the corpus is
     * written once, into the build's own directory, as the scan target of
-    * every probe (`list`-partitioned when listed), and the model persists.
+    * every probe (`list`-partitioned when listed), and the first snapshot
+    * commits it with the model.
     */
   private[operators] def build[L <: Layout](tag: String, indexKey: String,
                                             params: Seq[Int], embeddings: DataFrame)
@@ -182,11 +184,11 @@ object CodesIndex {
                                        trained: (L, Option[Coarse])): CodesModel[L] = {
     val (layout, coarse) = trained
     val table = layout.rows(embeddings, coarse, None)
-    val w = table.write.mode("overwrite")
-    (if (coarse.isDefined) w.partitionBy("list") else w).parquet(path)
     val model = CodesModel(layout, coarse, path,
       nullable(table.schema).asInstanceOf[StructType])
-    saveModel(embeddings.sparkSession, model, path)
+    val files = Snapshot.write(table, path, "build", Snapshot.Data, coarse.isDefined)
+    Snapshot.commit(embeddings.sparkSession,
+      Snapshot.empty(path).copy(model = modelLines(model), files = files))
     model
   }
 
@@ -204,51 +206,37 @@ object CodesIndex {
       model
     }
 
-  /** Persist `model` as `_model` in `dir` (its table root, or a staged
-    * rewrite of it) by tmp+rename, so readers never see a torn file.
+  /** `model` as snapshot model lines: the header `<tag> <params…>`, the
+    * table's `schema <json>`, `coarse <nlist> <iters>` plus one `C` line
+    * per centroid when listed, then the layout's lines.
     */
-  private[operators] def saveModel(spark: SparkSession, model: CodesModel[Layout],
-                                   dir: String): Unit = {
-    val fs = Sinks.fileSystem(spark, dir)
-    val tmp = new Path(dir, "_model.tmp")
-    val dst = new Path(dir, "_model")
+  private[operators] def modelLines(model: CodesModel[Layout]): Seq[String] = {
     val coarse = model.coarse.toSeq.flatMap { c =>
       s"coarse ${c.nlist} ${c.iters}" +:
         c.centroids.toSeq.map { case (cid, cq) => s"C $cid ${cq.mkString(",")}" }
     }
     val tag = model.coarse.fold("")(_ => "ivf") + model.layout.tag
-    val lines = Seq((tag +: model.layout.params).mkString(" "),
+    Seq((tag +: model.layout.params).mkString(" "),
       s"schema ${model.schema.json}") ++ coarse ++ model.layout.lines
-    val out = fs.create(tmp, true)
-    try lines.foreach(l => out.write((l + "\n").getBytes("UTF-8")))
-    finally out.close()
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"model save rename failed: $dst")
   }
 
-  /** The persisted model of an index, if any; it reflects every committed
-    * re-balance. Memoized builds live for the process (their directories
-    * go with [[graft.Artifacts]]' root at exit), so this reads an index
-    * another verb of this process changed, or one at a caller-owned path.
-    * A `_model` without a recorded schema fails (rebuild the index:
-    * readers never infer), and so does one whose layout is not an `L`.
+  /** The committed model of an index, if it has a snapshot; it reflects
+    * every committed re-balance. Memoized builds live for the process
+    * (their directories go with [[graft.Artifacts]]' root at exit), so this
+    * reads an index another verb of this process changed, or one at a
+    * caller-owned path. A model without a recorded schema fails (rebuild
+    * the index: readers never infer), and so does one whose layout is not
+    * an `L`.
     */
   def loadModel[L <: Layout](spark: SparkSession, indexPath: String)
-                            (implicit ct: scala.reflect.ClassTag[L]): Option[CodesModel[L]] = {
-    val fs = Sinks.fileSystem(spark, indexPath)
-    val p = new Path(indexPath, "_model")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-        finally in.close()
+                            (implicit ct: scala.reflect.ClassTag[L]): Option[CodesModel[L]] =
+    Snapshot.latest(spark, indexPath).map { s =>
+      val lines = s.model
       val head = lines.head.split(" ")
       val schema = lines.lift(1).filter(_.startsWith("schema "))
         .map(l => DataType.fromJson(l.stripPrefix("schema ")).asInstanceOf[StructType])
         .getOrElse(throw new IllegalStateException(
-          s"$p records no table schema; rebuild the index"))
+          s"$indexPath v${s.version} records no table schema; rebuild the index"))
       val body = lines.drop(2).filter(_.nonEmpty)
       val coarse = body.find(_.startsWith("coarse ")).map { l =>
         val Array(_, nlist, iters) = l.split(" ")
@@ -262,49 +250,61 @@ object CodesIndex {
         case "flat" => Ivf.Flat
         case "pq" => Pq.PqCodec.parse(params, body)
         case "sq" => Sq.SqCodec.parse(params, body)
-        case other => throw new IllegalStateException(s"$p: unknown layout $other")
+        case other => throw new IllegalStateException(s"$indexPath: unknown layout $other")
       }
       layout match {
-        case l: L => Some(CodesModel(l, coarse, indexPath, schema))
+        case l: L => CodesModel(l, coarse, indexPath, schema)
         case _ => throw new IllegalArgumentException(
-          s"$p holds a ${head(0)} model, not a ${ct.runtimeClass.getSimpleName}")
+          s"$indexPath holds a ${head(0)} model, not a ${ct.runtimeClass.getSimpleName}")
       }
     }
-  }
 
-  /** The freshest model for an index: the persisted one if present, else
+  /** The freshest model for an index: the committed one if present, else
     * the caller's copy.
     */
   def currentModel[L <: Layout](spark: SparkSession, model: CodesModel[L])
                                (implicit ct: scala.reflect.ClassTag[L]): CodesModel[L] =
     loadModel[L](spark, model.indexPath).getOrElse(model)
 
-  /** The index table, opened with its recorded schema: no schema-inference
-    * job, and partition discovery types `list` from the schema. Every
-    * reader of an index goes through here.
+  /** The index's newest snapshot; every verb reads and commits from one. */
+  private[operators] def snapshot(spark: SparkSession, model: CodesModel[Layout]): Snapshot =
+    Snapshot.latest(spark, model.indexPath).getOrElse(
+      throw new IllegalStateException(s"${model.indexPath} holds no index snapshot"))
+
+  /** The index table, opened from its newest snapshot with its recorded
+    * schema: no listing, no schema-inference job. Every reader of an index
+    * goes through here or [[liveRows]].
     */
   def readIndex(spark: SparkSession, model: CodesModel[Layout]): DataFrame =
-    spark.read.schema(model.schema).parquet(model.indexPath)
+    Snapshot.read(spark, snapshot(spark, model), Snapshot.Data, model.schema)
 
-  private[operators] def tombstonesPath(indexPath: String): String =
-    indexPath + "__tombstones"
-
-  /** The live rows: [[readIndex]] pruned to `lists` (listed tables) minus
-    * the tombstones, read pruned the same way. Every probe reads this.
+  /** The live rows of snapshot `s` (the newest by default): the table
+    * pruned to `lists` (listed tables) minus the tombstones of those
+    * lists; a probe whose lists carry none reads no tombstones. Every
+    * probe reads this.
     */
   private[operators] def liveRows(spark: SparkSession, model: CodesModel[Layout],
-                                  lists: Option[Seq[Int]]): DataFrame = {
-    val all = readIndex(spark, model)
-    val rows = lists.fold(all)(ls => all.filter(col("list").isin(ls: _*)))
-    Sinks.readTombstones(spark, tombstonesPath(model.indexPath), lists)
-      .fold(rows)(t => rows.join(t, Seq("vec_id"), "left_anti"))
+                                  lists: Option[Seq[Int]],
+                                  s: Option[Snapshot] = None): DataFrame = {
+    val snap = s.getOrElse(snapshot(spark, model))
+    def pruned(df: DataFrame) = lists.fold(df)(ls => df.filter(col("list").isin(ls: _*)))
+    val rows = pruned(Snapshot.read(spark, snap, Snapshot.Data, model.schema))
+    if (!snap.files.exists(f => f.kind == Snapshot.Tomb &&
+        lists.forall(ls => f.list.exists(ls.contains)))) rows
+    else rows.join(pruned(Snapshot.read(spark, snap, Snapshot.Tomb,
+        StructType(StructField("vec_id", LongType) +: model.schema.filter(_.name == "list"))))
+      .select("vec_id"), Seq("vec_id"), "left_anti")
   }
 
-  private def write(model: CodesModel[Layout], df: DataFrame, mode: String,
-                    path: String): Unit = {
-    val w = df.write.mode(mode)
-    (if (model.coarse.isDefined) w.partitionBy("list") else w).parquet(path)
-  }
+  /** Write `rows` as the table's files named from `name` and commit them
+    * on `base` (recording `batch`, when given) in one snapshot.
+    */
+  private def commitFiles(model: CodesModel[Layout], base: Snapshot, rows: DataFrame,
+                          name: String, kind: String, batch: Option[String]): Unit =
+    Snapshot.commit(rows.sparkSession, base.copy(
+      files = base.files ++ Snapshot.write(rows, model.indexPath, name, kind,
+        model.coarse.isDefined),
+      batches = base.batches ++ batch))
 
   /** Frozen-model append: `newBatch` is written as the layout's rows
     * (encoded with the trained codec, assigned by the frozen centroids) —
@@ -318,150 +318,87 @@ object CodesIndex {
     */
   def appendToIndex(model: CodesModel[Layout], newBatch: DataFrame): Unit = {
     graft.MutationGuard.claim(model.indexPath)
-    write(model, encode(model, newBatch), "append", model.indexPath)
+    val base = snapshot(newBatch.sparkSession, model)
+    commitFiles(model, base, encode(model, newBatch), s"append-v${base.version + 1}",
+      Snapshot.Data, None)
   }
 
-  /** Replay-idempotent append, the exactly-once form for streaming ingest.
-    * Flat: the batch publishes as one `codes-ingest-<batchId>.parquet`
-    * through [[Sinks.appendBatchFileIdempotent]] (move-if-absent) unless
-    * the root ingest manifest records the batchId as folded by a
-    * compaction. Listed: one staged file per touched list, moved to
-    * `list=X/ingest-<batchId>.parquet` by [[Sinks.ingestStagedLists]]
-    * (which consults the per-list manifests), then the batch-level
-    * `_ingest_done/<batchId>` marker. Once the marker is written a replay
-    * is a no-op even if a re-balance has since moved the batch's rows
-    * across lists; a crash before it means no re-balance ran, so the
-    * replay regenerates identical staging and resumes list by list.
+  /** Replay-idempotent append, the exactly-once form for streaming ingest:
+    * a batch whose id the newest snapshot records as absorbed is a no-op
+    * (also after a compaction folded its files, or a re-balance moved its
+    * rows). Otherwise the batch is written through one `repartition(1)`
+    * task — one `ingest-<batchId>` file per touched list when listed — and
+    * committed with its id. A crash before the commit leaves files no
+    * snapshot names; the replay overwrites them.
     */
   def appendToIndexIdempotent(model: CodesModel[Layout], newBatch: DataFrame,
                               batchId: Long): Unit = {
     graft.MutationGuard.claim(model.indexPath)
-    val fs = Sinks.fileSystem(newBatch.sparkSession, model.indexPath)
-    if (model.coarse.isEmpty) {
-      if (!Sinks.readIngestManifest(fs, new Path(model.indexPath)).contains(batchId))
-        Sinks.appendBatchFileIdempotent(encode(model, newBatch),
-          model.indexPath, s"codes-ingest-$batchId.parquet")
-    } else {
-      val marker = new Path(model.indexPath, s"_ingest_done/$batchId")
-      if (!fs.exists(marker)) {
-        val staging = model.indexPath + s"__ingest_staging_$batchId"
-        write(model, encode(model, newBatch).repartition(1), "overwrite", staging)
-        Sinks.ingestStagedLists(newBatch.sparkSession, staging, model.indexPath, batchId)
-        fs.mkdirs(marker.getParent)
-        fs.create(marker, true).close()
-      }
-    }
+    val base = snapshot(newBatch.sparkSession, model)
+    if (!base.batches(s"append-$batchId"))
+      commitFiles(model, base, encode(model, newBatch).repartition(1), s"ingest-$batchId",
+        Snapshot.Data, Some(s"append-$batchId"))
   }
 
-  /** DELETE: the batch's ids land exactly-once as tombstones in the sibling
-    * `__tombstones` table — flat: one `tombstone-<batchId>.parquet`;
-    * listed: per-list files, the lists resolved by joining the ids against
+  /** DELETE: the batch's ids land exactly-once as tombstone files the
+    * snapshot names next to the data — flat: one `tomb-<batchId>` file;
+    * listed: one per list, the lists resolved by joining the ids against
     * the table's (vec_id, list) columns (no broadcast hint: AQE broadcasts
-    * small batches, a mass takedown shuffles). The table itself is never
+    * small batches, a mass takedown shuffles). Data files are never
     * touched; probes mask the ids before ranking, so deleted vectors never
-    * take rerank slots, and [[compactIndex]] drops them. Ids absent from
-    * the index resolve to no tombstones, so replays after a physical drop
-    * are no-ops.
+    * take rerank slots, and [[compactIndex]] drops them. A replayed batch
+    * id is a no-op.
     */
   def deleteFromIndex(model: CodesModel[Layout], ids: DataFrame, batchId: Long): Unit = {
     graft.MutationGuard.claim(model.indexPath)
-    val tomb = tombstonesPath(model.indexPath)
-    if (model.coarse.isEmpty)
-      Sinks.appendBatchFileIdempotent(ids.select("vec_id").distinct(),
-        tomb, s"tombstone-$batchId.parquet")
-    else {
-      val spark = ids.sparkSession
-      val resolved = readIndex(spark, model).select(col("vec_id"), col("list"))
-        .join(ids.select("vec_id"), "vec_id")
-      val staging = tomb + s"__ingest_staging_$batchId"
-      write(model, resolved.repartition(1), "overwrite", staging)
-      Sinks.ingestStagedLists(spark, staging, tomb, batchId)
+    val spark = ids.sparkSession
+    val base = snapshot(spark, model)
+    if (!base.batches(s"delete-$batchId")) {
+      val tomb = if (model.coarse.isEmpty) ids.select("vec_id").distinct()
+        else Snapshot.read(spark, base, Snapshot.Data, model.schema)
+          .select(col("vec_id"), col("list")).join(ids.select("vec_id"), "vec_id")
+      commitFiles(model, base, tomb.repartition(1), s"tomb-$batchId", Snapshot.Tomb,
+        Some(s"delete-$batchId"))
     }
   }
 
   /** Small-file maintenance and physical delete. A flat table, or a list
     * of a listed one, is rewritten when it holds more than
     * `maxFilesPerList` data files or carries tombstones (the default
-    * rewrites everything), into ceil(rows / `targetRowsPerFile`) files;
-    * the rewrite drops tombstoned rows and consumes the tombstones, and
-    * the folded ingest batchIds go to the ingest manifest, carried forward,
-    * so a batch replayed after compaction stays a no-op. Returns the
-    * rewritten list ids (a rewritten flat table reports list 0, its LUT
-    * list).
+    * rewrites everything), into files of at most `targetRowsPerFile` rows
+    * (`maxRecordsPerFile`: no count job); the rewrite drops tombstoned rows
+    * and consumes the tombstones. All hot lists are rewritten by one write
+    * and replace their files in one snapshot, which keeps every absorbed
+    * batch id, so a batch replayed after compaction stays a no-op. Returns
+    * the rewritten list ids (a rewritten flat table reports list 0, its
+    * LUT list).
     *
-    * Each hot list is rewritten into a SIBLING staging tree
-    * (`<root>__compact_staging/list=X`: inside the root, partition
-    * discovery would misread it as a `list` value) and swapped in; a flat
-    * table is rewritten whole, with its manifest and `_model`, and swapped
-    * in. A crash before a swap leaves that list or table as it was, and a
-    * rerun starts over. PRECONDITION: no other concurrent writer — a batch
-    * landing between the read and the swap would be dropped; the manifest
-    * guards REPLAYED batches only. The ingest stream's own foreachBatch
-    * may call this: micro-batches serialize.
+    * A crash before the commit leaves the table as it was, and a rerun
+    * overwrites the unnamed files. Run one maintenance writer per index:
+    * two compactions from one version would write the same file names. The
+    * ingest stream's own foreachBatch may call this: micro-batches
+    * serialize.
     */
   def compactIndex(spark: SparkSession, model: CodesModel[Layout],
                    maxFilesPerList: Int = 0,
                    targetRowsPerFile: Long = 4000000L): Seq[Int] = {
     graft.MutationGuard.claim(model.indexPath)
-    val fs = Sinks.fileSystem(spark, model.indexPath)
-    val root = new Path(model.indexPath)
-    val tomb = new Path(tombstonesPath(model.indexPath))
-    val stagingRoot = new Path(model.indexPath + "__compact_staging")
-    fs.delete(stagingRoot, true)
-    def rewrite(rows: DataFrame, dir: Path): Unit = {
-      val n = rows.count()
-      rows.repartition(math.max(1L, (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt)
-        .write.mode("overwrite").parquet(dir.toString)
+    val base = snapshot(spark, model)
+    val hot = base.files.groupBy(_.list).collect {
+      case (l, fs) if fs.count(_.kind == Snapshot.Data) > maxFilesPerList ||
+          fs.exists(_.kind == Snapshot.Tomb) => l
+    }.toSeq
+    if (hot.isEmpty) Nil
+    else {
+      val live = liveRows(spark, model, model.coarse.map(_ => hot.flatten), Some(base))
+      val files = Snapshot.write(
+        if (model.coarse.isDefined) live.repartition(col("list")) else live.repartition(1),
+        model.indexPath, s"compact-v${base.version + 1}", Snapshot.Data,
+        model.coarse.isDefined, targetRowsPerFile)
+      Snapshot.commit(spark,
+        base.copy(files = base.files.filterNot(f => hot.contains(f.list)) ++ files))
+      hot.map(_.getOrElse(0)).sorted
     }
-    val done = if (model.coarse.isEmpty) {
-      val files = Sinks.dataFiles(fs, root)
-      if (files.size <= maxFilesPerList && !fs.exists(tomb)) Nil
-      else {
-        val CodesIngest = "codes-ingest-(\\d+)\\.parquet".r
-        val manifest = Sinks.readIngestManifest(fs, root) ++
-          files.map(_.getName).collect { case CodesIngest(id) => id.toLong }
-        rewrite(liveRows(spark, model, None), stagingRoot)
-        Sinks.writeIngestManifest(fs, stagingRoot, manifest)
-        saveModel(spark, model, stagingRoot.toString)
-        Sinks.crashPoint("staged", root)
-        Sinks.swapDirs(spark, stagingRoot.toString, model.indexPath)
-        fs.delete(tomb, true)
-        Seq(0)
-      }
-    } else {
-      val listSchema = StructType(model.schema.filterNot(_.name == "list"))
-      val IngestFile = "ingest-(\\d+)\\.parquet".r
-      val listed = fs.listStatus(root).toSeq
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("list="))
-        .flatMap { d =>
-          val dataFiles = Sinks.dataFiles(fs, d.getPath)
-          // a list is rewritten when fragmented OR when it carries
-          // tombstones (the physical-drop half of the delete verb)
-          val listTomb = new Path(tomb, d.getPath.getName)
-          val hasTomb = fs.exists(listTomb)
-          if (dataFiles.size <= maxFilesPerList && !hasTomb) None
-          else {
-            val manifest = Sinks.readIngestManifest(fs, d.getPath) ++
-              dataFiles.map(_.getName).collect { case IngestFile(id) => id.toLong }
-            val staging = new Path(stagingRoot, d.getPath.getName)
-            val rows0 = spark.read.schema(listSchema).parquet(d.getPath.toString)
-            rewrite(if (!hasTomb) rows0
-              else rows0.join(spark.read.schema("vec_id BIGINT").parquet(listTomb.toString),
-                Seq("vec_id"), "left_anti"), staging)
-            Sinks.writeIngestManifest(fs, staging, manifest)
-            Sinks.swapDirs(spark, staging.toString, d.getPath.toString)
-            if (hasTomb) fs.delete(listTomb, true)
-            Some(d.getPath.getName.stripPrefix("list=").toInt)
-          }
-        }
-      // an emptied tombstone table disappears entirely (probes skip the read)
-      if (fs.exists(tomb) && fs.listStatus(tomb)
-          .forall(s => !s.isDirectory || !s.getPath.getName.startsWith("list=")))
-        fs.delete(tomb, true)
-      listed
-    }
-    fs.delete(stagingRoot, true)
-    done
   }
 
   /** The `nprobe` best lists for a query ([[Ivf.rankLists]]), each with

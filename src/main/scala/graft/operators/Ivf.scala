@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.VectorOps
-import graft.sources.Sinks
+import graft.sources.Snapshot
 import CodesIndex.{Coarse, CodesModel, DotScale, Layout, ShardedModel, VecScale}
 
 /** IVF (inverted-file) approximate nearest neighbor over `embeddings` —
@@ -33,7 +32,7 @@ import CodesIndex.{Coarse, CodesModel, DotScale, Layout, ShardedModel, VecScale}
   * `list`). At nprobe = nlist the search is exhaustive over all lists and
   * equals the brute-force result exactly (asserted in IvfSpec).
   *
-  * The lifecycle — build memo, `_model`, append, exactly-once append,
+  * The lifecycle — build memo, snapshots, append, exactly-once append,
   * delete, compaction and the sharded verbs — is [[CodesIndex]]'s, shared
   * with the codes layouts: this layout ([[Flat]]) stores each vector's own
   * row. What stays here is its exact-cosine scoring (no ADC, no rerank, so
@@ -461,87 +460,54 @@ object Ivf {
     * quantizer skew the list sizes (append is correct but a drifting
     * corpus piles into few lists; `ann_list_sizes` is the detector, this
     * is the action): every list whose size exceeds `maxRatio` × the mean
-    * is SPLIT — a 2-centroid sub-quantizer is trained on that list's
+    * is SPLIT — a 2-centroid sub-quantizer is trained on that list's live
     * vectors ONLY (the same exact integer-grid Lloyd as [[trainCentroids]],
     * so the split is deterministic), its rows are re-assigned between the
-    * two fresh centroid ids and rewritten as two new list directories, and
-    * the returned model carries the updated centroid set. Cold lists are
-    * never opened, never retrained — the standard "split, don't rebuild"
-    * IVF maintenance. Tombstones on a split list are consumed by the
-    * rewrite (rows are being rewritten anyway).
+    * two fresh centroid ids and rewritten as two new lists, and the
+    * returned model carries the updated centroid set. Cold lists are never
+    * opened, never retrained — the standard "split, don't rebuild" IVF
+    * maintenance. Tombstones on a split list are consumed by the rewrite.
     *
     * Content-preserving: the vector SET is unchanged, so an exhaustive
     * probe over the rebalanced model equals one over the original
-    * (asserted in IvfSpec); only pruning quality changes. Run offline
-    * like [[CodesIndex.compactIndex]] (stop ingest streams first). Each
-    * split list and its tombstones are read with the recorded schema, never
-    * inferred. The staged write
-    * lands the two new lists before the old directory is removed, so an
-    * interruption leaves either the old layout or a transiently-larger
-    * table, never data loss for readers of the RETURNED models.
+    * (asserted in IvfSpec); only pruning quality changes. It starts from
+    * the committed model (the caller's copy may predate an earlier
+    * re-balance), writes every split in one write and commits the new lists
+    * with the new model in one snapshot: a crash before the commit leaves
+    * the index as it was.
     */
   def rebalanceIndex(spark: SparkSession, model: IvfModel,
                      maxRatio: Double = 4.0, iters: Int = 2): IvfModel = {
     graft.MutationGuard.claim(model.indexPath)
-    val fs = Sinks.fileSystem(spark, model.indexPath)
-    // the persisted quantizer is the committed truth: prefer it over the
-    // caller's copy (which may predate an earlier re-balance), and remove
-    // any list directory it doesn't know — the remnant of a split that
-    // crashed before its model save (its source list is still intact, so
-    // deleting the orphan loses nothing)
     val m0 = CodesIndex.currentModel(spark, model)
-    val known = m0.coarse.get.centroids.map(_._1).toSet
-    fs.listStatus(new Path(m0.indexPath)).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("list="))
-      .filter(d => !known(d.getPath.getName.stripPrefix("list=").toInt))
-      .foreach(d => fs.delete(d.getPath, true))
-    val sizes = CodesIndex.readIndex(spark, m0)
+    val base = CodesIndex.snapshot(spark, m0)
+    val sizes = Snapshot.read(spark, base, Snapshot.Data, m0.schema)
       .groupBy("list").count().collect()
       .map(r => (r.getInt(0), r.getLong(1))).toMap
     if (sizes.isEmpty) return m0
     val mean = sizes.values.sum.toDouble / sizes.size
     val hot = sizes.filter { case (_, n) => n > maxRatio * mean }.keys.toSeq.sorted
-    if (hot.isEmpty) return m0
-    val stagingRoot = new Path(m0.indexPath + "__rebalance_staging")
-    fs.delete(stagingRoot, true)
-    val listSchema = StructType(m0.schema.filterNot(_.name == "list"))
-    var cur = m0
-    var nextCid = (known ++ sizes.keys).max + 1
-    hot.foreach { cid =>
-      val listDir = new Path(m0.indexPath, s"list=$cid")
-      val listTomb = new Path(CodesIndex.tombstonesPath(m0.indexPath), s"list=$cid")
-      val rows0 = spark.read.schema(listSchema).parquet(listDir.toString)
-      val rows = if (!fs.exists(listTomb)) rows0
-        else rows0.join(spark.read.schema("vec_id BIGINT").parquet(listTomb.toString),
-          Seq("vec_id"), "left_anti")
+    var cents = m0.coarse.get.centroids.toVector
+    var nextCid = (cents.map(_._1) ++ sizes.keys).max + 1
+    val splits = hot.flatMap { cid =>
+      val rows = CodesIndex.liveRows(spark, m0, Some(Seq(cid)), Some(base)).drop("list")
       val sub = trainCentroids(rows, 2, iters)
-      if (sub.length >= 2) {
+      if (sub.length < 2) None
+      else {
         val remap = sub.zipWithIndex.map { case ((_, cq), k) => (nextCid + k, cq) }
-        val staging = new Path(stagingRoot, s"split-$cid")
-        index(rows, remap)
-          .write.mode("overwrite").partitionBy("list").parquet(staging.toString)
-        // COMMIT ORDER per split: move new lists in → persist the updated
-        // model → delete the old list. A crash before the save leaves the
-        // new dirs as not-in-model orphans (cleaned on the next run, old
-        // list intact); a crash after it leaves the old dir as the orphan
-        // — either way exactly one committed copy of every row survives
-        fs.listStatus(staging).toSeq
-          .filter(d => d.isDirectory && d.getPath.getName.startsWith("list="))
-          .foreach { d =>
-            val dst = new Path(m0.indexPath, d.getPath.getName)
-            if (!fs.rename(d.getPath, dst))
-              throw new java.io.IOException(s"rebalance move failed: $dst")
-          }
-        val cents = (cur.coarse.get.centroids.toVector.filterNot(_._1 == cid) ++ remap)
-          .sortBy(_._1).toArray
-        cur = cur.copy(coarse = cur.coarse.map(_.copy(nlist = cents.length, centroids = cents)))
-        CodesIndex.saveModel(spark, cur, cur.indexPath)
-        fs.delete(listDir, true)
-        fs.delete(listTomb, true)
+        cents = (cents.filterNot(_._1 == cid) ++ remap).sortBy(_._1)
         nextCid += sub.length
+        Some(cid -> index(rows, remap))
       }
     }
-    fs.delete(stagingRoot, true)
+    if (splits.isEmpty) return m0
+    val cur = m0.copy(coarse =
+      m0.coarse.map(_.copy(nlist = cents.length, centroids = cents.toArray)))
+    val split = splits.map(_._1).toSet
+    val files = Snapshot.write(splits.map(_._2).reduce(_ unionByName _), m0.indexPath,
+      s"split-v${base.version + 1}", Snapshot.Data, listed = true)
+    Snapshot.commit(spark, base.copy(model = CodesIndex.modelLines(cur),
+      files = base.files.filterNot(_.list.exists(split)) ++ files))
     cur
   }
 

@@ -158,95 +158,20 @@ object Sinks {
     if (fs.exists(target)) Some(spark.read.parquet(tableDir)) else None
   }
 
-  /** Name of the per-directory ingest manifest: batchIds whose
-    * `ingest-<batchId>.parquet` files a compaction has folded away. The
-    * underscore prefix hides it from Spark's file listing, so data scans
-    * never see it; [[ingestStagedLists]] consults it so a crash-replayed
-    * batch whose marker file was compacted stays a no-op instead of
-    * re-appending.
-    */
-  val IngestManifestName = "_ingest_manifest"
-
-  /** BatchIds recorded as already-ingested-then-compacted for `dir`
-    * (empty set when no manifest exists).
-    */
-  def readIngestManifest(fs: org.apache.hadoop.fs.FileSystem,
-                         dir: org.apache.hadoop.fs.Path): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir, IngestManifestName)
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(_.toLong).toSet
-      finally in.close()
-    }
-  }
-
-  /** Overwrite `dir`'s ingest manifest with `batchIds` (sorted, one per
-    * line — deterministic bytes for a given set).
-    */
-  def writeIngestManifest(fs: org.apache.hadoop.fs.FileSystem,
-                          dir: org.apache.hadoop.fs.Path,
-                          batchIds: Set[Long]): Unit = {
-    if (batchIds.isEmpty) return
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, IngestManifestName), true)
-    try out.write((batchIds.toSeq.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
   /** Data files directly under `dir`, without `_SUCCESS` / `.crc` files. */
   private[graft] def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                        dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
     fs.listStatus(dir).toSeq.filter(s => s.isFile &&
       !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-      .map(_.getPath)
-
-  /** The exactly-once ingest move shared by the listed index append and
-    * delete paths (`CodesIndex` with an IVF partitioner):
-    * a `list`-partitioned staging dir holding ONE data file per list has
-    * each file moved to
-    * `target/list=X/ingest-<batchId>.parquet` ONLY if that name is absent
-    * — so a crash-replayed batch regenerates identical staging, finds its
-    * destinations present, and is a no-op, and a crash mid-move resumes
-    * file-by-file. Batches whose marker files a later compaction folded
-    * away stay no-ops too: `CodesIndex.compactIndex` records folded
-    * batchIds in the per-list [[IngestManifestName]], checked here before
-    * the move. [[crashPoint]] `"moved"` fires with each list's target dir
-    * after its move. Deletes the staging dir when done.
-    * Its writers `repartition(1)` the batch before the `list`-partitioned
-    * write, so each list gets one file, as [[appendBatchFileIdempotent]]
-    * does for a batch not known to be one partition.
-    */
-  def ingestStagedLists(spark: org.apache.spark.sql.SparkSession,
-                        staging: String, target: String, batchId: Long): Unit = {
-    val fs = fileSystem(spark, target)
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    fs.listStatus(stagingPath).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("list="))
-      .foreach { d =>
-        val files = dataFiles(fs, d.getPath)
-        require(files.size == 1,
-          s"idempotent ingest expects one file per list, got ${files.size}")
-        val dstDir = new org.apache.hadoop.fs.Path(target, d.getPath.getName)
-        fs.mkdirs(dstDir)
-        val dst = new org.apache.hadoop.fs.Path(dstDir, s"ingest-$batchId.parquet")
-        if (!readIngestManifest(fs, dstDir).contains(batchId) &&
-            !fs.exists(dst) && !fs.rename(files.head, dst))
-          throw new java.io.IOException(s"ingest move failed: $dst")
-        crashPoint("moved", dstDir)
-      }
-    fs.delete(stagingPath, true)
-  }
 
   /** Name of the exclusive-writer lease file under a table/index dir.
     * Underscore-prefixed so data scans never see it.
     */
   val LeaseName = "_writer_lease"
 
-  /** Thrown when a second writer tries to mutate a leased directory —
-    * the FAIL-FAST half of the single-writer contract (the staged-move /
-    * manifest idiom is single-writer by construction; two interleaved
-    * ingests would race the manifest and the per-list file moves).
+  /** Thrown when a second writer tries to mutate a leased directory, or
+    * loses an index snapshot commit ([[Snapshot.commit]]) to another
+    * writer — the FAIL-FAST half of the single-writer contract.
     */
   final class ConcurrentWriterException(msg: String)
     extends IllegalStateException(msg)
@@ -270,9 +195,7 @@ object Sinks {
     * longest batch the writer runs.
     *
     * The lease lives in a SIBLING `<dir>__lock/` directory, not inside
-    * `dir`: compaction verbs atomically swap the whole data dir
-    * ([[swapDirs]] on a flat `CodesIndex` table), which would delete
-    * an in-dir lease out from under its live holder.
+    * `dir`, which holds only the table's own files.
     */
   def withDirLease[T](spark: org.apache.spark.sql.SparkSession, dir: String,
                       owner: String = java.util.UUID.randomUUID().toString,
@@ -303,8 +226,8 @@ object Sinks {
       if (!stale)
         throw new ConcurrentWriterException(
           s"$dir is leased by writer ${holder.map(_._1).getOrElse("<unreadable>")} — " +
-            "a second concurrent writer on one index/table would race the " +
-            "staged-move manifest; run one ingest stream per index")
+            "a second concurrent writer on one index/table would lose its " +
+            "commits; run one ingest stream per index")
       fs.delete(lease, false) // abandoned by a dead writer — break and retry once
       if (!tryAcquire())
         throw new ConcurrentWriterException(
@@ -323,43 +246,20 @@ object Sinks {
     }
   }
 
-  /** The tombstoned vec_ids under an index's sibling `__tombstones` dir —
-    * None when no tombstones exist (the common case: probes pay only a
-    * local existence check). For the `list`-partitioned layouts pass the
-    * probed `lists` so the read stays partition-pruned exactly like the
-    * index scan it filters. Every layout's tombstones hold one `vec_id`
-    * column, so the read takes that fixed schema instead of launching a
-    * schema-inference job; partition discovery still adds `list`.
-    */
-  def readTombstones(spark: org.apache.spark.sql.SparkSession, tombDir: String,
-                     lists: Option[Seq[Int]] = None): Option[DataFrame] = {
-    val fs = fileSystem(spark, tombDir)
-    val p = new org.apache.hadoop.fs.Path(tombDir)
-    if (!fs.exists(p) || fs.listStatus(p).isEmpty) None
-    else {
-      val t = spark.read.schema("vec_id BIGINT").parquet(tombDir)
-      val pruned = lists match {
-        case Some(ls) if t.columns.contains("list") =>
-          t.filter(col("list").isin(ls: _*))
-        case _ => t
-      }
-      Some(pruned.select("vec_id"))
-    }
-  }
-
-  /** Fault-injection seam of the staged publishes, called with the
-    * destination at `"staged"` (before the rename or swap), by
-    * [[appendBatchFileIdempotent]] at `"published"` (before the stage is
-    * removed), and by [[ingestStagedLists]] at `"moved"` (after each
-    * list's move); crash-consistency specs make it throw.
+  /** Fault-injection seam of the staged publishes: called at `"staged"`
+    * right before the publish ([[appendBatchFileIdempotent]]'s rename, with
+    * its destination; an index snapshot create, with the table root), at
+    * `"published"` by [[appendBatchFileIdempotent]] before the stage is
+    * removed, and at `"committed"` by [[Snapshot.commit]] before retention;
+    * crash-consistency specs make it throw.
     */
   @volatile private[graft] var crashPoint: (String, org.apache.hadoop.fs.Path) => Unit =
     (_, _) => ()
 
   /** Idempotent single-file append — the delivery contract of the
-    * foreachBatch result sinks, the sales commit, tombstones and the flat
-    * codes-table ingest: the batch is staged as ONE file and moved to
-    * `outDir/<fileName>` by one rename only if that name is absent, so a
+    * foreachBatch result sinks and the sales commit: the batch is staged
+    * as ONE file and moved to `outDir/<fileName>` by one rename only if
+    * that name is absent, so a
     * crash-replayed batch (identical rows, batchId-derived `fileName`)
     * finds its file present and is a no-op where a blind mode("append")
     * would duplicate it. A replay that finds the file present only removes
@@ -386,7 +286,7 @@ object Sinks {
         s"idempotent append expects one staged file, got ${staged.size}")
       crashPoint("staged", dst)
       fs.mkdirs(dstDir)
-      if (!fs.exists(dst) && !fs.rename(staged.head, dst))
+      if (!fs.exists(dst) && !fs.rename(staged.head.getPath, dst))
         throw new java.io.IOException(s"idempotent append move failed: $dst")
       crashPoint("published", dst)
     }

@@ -841,12 +841,12 @@ object Streams {
     * the quantizer, a codes batch encoded), so a probe immediately sees
     * every landed batch and no rebuild ever rewrites standing lists.
     *
-    * Delivery: EXACTLY-ONCE — each micro-batch lands as deterministic
-    * per-batch files (per touched list when listed), so a crash-replayed
-    * batch is a no-op and a crash mid-move resumes list by list. Each
+    * Delivery: EXACTLY-ONCE — each micro-batch commits its files with its
+    * batch id in one index snapshot, so a crash-replayed batch is a no-op,
+    * and a crash before the commit is overwritten by the replay. Each
     * batch re-takes the index's writer lease, so a SECOND ingest stream on
     * the same index fails fast with a ConcurrentWriterException instead of
-    * silently racing the manifest.
+    * losing its commits.
     *
     * `compactAboveFiles > 0` arms AUTO-COMPACTION: after each batch
     * commits, `CodesIndex.compactIndex` folds the flat table, or each list,
@@ -856,7 +856,7 @@ object Streams {
     * ([[graft.sources.Sinks.fileReport]] is the diagnostic twin). Safe
     * inside foreachBatch: compaction is serialized with the ingest, and a
     * batch replayed after a crash between compaction and checkpoint stays
-    * a no-op via the ingest manifest.
+    * a no-op: the compacted snapshot keeps its batch id.
     */
   def codesIngestSink(vectors: DataFrame,
                       model: CodesModel[Layout],
@@ -927,7 +927,7 @@ object Streams {
     * their owning shard by the build's own md5 hash law and lands
     * exactly-once per (shard, batchId) via the per-shard
     * `CodesIndex.appendToIndexIdempotent` contract — a crash replay finds
-    * every shard's deterministic ingest files present and no-ops shard by
+    * the batch id in every committed shard's snapshot and no-ops shard by
     * shard. The batch is persisted across the per-shard filters (one
     * source read per batch, not per shard — scopedBatch releases it);
     * each shard append runs under its own index lease.
@@ -958,12 +958,12 @@ object Streams {
   /** Streaming takedown sink — the DELETE verb's streaming form, closing
     * the index lifecycle loop (ingest / probe / delete all drivable from
     * streams) for any of the five layouts: each micro-batch of (vec_id)
-    * rows lands as per-batchId tombstones (`CodesIndex.deleteFromIndex`;
-    * per list when listed, resolved from the index's two id columns), so
-    * replays are no-ops. Probes mask the deleted ids immediately (the ADC
+    * rows lands as tombstone files committed with its batch id
+    * (`CodesIndex.deleteFromIndex`; per list when listed, resolved from the
+    * index's two id columns), so replays are no-ops. Probes mask the deleted ids immediately (the ADC
     * probes before their rerank cut); the next compaction (or an armed
     * [[ivfIngestSinkAuto]]) drops them physically. One checkpoint per
-    * index — batchIds key the tombstone files.
+    * index — batchIds key the delete commits.
     */
   def codesDeleteSink(ids: DataFrame,
                       model: CodesModel[Layout],
@@ -998,18 +998,18 @@ object Streams {
       })
 
   /** Self-maintaining ingest — [[codesIngestSink]] plus DRIFT handling for
-    * a raw IVF index: each batch loads the PERSISTED model
-    * (`CodesIndex.currentModel` — the committed truth that survives
+    * a raw IVF index: each batch loads the COMMITTED model
+    * (`CodesIndex.currentModel` — the newest snapshot's, which survives
     * restarts and reflects every earlier split), appends with it,
     * optionally compacts, and when the max/mean list ratio exceeds
-    * `rebalanceAboveRatio` runs `Ivf.rebalanceIndex`, which persists the
+    * `rebalanceAboveRatio` runs `Ivf.rebalanceIndex`, which commits the
     * updated model for the NEXT batch. This is the sink that keeps nprobe
     * pruning effective under a drifting corpus without any external
     * maintenance job.
     *
-    * Exactly-once under evolution: the batch-level `_ingest_done` marker
-    * makes a replayed batch a no-op even though a post-append re-balance
-    * moved its rows across lists. Probe-side readers should resolve
+    * Exactly-once under evolution: the snapshot's batch id makes a replayed
+    * batch a no-op even though a post-append re-balance moved its rows
+    * across lists. Probe-side readers should resolve
     * `CodesIndex.currentModel` rather than hold the initial model.
     */
   def ivfIngestSinkAuto(vectors: DataFrame,

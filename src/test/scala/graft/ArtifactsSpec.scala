@@ -41,11 +41,8 @@ class ArtifactsSpec extends SparkSpec {
   private def ids(df: DataFrame, c: String = "vec_id"): Set[Long] =
     df.select(col(c).cast("long")).as[Long].collect().toSet
 
-  private def live(m: Ivf.IvfModel): Set[Long] = {
-    val rows = CodesIndex.readIndex(spark, m).select("vec_id")
-    ids(graft.sources.Sinks.readTombstones(spark, m.indexPath + "__tombstones", None)
-      .fold(rows)(t => rows.join(t, Seq("vec_id"), "left_anti")))
-  }
+  private def live(m: Ivf.IvfModel): Set[Long] =
+    ids(CodesIndex.readIndex(spark, m)) -- ids(FileSnapshots.tombstones(spark, m.indexPath))
 
   test("re-keying: index builds (build, incremental, sharded, rebalanced)") {
     def e(v: Int) = version("emb", emb, "vec_id", v)
@@ -64,6 +61,16 @@ class ArtifactsSpec extends SparkSpec {
     val want = ids(v2)
     assertFresh(Seq("build", "incremental", "sharded", "rebalanced").zip(all(v2))
       .map { case (store, got) => store -> (got == want) }: _*)
+  }
+
+  test("index reads: one content token per snapshot version") {
+    val m = Ivf.buildIndex("art#snaptoken", emb, nlist = 4)
+    val t = Artifacts.contentToken(CodesIndex.readIndex(spark, m))
+    assert(Artifacts.contentToken(CodesIndex.readIndex(spark, m)) === t)
+    CodesIndex.deleteFromIndex(m, emb.filter($"vec_id" === 1L).select("vec_id"), 0L)
+    val t2 = Artifacts.contentToken(CodesIndex.readIndex(spark, m))
+    assert(t2 != t, "a commit kept the previous token")
+    assert(Artifacts.contentToken(CodesIndex.readIndex(spark, m)) === t2)
   }
 
   test("re-keying: text stores (embeddings, postings, positions, stats, pairs, bloom, cover, chunks, bpe)") {

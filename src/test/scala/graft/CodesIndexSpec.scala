@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import graft.operators.{CodesIndex, Ivf, IvfPq, IvfSq, Pq, Sq}
 import graft.operators.CodesIndex.{Codec, CodesModel, Layout}
+import graft.sources.{Sinks, Snapshot}
 
 /** One lifecycle script over the five layouts (raw IVF and the four
   * compressed-codes ones): every layout must build, ingest exactly-once,
@@ -70,8 +71,8 @@ class CodesIndexSpec extends SparkSpec {
       assert(probes(model) === single, "compaction changed probe results")
     }
     assert(inferred.isEmpty, s"schema-inference jobs: ${inferred.mkString(", ")}")
-    assert(!new java.io.File(model.indexPath + "__tombstones").exists())
-    assert(!new java.io.File(model.indexPath + "__compact_staging").exists())
+    assert(FileSnapshots.named(spark, model.indexPath, Snapshot.Tomb).isEmpty)
+    assert(new java.io.File(model.indexPath).list().forall(!_.startsWith("_staging")))
     assert(CodesIndex.readIndex(spark, model).filter($"vec_id" % 7 === 3).isEmpty)
 
     val compacted = FileSnapshots.snapshot(model.indexPath)
@@ -90,9 +91,50 @@ class CodesIndexSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       CodesIndex.loadModel[Sq.SqCodec](spark, model.indexPath))
     val old = java.nio.file.Files.createTempDirectory("graft-codes-noschema")
-    java.nio.file.Files.write(old.resolve("_model"), "sq 1\nS 0 0 1\n".getBytes("UTF-8"))
+    java.nio.file.Files.createDirectories(old.resolve("_snapshots"))
+    java.nio.file.Files.write(old.resolve("_snapshots/1"), "sq 1\nS 0 0 1\n".getBytes("UTF-8"))
     val e = intercept[IllegalStateException](
       CodesIndex.loadModel[Codec](spark, old.toString))
     assert(e.getMessage.contains("schema"))
+  }
+
+  test("20 listed ingests and a compaction leave two snapshots; replays add no rows") {
+    val model = Ivf.buildIndex(s"$sfDir#codes-retention", emb.filter($"vec_id" % 5 =!= 0),
+      nlist = 8)
+    def batch(b: Long) = emb.filter($"vec_id" % 100 === b * 5)
+    (0L until 20L).foreach(b => CodesIndex.appendToIndexIdempotent(model, batch(b), b))
+    CodesIndex.compactIndex(spark, model)
+    val root = new java.io.File(model.indexPath)
+    assert(root.list().forall(n => n.startsWith("list=") || n == "_snapshots"),
+      root.list().mkString(", "))
+    assert(new java.io.File(root, "_snapshots").list().count(_.forall(_.isDigit)) <= 2)
+    val rows = CodesIndex.readIndex(spark, model).count()
+    assert(rows === emb.count())
+    (0L until 20L).foreach(b => CodesIndex.appendToIndexIdempotent(model, batch(b), b))
+    assert(CodesIndex.readIndex(spark, model).count() === rows)
+  }
+
+  test("two commits from one version: the loser throws, its files stay unread") {
+    val model = Ivf.buildIndex(s"$sfDir#codes-race", emb.filter($"vec_id" % 5 =!= 0), nlist = 8)
+    val root = new org.apache.hadoop.fs.Path(model.indexPath)
+    val mine = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 === 0)
+    val theirs = emb.filter($"vec_id" % 5 === 0 && $"vec_id" % 2 =!= 0)
+    // the other writer commits from the same version right before this
+    // writer's snapshot create
+    Sinks.crashPoint = (p, d) => if (p == "staged" && d == root) {
+      Sinks.crashPoint = (_, _) => ()
+      CodesIndex.appendToIndexIdempotent(model, theirs, 2L)
+    }
+    try intercept[Sinks.ConcurrentWriterException](
+      CodesIndex.appendToIndexIdempotent(model, mine, 1L))
+    finally Sinks.crashPoint = (_, _) => ()
+    val s = Snapshot.latest(spark, model.indexPath).get
+    assert(s.batches === Set("append-2"))
+    assert(s.files.forall(!_.path.contains("ingest-1")))
+    assert(FileSnapshots.snapshot(model.indexPath).keys.exists(_.contains("ingest-1-")),
+      "the loser wrote no files")
+    val got = CodesIndex.readIndex(spark, model).select("vec_id")
+    val want = emb.filter($"vec_id" % 5 =!= 0).unionByName(theirs).select("vec_id")
+    assert(same(got, want))
   }
 }

@@ -42,10 +42,8 @@ class CorpusIndexSpec extends SparkSpec {
       .select(col("doc_id").as("vec_id"))
     val survivors = embCur.join(doomed, Seq("vec_id"), "left_anti")
     // 1. the materialized live set is exactly the from-scratch survivors
-    val rows = spark.read.parquet(model.indexPath).select("vec_id")
-    val live = graft.sources.Sinks
-      .readTombstones(spark, model.indexPath + "__tombstones", None)
-      .fold(rows)(t => rows.join(t, Seq("vec_id"), "left_anti"))
+    val rows = graft.operators.CodesIndex.readIndex(spark, model).select("vec_id")
+    val live = rows.join(FileSnapshots.tombstones(spark, model.indexPath), Seq("vec_id"), "left_anti")
       .as[Long].collect().toSet
     assert(live === survivors.select("vec_id").as[Long].collect().toSet)
     // 2. probe ≡ brute force over the from-scratch survivors

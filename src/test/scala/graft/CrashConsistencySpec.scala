@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.DataFrame
 import graft.operators.{CodesIndex, Ivf, IvfPq, Pq, Pretrain}
 import graft.operators.CodesIndex.{CodesModel, Layout}
-import graft.sources.Sinks
+import graft.sources.{Sinks, Snapshot}
 
 /** Fault injection for the staged publish verbs: a simulated crash at each
   * step boundary, then a replay, must converge to what an uninterrupted run
-  * publishes — the same rows and the same bytes — and leave no staging dir
-  * behind.
+  * publishes — the same rows and the same bytes, or for an index verb the
+  * same rows and probe answers with every file named by a snapshot — and
+  * leave no staging dir behind.
   */
 class CrashConsistencySpec extends SparkSpec {
   import spark.implicits._
@@ -49,65 +50,81 @@ class CrashConsistencySpec extends SparkSpec {
       assert(!staging.exists(), "replay left the staging dir behind")
     }
 
-  test("flat codes compaction: crash between the staged rewrite and the swap, rerun converges") {
-    val emb = Tables.embeddings(spark, sfDir)
-    def lifecycle(key: String) = {
-      val m = Pq.buildIndex(key, emb.filter($"vec_id" % 5 =!= 0))
-      CodesIndex.appendToIndexIdempotent(m, emb.filter($"vec_id" % 5 === 0), 3L)
-      CodesIndex.deleteFromIndex(m, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 4L)
-      m
-    }
-    val clean = lifecycle(sfDir + "#crashcompact-clean")
-    CodesIndex.compactIndex(spark, clean)
-    val model = lifecycle(sfDir + "#crashcompact")
-    val root = new java.io.File(model.indexPath)
-    val staging = new java.io.File(model.indexPath + "__compact_staging")
-    crashingAt("staged", root.getParent, root.getName) {
-      CodesIndex.compactIndex(spark, model)
-    }
-    assert(staging.exists())
-    CodesIndex.compactIndex(spark, model) // rerun
-    def manifest(m: CodesIndex.CodesModel[CodesIndex.Codec]) = Sinks.readIngestManifest(
-      Sinks.fileSystem(spark, m.indexPath), new org.apache.hadoop.fs.Path(m.indexPath))
-    assert(manifest(model) === Set(3L) && manifest(model) === manifest(clean))
-    val got = CodesIndex.readIndex(spark, model)
-    val want = CodesIndex.readIndex(spark, clean)
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-    assert(!staging.exists(), "rerun left the staging dir behind")
-    assert(!new java.io.File(model.indexPath + "__tombstones").exists())
-    assert(CodesIndex.loadModel[CodesIndex.Codec](spark, model.indexPath).nonEmpty)
-  }
+  /** An index verb under fault injection: the index it runs on (built,
+    * then prepared) and the verb itself; its replay is a second call.
+    */
+  private final case class Verb(build: (String, DataFrame) => CodesModel[Layout],
+                                prepare: CodesModel[Layout] => Unit,
+                                run: CodesModel[Layout] => Unit)
 
-  private val listed: Seq[(String, (String, DataFrame) => CodesModel[Layout])] = Seq(
-    "raw IVF" -> ((key, df) => Ivf.buildIndex(key, df, nlist = 8)),
-    "IVF-PQ" -> ((key, df) => IvfPq.buildIndex(key, df, nlist = 8)))
+  private lazy val emb = Tables.embeddings(spark, sfDir)
+  private def ingest(m: CodesModel[Layout]): Unit =
+    CodesIndex.appendToIndexIdempotent(m, emb.filter($"vec_id" % 5 === 0), 3L)
+  private def delete(m: CodesModel[Layout]): Unit =
+    CodesIndex.deleteFromIndex(m, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 4L)
+  private val ivf: (String, DataFrame) => CodesModel[Layout] =
+    (key, df) => Ivf.buildIndex(key, df, nlist = 8)
 
-  for ((name, build) <- listed)
-    test(s"listed ingest ($name): crash after the first list's move, replay converges") {
-      val emb = Tables.embeddings(spark, sfDir)
+  private val verbs: Seq[(String, Verb)] = Seq(
+    "listed append (raw IVF)" -> Verb(ivf, _ => (), ingest),
+    "listed append (IVF-PQ)" -> Verb((key, df) => IvfPq.buildIndex(key, df, nlist = 8),
+      _ => (), ingest),
+    "listed delete" -> Verb(ivf, ingest, delete),
+    "flat compaction" -> Verb((key, df) => Pq.buildIndex(key, df),
+      m => { ingest(m); delete(m) }, m => CodesIndex.compactIndex(spark, m)),
+    "listed compaction" -> Verb(ivf, m => { ingest(m); delete(m) },
+      m => CodesIndex.compactIndex(spark, m)),
+    "rebalance" -> Verb(ivf, m => { ingest(m); delete(m) },
+      m => Ivf.rebalanceIndex(spark, m.asInstanceOf[Ivf.IvfModel], maxRatio = 1.01)))
+
+  /** Paths of the files every snapshot left in `_snapshots` names. */
+  private def retained(root: String): Set[String] =
+    new java.io.File(root, "_snapshots").listFiles().toSeq
+      .filter(_.getName.forall(_.isDigit))
+      .flatMap(f => scala.io.Source.fromFile(f, "UTF-8").getLines().toVector)
+      .filter(_.startsWith("file ")).map(_.split(" ", 6)(5)).toSet
+
+  private def probes(m: CodesModel[Layout]): Seq[Seq[(Long, Double)]] =
+    (0L until 3L).map { q =>
+      (CodesIndex.loadModel[Layout](spark, m.indexPath).get match {
+        case c if c.layout == Ivf.Flat =>
+          val cur = c.asInstanceOf[Ivf.IvfModel]
+          Ivf.probe(cur, emb, q, 10, nprobe = cur.coarse.get.centroids.length)
+        case c =>
+          val cur = c.asInstanceOf[CodesModel[CodesIndex.Codec]]
+          CodesIndex.probe(cur, emb, q, 10, nprobe = cur.coarse.fold(1)(_.nlist))
+      }).as[(Long, Double)].collect().toSeq
+    }
+
+  for ((name, verb) <- verbs; point <- Seq("staged", "committed"))
+    test(s"$name: crash at '$point', replay converges") {
       val base = emb.filter($"vec_id" % 5 =!= 0)
-      val batch = emb.filter($"vec_id" % 5 === 0)
-      val clean = build(s"$sfDir#crashingest-clean-$name", base)
-      CodesIndex.appendToIndexIdempotent(clean, batch, 3L)
-      val model = build(s"$sfDir#crashingest-$name", base)
+      val key = s"$sfDir#crash-${name.replaceAll("\\W", "")}"
+      val clean = verb.build(s"$key-clean", base)
+      verb.prepare(clean)
+      verb.run(clean)
+      val model = verb.build(s"$key-$point", base)
+      verb.prepare(model)
+      val before = Snapshot.latest(spark, model.indexPath).get.version
       val root = new org.apache.hadoop.fs.Path(model.indexPath)
-      val staging = new java.io.File(model.indexPath + "__ingest_staging_3")
-      val marker = new java.io.File(model.indexPath, "_ingest_done/3")
-      Sinks.crashPoint = (p, d) => if (p == "moved" && d.getParent == root) throw new InjectedCrash
-      try intercept[InjectedCrash](CodesIndex.appendToIndexIdempotent(model, batch, 3L))
+      Sinks.crashPoint = (p, d) => if (p == point && d == root) throw new InjectedCrash
+      try intercept[InjectedCrash](verb.run(model))
       finally Sinks.crashPoint = (_, _) => ()
-      // one list landed, the rest are still staged, and the batch is not done
-      assert(staging.exists() && !marker.exists())
-      assert(new java.io.File(model.indexPath).listFiles().toSeq
-        .exists(d => new java.io.File(d, "ingest-3.parquet").exists()))
+      // committed iff the crash came after the snapshot create
+      assert(Snapshot.latest(spark, model.indexPath).get.version ===
+        before + (if (point == "committed") 1 else 0))
 
-      CodesIndex.appendToIndexIdempotent(model, batch, 3L) // replay
+      verb.run(model) // replay
       val got = CodesIndex.readIndex(spark, model)
       val want = CodesIndex.readIndex(spark, clean)
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-      assert(got.count() === emb.count())
-      assert(!staging.exists(), "replay left the staging dir behind")
-      assert(marker.exists(), "replay wrote no _ingest_done marker")
+      assert(probes(model) === probes(clean))
+      assert(Snapshot.latest(spark, model.indexPath).get.batches ===
+        Snapshot.latest(spark, clean.indexPath).get.batches)
+      val files = FileSnapshots.snapshot(model.indexPath).keys
+        .filter(p => !p.startsWith("_snapshots") && !p.split("/").last.startsWith("."))
+      assert(files.nonEmpty && files.forall(retained(model.indexPath)),
+        s"files no snapshot names: ${files.filterNot(retained(model.indexPath))}")
     }
 
   test("pretrain state: a version without _done is skipped, and replay converges") {

@@ -34,7 +34,7 @@ class IvfPqSpec extends SparkSpec {
     assert((after.keySet -- before.keySet).nonEmpty)
     // stored (vec_id, codes, list) == frozen assignment + residual encode
     // of the whole union
-    val stored = spark.read.parquet(incModel.indexPath)
+    val stored = CodesIndex.readIndex(spark, incModel)
       .select($"vec_id", $"codes", $"list".cast("int").as("list"))
     val expected = CodesIndex.encode(incModel, emb)
     assert(stored.exceptAll(expected).isEmpty, "stored has codes a fresh encode lacks")
@@ -51,7 +51,7 @@ class IvfPqSpec extends SparkSpec {
     CodesIndex.appendToIndexIdempotent(incModel, b1, batchId = 0L)
     assert(FileSnapshots.snapshot(incModel.indexPath) === afterOnce)
     CodesIndex.appendToIndexIdempotent(incModel, b2, batchId = 1L)
-    val stored = spark.read.parquet(incModel.indexPath)
+    val stored = CodesIndex.readIndex(spark, incModel)
       .select($"vec_id", $"codes", $"list".cast("int").as("list"))
     val expected = CodesIndex.encode(incModel, emb)
     assert(stored.exceptAll(expected).isEmpty)
@@ -146,7 +146,7 @@ class IvfPqSpec extends SparkSpec {
     // per-shard frozen-model encode, ADC and the re-cut lose nothing
     CodesIndex.appendToShardedIndexIdempotent(sm, batch, batchId = 5L)
     CodesIndex.appendToShardedIndexIdempotent(sm, batch, batchId = 5L) // replay no-op
-    assert(sm.shards.map(m => spark.read.parquet(m.indexPath).count()).sum
+    assert(sm.shards.map(m => CodesIndex.readIndex(spark, m).count()).sum
       === emb.count())
     val exact = Similarity.knnJoin(emb, qs, 5)
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq

@@ -111,7 +111,7 @@ class IvfSpec extends SparkSpec {
     assert(touched.subsetOf(batchLists),
       s"append wrote into unassigned lists: ${touched -- batchLists}")
     // stored index == frozen re-assignment of the whole union
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = CodesIndex.readIndex(spark, model)
       .select($"vec_id", $"list".cast("int").as("list"))
     val expected = Ivf.index(emb, model.coarse.get.centroids).select($"vec_id", $"list")
     assert(stored.exceptAll(expected).isEmpty, "stored has rows a fresh assignment lacks")
@@ -130,7 +130,7 @@ class IvfSpec extends SparkSpec {
     assert(FileSnapshots.snapshot(model.indexPath) === afterOnce)
     // a NEW batch lands; content equals one frozen assignment of the union
     CodesIndex.appendToIndexIdempotent(model, b2, batchId = 1L)
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = CodesIndex.readIndex(spark, model)
       .select($"vec_id", $"list".cast("int").as("list"))
     val expected = Ivf.index(emb, model.coarse.get.centroids).select($"vec_id", $"list")
     assert(stored.exceptAll(expected).isEmpty)
@@ -147,7 +147,7 @@ class IvfSpec extends SparkSpec {
     }
     val before = Ivf.probe(model, emb, 0L, 10, nprobe = 8)
       .as[(Long, Double)].collect().toSeq
-    val preSnap = FileSnapshots.snapshot(model.indexPath)
+    val preSnap = FileSnapshots.named(spark, model.indexPath)
     def filesPerList(snap: Map[String, (Long, String)]): Map[String, Int] =
       snap.keys.filter(_.contains("list="))
         .groupBy(_.split("/")(0)).view.mapValues(_.size).toMap
@@ -155,7 +155,7 @@ class IvfSpec extends SparkSpec {
     assert(preCounts.values.max > 4, "appends should have fragmented a list")
     val compacted = CodesIndex.compactIndex(spark, model, maxFilesPerList = 4)
     assert(compacted.nonEmpty)
-    val postSnap = FileSnapshots.snapshot(model.indexPath)
+    val postSnap = FileSnapshots.named(spark, model.indexPath)
     val postCounts = filesPerList(postSnap)
     // hot lists shrank; cold lists byte-identical
     compacted.foreach { l =>
@@ -174,27 +174,26 @@ class IvfSpec extends SparkSpec {
 
   test("ingest batch replayed AFTER compaction folded its marker is still a no-op") {
     // the exactly-once hole compaction would otherwise open: compacting
-    // erases ingest-<batchId>.parquet markers, so a crash-replayed batch
-    // would find its destination absent and re-append — the per-list
-    // manifest written by compactLists must keep the replay a no-op
+    // folds the batch's ingest-<batchId> files away, so the replay must
+    // find the batch id in the compacted snapshot
     val base = emb.filter($"vec_id" % 5 =!= 0)
     val model = Ivf.buildIndex(sfDir + "#manifestspec", base, nlist = 8)
     val b1 = emb.filter($"vec_id" % 5 === 0)
     CodesIndex.appendToIndexIdempotent(model, b1, batchId = 42L)
-    val nBefore = spark.read.parquet(model.indexPath).count()
+    val nBefore = CodesIndex.readIndex(spark, model).count()
     // fold every list (threshold 0 ⇒ every non-empty list rewrites)
     CodesIndex.compactIndex(spark, model, maxFilesPerList = 0)
-    assert(FileSnapshots.snapshot(model.indexPath).keys
+    assert(FileSnapshots.named(spark, model.indexPath).keys
       .forall(!_.contains("ingest-42")), "markers should be folded away")
     val afterCompact = FileSnapshots.snapshot(model.indexPath)
     CodesIndex.appendToIndexIdempotent(model, b1, batchId = 42L) // crash replay
     assert(FileSnapshots.snapshot(model.indexPath) === afterCompact,
       "replayed batch re-appended after compaction")
-    assert(spark.read.parquet(model.indexPath).count() === nBefore)
-    // staging happened OUTSIDE the table root: no list=...__compact_staging
-    // partition value pollution, and no orphaned staging dir
-    assert(afterCompact.keys.forall(!_.contains("compact_staging")))
-    assert(!new java.io.File(model.indexPath + "__compact_staging").exists())
+    assert(CodesIndex.readIndex(spark, model).count() === nBefore)
+    // no orphaned staging dir: the root holds the lists and the snapshots
+    assert(afterCompact.keys.forall(!_.contains("_staging")))
+    assert(new java.io.File(model.indexPath).list()
+      .forall(n => n.startsWith("list=") || n == "_snapshots"))
   }
 
   test("exhaustive probe over an incrementally-built index equals brute force on the union") {
@@ -210,15 +209,15 @@ class IvfSpec extends SparkSpec {
 
   test("deleteFromIndex: index untouched, probes mask, compaction drops physically") {
     val model = Ivf.buildIndex(sfDir + "#delspec", emb, nlist = 8)
-    val before = FileSnapshots.snapshot(model.indexPath)
+    val before = FileSnapshots.named(spark, model.indexPath)
     val ids = emb.filter($"vec_id" % 7 === 3).select("vec_id")
     CodesIndex.deleteFromIndex(model, ids, batchId = 0L)
-    // deletes are sibling-table metadata: not one index byte changes
-    assert(FileSnapshots.snapshot(model.indexPath) === before)
-    // replayed delete batch is a no-op on the tombstone table too
-    val tombSnap = FileSnapshots.snapshot(model.indexPath + "__tombstones")
+    // deletes are tombstone files: not one data byte changes
+    assert(FileSnapshots.named(spark, model.indexPath) === before)
+    // replayed delete batch is a no-op: no file and no snapshot changes
+    val tombSnap = FileSnapshots.snapshot(model.indexPath)
     CodesIndex.deleteFromIndex(model, ids, batchId = 0L)
-    assert(FileSnapshots.snapshot(model.indexPath + "__tombstones") === tombSnap)
+    assert(FileSnapshots.snapshot(model.indexPath) === tombSnap)
     // exhaustive probe over base+tombstones equals brute force over survivors
     val exact = Similarity.topK(
         emb.filter($"vec_id" % 7 =!= 3 || $"vec_id" === 0L), 0L, 10)
@@ -229,8 +228,8 @@ class IvfSpec extends SparkSpec {
     // probe result is unchanged through the swap
     val pBefore = Ivf.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
     CodesIndex.compactIndex(spark, model, maxFilesPerList = Int.MaxValue)
-    assert(!new java.io.File(model.indexPath + "__tombstones").exists())
-    assert(spark.read.parquet(model.indexPath)
+    assert(FileSnapshots.named(spark, model.indexPath, graft.sources.Snapshot.Tomb).isEmpty)
+    assert(CodesIndex.readIndex(spark, model)
       .filter($"vec_id" % 7 === 3).count() === 0)
     assert(Ivf.probe(model, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === pBefore)
@@ -250,7 +249,7 @@ class IvfSpec extends SparkSpec {
         .withColumn("vec_id", $"vec_id" + lit(i.toLong * 10000000L)))
     }
     def ratio(m: Ivf.IvfModel): Double = {
-      val sizes = spark.read.parquet(m.indexPath)
+      val sizes = CodesIndex.readIndex(spark, m)
         .groupBy("list").count().as[(Int, Long)].collect().map(_._2)
       sizes.max.toDouble / (sizes.sum.toDouble / sizes.length)
     }
@@ -265,7 +264,7 @@ class IvfSpec extends SparkSpec {
       .as[(Long, Double)].collect().toSeq === exhaustive)
     assert(ratio(m2) < before, s"ratio did not improve: $before -> ${ratio(m2)}")
     // row set unchanged
-    assert(spark.read.parquet(m2.indexPath).count() ===
+    assert(CodesIndex.readIndex(spark, m2).count() ===
       emb.count() + 3 * hotVecs.count())
   }
 
@@ -345,11 +344,11 @@ class IvfSpec extends SparkSpec {
       nShards = 3, nlist = 4)
     // every vector lands in exactly one shard index
     val counts = m.shards.map(s =>
-      spark.read.parquet(s.indexPath).count())
+      CodesIndex.readIndex(spark, s).count())
     assert(counts.sum === emb.count())
     assert(counts.forall(_ > 0), s"empty shard in $counts")
     val ids = m.shards.flatMap(s =>
-      spark.read.parquet(s.indexPath).select("vec_id").as[Long].collect())
+      CodesIndex.readIndex(spark, s).select("vec_id").as[Long].collect())
     assert(ids.distinct.length === ids.length, "a vec_id appears in two shards")
     // exhaustive per-shard probe + union re-cut equals brute force exactly
     val probed = Ivf.probeSharded(m, emb, 0L, 10, nprobe = 4)
@@ -381,7 +380,7 @@ class IvfSpec extends SparkSpec {
     // routed idempotent append: replay is a no-op, content = base ∪ batch
     CodesIndex.appendToShardedIndexIdempotent(m, batch, batchId = 7L)
     CodesIndex.appendToShardedIndexIdempotent(m, batch, batchId = 7L)
-    assert(m.shards.map(s => spark.read.parquet(s.indexPath).count()).sum
+    assert(m.shards.map(s => CodesIndex.readIndex(spark, s).count()).sum
       === emb.count())
     val probed = Ivf.probeSharded(m, emb, 0L, 10, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
@@ -634,13 +633,14 @@ class IvfSpec extends SparkSpec {
   test("build schema is recorded in _centroids and survives saveModel → loadModel") {
     val model = Ivf.buildIndex(sfDir + "#schema", emb, nlist = 8)
     // the recorded schema is exactly what an inferred read would produce
-    assert(model.schema === spark.read.parquet(model.indexPath).schema)
+    assert(model.schema === FileSnapshots.inferred(spark, model.indexPath).schema)
     assert(model.schema.fieldNames.toSeq === emb.columns.toSeq :+ "list")
     val loaded = CodesIndex.loadModel[Ivf.Flat.type](spark, model.indexPath).get
     assert(loaded.schema === model.schema)
     // a quantizer file without a recorded schema is refused, never inferred
     val old = java.nio.file.Files.createTempDirectory("graft-ivf-noschema")
-    java.nio.file.Files.write(old.resolve("_model"),
+    java.nio.file.Files.createDirectories(old.resolve("_snapshots"))
+    java.nio.file.Files.write(old.resolve("_snapshots/1"),
       "ivfflat\ncoarse 1 2\nC 0 1,2,3\n".getBytes("UTF-8"))
     val e = intercept[IllegalStateException](CodesIndex.loadModel[Ivf.Flat.type](spark, old.toString))
     assert(e.getMessage.contains("schema"))
@@ -652,7 +652,7 @@ class IvfSpec extends SparkSpec {
     CodesIndex.appendToIndexIdempotent(model, emb.filter($"vec_id" % 5 === 0), 1L)
     CodesIndex.deleteFromIndex(model, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 2L)
     // the detector sees the inferred read this change removed
-    assert(InferenceJobs.of(spark)(spark.read.parquet(model.indexPath).count()).nonEmpty)
+    assert(InferenceJobs.of(spark)(FileSnapshots.inferred(spark, model.indexPath).count()).nonEmpty)
     val jobs = InferenceJobs.of(spark) {
       Ivf.probe(model, emb, 0L, 10).collect()
       Ivf.probeAll(model, emb.filter($"vec_id" < 3), 10).collect()
@@ -673,14 +673,14 @@ class IvfSpec extends SparkSpec {
     val model = Ivf.buildIndex(sfDir + "#inferparity", base, nlist = 8)
     CodesIndex.appendToIndex(model, emb.filter($"vec_id" % 5 === 0))
     CodesIndex.deleteFromIndex(model, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 0L)
-    val inferred = spark.read.parquet(model.indexPath)
+    val inferred = FileSnapshots.inferred(spark, model.indexPath)
     val recorded = CodesIndex.readIndex(spark, model)
     assert(recorded.schema === inferred.schema)
     assert(recorded.exceptAll(inferred).isEmpty && inferred.exceptAll(recorded).isEmpty)
     // exhaustive probes vs the same ranking over inferred reads of the
     // index and its tombstones
     val live = inferred.join(
-      spark.read.parquet(model.indexPath + "__tombstones").select("vec_id"),
+      FileSnapshots.inferred(spark, model.indexPath, graft.sources.Snapshot.Tomb).select("vec_id"),
       Seq("vec_id"), "left_anti")
     def reference(q: Long): Seq[(Long, Double)] = {
       val qv = emb.filter($"vec_id" === q).select($"embedding".as("q_emb"))
@@ -722,7 +722,7 @@ class IvfSpec extends SparkSpec {
       batch.select(batch.columns.reverse.map(col) :+ lit("x").as("extra"): _*))
     assert(CodesIndex.readIndex(spark, model).filter($"vec_id" >= 90000000L).count()
       === batch.count())
-    assert(spark.read.parquet(model.indexPath).schema === model.schema)
+    assert(FileSnapshots.inferred(spark, model.indexPath).schema === model.schema)
     // a payload column the batch lacks lands as NULL (a bare vector stream
     // into an index built over the labelled table)
     CodesIndex.appendToIndexIdempotent(model, batch.drop("label")

@@ -31,7 +31,7 @@ class IvfSqSpec extends SparkSpec {
       assert(after.get(p).contains(sig), s"pre-existing file changed: $p")
     }
     assert((after.keySet -- before.keySet).nonEmpty)
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = CodesIndex.readIndex(spark, model)
       .select($"vec_id", $"codes", $"list".cast("int").as("list"))
     val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty, "stored has codes a fresh encode lacks")
@@ -48,7 +48,7 @@ class IvfSqSpec extends SparkSpec {
     CodesIndex.appendToIndexIdempotent(model, b1, batchId = 0L)
     assert(FileSnapshots.snapshot(model.indexPath) === afterOnce)
     CodesIndex.appendToIndexIdempotent(model, b2, batchId = 1L)
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = CodesIndex.readIndex(spark, model)
       .select($"vec_id", $"codes", $"list".cast("int").as("list"))
     val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
@@ -57,10 +57,10 @@ class IvfSqSpec extends SparkSpec {
 
   test("deleteFromIndex masks the ADC ranking; compactLists drops physically") {
     val model = IvfSq.buildIndex(sfDir + "#delspec", emb)
-    val before = FileSnapshots.snapshot(model.indexPath)
+    val before = FileSnapshots.named(spark, model.indexPath)
     CodesIndex.deleteFromIndex(model,
       emb.filter($"vec_id" % 7 === 3).select("vec_id"), batchId = 0L)
-    assert(FileSnapshots.snapshot(model.indexPath) === before,
+    assert(FileSnapshots.named(spark, model.indexPath) === before,
       "delete must not touch the codes table")
     val got = CodesIndex.probe(model, emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
@@ -68,7 +68,7 @@ class IvfSqSpec extends SparkSpec {
     val pBefore = CodesIndex.probe(model, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq
     CodesIndex.compactIndex(spark, model, maxFilesPerList = Int.MaxValue)
-    assert(spark.read.parquet(model.indexPath)
+    assert(CodesIndex.readIndex(spark, model)
       .filter($"vec_id" % 7 === 3).count() === 0)
     assert(CodesIndex.probe(model, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === pBefore)

@@ -22,7 +22,7 @@ class PqSpec extends SparkSpec {
 
   test("codes table is m small ints per vector (the compressed index)") {
     val model = Pq.buildIndex(sfDir + "#spec", emb)
-    val codes = spark.read.parquet(model.indexPath)
+    val codes = CodesIndex.readIndex(spark, model)
     assert(codes.count() === emb.count())
     val rows = codes.select("codes").as[Seq[Int]].collect()
     assert(rows.forall(_.length === 8))
@@ -41,7 +41,7 @@ class PqSpec extends SparkSpec {
     }
     assert((after.keySet -- before.keySet).nonEmpty)
     // stored codes == encoding the union with the frozen codebooks
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = CodesIndex.readIndex(spark, model)
     val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty, "stored has codes a fresh encode lacks")
     assert(expected.exceptAll(stored).isEmpty, "fresh encode has codes the stored table lacks")
@@ -69,9 +69,9 @@ class PqSpec extends SparkSpec {
     val afterOnce = FileSnapshots.snapshot(model.indexPath)
     CodesIndex.appendToIndexIdempotent(model, b1, batchId = 0L)
     assert(FileSnapshots.snapshot(model.indexPath) === afterOnce)
-    assert(!new java.io.File(model.indexPath + "__staging_codes-ingest-0.parquet").exists())
+    assert(new java.io.File(model.indexPath).list().forall(!_.startsWith("_staging")))
     CodesIndex.appendToIndexIdempotent(model, b2, batchId = 1L)
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = CodesIndex.readIndex(spark, model)
     val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
@@ -82,16 +82,16 @@ class PqSpec extends SparkSpec {
     val model = Pq.buildIndex(sfDir + "#compactspec", base)
     val b1 = emb.filter($"vec_id" % 5 === 0)
     CodesIndex.appendToIndexIdempotent(model, b1, batchId = 7L)
-    val nBefore = spark.read.parquet(model.indexPath).count()
+    val nBefore = CodesIndex.readIndex(spark, model).count()
     CodesIndex.compactIndex(spark, model, targetRowsPerFile = 1000000L)
     val snap = FileSnapshots.snapshot(model.indexPath)
-    assert(snap.keys.forall(!_.contains("codes-ingest-7")),
+    assert(FileSnapshots.named(spark, model.indexPath).keys.forall(!_.contains("ingest-7")),
       "marker file should be folded away")
     CodesIndex.appendToIndexIdempotent(model, b1, batchId = 7L) // crash replay
     assert(FileSnapshots.snapshot(model.indexPath) === snap,
       "replayed batch re-appended after compactCodes")
-    assert(!new java.io.File(model.indexPath + "__staging_codes-ingest-7.parquet").exists())
-    assert(spark.read.parquet(model.indexPath).count() === nBefore)
+    assert(new java.io.File(model.indexPath).list().forall(!_.startsWith("_staging")))
+    assert(CodesIndex.readIndex(spark, model).count() === nBefore)
   }
 
   test("probeAll equals the single-query probe for every query") {
@@ -109,18 +109,18 @@ class PqSpec extends SparkSpec {
 
   test("deleteFromIndex masks the ADC ranking; compactCodes drops physically") {
     val model = Pq.buildIndex(sfDir + "#delspec", emb)
-    val before = FileSnapshots.snapshot(model.indexPath)
+    val before = FileSnapshots.named(spark, model.indexPath)
     CodesIndex.deleteFromIndex(model,
       emb.filter($"vec_id" % 7 === 3).select("vec_id"), batchId = 0L)
-    assert(FileSnapshots.snapshot(model.indexPath) === before,
+    assert(FileSnapshots.named(spark, model.indexPath) === before,
       "delete must not touch the codes table")
     val got = CodesIndex.probe(model, emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(got.forall(_ % 7 != 3), "deleted ids still probed")
     val pBefore = CodesIndex.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
     CodesIndex.compactIndex(spark, model)
-    assert(!new java.io.File(model.indexPath + "__tombstones").exists())
-    assert(spark.read.parquet(model.indexPath)
+    assert(FileSnapshots.named(spark, model.indexPath, graft.sources.Snapshot.Tomb).isEmpty)
+    assert(CodesIndex.readIndex(spark, model)
       .filter($"vec_id" % 7 === 3).count() === 0)
     assert(CodesIndex.probe(model, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === pBefore)
@@ -139,7 +139,7 @@ class PqSpec extends SparkSpec {
     val p = CodesIndex.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
     assert(CodesIndex.probe(loaded, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === p)
-    // compactCodes swaps the whole dir — the codebooks must come back
+    // compaction commits a new snapshot — the codebooks must come along
     CodesIndex.compactIndex(spark, model)
     assert(CodesIndex.loadModel[Pq.PqCodec](spark, model.indexPath).nonEmpty,
       "codebooks lost across compaction swap")

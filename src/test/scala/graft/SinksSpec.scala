@@ -444,9 +444,16 @@ class SinksSpec extends SparkSpec {
     val ids = spark.range(0, 20, 1, 1).select($"id".as("vec_id"))
     conf.set("fs.defaultFS", "graftnofs:///")
     try {
-      Sinks.appendBatchFileIdempotent(ids, s"$root/t__tombstones", "tombstone-0.parquet")
-      val back = Sinks.readTombstones(spark, s"$root/t__tombstones")
-      assert(back.get.as[Long].collect().sorted.toSeq === (0L until 20L))
+      Sinks.appendBatchFileIdempotent(ids, s"$root/t", "b-0.parquet")
+      // an index snapshot commit and read on the same root
+      val f = new java.io.File(new java.net.URI(s"$root/t/b-0.parquet"))
+      val s = graft.sources.Snapshot.commit(spark, graft.sources.Snapshot.empty(s"$root/t")
+        .copy(files = Seq(graft.sources.Snapshot.File(graft.sources.Snapshot.Tomb, None,
+          f.length, f.lastModified, "b-0.parquet"))))
+      assert(graft.sources.Snapshot.latest(spark, s"$root/t") === Some(s))
+      val back = graft.sources.Snapshot.read(spark, s, graft.sources.Snapshot.Tomb,
+        org.apache.spark.sql.types.StructType.fromDDL("vec_id BIGINT"))
+      assert(back.as[Long].collect().sorted.toSeq === (0L until 20L))
     } finally conf.set("fs.defaultFS", prev)
   }
 

@@ -19,7 +19,7 @@ class SqSpec extends SparkSpec {
 
   test("codes table is dim uint8 codes per vector (4x compression)") {
     val model = Sq.buildIndex(sfDir + "#spec", emb)
-    val codes = spark.read.parquet(model.indexPath)
+    val codes = CodesIndex.readIndex(spark, model)
     assert(codes.count() === emb.count())
     val rows = codes.select("codes").as[Seq[Int]].collect()
     assert(rows.forall(_.length === 64))
@@ -49,7 +49,7 @@ class SqSpec extends SparkSpec {
       assert(after.get(p).contains(sig), s"pre-existing file changed: $p")
     }
     assert((after.keySet -- before.keySet).nonEmpty)
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = CodesIndex.readIndex(spark, model)
     val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty, "stored has codes a fresh encode lacks")
     assert(expected.exceptAll(stored).isEmpty, "fresh encode has codes the stored table lacks")
@@ -74,9 +74,9 @@ class SqSpec extends SparkSpec {
     val afterOnce = FileSnapshots.snapshot(model.indexPath)
     CodesIndex.appendToIndexIdempotent(model, b1, batchId = 0L)
     assert(FileSnapshots.snapshot(model.indexPath) === afterOnce)
-    assert(!new java.io.File(model.indexPath + "__staging_codes-ingest-0.parquet").exists())
+    assert(new java.io.File(model.indexPath).list().forall(!_.startsWith("_staging")))
     CodesIndex.appendToIndexIdempotent(model, b2, batchId = 1L)
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = CodesIndex.readIndex(spark, model)
     val expected = CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
@@ -87,16 +87,16 @@ class SqSpec extends SparkSpec {
     val model = Sq.buildIndex(sfDir + "#compactspec", base)
     val b1 = emb.filter($"vec_id" % 5 === 0)
     CodesIndex.appendToIndexIdempotent(model, b1, batchId = 7L)
-    val nBefore = spark.read.parquet(model.indexPath).count()
+    val nBefore = CodesIndex.readIndex(spark, model).count()
     CodesIndex.compactIndex(spark, model, targetRowsPerFile = 1000000L)
     val snap = FileSnapshots.snapshot(model.indexPath)
-    assert(snap.keys.forall(!_.contains("codes-ingest-7")),
+    assert(FileSnapshots.named(spark, model.indexPath).keys.forall(!_.contains("ingest-7")),
       "marker file should be folded away")
     CodesIndex.appendToIndexIdempotent(model, b1, batchId = 7L) // crash replay
     assert(FileSnapshots.snapshot(model.indexPath) === snap,
       "replayed batch re-appended after compactCodes")
-    assert(!new java.io.File(model.indexPath + "__staging_codes-ingest-7.parquet").exists())
-    assert(spark.read.parquet(model.indexPath).count() === nBefore)
+    assert(new java.io.File(model.indexPath).list().forall(!_.startsWith("_staging")))
+    assert(CodesIndex.readIndex(spark, model).count() === nBefore)
   }
 
   test("probeAll equals the single-query probe for every query") {
@@ -114,18 +114,18 @@ class SqSpec extends SparkSpec {
 
   test("deleteFromIndex masks the ADC ranking; compactCodes drops physically") {
     val model = Sq.buildIndex(sfDir + "#delspec", emb)
-    val before = FileSnapshots.snapshot(model.indexPath)
+    val before = FileSnapshots.named(spark, model.indexPath)
     CodesIndex.deleteFromIndex(model,
       emb.filter($"vec_id" % 7 === 3).select("vec_id"), batchId = 0L)
-    assert(FileSnapshots.snapshot(model.indexPath) === before,
+    assert(FileSnapshots.named(spark, model.indexPath) === before,
       "delete must not touch the codes table")
     val got = CodesIndex.probe(model, emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(got.forall(_ % 7 != 3), "deleted ids still probed")
     val pBefore = CodesIndex.probe(model, emb, 0L, 10).as[(Long, Double)].collect().toSeq
     CodesIndex.compactIndex(spark, model)
-    assert(!new java.io.File(model.indexPath + "__tombstones").exists())
-    assert(spark.read.parquet(model.indexPath)
+    assert(FileSnapshots.named(spark, model.indexPath, graft.sources.Snapshot.Tomb).isEmpty)
+    assert(CodesIndex.readIndex(spark, model)
       .filter($"vec_id" % 7 === 3).count() === 0)
     assert(CodesIndex.probe(model, emb, 0L, 10)
       .as[(Long, Double)].collect().toSeq === pBefore)

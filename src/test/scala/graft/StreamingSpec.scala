@@ -845,7 +845,7 @@ class StreamingSpec extends SparkSpec {
     q.stop()
 
     // the streamed-in index == one frozen assignment of base ∪ batch
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = graft.operators.CodesIndex.readIndex(spark, model)
       .select($"vec_id", $"list".cast("int").as("list"))
     val expected = graft.operators.Ivf.index(emb, model.coarse.get.centroids)
       .select($"vec_id", $"list")
@@ -880,7 +880,7 @@ class StreamingSpec extends SparkSpec {
 
     // the streamed-in index == one frozen assignment of embed(base ∪ batch)
     val embAll = graft.operators.Embed.hashedTf(docs)
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = graft.operators.CodesIndex.readIndex(spark, model)
       .select($"vec_id", $"list".cast("int").as("list"))
     val expected = graft.operators.Ivf.index(embAll, model.coarse.get.centroids)
       .select($"vec_id", $"list")
@@ -920,7 +920,7 @@ class StreamingSpec extends SparkSpec {
     model.shards.zipWithIndex.foreach { case (m, sh) =>
       val slice = emb.filter(graft.operators.Curation
         .hashBucket($"vec_id", model.nShards) === sh)
-      val stored = spark.read.parquet(m.indexPath)
+      val stored = graft.operators.CodesIndex.readIndex(spark, m)
         .select($"vec_id", $"list".cast("int").as("list"))
       val expected = graft.operators.Ivf.index(slice, m.coarse.get.centroids)
         .select($"vec_id", $"list")
@@ -956,7 +956,7 @@ class StreamingSpec extends SparkSpec {
 
     // streamed chunk index == one frozen assignment of chunkEmbed(base ∪ batch)
     val embAll = graft.operators.CorpusIndex.chunkEmbeddings(docs)
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = graft.operators.CodesIndex.readIndex(spark, model)
       .select($"vec_id", $"list".cast("int").as("list"))
     val expected = graft.operators.Ivf.index(embAll, model.coarse.get.centroids)
       .select($"vec_id", $"list")
@@ -976,7 +976,7 @@ class StreamingSpec extends SparkSpec {
     val base = emb.filter($"vec_id" % 5 =!= 0)
     val batch = emb.filter($"vec_id" % 5 === 0)
     val model = graft.operators.Ivf.buildIndex(sfDir + "#lease", base, nlist = 8)
-    val before = spark.read.parquet(model.indexPath).count()
+    val before = graft.operators.CodesIndex.readIndex(spark, model).count()
     val ckpt = java.nio.file.Files.createTempDirectory("graft-lease-c").toString
     val rows = batch.select("vec_id", "embedding")
       .as[(Long, Seq[Float])].collect().toSeq
@@ -998,7 +998,7 @@ class StreamingSpec extends SparkSpec {
         s"expected ConcurrentWriterException in cause chain, got: $e")
       q.stop()
     }
-    assert(spark.read.parquet(model.indexPath).count() === before,
+    assert(graft.operators.CodesIndex.readIndex(spark, model).count() === before,
       "losing writer must not mutate the index")
     // with the lease free, the same stream replays its batch and lands it
     val input2 = MemoryStream[(Long, Seq[Float])]
@@ -1008,7 +1008,7 @@ class StreamingSpec extends SparkSpec {
     q2.processAllAvailable()
     assert(q2.exception.isEmpty, s"replay after lease release failed: ${q2.exception}")
     q2.stop()
-    assert(spark.read.parquet(model.indexPath).count() === before + rows.size)
+    assert(graft.operators.CodesIndex.readIndex(spark, model).count() === before + rows.size)
   }
 
   test("streaming PQ ingest grows the codes table to the frozen-encode union") {
@@ -1030,7 +1030,7 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = graft.operators.CodesIndex.readIndex(spark, model)
     val expected = graft.operators.CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
@@ -1060,18 +1060,13 @@ class StreamingSpec extends SparkSpec {
 
     // bounded file counts: compaction folds each list back under the
     // threshold, so no list can exceed threshold + 1 (one fresh batch file)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val perList = fs.listStatus(
-        new org.apache.hadoop.fs.Path(model.indexPath)).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("list="))
-      .map(d => fs.listStatus(d.getPath).count(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")))
+    val perList = FileSnapshots.named(spark, model.indexPath).keys
+      .groupBy(_.split("/")(0)).values.map(_.size).toSeq
     assert(perList.nonEmpty && perList.max <= 4,
       s"auto-compaction failed to bound file counts: $perList")
 
     // content parity through all the folds: stored == frozen re-assignment
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = graft.operators.CodesIndex.readIndex(spark, model)
       .select($"vec_id", $"list".cast("int").as("list"))
     val expected = graft.operators.Ivf.index(emb, model.coarse.get.centroids)
       .select($"vec_id", $"list")
@@ -1179,12 +1174,12 @@ class StreamingSpec extends SparkSpec {
     // drift absorbed: the persisted model grew lists and the ratio is bounded
     val m2 = graft.operators.CodesIndex.currentModel(spark, model)
     assert(m2.coarse.get.centroids.length > model.coarse.get.centroids.length, "no split happened")
-    val listSizes = spark.read.parquet(model.indexPath)
+    val listSizes = graft.operators.CodesIndex.readIndex(spark, model)
       .groupBy("list").count().as[(Int, Long)].collect().map(_._2)
     val ratio = listSizes.max.toDouble / (listSizes.sum.toDouble / listSizes.length)
     assert(ratio <= 4.0, s"ratio unbounded under drift: $ratio")
     // content intact: every ingested vector present exactly once
-    val stored = spark.read.parquet(model.indexPath).select("vec_id")
+    val stored = graft.operators.CodesIndex.readIndex(spark, model).select("vec_id")
       .as[Long].collect().sorted
     val expected = (base.select("vec_id").as[Long].collect() ++
       (1 to 6).flatMap(i => hotRows.map(_._1 + i * 10000000L))).sorted
@@ -1910,7 +1905,7 @@ class StreamingSpec extends SparkSpec {
     input.addData(batchRows.drop(batchRows.length / 2))
     q.processAllAvailable()
     q.stop()
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = graft.operators.CodesIndex.readIndex(spark, model)
       .select($"vec_id", $"codes", $"list".cast("int").as("list"))
     val expected = graft.operators.CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
@@ -2000,7 +1995,7 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val stored = spark.read.parquet(model.indexPath)
+    val stored = graft.operators.CodesIndex.readIndex(spark, model)
     val expected = graft.operators.CodesIndex.encode(model, emb)
     assert(stored.exceptAll(expected).isEmpty)
     assert(expected.exceptAll(stored).isEmpty)
