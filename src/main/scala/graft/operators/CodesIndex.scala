@@ -186,9 +186,10 @@ object CodesIndex {
     val table = layout.rows(embeddings, coarse, None)
     val model = CodesModel(layout, coarse, path,
       nullable(table.schema).asInstanceOf[StructType])
-    val files = Snapshot.write(table, path, "build", Snapshot.Data, coarse.isDefined)
+    val empty = Snapshot.empty(path)
+    val files = Snapshot.write(table, empty, "build", Snapshot.Data, coarse.isDefined)
     Snapshot.commit(embeddings.sparkSession,
-      Snapshot.empty(path).copy(model = modelLines(model), files = files))
+      empty.copy(model = modelLines(model), files = files))
     model
   }
 
@@ -302,8 +303,7 @@ object CodesIndex {
   private def commitFiles(model: CodesModel[Layout], base: Snapshot, rows: DataFrame,
                           name: String, kind: String, batch: Option[String]): Unit =
     Snapshot.commit(rows.sparkSession, base.copy(
-      files = base.files ++ Snapshot.write(rows, model.indexPath, name, kind,
-        model.coarse.isDefined),
+      files = base.files ++ Snapshot.write(rows, base, name, kind, model.coarse.isDefined),
       batches = base.batches ++ batch))
 
   /** Frozen-model append: `newBatch` is written as the layout's rows
@@ -319,35 +319,33 @@ object CodesIndex {
   def appendToIndex(model: CodesModel[Layout], newBatch: DataFrame): Unit = {
     graft.MutationGuard.claim(model.indexPath)
     val base = snapshot(newBatch.sparkSession, model)
-    commitFiles(model, base, encode(model, newBatch), s"append-v${base.version + 1}",
-      Snapshot.Data, None)
+    commitFiles(model, base, encode(model, newBatch), "append", Snapshot.Data, None)
   }
 
   /** Replay-idempotent append, the exactly-once form for streaming ingest:
     * a batch whose id the newest snapshot records as absorbed is a no-op
     * (also after a compaction folded its files, or a re-balance moved its
-    * rows). Otherwise the batch is written through one `repartition(1)`
-    * task — one `ingest-<batchId>` file per touched list when listed — and
-    * committed with its id. A crash before the commit leaves files no
-    * snapshot names; the replay overwrites them.
+    * rows). Otherwise it is written by one task (`repartition(1)` unless
+    * [[graft.sources.Sinks.onePartition]]): one `ingest-<batchId>` file
+    * per touched list. A crash before the commit leaves files no snapshot
+    * names; the replay's commit removes them.
     */
   def appendToIndexIdempotent(model: CodesModel[Layout], newBatch: DataFrame,
                               batchId: Long): Unit = {
     graft.MutationGuard.claim(model.indexPath)
     val base = snapshot(newBatch.sparkSession, model)
-    if (!base.batches(s"append-$batchId"))
-      commitFiles(model, base, encode(model, newBatch).repartition(1), s"ingest-$batchId",
-        Snapshot.Data, Some(s"append-$batchId"))
+    if (!base.batches(s"append-$batchId")) {
+      val rows = encode(model, newBatch)
+      commitFiles(model, base, if (graft.sources.Sinks.onePartition(rows)) rows
+        else rows.repartition(1), s"ingest-$batchId", Snapshot.Data, Some(s"append-$batchId"))
+    }
   }
 
-  /** DELETE: the batch's ids land exactly-once as tombstone files the
-    * snapshot names next to the data — flat: one `tomb-<batchId>` file;
-    * listed: one per list, the lists resolved by joining the ids against
-    * the table's (vec_id, list) columns (no broadcast hint: AQE broadcasts
-    * small batches, a mass takedown shuffles). Data files are never
-    * touched; probes mask the ids before ranking, so deleted vectors never
-    * take rerank slots, and [[compactIndex]] drops them. A replayed batch
-    * id is a no-op.
+  /** DELETE: the batch's ids land exactly-once as `tomb-<batchId>` files
+    * (one per list when listed, the lists found by joining the ids to the
+    * table; AQE broadcasts small batches). Data files are never touched;
+    * probes mask the ids before ranking and [[compactIndex]] drops them.
+    * A replayed batch id is a no-op.
     */
   def deleteFromIndex(model: CodesModel[Layout], ids: DataFrame, batchId: Long): Unit = {
     graft.MutationGuard.claim(model.indexPath)
@@ -366,18 +364,15 @@ object CodesIndex {
     * of a listed one, is rewritten when it holds more than
     * `maxFilesPerList` data files or carries tombstones (the default
     * rewrites everything), into files of at most `targetRowsPerFile` rows
-    * (`maxRecordsPerFile`: no count job); the rewrite drops tombstoned rows
-    * and consumes the tombstones. All hot lists are rewritten by one write
-    * and replace their files in one snapshot, which keeps every absorbed
-    * batch id, so a batch replayed after compaction stays a no-op. Returns
-    * the rewritten list ids (a rewritten flat table reports list 0, its
-    * LUT list).
-    *
-    * A crash before the commit leaves the table as it was, and a rerun
-    * overwrites the unnamed files. Run one maintenance writer per index:
-    * two compactions from one version would write the same file names. The
-    * ingest stream's own foreachBatch may call this: micro-batches
-    * serialize.
+    * (`maxRecordsPerFile`: no count job), by one task per
+    * `spark.sql.files.maxPartitionBytes` of the list's recorded data bytes;
+    * the rewrite drops tombstoned rows and consumes the tombstones. One
+    * write rewrites all hot lists, and one snapshot keeping every absorbed
+    * batch id commits them. Returns the rewritten list ids (a rewritten
+    * flat table reports list 0, its LUT list). A crash before the commit
+    * leaves the table as it was; of two compactions from one version the
+    * later commit throws. The ingest stream's own foreachBatch may call
+    * this: micro-batches serialize.
     */
   def compactIndex(spark: SparkSession, model: CodesModel[Layout],
                    maxFilesPerList: Int = 0,
@@ -390,10 +385,14 @@ object CodesIndex {
     }.toSeq
     if (hot.isEmpty) Nil
     else {
+      val split = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
+      val tasks = base.files.filter(f => f.kind == Snapshot.Data && hot.contains(f.list))
+        .groupBy(_.list).map { case (l, fs) => l -> ((fs.map(_.len).sum + split - 1) / split) }
       val live = liveRows(spark, model, model.coarse.map(_ => hot.flatten), Some(base))
-      val files = Snapshot.write(
-        if (model.coarse.isDefined) live.repartition(col("list")) else live.repartition(1),
-        model.indexPath, s"compact-v${base.version + 1}", Snapshot.Data,
+      val rows = if (model.coarse.isEmpty) live.repartition(tasks.values.sum.max(1L).toInt)
+        else live.repartition(col("list"), pmod(hash(col("vec_id")),
+          element_at(typedLit(tasks.map { case (l, n) => l.get -> n.max(1L) }), col("list"))))
+      val files = Snapshot.write(rows, base, "compact", Snapshot.Data,
         model.coarse.isDefined, targetRowsPerFile)
       Snapshot.commit(spark,
         base.copy(files = base.files.filterNot(f => hot.contains(f.list)) ++ files))

@@ -455,26 +455,16 @@ object Ivf {
       .getOrElse((model.coarse.get.centroids.length, steps.lastOption.map(_._2).getOrElse(0L)))
   }
 
-  /** List re-balance under corpus drift — the maintenance verb that keeps
-    * nprobe pruning effective when sustained appends with a FROZEN
-    * quantizer skew the list sizes (append is correct but a drifting
-    * corpus piles into few lists; `ann_list_sizes` is the detector, this
-    * is the action): every list whose size exceeds `maxRatio` × the mean
-    * is SPLIT — a 2-centroid sub-quantizer is trained on that list's live
-    * vectors ONLY (the same exact integer-grid Lloyd as [[trainCentroids]],
-    * so the split is deterministic), its rows are re-assigned between the
-    * two fresh centroid ids and rewritten as two new lists, and the
-    * returned model carries the updated centroid set. Cold lists are never
-    * opened, never retrained — the standard "split, don't rebuild" IVF
-    * maintenance. Tombstones on a split list are consumed by the rewrite.
-    *
-    * Content-preserving: the vector SET is unchanged, so an exhaustive
-    * probe over the rebalanced model equals one over the original
-    * (asserted in IvfSpec); only pruning quality changes. It starts from
-    * the committed model (the caller's copy may predate an earlier
-    * re-balance), writes every split in one write and commits the new lists
-    * with the new model in one snapshot: a crash before the commit leaves
-    * the index as it was.
+  /** List re-balance under corpus drift (frozen-quantizer appends pile a
+    * drifting corpus into few lists; `ann_list_sizes` detects it): every
+    * list larger than `maxRatio` × the mean is SPLIT by a 2-centroid
+    * sub-quantizer trained on its live vectors only (the deterministic
+    * integer-grid Lloyd of [[trainCentroids]]) into two new lists; cold
+    * lists are never opened. Tombstones on a split list are consumed. The
+    * vector set is unchanged, so an exhaustive probe equals the original's
+    * (IvfSpec). It starts from the committed model, writes every split in
+    * one write and commits the new lists with the new model in one
+    * snapshot: a crash before the commit leaves the index as it was.
     */
   def rebalanceIndex(spark: SparkSession, model: IvfModel,
                      maxRatio: Double = 4.0, iters: Int = 2): IvfModel = {
@@ -504,8 +494,8 @@ object Ivf {
     val cur = m0.copy(coarse =
       m0.coarse.map(_.copy(nlist = cents.length, centroids = cents.toArray)))
     val split = splits.map(_._1).toSet
-    val files = Snapshot.write(splits.map(_._2).reduce(_ unionByName _), m0.indexPath,
-      s"split-v${base.version + 1}", Snapshot.Data, listed = true)
+    val files = Snapshot.write(splits.map(_._2).reduce(_ unionByName _), base, "split",
+      Snapshot.Data, listed = true)
     Snapshot.commit(spark, base.copy(model = CodesIndex.modelLines(cur),
       files = base.files.filterNot(_.list.exists(split)) ++ files))
     cur

@@ -246,12 +246,10 @@ object Sinks {
     }
   }
 
-  /** Fault-injection seam of the staged publishes: called at `"staged"`
-    * right before the publish ([[appendBatchFileIdempotent]]'s rename, with
-    * its destination; an index snapshot create, with the table root), at
-    * `"published"` by [[appendBatchFileIdempotent]] before the stage is
-    * removed, and at `"committed"` by [[Snapshot.commit]] before retention;
-    * crash-consistency specs make it throw.
+  /** Fault-injection seam of the staged publishes, which crash specs make
+    * throw: [[appendBatchFileIdempotent]] calls it with its destination at
+    * `"staged"` (before its rename) and `"published"` (before removing the
+    * stage), [[Snapshot.commit]] with the table root (see there).
     */
   @volatile private[graft] var crashPoint: (String, org.apache.hadoop.fs.Path) => Unit =
     (_, _) => ()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionPath,
   PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.types.StructType
 
 /** One committed version of an index table. A table is a directory of
@@ -61,83 +62,112 @@ object Snapshot {
       meta.filter(_.startsWith("batch ")).map(_.stripPrefix("batch ")).toSet)
   }
 
-  /** Commit `next` — its base snapshot with one verb's change applied — as
-    * version `next.version + 1`, by one `fs.create(_snapshots/<v+1>,
-    * overwrite = false)`. A writer that loses the create throws
-    * [[Sinks.ConcurrentWriterException]]; no snapshot names its files. The
-    * create is exclusive on HDFS; the local filesystem checks, then
-    * creates; an object store needs a conditional put behind this call.
-    * Retention, after the commit: every snapshot older than the base is
-    * deleted, with the files only those name (the base stays for readers
-    * that resolved it). [[Sinks.crashPoint]] fires at `"staged"` before the
-    * create and at `"committed"` before retention, with the table root.
+  /** Commit `next` — its base with one verb's change applied — as version
+    * `next.version + 1`, through Spark's `CheckpointFileManager.createAtomic`
+    * (a temp file renamed only if `_snapshots/<v+1>` is absent: no reader
+    * sees a partial snapshot; an object store needs a conditional put for
+    * it). A writer that finds a later version, before its write or at its
+    * rename, throws [[Sinks.ConcurrentWriterException]]. Retention ([[sweep]]
+    * up to the base) keeps the base for readers that resolved it.
+    * [[Sinks.crashPoint]] fires with the root at `"staged"`, `"written"`
+    * (before the rename) and `"committed"` (before retention).
     */
   def commit(spark: SparkSession, next: Snapshot): Snapshot = {
     val fs = Sinks.fileSystem(spark, next.root)
     val s = next.copy(version = next.version + 1)
-    val p = new Path(dir(s.root), s.version.toString)
+    val p = fs.makeQualified(new Path(dir(s.root), s.version.toString))
     Sinks.crashPoint("staged", new Path(s.root))
-    val out =
-      try fs.create(p, false)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          throw new Sinks.ConcurrentWriterException(
-            s"${s.root}: version ${s.version} was committed by another writer")
-      }
+    superseded(fs, s.root, next.version).foreach(e => throw e)
+    fs.mkdirs(p.getParent)
+    val out = CheckpointFileManager.create(p.getParent, spark.sparkContext.hadoopConfiguration)
+      .createAtomic(p, overwriteIfPossible = false)
     val lines = s.model ++
       s.files.map(f => s"file ${f.kind} ${f.list.getOrElse("-")} ${f.len} ${f.mtime} ${f.path}") ++
       s.batches.toSeq.sorted.map("batch " + _)
-    try out.write(lines.map(_ + "\n").mkString.getBytes("UTF-8"))
-    finally out.close()
-    Sinks.crashPoint("committed", new Path(s.root))
-    val old = versions(fs, s.root).filter(_ < next.version)
-    if (old.nonEmpty) {
-      def files(v: Long) = load(fs, s.root, v).files.map(_.path)
-      val kept = (s.files.map(_.path) ++ files(next.version)).toSet
-      old.flatMap(files).distinct.filterNot(kept)
-        .foreach(f => fs.delete(new Path(s.root, f), false))
-      old.foreach(v => fs.delete(new Path(dir(s.root), v.toString), false))
+    try {
+      out.write(lines.map(_ + "\n").mkString.getBytes("UTF-8"))
+      Sinks.crashPoint("written", new Path(s.root))
+      out.close()
+    } catch {
+      case e: Throwable =>
+        out.cancel()
+        throw superseded(fs, s.root, next.version).map(_.initCause(e)).getOrElse(e)
     }
+    Sinks.crashPoint("committed", new Path(s.root))
+    sweep(fs, s.root, next.version, (s.files ++ (if (next.version > 0)
+      load(fs, s.root, next.version).files else Nil)).map(_.path).toSet)
     s
   }
 
-  /** Write `rows` as new files of the table at `root`, named from `name`:
-    * one Spark write into `<root>/_staging_<name>` (`list`-partitioned
-    * when `listed`, at most `maxRecordsPerFile` rows per file when
-    * positive), then each file moved to `[list=X/]<name>-<i>.parquet`.
-    * Returns the files for the next [[commit]]. `name` derives from the
-    * batch id or the version being committed, so a rerun after a crash
-    * before the commit overwrites the files no snapshot names yet; two
-    * writers deriving one name from one version must not run at once.
+  /** The error of a writer from `base` once a later version exists. */
+  private def superseded(fs: FileSystem, root: String,
+                         base: Long): Option[Sinks.ConcurrentWriterException] =
+    if (!versions(fs, root).exists(_ > base)) None
+    else Some(new Sinks.ConcurrentWriterException(
+      s"$root: version ${base + 1} was committed by another writer"))
+
+  /** A stage (`<name>-b<base>-<attempt>`) or file [[write]] made from `base`. */
+  private val Written = """.+-b(\d+)-\p{XDigit}{8}(?:-\d+\.parquet)?""".r
+  /** A snapshot's temp file: `.<version>.<uuid>.tmp`. */
+  private val Temp = """\.(\d+)\..+\.tmp""".r
+
+  /** Once a version after `upTo` exists, no writer from `upTo` or earlier
+    * can commit: delete the snapshots older than `upTo`, the temp files of
+    * versions up to `upTo + 1`, and every stage or file written from
+    * `upTo` or earlier that `kept` (root-relative) does not hold.
     */
-  def write(rows: DataFrame, root: String, name: String, kind: String, listed: Boolean,
-            maxRecordsPerFile: Long = 0L): Seq[File] = {
-    val fs = Sinks.fileSystem(rows.sparkSession, root)
-    val staging = new Path(root, s"_staging_$name")
-    val w = rows.write.mode("overwrite").option("maxRecordsPerFile", maxRecordsPerFile)
-    (if (listed) w.partitionBy("list") else w).parquet(staging.toString)
-    val staged = (if (listed) fs.listStatus(staging).toSeq.filter(_.isDirectory).map(_.getPath)
-      else Seq(staging)).flatMap(Sinks.dataFiles(fs, _))
-    val files = staged.groupBy(_.getPath.getParent).toSeq.flatMap { case (parent, fss) =>
-      val list = if (listed) Some(parent.getName.stripPrefix("list=").toInt) else None
-      val dstDir = list.fold(new Path(root))(l => new Path(root, s"list=$l"))
-      fs.mkdirs(dstDir)
-      fss.sortBy(_.getPath.getName).zipWithIndex.map { case (f, i) =>
-        val rel = list.fold("")(l => s"list=$l/") + s"$name-$i.parquet"
-        val dst = new Path(root, rel)
-        if (!fs.rename(f.getPath, dst) && !(fs.delete(dst, false) && fs.rename(f.getPath, dst)))
-          throw new java.io.IOException(s"move failed: $dst")
-        File(kind, list, f.getLen, f.getModificationTime, rel)
-      }
-    }
-    fs.delete(staging, true)
-    files.sortBy(_.path)
+  private def sweep(fs: FileSystem, root: String, upTo: Long, kept: Set[String]): Unit = {
+    fs.listStatus(dir(root)).map(_.getPath).foreach(p => p.getName match {
+      case Temp(v) if v.toLong <= upTo + 1 => fs.delete(p, false)
+      case v if v.nonEmpty && v.forall(_.isDigit) && v.toLong < upTo => fs.delete(p, false)
+      case _ =>
+    })
+    val top = fs.listStatus(new Path(root)).toSeq.map(_.getPath)
+    (top.map(p => p.getName -> p) ++ top.filter(_.getName.startsWith("list=")).flatMap(d =>
+        fs.listStatus(d).toSeq.map(st => s"${d.getName}/${st.getPath.getName}" -> st.getPath)))
+      .foreach { case (rel, p) => p.getName match {
+        case Written(b) if b.toLong <= upTo && !kept(rel) => fs.delete(p, true)
+        case _ =>
+      }}
   }
 
-  /** The snapshot's `kind` files as a DataFrame of `schema` (`list`, when
-    * present, is the partition column). The relation's file index is fed
-    * from the snapshot, the way Spark's `MetadataLogFileIndex` serves its
-    * file-sink log: no listing and no per-file status call.
+  /** Write `rows` as new files of `base`'s table for the next [[commit]]:
+    * one Spark write into `<root>/_staging_<tag>` (`list`-partitioned when
+    * `listed`, at most `maxRecordsPerFile` rows per file when positive),
+    * each file then moved to `[list=X/]<tag>-<i>.parquet`, `tag` being
+    * `<name>-b<base version>-<random attempt>`: no write replaces a file.
+    */
+  def write(rows: DataFrame, base: Snapshot, name: String, kind: String, listed: Boolean,
+            maxRecordsPerFile: Long = 0L): Seq[File] = {
+    val root = base.root
+    val fs = Sinks.fileSystem(rows.sparkSession, root)
+    val tag = s"$name-b${base.version}-${java.util.UUID.randomUUID.toString.take(8)}"
+    val staging = new Path(root, s"_staging_$tag")
+    try {
+      val w = rows.write.mode("overwrite").option("maxRecordsPerFile", maxRecordsPerFile)
+      (if (listed) w.partitionBy("list") else w).parquet(staging.toString)
+      val staged = (if (listed) fs.listStatus(staging).toSeq.filter(_.isDirectory).map(_.getPath)
+        else Seq(staging)).flatMap(Sinks.dataFiles(fs, _))
+      val files = staged.groupBy(_.getPath.getParent).toSeq.flatMap { case (parent, fss) =>
+        val list = if (listed) Some(parent.getName.stripPrefix("list=").toInt) else None
+        fs.mkdirs(list.fold(new Path(root))(l => new Path(root, s"list=$l")))
+        fss.sortBy(_.getPath.getName).zipWithIndex.map { case (f, i) =>
+          val rel = list.fold("")(l => s"list=$l/") + s"$tag-$i.parquet"
+          if (!fs.rename(f.getPath, new Path(root, rel)))
+            throw new java.io.IOException(s"move failed: $root/$rel")
+          File(kind, list, f.getLen, f.getModificationTime, rel)
+        }
+      }
+      fs.delete(staging, true)
+      files.sortBy(_.path)
+    } catch { // a later commit's retention may have removed the stage
+      case e: Exception => throw superseded(fs, root, base.version).map(_.initCause(e)).getOrElse(e)
+    }
+  }
+
+  /** The snapshot's `kind` files as a DataFrame of `schema` (`list` is the
+    * partition column), its file index fed from the snapshot as Spark's
+    * `MetadataLogFileIndex` serves its file-sink log: no listing.
     */
   def read(spark: SparkSession, s: Snapshot, kind: String, schema: StructType): DataFrame = {
     val partition = StructType(schema.filter(_.name == "list"))
@@ -146,9 +176,8 @@ object Snapshot {
       new ParquetFileFormat, Map.empty)(spark))
   }
 
-  /** The `kind` files of one snapshot. Equal on (root, version, kind), so
-    * two reads of one version are one relation to plan canonicalization
-    * and to `Artifacts.contentToken`.
+  /** The `kind` files of one snapshot, equal on (root, version, kind): one
+    * relation per version to plan canonicalization and `Artifacts`.
     */
   private final class FileIndex(spark: SparkSession, s: Snapshot, kind: String,
                                 partition: StructType)
@@ -163,8 +192,7 @@ object Snapshot {
       scala.collection.mutable.LinkedHashMap(statuses.map(st => st.getPath -> st): _*)
     override protected val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
       statuses.toArray.groupBy(_.getPath.getParent)
-    // the root and every file's directory: a read without `list` sees the
-    // files of every list
+    // the root and every file's directory: a read without `list` sees all
     override def rootPaths: Seq[Path] = (root +: statuses.map(_.getPath.getParent)).distinct
     override def refresh(): Unit = ()
     override def partitionSpec(): PartitionSpec =

@@ -131,10 +131,60 @@ class CodesIndexSpec extends SparkSpec {
     val s = Snapshot.latest(spark, model.indexPath).get
     assert(s.batches === Set("append-2"))
     assert(s.files.forall(!_.path.contains("ingest-1")))
-    assert(FileSnapshots.snapshot(model.indexPath).keys.exists(_.contains("ingest-1-")),
-      "the loser wrote no files")
+    // the winner's retention removed the files of the loser, which can no
+    // longer commit
+    assert(!FileSnapshots.snapshot(model.indexPath).keys.exists(_.contains("ingest-1-")))
     val got = CodesIndex.readIndex(spark, model).select("vec_id")
     val want = emb.filter($"vec_id" % 5 =!= 0).unionByName(theirs).select("vec_id")
     assert(same(got, want))
+  }
+
+  test("a writer from a superseded version replaces none of the winner's files") {
+    val model = Pq.buildIndex(s"$sfDir#codes-overwrite", emb.filter($"vec_id" % 5 =!= 0))
+    val base = Snapshot.latest(spark, model.indexPath).get
+    def compacted(rows: DataFrame) = Snapshot.write(rows.repartition(1), base, "compact",
+      Snapshot.Data, listed = false)
+    val all = CodesIndex.readIndex(spark, model)
+    val won = Snapshot.commit(spark, base.copy(files = compacted(all)))
+    val winner = FileSnapshots.named(spark, model.indexPath)
+    // a second compaction from the same version writes after the commit
+    val loser = compacted(all.filter($"vec_id" % 2 === 0))
+    assert(loser.map(_.path).toSet.intersect(won.files.map(_.path).toSet).isEmpty)
+    assert(FileSnapshots.named(spark, model.indexPath) === winner)
+    intercept[Sinks.ConcurrentWriterException](
+      Snapshot.commit(spark, base.copy(files = loser)))
+    assert(Snapshot.latest(spark, model.indexPath) === Some(won))
+    assert(same(CodesIndex.readIndex(spark, model), all))
+  }
+
+  test("two compactions from one version: the later commit throws, the winner's files stay") {
+    val model = Ivf.buildIndex(s"$sfDir#codes-compact-race", emb.filter($"vec_id" % 5 =!= 0),
+      nlist = 8)
+    CodesIndex.appendToIndexIdempotent(model, emb.filter($"vec_id" % 5 === 0), 1L)
+    CodesIndex.deleteFromIndex(model, emb.filter($"vec_id" % 7 === 3).select("vec_id"), 2L)
+    val want = CodesIndex.readIndex(spark, model).select("vec_id")
+      .join(FileSnapshots.tombstones(spark, model.indexPath), Seq("vec_id"), "left_anti")
+      .as[Long].collect().toSet
+    val root = new org.apache.hadoop.fs.Path(model.indexPath)
+    // the other compaction runs from the same version and commits right
+    // before this one's snapshot write
+    Sinks.crashPoint = (p, d) => if (p == "staged" && d == root) {
+      Sinks.crashPoint = (_, _) => ()
+      CodesIndex.compactIndex(spark, model)
+    }
+    try intercept[Sinks.ConcurrentWriterException](CodesIndex.compactIndex(spark, model))
+    finally Sinks.crashPoint = (_, _) => ()
+    val s = Snapshot.latest(spark, model.indexPath).get
+    assert(s.files.forall(_.kind == Snapshot.Data))
+    s.files.foreach(f => assert(new java.io.File(model.indexPath, f.path).length === f.len))
+    assert(CodesIndex.readIndex(spark, model).select("vec_id").as[Long].collect().toSet === want)
+    // the winner's retention removed the loser's files: after the next
+    // commit, every file on disk is named by a retained snapshot
+    CodesIndex.appendToIndexIdempotent(model, emb.filter($"vec_id" === 5L), 3L)
+    val named = Snapshot.latest(spark, model.indexPath).get.files.map(_.path).toSet ++
+      s.files.map(_.path)
+    val onDisk = FileSnapshots.snapshot(model.indexPath).keys
+      .filter(p => !p.startsWith("_snapshots") && !p.split("/").last.startsWith("."))
+    assert(onDisk.forall(named), onDisk.filterNot(named).mkString(", "))
   }
 }
