@@ -77,6 +77,37 @@ object Artifacts {
     catch { case e: ExecutionException => cells.remove(k, cell); throw e.getCause }
   }
 
+  private val replaceable = new ConcurrentHashMap[(String, String), (Seq[String], AnyRef)]()
+
+  /** A memo holding ONE value per (`tag`, `key`): the value built under
+    * `token`, rebuilt and replaced when a call brings another token. For a
+    * caller key whose content only moves on (an index root's tombstone
+    * files), so no superseded build stays held. The build runs under the
+    * key's map lock: concurrent callers of one key wait for it.
+    */
+  def replacing[V](tag: String, key: String, token: Seq[String])(build: => V): V = {
+    val c = counters.computeIfAbsent(tag, _ => new Counters)
+    replaceable.compute((tag, key), (_, prev) =>
+      if (prev != null && prev._1 == token) { c.hits.incrementAndGet(); prev }
+      else {
+        val t0 = System.nanoTime()
+        val v = build.asInstanceOf[AnyRef]
+        c.buildNs.addAndGet(System.nanoTime() - t0)
+        c.builds.incrementAndGet()
+        c.tokens.computeIfAbsent(key, _ => ConcurrentHashMap.newKeySet[Seq[String]]())
+          .add(Seq(md5Hex(token.mkString("\u0000"), 8)))
+        (token, v)
+      })._2.asInstanceOf[V]
+  }
+
+  /** Per caller key, the number of values `tag` holds now. */
+  def held(tag: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    (cells.keySet.asScala.toSeq.collect { case k if k.tag == tag => k.key } ++
+      replaceable.keySet.asScala.toSeq.collect { case (`tag`, k) => k })
+      .groupBy(identity).map { case (k, ks) => k -> ks.size }
+  }
+
   /** A memoized directory: `write` fills it once; every call returns it. */
   def dir(tag: String, key: String, inputs: Seq[DataFrame], params: Any*)
          (write: String => Unit): String =

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField, StructType}
 import graft.functions.VectorOps
@@ -283,19 +285,61 @@ object CodesIndex {
     * pruned to `lists` (listed tables) minus the tombstones of those
     * lists; a probe whose lists carry none reads no tombstones. Every
     * probe reads this.
+    *
+    * A probe masks the tombstoned ids of its lists with a null-safe
+    * `NOT IN` hash-set filter — no join and no broadcast job — while they
+    * number at most [[MaskedTombstones]] and the table's tombstone files
+    * record at most `spark.sql.autoBroadcastJoinThreshold` bytes (the
+    * driver holds the [[tombstones]] memo). Otherwise they stay a left-anti
+    * join.
     */
   private[operators] def liveRows(spark: SparkSession, model: CodesModel[Layout],
                                   lists: Option[Seq[Int]],
                                   s: Option[Snapshot] = None): DataFrame = {
     val snap = s.getOrElse(snapshot(spark, model))
+    def probed(list: Option[Int]) = lists.forall(ls => list.exists(ls.contains))
     def pruned(df: DataFrame) = lists.fold(df)(ls => df.filter(col("list").isin(ls: _*)))
     val rows = pruned(Snapshot.read(spark, snap, Snapshot.Data, model.schema))
-    if (!snap.files.exists(f => f.kind == Snapshot.Tomb &&
-        lists.forall(ls => f.list.exists(ls.contains)))) rows
-    else rows.join(pruned(Snapshot.read(spark, snap, Snapshot.Tomb,
-        StructType(StructField("vec_id", LongType) +: model.schema.filter(_.name == "list"))))
-      .select("vec_id"), Seq("vec_id"), "left_anti")
+    val tombs = snap.files.filter(_.kind == Snapshot.Tomb)
+    def masked = Option.when(tombs.map(_.len).sum <=
+        org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold)(
+      tombstones(spark, model, snap).collect { case (l, ids) if probed(l) => ids }.flatten)
+      .filter(_.size <= MaskedTombstones)
+    if (!tombs.exists(f => probed(f.list))) rows
+    else masked.fold(rows.join(pruned(Snapshot.read(spark, snap, Snapshot.Tomb,
+        tombSchema(model))).select("vec_id"), Seq("vec_id"), "left_anti")) { ids =>
+      val id = col("vec_id")
+      rows.filter(id.isNull ||
+        !ColumnBridge.column(InSet(ColumnBridge.expression(id), ids.toSet[Any])))
+    }
   }
+
+  /** The most tombstoned ids a probe masks with a `NOT IN` filter. The set
+    * rides in every task, so its cost grows with its size; against the
+    * broadcast anti-join it breaks even near 20–25k ids (1.2M 16-d vectors,
+    * 16 lists, nprobe 4, local[4]; CHANGES.md).
+    */
+  private[graft] val MaskedTombstones = 16384
+
+  private def tombSchema(model: CodesModel[Layout]): StructType =
+    StructType(StructField("vec_id", LongType) +: model.schema.filter(_.name == "list"))
+
+  /** The non-null tombstoned ids of snapshot `s` per list (`None` when
+    * flat), read in one job. The table root holds one memo entry, keyed by
+    * the sorted tombstone file paths and replaced when they change. Those
+    * names carry a random attempt id and are never reused, so the key is
+    * content-exact across versions: an append keeps the entry, and only
+    * the first read after a delete or a compaction pays the job.
+    */
+  private def tombstones(spark: SparkSession, model: CodesModel[Layout],
+                         s: Snapshot): Map[Option[Int], Array[Long]] =
+    graft.Artifacts.replacing("index.tombstones", s.root,
+        s.files.filter(_.kind == Snapshot.Tomb).map(_.path).sorted) {
+      Snapshot.read(spark, s, Snapshot.Tomb, tombSchema(model))
+        .filter(col("vec_id").isNotNull).collect().toSeq
+        .groupBy(r => if (model.coarse.isDefined) Some(r.getInt(1)) else None)
+        .map { case (l, rs) => l -> rs.map(_.getLong(0)).distinct.toArray }
+    }
 
   /** Write `rows` as the table's files named from `name` and commit them
     * on `base` (recording `batch`, when given) in one snapshot.
@@ -437,7 +481,8 @@ object CodesIndex {
     * live codes — of the `nprobe` best lists when listed (ignored when
     * flat) — with a broadcast join and partial aggregation. `allowed`
     * (filtered search) semi-joins BEFORE the ADC ranking, so excluded
-    * vectors never consume rerank slots.
+    * vectors never consume rerank slots. The re-rank scores against the
+    * collected query as a literal, as [[Ivf.probeWithVec]] does.
     */
   def probe(model: CodesModel[Codec], embeddings: DataFrame, queryVecId: Long,
             k: Int, nprobe: Int = 4, rerank: Int = 50,
@@ -454,11 +499,9 @@ object CodesIndex {
         if (model.coarse.isDefined) lut else lut.drop("list", "baseq"), Nil)
       .orderBy(desc("adcq"), col("vec_id"))
       .limit(rerank)
-    val q = embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_emb"))
+    // the exact widening of the stored floats: the same VecDot products
     cand.join(embeddings.select("vec_id", "embedding"), "vec_id")
-      .crossJoin(broadcast(q))
-      .withColumn("cosine", VectorOps.cosine(col("embedding"), col("q_emb")))
+      .withColumn("cosine", VectorOps.cosine(col("embedding"), typedLit(qVec)))
       .orderBy(desc("cosine"), col("vec_id"))
       .select("vec_id", "cosine")
       .limit(k)

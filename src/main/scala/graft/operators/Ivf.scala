@@ -214,7 +214,8 @@ object Ivf {
     * (tiny) quantizer — the same quantized score as [[assignList]], so the
     * SQL oracle reproduces it — and the corpus scan reads ONLY the probed
     * list directories of the materialized index (partition pruning), plus
-    * an exact cosine re-rank of the candidates.
+    * an exact cosine re-rank of the candidates. Two jobs: the query-vector
+    * collect ([[queryVec]]) and the result; see [[probeWithVec]].
     */
   def probe(model: IvfModel, embeddings: DataFrame, queryVecId: Long,
             k: Int, nprobe: Int = 4,
@@ -236,6 +237,11 @@ object Ivf {
     * as a vector and self-exclusion / allow-listing / an arbitrary index
     * predicate (`indexFilter`, e.g. "parent doc ∈ coarse cut" on the packed
     * chunk key) are explicit.
+    *
+    * The plan broadcasts nothing of its own: the query enters it as a float
+    * array literal (the same floats, the same `VecDot` loop, its norm
+    * constant-folded), and up to [[CodesIndex.MaskedTombstones]] tombstoned
+    * ids are a memoized `NOT IN` filter ([[CodesIndex.liveRows]]).
     */
   private[graft] def probeWithVec(model: IvfModel,
                                   spark: SparkSession,
@@ -244,9 +250,6 @@ object Ivf {
                                   allowed: Option[DataFrame] = None,
                                   indexFilter: Option[Column] = None): DataFrame = {
     val probes = rankLists(model.coarse.get.centroids, qVec).take(nprobe).map(_._1)
-
-    import spark.implicits._
-    val q = Seq(qVec.toSeq.map(_.toFloat)).toDF("q_emb")
     val live0 = CodesIndex.liveRows(spark, model, Some(probes.toIndexedSeq))
     val live1 = exclude.fold(live0)(id => live0.filter(col("vec_id") =!= id))
     val live = indexFilter.fold(live1)(live1.filter)
@@ -255,11 +258,10 @@ object Ivf {
     // vectors never reach the top-k window
     allowed.fold(live)(a =>
         live.join(a.select("vec_id").distinct(), Seq("vec_id"), "left_semi"))
-      .crossJoin(broadcast(q))
       // NaN (zero-norm) → NULL, the Similarity.topK law: Spark ranks NaN
       // FIRST under desc, the SQL twins' NULLS LAST ranks it last
       .withColumn("cosine",
-        nanvl(VectorOps.cosine(col("embedding"), col("q_emb")),
+        nanvl(VectorOps.cosine(col("embedding"), typedLit(qVec.map(_.toFloat))),
           lit(null).cast("double")))
       .orderBy(desc("cosine"), col("vec_id"))
       .select("vec_id", "cosine")

@@ -204,6 +204,18 @@ class ArtifactsSpec extends SparkSpec {
     assert(attempts.get === 2)
   }
 
+  test("a replacing memo holds one value per key: a new token rebuilds and replaces it") {
+    val builds = new AtomicInteger
+    def call(token: String*) = Artifacts.replacing("spec.replace", "k", token) {
+      builds.incrementAndGet(); token.mkString
+    }
+    assert(call("a") === "a" && call("a") === "a")
+    assert(call("a", "b") === "ab" && call("a", "b") === "ab")
+    assert(call("a") === "a", "a token seen before but replaced since is rebuilt")
+    assert(builds.get === 3)
+    assert(Artifacts.held("spec.replace") === Map("k" -> 1))
+  }
+
   test("two JVMs building one store key get disjoint roots; the child's root goes at exit") {
     Bm25.materializedPostings("art#twojvm", ArtifactsChild.corpus(spark))
     val mine = new java.io.File(Bm25.storePath("art#twojvm").get)

@@ -86,6 +86,25 @@ class CodesIndexSpec extends SparkSpec {
     assert(probes(loaded) === probes(model))
   }
 
+  for ((name, build) <- Seq[(String, (String, DataFrame) => CodesModel[Codec])](
+      "pq" -> ((key, df) => Pq.buildIndex(key, df)),
+      "ivfpq" -> ((key, df) => IvfPq.buildIndex(key, df, nlist = 8))))
+    test(s"$name: a probe over memoized tombstones has no anti-join and no nested-loop join") {
+      val model = build(s"$sfDir#codes-jobs-$name", emb.filter($"vec_id" % 5 =!= 0))
+      CodesIndex.appendToIndexIdempotent(model, emb.filter($"vec_id" % 5 === 0), 1L)
+      CodesIndex.deleteFromIndex(model, emb.filter($"vec_id" % 3 === 1).select("vec_id"), 2L)
+      CodesIndex.probe(model, emb, 0L, 10).collect() // fills the tombstone memo
+      var df: DataFrame = null
+      val jobs = InferenceJobs.launched(spark) {
+        df = CodesIndex.probe(model, emb, 0L, 10); df.collect()
+      }
+      // the query-vector collect, the LUT broadcast, the ADC shuffle, the
+      // top-`rerank` broadcast into the re-rank join, and the result
+      assert(jobs.size === 5, s"jobs: ${jobs.mkString(", ")}")
+      assert(PlansSpec.broadcastsAndAntiJoins(df).filterNot(_ == "BroadcastExchange").isEmpty,
+        df.queryExecution.executedPlan)
+    }
+
   test("loadModel refuses a _model without a schema and a different codec") {
     val model = Pq.buildIndex(s"$sfDir#codes-load", emb)
     intercept[IllegalArgumentException](

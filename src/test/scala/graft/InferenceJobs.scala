@@ -2,15 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Detector for parquet schema-inference jobs, shared by the index specs. */
+/** Job detectors shared by the index specs. */
 object InferenceJobs {
 
   /** Names of the parquet schema-inference jobs `body` launches: footer
     * reads run as a `parquet at …` job outside any SQL execution (writes
-    * and collects carry an execution id). A marker job drains the
-    * listener: events reach one listener in order.
+    * and collects carry an execution id).
     */
-  def of(spark: SparkSession)(body: => Unit): Seq[String] = {
+  def of(spark: SparkSession)(body: => Unit): Seq[String] =
+    launched(spark)(body).collect {
+      case (name, true) if name.startsWith("parquet at") => name
+    }
+
+  /** Every job `body` launches, in start order, as (first stage name,
+    * outside any SQL execution). A marker job drains the listener: events
+    * reach one listener in order.
+    */
+  def launched(spark: SparkSession)(body: => Unit): Seq[(String, Boolean)] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
     // (stage name, job description, outside any SQL execution)
@@ -34,8 +42,6 @@ object InferenceJobs {
       while (!seen.asScala.exists(_._2 == marker) &&
         System.currentTimeMillis() < deadline) Thread.sleep(10)
     } finally sc.removeSparkListener(l)
-    seen.asScala.toSeq.collect {
-      case (name, _, true) if name.startsWith("parquet at") => name
-    }
+    seen.asScala.toSeq.takeWhile(_._2 != marker).map { case (name, _, outside) => (name, outside) }
   }
 }

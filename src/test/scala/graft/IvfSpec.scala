@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{CodesIndex, Ivf, Similarity}
+import graft.sources.Snapshot
 
 class IvfSpec extends SparkSpec {
   import spark.implicits._
@@ -730,5 +731,89 @@ class IvfSpec extends SparkSpec {
     val unlabelled = CodesIndex.readIndex(spark, model).filter($"vec_id" >= 180000000L)
     assert(unlabelled.count() === batch.count())
     assert(unlabelled.filter($"label".isNotNull).isEmpty)
+  }
+
+  test("a probe over memoized tombstones runs two jobs and broadcasts nothing") {
+    val model = Ivf.buildIndex(sfDir + "#twojobs", emb.filter($"vec_id" % 5 =!= 0), nlist = 8)
+    CodesIndex.appendToIndexIdempotent(model, emb.filter($"vec_id" % 5 === 0), 1L)
+    CodesIndex.deleteFromIndex(model, emb.filter($"vec_id" % 3 === 1).select("vec_id"), 2L)
+    val tombed = Snapshot.latest(spark, model.indexPath).get.files
+      .filter(_.kind == Snapshot.Tomb).flatMap(_.list).toSet
+    assert(tombed === model.coarse.get.centroids.map(_._1).toSet,
+      "every list, so every probed one, should carry tombstones")
+    Ivf.probe(model, emb, 0L, 10).collect() // fills the tombstone memo
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = InferenceJobs.launched(spark) { df = Ivf.probe(model, emb, 0L, 10); df.collect() }
+    // the query-vector collect and the result
+    assert(jobs.size === 2, s"jobs: ${jobs.mkString(", ")}")
+    assert(PlansSpec.broadcastsAndAntiJoins(df).isEmpty, df.queryExecution.executedPlan)
+  }
+
+  test("a probe masks up to MaskedTombstones tombstoned ids; one more takes the anti-join") {
+    val n = CodesIndex.MaskedTombstones + 1000L
+    val e = spark.range(n).select($"id".as("vec_id"),
+      array(($"id" % 7).cast("float"), ($"id" % 11).cast("float"), lit(1f)).as("embedding"))
+    val model = Ivf.buildIndex(sfDir + "#maskbound", e, nlist = 2)
+    def probe = Ivf.probe(model, e, n - 1, 10, nprobe = 2)
+    def antiJoined = PlansSpec.broadcastsAndAntiJoins(probe).exists(_.endsWith("LeftAnti"))
+    CodesIndex.deleteFromIndex(model, spark.range(CodesIndex.MaskedTombstones).toDF("vec_id"), 1L)
+    assert(!antiJoined, "at the bound the ids are masked")
+    val masked = probe.as[(Long, Double)].collect().toSeq
+    assert(masked.forall(_._1 >= CodesIndex.MaskedTombstones), "a deleted id still probed")
+    CodesIndex.deleteFromIndex(model, Seq(masked.head._1).toDF("vec_id"), 2L)
+    assert(antiJoined, "above the bound the anti-join stays")
+    assert(probe.as[(Long, Double)].collect().toSeq.take(9) === masked.tail)
+  }
+
+  test("tombstone memo: each delete replaces the entry, compaction clears, the anti-join agrees") {
+    val model = Ivf.buildIndex(sfDir + "#tombmemo", emb, nlist = 8)
+    val qids = Seq(0L, 1L, 2L)
+    def reads: Long = graft.Artifacts.stats.get("index.tombstones").fold(0L)(_.builds)
+    // per query, probe's rows; probeAll must give the same, bit for bit
+    def answers(): Seq[Seq[(Long, Double)]] = {
+      val single = qids.map(q => Ivf.probe(model, emb, q, 10).as[(Long, Double)].collect().toSeq)
+      val all = Ivf.probeAll(model, emb.filter($"vec_id".isin(qids: _*)), 10)
+        .as[(Long, Long, Double, Int)].collect()
+        .groupBy(_._1).view.mapValues(_.sortBy(_._4).map(r => (r._2, r._3)).toSeq).toMap
+      qids.zip(single).foreach { case (q, rows) => assert(all(q) === rows, s"probeAll $q") }
+      single
+    }
+    // the same probes with broadcasts off: the left-anti join branch
+    def antiJoined(): Seq[Seq[(Long, Double)]] = {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, "-1")
+      try {
+        assert(PlansSpec.broadcastsAndAntiJoins(Ivf.probe(model, emb, 0L, 10))
+          .exists(_.endsWith("LeftAnti")), "threshold -1 should take the anti-join")
+        answers()
+      } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    // each batch deletes the current top 3 of every query
+    def top3(a: Seq[Seq[(Long, Double)]]): Seq[Long] = a.flatMap(_.take(3).map(_._1)).distinct
+
+    val b1 = top3(answers())
+    CodesIndex.deleteFromIndex(model, b1.toDF("vec_id"), 1L)
+    val r0 = reads
+    val a1 = answers()
+    assert(reads === r0 + 1, "one tombstone read per tombstone file set")
+    assert(a1.flatten.forall(r => !b1.contains(r._1)), "batch 1 still probed")
+    assert(antiJoined() === a1)
+
+    val b2 = top3(a1)
+    CodesIndex.deleteFromIndex(model, b2.toDF("vec_id"), 2L)
+    val a2 = answers()
+    assert(reads === r0 + 2, "a new tombstone file set must be a new key")
+    assert(a2.flatten.forall(r => !b1.contains(r._1) && !b2.contains(r._1)),
+      "a batch still probed")
+    assert(antiJoined() === a2)
+
+    CodesIndex.compactIndex(spark, model)
+    assert(FileSnapshots.named(spark, model.indexPath, Snapshot.Tomb).isEmpty)
+    assert(answers() === a2, "compaction changed probe results")
+    assert(reads === r0 + 2, "no tombstones left to read")
+    val root = Snapshot.latest(spark, model.indexPath).get.root
+    assert(graft.Artifacts.held("index.tombstones").get(root) === Some(1),
+      "the memo holds one entry per index root")
   }
 }

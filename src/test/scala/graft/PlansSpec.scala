@@ -191,4 +191,25 @@ object PlansSpec {
         a.executedPlan
       case p => p
     }
+
+  /** Every node of `df`'s executed plan, descending through adaptive
+    * query stages too (a stage is a leaf of the tree [[unwrapped]] gives).
+    */
+  def stagedNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case p => p }
+
+  /** The broadcast exchanges, nested-loop joins and anti joins among
+    * [[stagedNodes]], by node name.
+    */
+  def broadcastsAndAntiJoins(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
+    stagedNodes(df).collect {
+      case b: BroadcastExchangeExec => b.nodeName
+      case j: BroadcastNestedLoopJoinExec => j.nodeName
+      case j: BaseJoinExec if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti =>
+        s"${j.nodeName} LeftAnti"
+    }
+  }
 }
