@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.functions.VectorOps
+import graft.sources.{Sinks, Snapshot}
 
 /** BM25 lexical retrieval + hybrid (reciprocal-rank) fusion — the text-side
   * retrieval twin of the ANN stack, closing the standard hybrid-RAG pair:
@@ -42,19 +44,19 @@ object Bm25 {
     * (the lexical analog of [[Embed.materializedHashedTf]]): the
     * (doc_id, t, tf) table written once per corpus key and read by every
     * BM25 consumer (df, dl and the scoring join all derive from it).
-    * Memoized per (storeKey, corpus content) ([[graft.Artifacts]]).
-    * Deterministic, so materialization changes cost only, never results.
+    * Memoized per (storeKey, corpus content) ([[graft.Artifacts]]) and
+    * committed as a [[graft.sources.Snapshot]], so every call reads the
+    * newest snapshot with its recorded schema: no listing, no schema
+    * inference. Deterministic, so materialization changes cost only,
+    * never results.
     */
   def materializedPostings(storeKey: String,
-                           documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    val path = graft.Artifacts.dir("postings", storeKey, Seq(documents)) { p =>
-      documents.select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
-        .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-        .write.mode("overwrite").parquet(p)
-    }
-    spark.read.parquet(path)
-  }
+                           documents: DataFrame): DataFrame =
+    store("postings", storeKey, documents)(postings)
+
+  private def postings(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
+      .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
 
   /** Resolved store path of a materialized postings key: the latest
     * [[materializedPostings]] build under it in this JVM, if any.
@@ -65,24 +67,15 @@ object Bm25 {
   /** Append-only postings maintenance — the lexical analog of the ANN
     * frozen-model append: the inverted index grows by tokenizing ONLY the
     * new batch (one explode + map-side-combined partial agg over the
-    * batch, cost ∝ batch never corpus), landed as a deterministic
-    * per-batch file so crash replays no-op. df/dl/idf derive from the
+    * batch, cost ∝ batch never corpus), committed with its batch id
+    * ([[appendOnce]]), so crash replays no-op. df/dl/idf derive from the
     * postings TABLE at probe time, so a probe over the appended store
     * scores exactly as a from-scratch build over the union corpus — there
     * is no frozen model to drift (the `text_bm25_incr` oracle proves the
     * equality cross-engine).
     */
-  def appendPostings(storeKey: String, newDocs: DataFrame, batchId: Long): Unit = {
-    val path = storePath(storeKey).orNull
-    require(path != null, s"no materialized postings store under key " +
-      s"'$storeKey' — build the base with materializedPostings first")
-    graft.MutationGuard.claim(path)
-    val batch = newDocs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
-      .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-    graft.sources.Sinks.appendBatchFileIdempotent(
-      batch, path, s"ingest-$batchId.parquet")
-  }
+  def appendPostings(storeKey: String, newDocs: DataFrame, batchId: Long): Unit =
+    appendOnce("postings", storeKey, postings(newDocs), batchId)
 
   /** Positional postings — (doc_id, pos, t), the phrase-query artifact
     * next to the (doc_id, t, tf) frequency postings: one posexplode, never
@@ -101,13 +94,8 @@ object Bm25 {
     * only, never results.
     */
   def materializedPositionalPostings(storeKey: String,
-                                     documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    val path = graft.Artifacts.dir("pospostings", storeKey, Seq(documents)) { p =>
-      positionalPostings(documents).write.mode("overwrite").parquet(p)
-    }
-    spark.read.parquet(path)
-  }
+                                     documents: DataFrame): DataFrame =
+    store("pospostings", storeKey, documents)(positionalPostings)
 
   /** Resolved store path of a materialized positional-postings key: the
     * latest [[materializedPositionalPostings]] build under it in this JVM,
@@ -118,19 +106,49 @@ object Bm25 {
 
   /** Append-only positional-postings maintenance — the [[appendPostings]]
     * law carried over: positions are PER-DOCUMENT offsets, so tokenizing
-    * only the new batch and landing it as a deterministic per-batch file
-    * yields a table identical to a from-scratch build over the union
-    * corpus (append ≡ rebuild — the `text_phrase_incr` oracle proves it
+    * only the new batch and committing it with its batch id yields a
+    * table identical to a from-scratch build over the union corpus
+    * (append ≡ rebuild — the `text_phrase_incr` oracle proves it
     * cross-engine). Cost ∝ batch, crash replays no-op.
     */
   def appendPositionalPostings(storeKey: String, newDocs: DataFrame,
-                               batchId: Long): Unit = {
-    val path = posStorePath(storeKey).orNull
-    require(path != null, s"no materialized positional-postings store under " +
-      s"key '$storeKey' — build the base with materializedPositionalPostings first")
+                               batchId: Long): Unit =
+    appendOnce("pospostings", storeKey, positionalPostings(newDocs), batchId)
+
+  /** The `tag` store of `storeKey`, built once per corpus content: `rows`
+    * of `documents` written and committed as version 1, whose model lines
+    * are the tag and the table's `schema <json>`. Returns the newest
+    * snapshot's table.
+    */
+  private def store(tag: String, storeKey: String, documents: DataFrame)
+                   (rows: DataFrame => DataFrame): DataFrame = {
+    val spark = documents.sparkSession
+    val path = graft.Artifacts.dir(tag, storeKey, Seq(documents)) { p =>
+      val table = rows(documents)
+      Snapshot.append(Snapshot.empty(p).copy(model = Seq(tag,
+          s"schema ${CodesIndex.nullable(table.schema).json}")),
+        table, "build", Snapshot.Data, listed = false)
+    }
+    val s = Snapshot.latest(spark, path).get
+    Snapshot.read(spark, s, Snapshot.Data,
+      DataType.fromJson(s.model(1).stripPrefix("schema ")).asInstanceOf[StructType])
+  }
+
+  /** Commit `batch` to the `tag` store of `storeKey` as `append-<batchId>`,
+    * written by one task, unless the newest snapshot has absorbed it. A
+    * second writer from the same version loses at the commit
+    * ([[graft.sources.Sinks.ConcurrentWriterException]]).
+    */
+  private def appendOnce(tag: String, storeKey: String, batch: DataFrame,
+                         batchId: Long): Unit = {
+    val path = graft.Artifacts.latest[String](tag, storeKey).getOrElse(
+      throw new IllegalArgumentException(s"no materialized $tag store under " +
+        s"key '$storeKey' — build the base first"))
     graft.MutationGuard.claim(path)
-    graft.sources.Sinks.appendBatchFileIdempotent(
-      positionalPostings(newDocs), path, s"ingest-$batchId.parquet")
+    val base = Snapshot.latest(batch.sparkSession, path).get
+    if (!base.batches(s"append-$batchId"))
+      Snapshot.append(base, if (Sinks.onePartition(batch)) batch else batch.repartition(1),
+        s"ingest-$batchId", Snapshot.Data, listed = false, Some(s"append-$batchId"))
   }
 
   /** Exact phrase retrieval over positional postings — the lexical

@@ -223,42 +223,50 @@ object CodesIndex {
       s"schema ${model.schema.json}") ++ coarse ++ model.layout.lines
   }
 
+  /** The model snapshot `s` records. Every mutation verb encodes, assigns
+    * and splits with the model of the snapshot it commits on, so reading
+    * the model and committing on it are one optimistic step. A model
+    * without a recorded schema fails (rebuild the index: readers never
+    * infer).
+    */
+  private[operators] def modelOf(s: Snapshot): CodesModel[Layout] = {
+    val head = s.model.head.split(" ")
+    val schema = s.model.lift(1).filter(_.startsWith("schema "))
+      .map(l => DataType.fromJson(l.stripPrefix("schema ")).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(
+        s"${s.root} v${s.version} records no table schema; rebuild the index"))
+    val body = s.model.drop(2).filter(_.nonEmpty)
+    val coarse = body.find(_.startsWith("coarse ")).map { l =>
+      val Array(_, nlist, iters) = l.split(" ")
+      Coarse(nlist.toInt, iters.toInt, body.filter(_.startsWith("C ")).map { c =>
+        val Array(_, cid, vs) = c.split(" ", 3)
+        (cid.toInt, vs.split(",").map(_.toLong))
+      }.toArray)
+    }
+    val params = head.tail.toSeq.map(_.toInt)
+    val layout = head(0).stripPrefix("ivf") match {
+      case "flat" => Ivf.Flat
+      case "pq" => Pq.PqCodec.parse(params, body)
+      case "sq" => Sq.SqCodec.parse(params, body)
+      case other => throw new IllegalStateException(s"${s.root}: unknown layout $other")
+    }
+    CodesModel(layout, coarse, s.root, schema)
+  }
+
   /** The committed model of an index, if it has a snapshot; it reflects
     * every committed re-balance. Memoized builds live for the process
     * (their directories go with [[graft.Artifacts]]' root at exit), so this
     * reads an index another verb of this process changed, or one at a
-    * caller-owned path. A model without a recorded schema fails (rebuild
-    * the index: readers never infer), and so does one whose layout is not
-    * an `L`.
+    * caller-owned path. A model whose layout is not an `L` fails.
     */
   def loadModel[L <: Layout](spark: SparkSession, indexPath: String)
                             (implicit ct: scala.reflect.ClassTag[L]): Option[CodesModel[L]] =
-    Snapshot.latest(spark, indexPath).map { s =>
-      val lines = s.model
-      val head = lines.head.split(" ")
-      val schema = lines.lift(1).filter(_.startsWith("schema "))
-        .map(l => DataType.fromJson(l.stripPrefix("schema ")).asInstanceOf[StructType])
-        .getOrElse(throw new IllegalStateException(
-          s"$indexPath v${s.version} records no table schema; rebuild the index"))
-      val body = lines.drop(2).filter(_.nonEmpty)
-      val coarse = body.find(_.startsWith("coarse ")).map { l =>
-        val Array(_, nlist, iters) = l.split(" ")
-        Coarse(nlist.toInt, iters.toInt, body.filter(_.startsWith("C ")).map { c =>
-          val Array(_, cid, vs) = c.split(" ", 3)
-          (cid.toInt, vs.split(",").map(_.toLong))
-        }.toArray)
-      }
-      val params = head.tail.toSeq.map(_.toInt)
-      val layout = head(0).stripPrefix("ivf") match {
-        case "flat" => Ivf.Flat
-        case "pq" => Pq.PqCodec.parse(params, body)
-        case "sq" => Sq.SqCodec.parse(params, body)
-        case other => throw new IllegalStateException(s"$indexPath: unknown layout $other")
-      }
-      layout match {
-        case l: L => CodesModel(l, coarse, indexPath, schema)
-        case _ => throw new IllegalArgumentException(
-          s"$indexPath holds a ${head(0)} model, not a ${ct.runtimeClass.getSimpleName}")
+    Snapshot.latest(spark, indexPath).map(modelOf).map { m =>
+      m.layout match {
+        case _: L => m.asInstanceOf[CodesModel[L]]
+        case _ => throw new IllegalArgumentException(s"$indexPath holds a " +
+          s"${m.coarse.fold("")(_ => "ivf")}${m.layout.tag} model, " +
+          s"not a ${ct.runtimeClass.getSimpleName}")
       }
     }
 
@@ -341,15 +349,6 @@ object CodesIndex {
         .map { case (l, rs) => l -> rs.map(_.getLong(0)).distinct.toArray }
     }
 
-  /** Write `rows` as the table's files named from `name` and commit them
-    * on `base` (recording `batch`, when given) in one snapshot.
-    */
-  private def commitFiles(model: CodesModel[Layout], base: Snapshot, rows: DataFrame,
-                          name: String, kind: String, batch: Option[String]): Unit =
-    Snapshot.commit(rows.sparkSession, base.copy(
-      files = base.files ++ Snapshot.write(rows, base, name, kind, model.coarse.isDefined),
-      batches = base.batches ++ batch))
-
   /** Frozen-model append: `newBatch` is written as the layout's rows
     * (encoded with the trained codec, assigned by the frozen centroids) —
     * no retrain. Existing files stay byte-identical, untouched lists are
@@ -357,13 +356,16 @@ object CodesIndex {
     * batch with the same model (per-row exact integer math). A raw IVF
     * batch is matched to the recorded schema by column name: a missing
     * `vec_id`/`embedding` or a different type fails before anything is
-    * written, and a missing payload column lands as NULL. NOT idempotent:
-    * [[appendToIndexIdempotent]] is the replay-safe form.
+    * written, and a missing payload column lands as NULL. The batch is
+    * encoded with the model of the snapshot it commits on, whatever model
+    * the caller holds (a re-balance since then moved the lists). NOT
+    * idempotent: [[appendToIndexIdempotent]] is the replay-safe form.
     */
   def appendToIndex(model: CodesModel[Layout], newBatch: DataFrame): Unit = {
     graft.MutationGuard.claim(model.indexPath)
     val base = snapshot(newBatch.sparkSession, model)
-    commitFiles(model, base, encode(model, newBatch), "append", Snapshot.Data, None)
+    val m = modelOf(base)
+    Snapshot.append(base, encode(m, newBatch), "append", Snapshot.Data, m.coarse.isDefined)
   }
 
   /** Replay-idempotent append, the exactly-once form for streaming ingest:
@@ -371,17 +373,20 @@ object CodesIndex {
     * (also after a compaction folded its files, or a re-balance moved its
     * rows). Otherwise it is written by one task (`repartition(1)` unless
     * [[graft.sources.Sinks.onePartition]]): one `ingest-<batchId>` file
-    * per touched list. A crash before the commit leaves files no snapshot
-    * names; the replay's commit removes them.
+    * per touched list, encoded with the model of the snapshot it commits
+    * on, as [[appendToIndex]]. A crash before the commit leaves files no
+    * snapshot names; the replay's commit removes them.
     */
   def appendToIndexIdempotent(model: CodesModel[Layout], newBatch: DataFrame,
                               batchId: Long): Unit = {
     graft.MutationGuard.claim(model.indexPath)
     val base = snapshot(newBatch.sparkSession, model)
     if (!base.batches(s"append-$batchId")) {
-      val rows = encode(model, newBatch)
-      commitFiles(model, base, if (graft.sources.Sinks.onePartition(rows)) rows
-        else rows.repartition(1), s"ingest-$batchId", Snapshot.Data, Some(s"append-$batchId"))
+      val m = modelOf(base)
+      val rows = encode(m, newBatch)
+      Snapshot.append(base, if (graft.sources.Sinks.onePartition(rows)) rows
+        else rows.repartition(1), s"ingest-$batchId", Snapshot.Data, m.coarse.isDefined,
+        Some(s"append-$batchId"))
     }
   }
 
@@ -399,8 +404,8 @@ object CodesIndex {
       val tomb = if (model.coarse.isEmpty) ids.select("vec_id").distinct()
         else Snapshot.read(spark, base, Snapshot.Data, model.schema)
           .select(col("vec_id"), col("list")).join(ids.select("vec_id"), "vec_id")
-      commitFiles(model, base, tomb.repartition(1), s"tomb-$batchId", Snapshot.Tomb,
-        Some(s"delete-$batchId"))
+      Snapshot.append(base, tomb.repartition(1), s"tomb-$batchId", Snapshot.Tomb,
+        model.coarse.isDefined, Some(s"delete-$batchId"))
     }
   }
 

@@ -464,15 +464,16 @@ object Ivf {
     * integer-grid Lloyd of [[trainCentroids]]) into two new lists; cold
     * lists are never opened. Tombstones on a split list are consumed. The
     * vector set is unchanged, so an exhaustive probe equals the original's
-    * (IvfSpec). It starts from the committed model, writes every split in
-    * one write and commits the new lists with the new model in one
-    * snapshot: a crash before the commit leaves the index as it was.
+    * (IvfSpec). It splits with the model of the snapshot it commits on
+    * (`model` names the index only), writes every split in one write and
+    * commits the new lists with the new model in one snapshot: a crash
+    * before the commit leaves the index as it was.
     */
   def rebalanceIndex(spark: SparkSession, model: IvfModel,
                      maxRatio: Double = 4.0, iters: Int = 2): IvfModel = {
     graft.MutationGuard.claim(model.indexPath)
-    val m0 = CodesIndex.currentModel(spark, model)
-    val base = CodesIndex.snapshot(spark, m0)
+    val base = CodesIndex.snapshot(spark, model)
+    val m0 = CodesIndex.modelOf(base).asInstanceOf[IvfModel]
     val sizes = Snapshot.read(spark, base, Snapshot.Data, m0.schema)
       .groupBy("list").count().collect()
       .map(r => (r.getInt(0), r.getLong(1))).toMap

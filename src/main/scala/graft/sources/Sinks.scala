@@ -123,12 +123,15 @@ object Sinks {
 
   /** Replace `target` with `staging` (delete + rename through the Hadoop
     * filesystem — the swap step after [[compact]] or a foreachBatch
-    * rewrite).
+    * rewrite). [[crashPoint]] fires at `"deleted"` with the target between
+    * the two: a crash there leaves the rows only in `staging`, which
+    * [[readForSwap]] and [[upsertPartitions]] move back before they read.
     */
   def swapDirs(spark: org.apache.spark.sql.SparkSession,
                staging: String, target: String): Unit = {
     val fs = fileSystem(spark, target)
     fs.delete(new org.apache.hadoop.fs.Path(target), true)
+    crashPoint("deleted", new org.apache.hadoop.fs.Path(target))
     if (!fs.rename(new org.apache.hadoop.fs.Path(staging),
         new org.apache.hadoop.fs.Path(target)))
       throw new java.io.IOException(s"rename $staging -> $target failed")
@@ -164,92 +167,20 @@ object Sinks {
     fs.listStatus(dir).toSeq.filter(s => s.isFile &&
       !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
 
-  /** Name of the exclusive-writer lease file under a table/index dir.
-    * Underscore-prefixed so data scans never see it.
-    */
-  val LeaseName = "_writer_lease"
-
-  /** Thrown when a second writer tries to mutate a leased directory, or
-    * loses an index snapshot commit ([[Snapshot.commit]]) to another
-    * writer — the FAIL-FAST half of the single-writer contract.
+  /** Thrown by [[Snapshot.commit]] (and the [[Snapshot.write]] before it)
+    * when another writer committed a later version of the table since this
+    * writer's base snapshot — the fail-fast half of the single-writer
+    * contract of the ANN indexes and the postings stores. The loser's
+    * files are never read; a replay from the new version lands its batch.
     */
   final class ConcurrentWriterException(msg: String)
     extends IllegalStateException(msg)
 
-  /** Run `body` holding the exclusive writer lease for `dir` — the
-    * mutual-exclusion wrapper the streaming ingest sinks put around each
-    * micro-batch commit, turning the previously-silent two-writer race
-    * into a loud [[ConcurrentWriterException]] for the loser.
-    *
-    * Mechanics: `fs.create(lease, overwrite = false)` — atomic on HDFS
-    * and object stores with conditional-create; on the local FS the
-    * check-then-create window is microseconds, which is the standard
-    * Hadoop-ecosystem lease idiom (Delta's SetTransaction / Iceberg's
-    * lock-manager fall back the same way without a coordination service).
-    * The lease records owner + wall-clock; a lease older than `staleMs`
-    * is presumed abandoned by a dead writer and broken (one retry). On
-    * release the owner re-reads the lease and deletes it only if still
-    * its own — finding someone else's means a peer wrongly broke a LIVE
-    * lease (staleMs shorter than a batch), which throws rather than
-    * silently un-locking the peer. `staleMs` must comfortably exceed the
-    * longest batch the writer runs.
-    *
-    * The lease lives in a SIBLING `<dir>__lock/` directory, not inside
-    * `dir`, which holds only the table's own files.
-    */
-  def withDirLease[T](spark: org.apache.spark.sql.SparkSession, dir: String,
-                      owner: String = java.util.UUID.randomUUID().toString,
-                      staleMs: Long = 15L * 60 * 1000)(body: => T): T = {
-    val fs = fileSystem(spark, dir)
-    val dirPath = new org.apache.hadoop.fs.Path(dir.stripSuffix("/") + "__lock")
-    fs.mkdirs(dirPath)
-    val lease = new org.apache.hadoop.fs.Path(dirPath, LeaseName)
-    def readLease(): Option[(String, Long)] =
-      try {
-        val in = fs.open(lease)
-        val line = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().next() finally in.close()
-        val Array(o, ts) = line.split(" ", 2)
-        Some((o, ts.toLong))
-      } catch { case _: Throwable => None }
-    def tryAcquire(): Boolean =
-      try {
-        val out = fs.create(lease, false)
-        try out.write(s"$owner ${System.currentTimeMillis()}\n".getBytes("UTF-8"))
-        finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    if (!tryAcquire()) {
-      val holder = readLease()
-      val stale = holder.exists { case (_, ts) =>
-        System.currentTimeMillis() - ts > staleMs }
-      if (!stale)
-        throw new ConcurrentWriterException(
-          s"$dir is leased by writer ${holder.map(_._1).getOrElse("<unreadable>")} — " +
-            "a second concurrent writer on one index/table would lose its " +
-            "commits; run one ingest stream per index")
-      fs.delete(lease, false) // abandoned by a dead writer — break and retry once
-      if (!tryAcquire())
-        throw new ConcurrentWriterException(
-          s"$dir: lost the lease race after breaking a stale lease")
-    }
-    try body
-    finally {
-      readLease() match {
-        case Some((o, _)) if o == owner => fs.delete(lease, false)
-        case other =>
-          throw new ConcurrentWriterException(
-            s"$dir: lease was ${other.map(h => s"taken over by ${h._1}")
-              .getOrElse("removed")} while this writer held it — " +
-              "staleMs is shorter than this writer's batch; writes may have raced")
-      }
-    }
-  }
-
   /** Fault-injection seam of the staged publishes, which crash specs make
     * throw: [[appendBatchFileIdempotent]] calls it with its destination at
     * `"staged"` (before its rename) and `"published"` (before removing the
-    * stage), [[Snapshot.commit]] with the table root (see there).
+    * stage), [[swapDirs]] with its target at `"deleted"`, and
+    * [[Snapshot.commit]] with the table root (see there).
     */
   @volatile private[graft] var crashPoint: (String, org.apache.hadoop.fs.Path) => Unit =
     (_, _) => ()
@@ -324,11 +255,30 @@ object Sinks {
     * nulls, no chars hive-escapes); keys must not move between partitions
     * (a moved key is a delete+insert, the standard partitioned-MERGE
     * contract). Returns the touched partition values.
+    *
+    * A crash inside a swap ([[swapDirs]]: delete, then rename) leaves a
+    * partition only in the staging dir. The next call first moves every
+    * staged partition whose target is absent into place, as
+    * [[readForSwap]] does, and drops the rest of the stage; a replay of
+    * the same batch then re-merges to the same rows.
     */
   def upsertPartitions(spark: org.apache.spark.sql.SparkSession,
                        targetPath: String, updates: DataFrame, partCol: String,
                        keyCols: Seq[String], versionCol: String,
                        tieCols: Seq[String] = Nil): Seq[String] = {
+    val fs = fileSystem(spark, targetPath)
+    val staging = targetPath + "__upsert_staging"
+    val stage = new org.apache.hadoop.fs.Path(staging)
+    if (fs.exists(stage)) {
+      fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith(s"$partCol="))
+        .foreach { p =>
+          val target = new org.apache.hadoop.fs.Path(targetPath, p.getName)
+          if (!fs.exists(target) && !fs.rename(p, target))
+            throw new java.io.IOException(
+              s"recovering interrupted swap: rename $p -> $target failed")
+        }
+      fs.delete(stage, true)
+    }
     val touchedRaw = updates.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq
     // null check BEFORE sorting — String.compareTo on null would NPE first
@@ -340,12 +290,11 @@ object Sinks {
     val merged = graft.operators.Upsert.keepLatest(
       base.unionByName(updates.select(base.columns.map(col): _*)),
       keyCols, versionCol, tieCols)
-    val staging = targetPath + "__upsert_staging"
     merged.write.mode("overwrite").partitionBy(partCol).parquet(staging)
     touched.foreach { v =>
       swapDirs(spark, s"$staging/$partCol=$v", s"$targetPath/$partCol=$v")
     }
-    fileSystem(spark, staging).delete(new org.apache.hadoop.fs.Path(staging), true)
+    fs.delete(stage, true)
     touched
   }
 

@@ -9,14 +9,17 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.types.StructType
 
-/** One committed version of an index table. A table is a directory of
+/** One committed version of a table graft maintains incrementally: an
+  * ANN index or a BM25 postings store. A table is a directory of
   * immutable parquet files plus `_snapshots/<version>`, and the newest
-  * snapshot is the table: its `model` lines (`CodesIndex.loadModel` parses
-  * them), every data and tombstone file with its `list`, length and mtime
-  * (readers build their relation from this list: [[read]]), and the batch
-  * ids absorbed (`append-<id>`, `delete-<id>`: a replay is a no-op). File
-  * lines: the model lines, `file <kind> <list|-> <len> <mtime> <path>`,
-  * `batch <id>`.
+  * snapshot is the table: its `model` lines (an index's layout and model,
+  * which `CodesIndex.loadModel` parses, or a store's tag; each with a
+  * `schema <json>` line), every data and tombstone file with its `list`,
+  * length and mtime (readers build their relation from this list:
+  * [[read]]), and the batch ids absorbed (`append-<id>`, `delete-<id>`: a
+  * replay is a no-op). [[commit]] is the only writer check of these
+  * tables. File lines: the model lines,
+  * `file <kind> <list|-> <len> <mtime> <path>`, `batch <id>`.
   */
 final case class Snapshot(root: String, version: Long, model: Seq[String],
                           files: Seq[Snapshot.File], batches: Set[String])
@@ -164,6 +167,15 @@ object Snapshot {
       case e: Exception => throw superseded(fs, root, base.version).map(_.initCause(e)).getOrElse(e)
     }
   }
+
+  /** [[write]] `rows` as new `kind` files of `base`'s table and [[commit]]
+    * them on `base`, recording `batch` when given.
+    */
+  private[graft] def append(base: Snapshot, rows: DataFrame, name: String, kind: String,
+                            listed: Boolean, batch: Option[String] = None): Snapshot =
+    commit(rows.sparkSession, base.copy(
+      files = base.files ++ write(rows, base, name, kind, listed),
+      batches = base.batches ++ batch))
 
   /** The snapshot's `kind` files as a DataFrame of `schema` (`list` is the
     * partition column), its file index fed from the snapshot as Spark's

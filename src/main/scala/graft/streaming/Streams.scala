@@ -208,30 +208,27 @@ object Streams {
     * loop, the sparse twin of the embedding ingest sinks: each
     * micro-batch of raw documents tokenizes (batch-proportional) and
     * lands in the materialized postings store via the idempotent append
-    * verb ([[graft.operators.Bm25.appendPostings]]), under the exclusive
-    * writer lease like every index ingest. df/dl/idf derive from the
-    * table at probe time, so a probe after any batch scores exactly as a
-    * from-scratch build over the rows ingested so far (StreamingSpec
-    * parity) — no frozen model, no drift.
+    * verb ([[graft.operators.Bm25.appendPostings]]), which commits the
+    * batch id in the store's snapshot: a replay is a no-op, and a second
+    * writer from the same version fails at the commit like every index
+    * ingest. df/dl/idf derive from the table at probe time, so a probe
+    * after any batch scores exactly as a from-scratch build over the rows
+    * ingested so far (StreamingSpec parity) — no frozen model, no drift.
     */
   def bm25IngestSink(docs: DataFrame, storeKey: String,
                      checkpointDir: String): DataStreamWriter[Row] =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(scopedBatch { (batch: DataFrame, batchId: Long) =>
-        val path = graft.operators.Bm25.storePath(storeKey).getOrElse(
-          sys.error(s"no postings store for '$storeKey' — build the base first"))
-        graft.sources.Sinks.withDirLease(batch.sparkSession, path) {
-          graft.operators.Bm25.appendPostings(storeKey, batch, batchId)
-        }
+        graft.operators.Bm25.appendPostings(storeKey, batch, batchId)
       })
 
   /** Streaming positional-postings ingest — the phrase index's
     * growing-corpus loop ([[bm25IngestSink]]'s positional sibling): each
     * micro-batch tokenizes positionally (batch-proportional — positions
     * are per-document offsets, so no cross-batch state exists) and lands
-    * in the materialized positional store via the idempotent append verb.
-    * A phrase probe after any batch ranks exactly as a from-scratch build
+    * in the materialized positional store via the idempotent append verb,
+    * with the same snapshot commit. A phrase probe after any batch ranks exactly as a from-scratch build
     * over the rows ingested so far (append ≡ rebuild — StreamingSpec
     * parity, the text_phrase_incr law streamed).
     */
@@ -240,12 +237,7 @@ object Streams {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(scopedBatch { (batch: DataFrame, batchId: Long) =>
-        val path = graft.operators.Bm25.posStorePath(storeKey).getOrElse(
-          sys.error(s"no positional-postings store for '$storeKey' — " +
-            "build the base first"))
-        graft.sources.Sinks.withDirLease(batch.sparkSession, path) {
-          graft.operators.Bm25.appendPositionalPostings(storeKey, batch, batchId)
-        }
+        graft.operators.Bm25.appendPositionalPostings(storeKey, batch, batchId)
       })
 
   /** Streaming exact dedup on a key column: keeps the first arrival of each
@@ -843,10 +835,10 @@ object Streams {
     *
     * Delivery: EXACTLY-ONCE — each micro-batch commits its files with its
     * batch id in one index snapshot, so a crash-replayed batch is a no-op,
-    * and a crash before the commit is overwritten by the replay. Each
-    * batch re-takes the index's writer lease, so a SECOND ingest stream on
-    * the same index fails fast with a ConcurrentWriterException instead of
-    * losing its commits.
+    * and a crash before the commit is overwritten by the replay. A writer
+    * that commits on the index between this batch's read of the snapshot
+    * and its commit makes the batch fail with a ConcurrentWriterException
+    * instead of losing either commit; a restart on the checkpoint lands it.
     *
     * `compactAboveFiles > 0` arms AUTO-COMPACTION: after each batch
     * commits, `CodesIndex.compactIndex` folds the flat table, or each list,
@@ -873,7 +865,7 @@ object Streams {
     * embedder's per-batch aggregations are legal here because foreachBatch
     * hands us a BATCH DataFrame — this is the streaming form of the
     * crawl→embed→index loop the `cur_pretrain_index` flagship runs in
-    * batch. Same lease, same auto-compaction knob.
+    * batch. Same snapshot commit, same auto-compaction knob.
     */
   def embedIngestSink(documents: DataFrame,
                       model: graft.operators.Ivf.IvfModel,
@@ -900,60 +892,46 @@ object Streams {
       graft.operators.CorpusIndex.chunkEmbeddings(_))
 
   /** The ingest loop of the sinks above: `vectorsOf(batch)` appended
-    * exactly-once under the index's writer lease, then the optional
-    * in-stream compaction.
+    * exactly-once, then the optional in-stream compaction.
     */
   private def ingestSink(source: DataFrame, model: CodesModel[Layout],
                          checkpointDir: String, compactAboveFiles: Int)
-                        (vectorsOf: DataFrame => DataFrame): DataStreamWriter[Row] = {
-    val writerId = java.util.UUID.randomUUID().toString
+                        (vectorsOf: DataFrame => DataFrame): DataStreamWriter[Row] =
     source.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.Sinks.withDirLease(batch.sparkSession, model.indexPath,
-          writerId) {
-          CodesIndex.appendToIndexIdempotent(model, vectorsOf(batch), batchId)
-          if (compactAboveFiles > 0)
-            CodesIndex.compactIndex(batch.sparkSession, model,
-              maxFilesPerList = compactAboveFiles)
-        }
+        CodesIndex.appendToIndexIdempotent(model, vectorsOf(batch), batchId)
+        if (compactAboveFiles > 0)
+          CodesIndex.compactIndex(batch.sparkSession, model,
+            maxFilesPerList = compactAboveFiles)
         ()
       })
-  }
 
   /** [[codesIngestSink]] for the SHARDED layout — the lifecycle symmetry
     * the 10¹¹-vector deployment needs (the sharded quantizer is exactly
     * where such a deployment lives): each micro-batch routes rows to
     * their owning shard by the build's own md5 hash law and lands
-    * exactly-once per (shard, batchId) via the per-shard
-    * `CodesIndex.appendToIndexIdempotent` contract — a crash replay finds
+    * exactly-once per (shard, batchId) via
+    * `CodesIndex.appendToShardedIndexIdempotent` — a crash replay finds
     * the batch id in every committed shard's snapshot and no-ops shard by
     * shard. The batch is persisted across the per-shard filters (one
-    * source read per batch, not per shard — scopedBatch releases it);
-    * each shard append runs under its own index lease.
+    * source read per batch, not per shard — scopedBatch releases it); an
+    * armed compaction then runs `CodesIndex.compactShardedIndex`.
     */
   def ivfShardedIngestSink(vectors: DataFrame,
                            model: ShardedModel[Layout],
                            checkpointDir: String,
-                           compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
-    val writerId = java.util.UUID.randomUUID().toString
+                           compactAboveFiles: Int = 0): DataStreamWriter[Row] =
     vectors.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(scopedBatch { (batch: DataFrame, batchId: Long) =>
-        val b = graft.CacheScope.global.persist(batch)
-        model.shards.zipWithIndex.foreach { case (m, sh) =>
-          graft.sources.Sinks.withDirLease(batch.sparkSession, m.indexPath,
-            writerId) {
-            CodesIndex.appendToIndexIdempotent(m, CodesIndex.shardSlice(model, b, sh),
-              batchId)
-            if (compactAboveFiles > 0)
-              CodesIndex.compactIndex(batch.sparkSession, m,
-                maxFilesPerList = compactAboveFiles)
-          }
-          ()
-        }
+        CodesIndex.appendToShardedIndexIdempotent(model,
+          graft.CacheScope.global.persist(batch), batchId)
+        if (compactAboveFiles > 0)
+          CodesIndex.compactShardedIndex(batch.sparkSession, model,
+            maxFilesPerList = compactAboveFiles)
+        ()
       })
-  }
 
   /** Streaming takedown sink — the DELETE verb's streaming form, closing
     * the index lifecycle loop (ingest / probe / delete all drivable from
@@ -998,13 +976,13 @@ object Streams {
       })
 
   /** Self-maintaining ingest — [[codesIngestSink]] plus DRIFT handling for
-    * a raw IVF index: each batch loads the COMMITTED model
-    * (`CodesIndex.currentModel` — the newest snapshot's, which survives
-    * restarts and reflects every earlier split), appends with it,
-    * optionally compacts, and when the max/mean list ratio exceeds
-    * `rebalanceAboveRatio` runs `Ivf.rebalanceIndex`, which commits the
-    * updated model for the NEXT batch. This is the sink that keeps nprobe
-    * pruning effective under a drifting corpus without any external
+    * a raw IVF index: each batch appends, optionally compacts, and when the
+    * max/mean list ratio exceeds `rebalanceAboveRatio` runs
+    * `Ivf.rebalanceIndex`, which commits the updated model for the NEXT
+    * batch. Every verb assigns with the model of the snapshot it commits on
+    * (the newest, which survives restarts and reflects every earlier
+    * split), so `model` only names the index. This is the sink that keeps
+    * nprobe pruning effective under a drifting corpus without any external
     * maintenance job.
     *
     * Exactly-once under evolution: the snapshot's batch id makes a replayed
@@ -1016,26 +994,18 @@ object Streams {
                         model: graft.operators.Ivf.IvfModel,
                         checkpointDir: String,
                         compactAboveFiles: Int = 0,
-                        rebalanceAboveRatio: Double = 0.0): DataStreamWriter[Row] = {
-    val writerId = java.util.UUID.randomUUID().toString
+                        rebalanceAboveRatio: Double = 0.0): DataStreamWriter[Row] =
     vectors.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch (scopedBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // the lease covers model resolution too: a concurrent writer's
-        // re-balance between currentModel and the append would otherwise
-        // hand this batch a stale quantizer
-        graft.sources.Sinks.withDirLease(spark, model.indexPath, writerId) {
-          val m = CodesIndex.currentModel(spark, model)
-          CodesIndex.appendToIndexIdempotent(m, batch, batchId)
-          if (compactAboveFiles > 0)
-            CodesIndex.compactIndex(spark, m, maxFilesPerList = compactAboveFiles)
-          if (rebalanceAboveRatio > 0.0)
-            graft.operators.Ivf.rebalanceIndex(spark, m, rebalanceAboveRatio)
-        }
+        CodesIndex.appendToIndexIdempotent(model, batch, batchId)
+        if (compactAboveFiles > 0)
+          CodesIndex.compactIndex(spark, model, maxFilesPerList = compactAboveFiles)
+        if (rebalanceAboveRatio > 0.0)
+          graft.operators.Ivf.rebalanceIndex(spark, model, rebalanceAboveRatio)
         ()
       })
-  }
 
   /** Streaming decontamination gate — the ingest twin of the batch
     * `cur_decontaminate` flow: each incoming document counts its distinct

@@ -134,6 +134,82 @@ class CrashConsistencySpec extends SparkSpec {
         s"files no snapshot names: ${files.filterNot(retained(model.indexPath))}")
     }
 
+  test("upsertPartitions: crash between a swap's delete and its rename, replay converges") {
+    val root = java.nio.file.Files.createTempDirectory("graft-crashup").toString
+    val base = Seq((1L, "p0", 10, 0L), (2L, "p0", 20, 0L), (3L, "p1", 30, 0L),
+      (4L, "p1", 40, 0L), (5L, "p2", 50, 0L)).toDF("id", "part", "v", "version")
+    val updates = Seq((1L, "p0", 11, 1L), (3L, "p1", 31, 1L), (6L, "p1", 60, 1L),
+      (7L, "p3", 70, 1L)).toDF("id", "part", "v", "version")
+    def upsert(dir: String) = Sinks.upsertPartitions(spark, dir, updates, "part",
+      keyCols = Seq("id"), versionCol = "version")
+    def rows(dir: String) = spark.read.parquet(dir).select("id", "part", "v", "version")
+      .as[(Long, String, Int, Long)].collect().toSet
+    val clean = s"$root/clean"
+    Sinks.partitionedParquet(base, clean, Seq("part"))
+    upsert(clean)
+    val dir = s"$root/crashed"
+    Sinks.partitionedParquet(base, dir, Seq("part"))
+    // the second swap crashes: p0 is swapped, p1 deleted but not renamed,
+    // p3 still only staged
+    val p1 = new org.apache.hadoop.fs.Path(s"$dir/part=p1")
+    Sinks.crashPoint = (p, d) => if (p == "deleted" && d == p1) throw new InjectedCrash
+    try intercept[InjectedCrash](upsert(dir))
+    finally Sinks.crashPoint = (_, _) => ()
+    assert(!new java.io.File(s"$dir/part=p1").exists())
+    assert(new java.io.File(s"${dir}__upsert_staging/part=p1").exists())
+
+    upsert(dir) // replay
+    assert(rows(dir) === rows(clean))
+    assert(rows(dir).contains((4L, "p1", 40, 0L)), "p1's untouched row was lost")
+    assert(!new java.io.File(s"${dir}__upsert_staging").exists(), "replay left the stage behind")
+  }
+
+  test("upsertSink: crash between the swap's delete and its rename, restart converges") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft-crashupsink").toString
+    val a = Seq((1L, 10, 0L), (2L, 20, 0L), (3L, 30, 0L))
+    val b = Seq((2L, 21, 1L), (4L, 40, 1L))
+    def start(input: MemoryStream[(Long, Int, Long)], name: String) =
+      graft.streaming.Streams.upsertSink(input.toDF().toDF("id", "v", "version"),
+        s"$root/$name", s"$root/$name-ckpt", Seq("id"), "version").start()
+    def rows(name: String) = spark.read.parquet(s"$root/$name")
+      .as[(Long, Int, Long)].collect().toSet
+    def batches(input: MemoryStream[(Long, Int, Long)], name: String) = {
+      val q = start(input, name)
+      input.addData(a)
+      q.processAllAvailable()
+      input.addData(b)
+      q
+    }
+    val clean = batches(MemoryStream[(Long, Int, Long)], "clean")
+    clean.processAllAvailable()
+    clean.stop()
+    // the second batch's swap crashes
+    val table = new org.apache.hadoop.fs.Path(s"$root/crashed")
+    val swaps = new java.util.concurrent.atomic.AtomicInteger
+    Sinks.crashPoint = (p, d) =>
+      if (p == "deleted" && d == table && swaps.incrementAndGet() == 2) throw new InjectedCrash
+    try {
+      val q = batches(MemoryStream[(Long, Int, Long)], "crashed")
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+      q.stop()
+    } finally Sinks.crashPoint = (_, _) => ()
+    // the swap's delete ran: the table lives only in the staging dir
+    assert(!new java.io.File(s"$root/crashed").exists())
+    assert(new java.io.File(s"$root/crashed.staging").exists())
+
+    val input = MemoryStream[(Long, Int, Long)] // restart on the checkpoint
+    input.addData(a)
+    input.addData(b)
+    val q = start(input, "crashed")
+    q.processAllAvailable()
+    assert(q.exception.isEmpty, s"restart failed: ${q.exception}")
+    q.stop()
+    assert(rows("crashed") === rows("clean"))
+    assert(rows("clean") === Set((1L, 10, 0L), (2L, 21, 1L), (3L, 30, 0L), (4L, 40, 1L)))
+  }
+
   test("pretrain state: a version without _done is skipped, and replay converges") {
     val docs = Tables.documents(spark, sfDir).filter($"doc_id" % 4 === 0)
     val probe = Tables.documents(spark, sfDir).filter($"doc_id" % 100 === 0)

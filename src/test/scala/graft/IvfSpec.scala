@@ -269,6 +269,30 @@ class IvfSpec extends SparkSpec {
       emb.count() + 3 * hotVecs.count())
   }
 
+  test("an append through a model held from before a re-balance lands in the committed lists") {
+    val base = emb.filter($"vec_id" % 5 =!= 0)
+    val held = Ivf.buildIndex(sfDir + "#stale", base, nlist = 8)
+    val m2 = Ivf.rebalanceIndex(spark, held, maxRatio = 1.01)
+    val split = held.coarse.get.centroids.map(_._1).toSet -- m2.coarse.get.centroids.map(_._1)
+    assert(split.nonEmpty, "no list was split")
+    // the held quantizer assigns part of the batch to lists the split removed
+    val batch = emb.filter($"vec_id" % 5 === 0)
+    assert(Ivf.index(batch, held.coarse.get.centroids)
+      .filter($"list".isin(split.toSeq: _*)).count() > 0)
+    CodesIndex.appendToIndexIdempotent(held, batch, 7L)
+    CodesIndex.appendToIndex(held, batch.withColumn("vec_id", $"vec_id" + 50000000L))
+    val cur = CodesIndex.currentModel(spark, held)
+    val cids = cur.coarse.get.centroids.map(_._1).toSet
+    val lists = CodesIndex.readIndex(spark, cur).select("list").distinct().as[Int].collect().toSet
+    assert(lists.subsetOf(cids), s"lists ${lists -- cids} name no centroid of the committed model")
+    val ids = batch.select("vec_id").as[Long].collect().toSet
+    val appended = ids ++ ids.map(_ + 50000000L)
+    val reached = Ivf.probe(cur, emb, 1L, CodesIndex.readIndex(spark, cur).count().toInt,
+      nprobe = cids.size).select("vec_id").as[Long].collect().toSet
+    assert(appended.subsetOf(reached),
+      s"${(appended -- reached).size} appended ids no exhaustive probe reaches")
+  }
+
   test("persisted model round-trips exactly and survives the lifecycle verbs") {
     val model = Ivf.buildIndex(sfDir + "#persist", emb, nlist = 8)
     val loaded = CodesIndex.loadModel[Ivf.Flat.type](spark, model.indexPath).get

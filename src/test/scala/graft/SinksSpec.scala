@@ -387,54 +387,6 @@ class SinksSpec extends SparkSpec {
     assert(got.contains((3L, "p1", 31, 1L)) && got.contains((7L, "p3", 70, 1L)))
   }
 
-  test("withDirLease: second writer fails fast; lease releases on exit and on error") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lease").toString + "/idx"
-    var ran = 0
-    Sinks.withDirLease(spark, dir, "writer-a") {
-      ran += 1
-      // the loser FAILS SAFE: loud exception, no partial mutation
-      val e = intercept[Sinks.ConcurrentWriterException] {
-        Sinks.withDirLease(spark, dir, "writer-b") { ran += 100 }
-      }
-      assert(e.getMessage.contains("writer-a"))
-    }
-    assert(ran === 1)
-    // released on normal exit: a later writer acquires freely
-    Sinks.withDirLease(spark, dir, "writer-c") { ran += 10 }
-    assert(ran === 11)
-    // released on exception too
-    intercept[RuntimeException] {
-      Sinks.withDirLease(spark, dir, "writer-d") { throw new RuntimeException("boom") }
-    }
-    Sinks.withDirLease(spark, dir, "writer-e") { ran += 10 }
-    assert(ran === 21)
-  }
-
-  test("withDirLease: a stale lease from a dead writer is broken, a live one is not") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lease2").toString + "/idx"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val lockDir = new org.apache.hadoop.fs.Path(dir + "__lock")
-    fs.mkdirs(lockDir)
-    val lease = new org.apache.hadoop.fs.Path(lockDir, Sinks.LeaseName)
-    def plant(ageMs: Long): Unit = {
-      fs.delete(lease, false)
-      val out = fs.create(lease, false)
-      out.write(s"dead-writer ${System.currentTimeMillis() - ageMs}\n".getBytes("UTF-8"))
-      out.close()
-    }
-    // stale (older than staleMs): broken, body runs
-    plant(ageMs = 60000)
-    var ran = false
-    Sinks.withDirLease(spark, dir, "writer-a", staleMs = 1000) { ran = true }
-    assert(ran)
-    // fresh (a LIVE peer): fail fast
-    plant(ageMs = 0)
-    intercept[Sinks.ConcurrentWriterException] {
-      Sinks.withDirLease(spark, dir, "writer-b", staleMs = 60000) { fail("must not run") }
-    }
-  }
-
   test("staged verbs take the filesystem from the path, not fs.defaultFS") {
     // the default filesystem names a scheme no staged write may touch: a
     // verb that resolves it instead of the path's own scheme fails
@@ -487,5 +439,18 @@ class SinksSpec extends SparkSpec {
       allowed.contains("new java.util.concurrent.ConcurrentHashMap")
     }.map(_._1)
     assert(maps.isEmpty, s"ConcurrentHashMap memo in ${maps.mkString(", ")}")
+    // one writer check: the snapshot commit. No lease comes back, and a
+    // Hadoop rename or create (a commit mechanism) appears only in the
+    // files that own one, allowed by name
+    val all = sources("src/main")
+    val lease = all.filter { case (_, text) =>
+      Seq("withDirLease", "_writer_lease", "__lock").exists(text.contains) }.map(_._1)
+    assert(lease.isEmpty, s"writer lease in ${lease.mkString(", ")}")
+    val commits = all.filter { case (p, text) =>
+      !Seq("/sources/Snapshot.scala", "/sources/Sinks.scala", "/operators/Pretrain.scala")
+        .exists(p.endsWith) &&
+        """(?<!TempDirs)\.(rename|create|createAtomic)\(""".r.findFirstIn(text).nonEmpty
+    }.map(_._1)
+    assert(commits.isEmpty, s"Hadoop rename/create outside the commit owners: ${commits.mkString(", ")}")
   }
 }

@@ -970,46 +970,125 @@ class StreamingSpec extends SparkSpec {
     assert(probed === exact)
   }
 
-  test("a second concurrent ingest writer on one index fails safe (lease)") {
-    implicit val sqlCtx = spark.sqlContext
-    val emb = Tables.embeddings(spark, sfDir)
-    val base = emb.filter($"vec_id" % 5 =!= 0)
-    val batch = emb.filter($"vec_id" % 5 === 0)
-    val model = graft.operators.Ivf.buildIndex(sfDir + "#lease", base, nlist = 8)
-    val before = graft.operators.CodesIndex.readIndex(spark, model).count()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-lease-c").toString
-    val rows = batch.select("vec_id", "embedding")
-      .as[(Long, Seq[Float])].collect().toSeq
-    // writer A holds the index lease for the whole duration; stream B's
-    // micro-batch must fail LOUDLY and leave the index untouched
-    graft.sources.Sinks.withDirLease(spark, model.indexPath, "writer-a") {
-      val input = MemoryStream[(Long, Seq[Float])]
-      input.addData(rows)
-      val q = Streams.codesIngestSink(
-        input.toDF().toDF("vec_id", "embedding"), model, ckpt).start()
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-        if (q.exception.isDefined) throw q.exception.get
-      }
-      def causes(t: Throwable): Seq[Throwable] =
-        if (t == null) Nil else t +: causes(t.getCause)
-      assert(causes(e).exists(
-          _.isInstanceOf[graft.sources.Sinks.ConcurrentWriterException]),
-        s"expected ConcurrentWriterException in cause chain, got: $e")
-      q.stop()
-    }
-    assert(graft.operators.CodesIndex.readIndex(spark, model).count() === before,
-      "losing writer must not mutate the index")
-    // with the lease free, the same stream replays its batch and lands it
-    val input2 = MemoryStream[(Long, Seq[Float])]
-    input2.addData(rows)
-    val q2 = Streams.codesIngestSink(
-      input2.toDF().toDF("vec_id", "embedding"), model, ckpt).start()
-    q2.processAllAvailable()
-    assert(q2.exception.isEmpty, s"replay after lease release failed: ${q2.exception}")
-    q2.stop()
-    assert(graft.operators.CodesIndex.readIndex(spark, model).count() === before + rows.size)
+  /** Run `body` with `other`, another writer, committing on the table at
+    * `root` from the same version as the first commit that reaches its
+    * `"staged"` point: that commit must lose.
+    */
+  private def racedAtStaged(root: String)(other: => Unit)(body: => Unit): Unit = {
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val path = new org.apache.hadoop.fs.Path(root)
+    graft.sources.Sinks.crashPoint = (p, d) =>
+      if (p == "staged" && d == path && fired.compareAndSet(false, true)) other
+    try body finally graft.sources.Sinks.crashPoint = (_, _) => ()
+    assert(fired.get, s"no commit on $root reached its staged point")
   }
+
+  /** Start a sink on `rows` and expect its micro-batch to fail with a
+    * ConcurrentWriterException in the cause chain.
+    */
+  private def expectConcurrentWriter(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+      if (q.exception.isDefined) throw q.exception.get
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(e).exists(
+        _.isInstanceOf[graft.sources.Sinks.ConcurrentWriterException]),
+      s"expected ConcurrentWriterException in cause chain, got: $e")
+    q.stop()
+  }
+
+  for (sink <- Seq("codes", "auto", "sharded"))
+    test("a second concurrent ingest writer on one index fails safe (snapshot commit" +
+        (if (sink == "codes") ")" else s", $sink sink)")) {
+      implicit val sqlCtx = spark.sqlContext
+      import graft.operators.{CodesIndex, Ivf}
+      val emb = Tables.embeddings(spark, sfDir)
+      val base = emb.filter($"vec_id" % 5 =!= 0)
+      val winner = emb.filter($"vec_id" % 10 === 5)
+      type Start = (org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]
+      val (indexes, start, win): (Seq[Ivf.IvfModel], Start, () => Unit) = sink match {
+        case "sharded" =>
+          val m = Ivf.buildShardedIndex(sfDir + "#race-sharded", base, nShards = 2, nlist = 4)
+          (m.shards, Streams.ivfShardedIngestSink(_, m, _),
+            () => CodesIndex.appendToShardedIndexIdempotent(m, winner, 1000L))
+        case _ =>
+          val m = Ivf.buildIndex(sfDir + s"#race-$sink", base, nlist = 8)
+          (Seq(m), if (sink == "auto") Streams.ivfIngestSinkAuto(_, m, _,
+              compactAboveFiles = 2, rebalanceAboveRatio = 1.01)
+            else Streams.codesIngestSink(_, m, _),
+            () => CodesIndex.appendToIndexIdempotent(m, winner, 1000L))
+      }
+      def ids() = indexes.flatMap(m => CodesIndex.readIndex(spark, m)
+        .select("vec_id").as[Long].collect()).toSet
+      def count() = indexes.map(CodesIndex.readIndex(spark, _).count()).sum
+      val before = ids()
+      val winnerIds = winner.select("vec_id").as[Long].collect().toSet
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-race-c").toString
+      val rows = emb.filter($"vec_id" % 10 === 0).select("vec_id", "embedding")
+        .as[(Long, Seq[Float])].collect().toSeq
+      // another writer commits from the version the stream's batch read: the
+      // batch fails LOUDLY at its commit, and only the winner's rows land
+      racedAtStaged(indexes.head.indexPath)(win()) {
+        val input = MemoryStream[(Long, Seq[Float])]
+        input.addData(rows)
+        expectConcurrentWriter(start(input.toDF().toDF("vec_id", "embedding"), ckpt).start())
+      }
+      assert(ids() === before ++ winnerIds, "the losing batch must not reach the index")
+      // a restart on the same checkpoint replays the batch and lands it once
+      val input2 = MemoryStream[(Long, Seq[Float])]
+      input2.addData(rows)
+      val q2 = start(input2.toDF().toDF("vec_id", "embedding"), ckpt).start()
+      q2.processAllAvailable()
+      assert(q2.exception.isEmpty, s"replay after the lost commit failed: ${q2.exception}")
+      q2.stop()
+      assert(ids() === before ++ winnerIds ++ rows.map(_._1))
+      assert(count() === before.size + winnerIds.size + rows.size)
+    }
+
+  for (positional <- Seq(false, true))
+    test(s"a second concurrent ${if (positional) "positional-postings" else "postings"} " +
+        "writer fails safe (snapshot commit)") {
+      implicit val sqlCtx = spark.sqlContext
+      import graft.operators.Bm25
+      val docs = Tables.documents(spark, sfDir)
+      val key = s"$sfDir#postings-race-spec-$positional"
+      def store(k: String, d: org.apache.spark.sql.DataFrame) =
+        if (positional) Bm25.materializedPositionalPostings(k, d)
+        else Bm25.materializedPostings(k, d)
+      def rowsOf(k: String, d: org.apache.spark.sql.DataFrame) =
+        store(k, d).collect().map(_.toSeq).toSet
+      val base = docs.filter($"doc_id" % 3 === 0)
+      store(key, base)
+      val path = (if (positional) Bm25.posStorePath(key) else Bm25.storePath(key)).get
+      val winner = docs.filter($"doc_id" % 3 === 2)
+      def append(d: org.apache.spark.sql.DataFrame, b: Long) =
+        if (positional) Bm25.appendPositionalPostings(key, d, b)
+        else Bm25.appendPostings(key, d, b)
+      def start(d: org.apache.spark.sql.DataFrame, ckpt: String) =
+        if (positional) Streams.phraseIngestSink(d, key, ckpt)
+        else Streams.bm25IngestSink(d, key, ckpt)
+      val rows = docs.filter($"doc_id" % 3 === 1)
+        .select("doc_id", "text").as[(Long, String)].collect().toSeq
+      val ckpt = java.nio.file.Files.createTempDirectory("bm25-race-c").toString
+      racedAtStaged(path)(append(winner, 1000L)) {
+        val input = MemoryStream[(Long, String)]
+        input.addData(rows)
+        expectConcurrentWriter(start(input.toDF().toDF("doc_id", "text"), ckpt).start())
+      }
+      assert(rowsOf(key, base) === rowsOf(key + "#scratch", docs.filter($"doc_id" % 3 =!= 1)),
+        "the losing batch must not reach the store")
+      val input2 = MemoryStream[(Long, String)]
+      input2.addData(rows)
+      val q2 = start(input2.toDF().toDF("doc_id", "text"), ckpt).start()
+      q2.processAllAvailable()
+      assert(q2.exception.isEmpty, s"replay after the lost commit failed: ${q2.exception}")
+      q2.stop()
+      assert(rowsOf(key, base) === rowsOf(key + "#scratch", docs))
+      assert(store(key, base).count() === store(key + "#scratch", docs).count())
+    }
 
   test("streaming PQ ingest grows the codes table to the frozen-encode union") {
     implicit val sqlCtx = spark.sqlContext
