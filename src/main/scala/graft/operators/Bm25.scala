@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DataType, StructType}
 import graft.functions.VectorOps
-import graft.sources.{Sinks, Snapshot}
+import graft.sources.Snapshot
 
 /** BM25 lexical retrieval + hybrid (reciprocal-rank) fusion — the text-side
   * retrieval twin of the ANN stack, closing the standard hybrid-RAG pair:
@@ -130,8 +129,7 @@ object Bm25 {
         table, "build", Snapshot.Data, listed = false)
     }
     val s = Snapshot.latest(spark, path).get
-    Snapshot.read(spark, s, Snapshot.Data,
-      DataType.fromJson(s.model(1).stripPrefix("schema ")).asInstanceOf[StructType])
+    Snapshot.read(spark, s, Snapshot.Data, Snapshot.schema(s))
   }
 
   /** Commit `batch` to the `tag` store of `storeKey` as `append-<batchId>`,
@@ -145,10 +143,8 @@ object Bm25 {
       throw new IllegalArgumentException(s"no materialized $tag store under " +
         s"key '$storeKey' — build the base first"))
     graft.MutationGuard.claim(path)
-    val base = Snapshot.latest(batch.sparkSession, path).get
-    if (!base.batches(s"append-$batchId"))
-      Snapshot.append(base, if (Sinks.onePartition(batch)) batch else batch.repartition(1),
-        s"ingest-$batchId", Snapshot.Data, listed = false, Some(s"append-$batchId"))
+    Snapshot.appendOnce(Snapshot.latest(batch.sparkSession, path).get, batchId,
+      listed = false)(batch)
   }
 
   /** Exact phrase retrieval over positional postings — the lexical

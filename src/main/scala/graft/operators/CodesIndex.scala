@@ -231,10 +231,6 @@ object CodesIndex {
     */
   private[operators] def modelOf(s: Snapshot): CodesModel[Layout] = {
     val head = s.model.head.split(" ")
-    val schema = s.model.lift(1).filter(_.startsWith("schema "))
-      .map(l => DataType.fromJson(l.stripPrefix("schema ")).asInstanceOf[StructType])
-      .getOrElse(throw new IllegalStateException(
-        s"${s.root} v${s.version} records no table schema; rebuild the index"))
     val body = s.model.drop(2).filter(_.nonEmpty)
     val coarse = body.find(_.startsWith("coarse ")).map { l =>
       val Array(_, nlist, iters) = l.split(" ")
@@ -250,7 +246,7 @@ object CodesIndex {
       case "sq" => Sq.SqCodec.parse(params, body)
       case other => throw new IllegalStateException(s"${s.root}: unknown layout $other")
     }
-    CodesModel(layout, coarse, s.root, schema)
+    CodesModel(layout, coarse, s.root, Snapshot.schema(s))
   }
 
   /** The committed model of an index, if it has a snapshot; it reflects
@@ -371,8 +367,8 @@ object CodesIndex {
   /** Replay-idempotent append, the exactly-once form for streaming ingest:
     * a batch whose id the newest snapshot records as absorbed is a no-op
     * (also after a compaction folded its files, or a re-balance moved its
-    * rows). Otherwise it is written by one task (`repartition(1)` unless
-    * [[graft.sources.Sinks.onePartition]]): one `ingest-<batchId>` file
+    * rows). Otherwise it is written by one task
+    * ([[graft.sources.Snapshot.appendOnce]]): one `ingest-<batchId>` file
     * per touched list, encoded with the model of the snapshot it commits
     * on, as [[appendToIndex]]. A crash before the commit leaves files no
     * snapshot names; the replay's commit removes them.
@@ -381,13 +377,7 @@ object CodesIndex {
                               batchId: Long): Unit = {
     graft.MutationGuard.claim(model.indexPath)
     val base = snapshot(newBatch.sparkSession, model)
-    if (!base.batches(s"append-$batchId")) {
-      val m = modelOf(base)
-      val rows = encode(m, newBatch)
-      Snapshot.append(base, if (graft.sources.Sinks.onePartition(rows)) rows
-        else rows.repartition(1), s"ingest-$batchId", Snapshot.Data, m.coarse.isDefined,
-        Some(s"append-$batchId"))
-    }
+    Snapshot.appendOnce(base, batchId, model.coarse.isDefined)(encode(modelOf(base), newBatch))
   }
 
   /** DELETE: the batch's ids land exactly-once as `tomb-<batchId>` files

@@ -154,12 +154,19 @@ object Sinks {
       : Option[DataFrame] = {
     val fs = fileSystem(spark, tableDir)
     val target = new org.apache.hadoop.fs.Path(tableDir)
-    val staging = new org.apache.hadoop.fs.Path(tableDir + stagingSuffix)
+    completeSwap(fs, new org.apache.hadoop.fs.Path(tableDir + stagingSuffix), target)
+    if (fs.exists(target)) Some(spark.read.parquet(tableDir)) else None
+  }
+
+  /** Finish a [[swapDirs]] of `staging` onto `target` that a crash cut
+    * between its delete and its rename.
+    */
+  private def completeSwap(fs: org.apache.hadoop.fs.FileSystem,
+                           staging: org.apache.hadoop.fs.Path,
+                           target: org.apache.hadoop.fs.Path): Unit =
     if (!fs.exists(target) && fs.exists(staging) && !fs.rename(staging, target))
       throw new java.io.IOException(
         s"recovering interrupted swap: rename $staging -> $target failed")
-    if (fs.exists(target)) Some(spark.read.parquet(tableDir)) else None
-  }
 
   /** Data files directly under `dir`, without `_SUCCESS` / `.crc` files. */
   private[graft] def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
@@ -271,12 +278,7 @@ object Sinks {
     val stage = new org.apache.hadoop.fs.Path(staging)
     if (fs.exists(stage)) {
       fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith(s"$partCol="))
-        .foreach { p =>
-          val target = new org.apache.hadoop.fs.Path(targetPath, p.getName)
-          if (!fs.exists(target) && !fs.rename(p, target))
-            throw new java.io.IOException(
-              s"recovering interrupted swap: rename $p -> $target failed")
-        }
+        .foreach(p => completeSwap(fs, p, new org.apache.hadoop.fs.Path(targetPath, p.getName)))
       fs.delete(stage, true)
     }
     val touchedRaw = updates.select(col(partCol).cast("string")).distinct()

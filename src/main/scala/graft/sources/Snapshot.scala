@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitionPa
   PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One committed version of a table graft maintains incrementally: an
   * ANN index or a BM25 postings store. A table is a directory of
@@ -36,6 +36,16 @@ object Snapshot {
 
   /** The version a table's first commit ([[commit]] of this) gets is 1. */
   def empty(root: String): Snapshot = Snapshot(root, 0L, Nil, Nil, Set.empty)
+
+  /** The table schema `s` records in its `schema <json>` model line, the
+    * one after the tag line. A snapshot without one fails (rebuild the
+    * table: readers never infer).
+    */
+  def schema(s: Snapshot): StructType =
+    s.model.lift(1).filter(_.startsWith("schema "))
+      .map(l => DataType.fromJson(l.stripPrefix("schema ")).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(
+        s"${s.root} v${s.version} records no table schema; rebuild the table"))
 
   private def dir(root: String): Path = new Path(root, "_snapshots")
 
@@ -176,6 +186,19 @@ object Snapshot {
     commit(rows.sparkSession, base.copy(
       files = base.files ++ write(rows, base, name, kind, listed),
       batches = base.batches ++ batch))
+
+  /** [[append]] `rows` on `base` as batch `append-<batchId>`, written by one
+    * task (`repartition(1)` unless [[Sinks.onePartition]]) as
+    * `ingest-<batchId>` files, unless `base` has absorbed the batch: a
+    * replay is a no-op, and `rows` is not evaluated.
+    */
+  private[graft] def appendOnce(base: Snapshot, batchId: Long, listed: Boolean)
+                               (rows: => DataFrame): Unit =
+    if (!base.batches(s"append-$batchId")) {
+      val r = rows
+      append(base, if (Sinks.onePartition(r)) r else r.repartition(1), s"ingest-$batchId",
+        Data, listed, Some(s"append-$batchId"))
+    }
 
   /** The snapshot's `kind` files as a DataFrame of `schema` (`list` is the
     * partition column), its file index fed from the snapshot as Spark's

@@ -228,9 +228,9 @@ object Streams {
     * micro-batch tokenizes positionally (batch-proportional — positions
     * are per-document offsets, so no cross-batch state exists) and lands
     * in the materialized positional store via the idempotent append verb,
-    * with the same snapshot commit. A phrase probe after any batch ranks exactly as a from-scratch build
-    * over the rows ingested so far (append ≡ rebuild — StreamingSpec
-    * parity, the text_phrase_incr law streamed).
+    * with the same snapshot commit. A phrase probe after any batch ranks
+    * exactly as a from-scratch build over the rows ingested so far (append
+    * ≡ rebuild — StreamingSpec parity, the text_phrase_incr law streamed).
     */
   def phraseIngestSink(docs: DataFrame, storeKey: String,
                        checkpointDir: String): DataStreamWriter[Row] =

@@ -983,7 +983,7 @@ class StreamingSpec extends SparkSpec {
     assert(fired.get, s"no commit on $root reached its staged point")
   }
 
-  /** Start a sink on `rows` and expect its micro-batch to fail with a
+  /** Run the started sink `q` and expect its micro-batch to fail with a
     * ConcurrentWriterException in the cause chain.
     */
   private def expectConcurrentWriter(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
