@@ -3,7 +3,8 @@
 verdicts for every end-to-end metric.
 
     python3 dev/bench_pairs.py --parent DIR --change DIR \
-        --workload sales_landing --seeds 31-40 [--out pairs.jsonl]
+        --workload sales_landing --seeds 31-40 [--confirm 41-50] \
+        [--out pairs.jsonl]
 
 DIR is a checkout of each commit (for example `git archive HEAD | tar -x
 -C DIR`). For each seed, `bench/run.py --trace 0` runs once in each
@@ -24,6 +25,12 @@ wins over the pairs (ties count for neither side) and two verdicts:
          is better than every parent run.
 A pair where either run failed or reported correct=false is dropped from
 the medians, wins and verdicts, and counted as a failure of that side.
+
+--confirm runs a second seed range after the first. One range can pass
+the gain rule on drift between runs, so with --confirm "gain yes" needs
+the rule to pass on each range alone; the wins column then reads
+"<first range> + <confirm range>". Medians, quartiles and the bound
+verdict are over the pairs of both ranges.
 --out appends one JSON line per run (side, seed, order, result).
 """
 import argparse
@@ -82,21 +89,13 @@ def verdicts(pv, cv, direction, bound):
     return pm, cm, wins, gain, limit
 
 
-def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--parent", required=True)
-    ap.add_argument("--change", required=True)
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", required=True)
-    ap.add_argument("--out")
-    a = ap.parse_args()
-    with open(os.path.join(a.change, "BENCHMARK.json")) as fh:
-        spec = json.load(fh)
-    metrics = {m["name"]: m for m in spec["end_to_end"]}
+def run_pairs(a, spec, metrics, seed_list):
+    """Per side, each metric's values over the kept pairs, and the count of
+    failed or incorrect runs."""
     sides = {"parent": a.parent, "change": a.change}
     values = {s: {m: [] for m in metrics} for s in sides}
     failed = {s: 0 for s in sides}
-    for i, seed in enumerate(seeds(a.seeds)):
+    for i, seed in enumerate(seed_list):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         res = {s: run(sides[s], a.workload, seed, spec["run_seconds"])
                for s in order}
@@ -120,26 +119,51 @@ def main():
             f"{m} {res['parent']['metrics'][m]['value']:.4g}->"
             f"{res['change']['metrics'][m]['value']:.4g}" for m in metrics),
             flush=True)
-    pairs = len(values["parent"][next(iter(metrics))])
-    print(f"\n{a.workload}: {pairs} pairs; failed or incorrect runs: "
+    return values, failed
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--parent", required=True)
+    ap.add_argument("--change", required=True)
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True)
+    ap.add_argument("--confirm", help="a second seed range the gain rule "
+                    "must also pass on")
+    ap.add_argument("--out")
+    a = ap.parse_args()
+    with open(os.path.join(a.change, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    metrics = {m["name"]: m for m in spec["end_to_end"]}
+    ranges = [a.seeds] + ([a.confirm] if a.confirm else [])
+    runs = [run_pairs(a, spec, metrics, seeds(r)) for r in ranges]
+    first = next(iter(metrics))
+    counts = [len(values["parent"][first]) for values, _ in runs]
+    failed = {s: sum(f[s] for _, f in runs) for s in ("parent", "change")}
+    print(f"\n{a.workload}: {' + '.join(map(str, counts))} pairs "
+          f"(seeds {' + '.join(ranges)}); failed or incorrect runs: "
           f"parent {failed['parent']}, change {failed['change']}")
-    if not pairs:
+    if not all(counts):
         sys.exit(1)
     print(f"{'metric':<16} {'parent median [q1, q3]':>30} "
-          f"{'change median [q1, q3]':>30} {'delta':>8} {'wins':>6} "
+          f"{'change median [q1, q3]':>30} {'delta':>8} {'wins':>13} "
           f"{'gain':>5} {'bound':>10}")
-    more_failed = failed["change"] > failed["parent"]
     for m, spec_m in metrics.items():
-        pv, cv = values["parent"][m], values["change"][m]
-        pm, cm, wins, gain, limit = verdicts(pv, cv, spec_m["better"],
-                                             spec_m["bound"])
-        gain = gain and not more_failed
+        per = [verdicts(v["parent"][m], v["change"][m], spec_m["better"],
+                        spec_m["bound"]) for v, _ in runs]
+        gain = all(g and f["change"] <= f["parent"]
+                   for (_, _, _, g, _), (_, f) in zip(per, runs))
+        wins = " + ".join(f"{w}/{n}" for (_, _, w, _, _), n in
+                          zip(per, counts))
+        pv = [x for v, _ in runs for x in v["parent"][m]]
+        cv = [x for v, _ in runs for x in v["change"][m]]
+        pm, cm, _, _, limit = verdicts(pv, cv, spec_m["better"],
+                                       spec_m["bound"])
         (pq1, pq3), (cq1, cq3) = quartiles(pv), quartiles(cv)
         delta = (cm / pm - 1) * 100 if pm else 0.0
         print(f"{m:<16} {f'{pm:.4g} [{pq1:.4g}, {pq3:.4g}]':>30} "
               f"{f'{cm:.4g} [{cq1:.4g}, {cq3:.4g}]':>30} {delta:>+7.1f}% "
-              f"{f'{wins}/{pairs}':>6} {'yes' if gain else 'no':>5} "
-              f"{limit:>10}")
+              f"{wins:>13} {'yes' if gain else 'no':>5} {limit:>10}")
 
 
 if __name__ == "__main__":

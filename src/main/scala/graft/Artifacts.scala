@@ -100,6 +100,12 @@ object Artifacts {
       })._2.asInstanceOf[V]
   }
 
+  /** Whether [[replacing]] holds the value of (`tag`, `key`) built under
+    * `token`: a call with it would not build.
+    */
+  def holds(tag: String, key: String, token: Seq[String]): Boolean =
+    Option(replaceable.get((tag, key))).exists(_._1 == token)
+
   /** Per caller key, the number of values `tag` holds now. */
   def held(tag: String): Map[String, Int] = {
     import scala.jdk.CollectionConverters._

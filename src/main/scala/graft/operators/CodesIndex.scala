@@ -477,21 +477,23 @@ object CodesIndex {
     * flat) — with a broadcast join and partial aggregation. `allowed`
     * (filtered search) semi-joins BEFORE the ADC ranking, so excluded
     * vectors never consume rerank slots. The re-rank scores against the
-    * collected query as a literal, as [[Ivf.probeWithVec]] does.
+    * query vector ([[Ivf.queryVec]]) as a literal, as [[Ivf.probeWithVec]]
+    * does, which also ranks with the model of the snapshot the probe reads.
     */
   def probe(model: CodesModel[Codec], embeddings: DataFrame, queryVecId: Long,
             k: Int, nprobe: Int = 4, rerank: Int = 50,
             allowed: Option[DataFrame] = None): DataFrame = {
     val spark = embeddings.sparkSession
     val qVec = Ivf.queryVec(embeddings, queryVecId)
-    val probes = model.coarse.fold(Seq((0, 0L, qVec)))(probedLists(_, qVec, nprobe))
-    val lut = model.layout.lut(spark, probes)
-    val live = liveRows(spark, model, model.coarse.map(_ => probes.map(_._1)))
+    val snap = snapshot(spark, model)
+    val m = modelOf(snap).asInstanceOf[CodesModel[Codec]]
+    val probes = m.coarse.fold(Seq((0, 0L, qVec)))(probedLists(_, qVec, nprobe))
+    val lut = m.layout.lut(spark, probes)
+    val live = liveRows(spark, m, m.coarse.map(_ => probes.map(_._1)), Some(snap))
       .filter(col("vec_id") =!= queryVecId)
     val codes = allowed.fold(live)(a =>
       live.join(a.select("vec_id").distinct(), Seq("vec_id"), "left_semi"))
-    val cand = adc(model, codes,
-        if (model.coarse.isDefined) lut else lut.drop("list", "baseq"), Nil)
+    val cand = adc(m, codes, if (m.coarse.isDefined) lut else lut.drop("list", "baseq"), Nil)
       .orderBy(desc("adcq"), col("vec_id"))
       .limit(rerank)
     // the exact widening of the stored floats: the same VecDot products

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.VectorOps
-import graft.sources.Snapshot
+import graft.sources.{PointLookup, Snapshot}
 import CodesIndex.{Coarse, CodesModel, DotScale, Layout, ShardedModel, VecScale}
 
 /** IVF (inverted-file) approximate nearest neighbor over `embeddings` —
@@ -214,8 +214,9 @@ object Ivf {
     * (tiny) quantizer — the same quantized score as [[assignList]], so the
     * SQL oracle reproduces it — and the corpus scan reads ONLY the probed
     * list directories of the materialized index (partition pruning), plus
-    * an exact cosine re-rank of the candidates. Two jobs: the query-vector
-    * collect ([[queryVec]]) and the result; see [[probeWithVec]].
+    * an exact cosine re-rank of the candidates. Over a bare parquet
+    * `embeddings` table one job, the result: [[queryVec]] reads the query
+    * vector on the driver. See [[probeWithVec]].
     */
   def probe(model: IvfModel, embeddings: DataFrame, queryVecId: Long,
             k: Int, nprobe: Int = 4,
@@ -223,11 +224,19 @@ object Ivf {
     probeWithVec(model, embeddings.sparkSession, queryVec(embeddings, queryVecId),
       k, nprobe, exclude = Some(queryVecId), allowed = allowed)
 
-  /** The stored embedding of `queryVecId` as doubles — one collect. */
+  /** The stored embedding of `queryVecId` as doubles: a driver-side point
+    * lookup ([[graft.sources.PointLookup]]) when `embeddings` is a bare
+    * parquet table and the id names exactly one row, else one
+    * filter-and-collect job. An id no row has fails with an
+    * `IllegalArgumentException` naming it.
+    */
   private[graft] def queryVec(embeddings: DataFrame, queryVecId: Long): Array[Double] =
-    embeddings.filter(col("vec_id") === queryVecId)
-      .select(transform(col("embedding"), _.cast("double")).as("e"))
-      .collect()(0).getSeq[Double](0).toArray
+    PointLookup.vector(embeddings, queryVecId).getOrElse(
+      embeddings.filter(col("vec_id") === queryVecId)
+        .select(transform(col("embedding"), _.cast("double")).as("e"))
+        .collect().headOption.getOrElse(throw new IllegalArgumentException(
+          s"no stored vector has vec_id $queryVecId"))
+        .getSeq[Double](0).toArray)
 
   /** [[probe]]'s query-vector form — the composition primitive for chains
     * whose query does not live in the probed table (two-stage retrieval
@@ -242,6 +251,10 @@ object Ivf {
     * array literal (the same floats, the same `VecDot` loop, its norm
     * constant-folded), and up to [[CodesIndex.MaskedTombstones]] tombstoned
     * ids are a memoized `NOT IN` filter ([[CodesIndex.liveRows]]).
+    *
+    * Lists are ranked with the model of the snapshot the probe reads, not
+    * the caller's `model` (which names the index): a model held across a
+    * [[rebalanceIndex]] probes the committed lists.
     */
   private[graft] def probeWithVec(model: IvfModel,
                                   spark: SparkSession,
@@ -249,8 +262,10 @@ object Ivf {
                                   exclude: Option[Long] = None,
                                   allowed: Option[DataFrame] = None,
                                   indexFilter: Option[Column] = None): DataFrame = {
-    val probes = rankLists(model.coarse.get.centroids, qVec).take(nprobe).map(_._1)
-    val live0 = CodesIndex.liveRows(spark, model, Some(probes.toIndexedSeq))
+    val snap = CodesIndex.snapshot(spark, model)
+    val m = CodesIndex.modelOf(snap)
+    val probes = rankLists(m.coarse.get.centroids, qVec).take(nprobe).map(_._1)
+    val live0 = CodesIndex.liveRows(spark, m, Some(probes.toIndexedSeq), Some(snap))
     val live1 = exclude.fold(live0)(id => live0.filter(col("vec_id") =!= id))
     val live = indexFilter.fold(live1)(live1.filter)
     // filtered search: the allow-list semi-joins BEFORE the ranking (a

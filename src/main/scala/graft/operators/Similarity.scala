@@ -86,9 +86,10 @@ object Similarity {
     * (asserted in IvfSpec); pruned, it is the composition a real serving
     * stack runs. Same output shape and zero-norm→NULL law.
     */
-  /** SERVING NOTE: this single-query form carries ~1–1.4 s of fixed
-    * driver overhead (two bounded collects + two probe plans — measured,
-    * BASELINE.md round-11); batch callers should use
+  /** SERVING NOTE: this single-query form carries fixed driver overhead
+    * (the query vector — a driver-side lookup over a bare parquet table,
+    * else a collect — one bounded collect and two probe plans; ~1–1.4 s
+    * with two collects, BASELINE.md round-11); batch callers should use
     * [[topKTwoStageIvfAll]], which amortizes it to ~0.026 s/query by
     * fanning every query through one keyed plan.
     */

@@ -98,9 +98,10 @@ class CodesIndexSpec extends SparkSpec {
       val jobs = InferenceJobs.launched(spark) {
         df = CodesIndex.probe(model, emb, 0L, 10); df.collect()
       }
-      // the query-vector collect, the LUT broadcast, the ADC shuffle, the
-      // top-`rerank` broadcast into the re-rank join, and the result
-      assert(jobs.size === 5, s"jobs: ${jobs.mkString(", ")}")
+      // the LUT broadcast, the ADC shuffle, the top-`rerank` broadcast into
+      // the re-rank join, and the result: the query vector is a
+      // driver-side lookup
+      assert(jobs.size === 4, s"jobs: ${jobs.mkString(", ")}")
       assert(PlansSpec.broadcastsAndAntiJoins(df).filterNot(_ == "BroadcastExchange").isEmpty,
         df.queryExecution.executedPlan)
     }

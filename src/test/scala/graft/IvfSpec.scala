@@ -757,7 +757,7 @@ class IvfSpec extends SparkSpec {
     assert(unlabelled.filter($"label".isNotNull).isEmpty)
   }
 
-  test("a probe over memoized tombstones runs two jobs and broadcasts nothing") {
+  test("a probe over memoized tombstones runs one job and broadcasts nothing") {
     val model = Ivf.buildIndex(sfDir + "#twojobs", emb.filter($"vec_id" % 5 =!= 0), nlist = 8)
     CodesIndex.appendToIndexIdempotent(model, emb.filter($"vec_id" % 5 === 0), 1L)
     CodesIndex.deleteFromIndex(model, emb.filter($"vec_id" % 3 === 1).select("vec_id"), 2L)
@@ -768,9 +768,44 @@ class IvfSpec extends SparkSpec {
     Ivf.probe(model, emb, 0L, 10).collect() // fills the tombstone memo
     var df: org.apache.spark.sql.DataFrame = null
     val jobs = InferenceJobs.launched(spark) { df = Ivf.probe(model, emb, 0L, 10); df.collect() }
-    // the query-vector collect and the result
-    assert(jobs.size === 2, s"jobs: ${jobs.mkString(", ")}")
+    // the result: the query vector is a driver-side lookup
+    assert(jobs.size === 1, s"jobs: ${jobs.mkString(", ")}")
     assert(PlansSpec.broadcastsAndAntiJoins(df).isEmpty, df.queryExecution.executedPlan)
+  }
+
+  test("ragContextIvf over a parquet table: two jobs retrieve, one before the packing plan") {
+    val docs = Tables.documents(spark, sfDir)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivfrag").toString + "/emb"
+    operators.Embed.hashedTf(docs).write.parquet(dir)
+    val docEmb = spark.read.parquet(dir)
+    val docModel = Ivf.buildIndex(sfDir + "#ragjobs", docEmb)
+    val (chunkModel, _) = operators.CorpusIndex.buildChunkIndex(sfDir + "#tschunk", docs)
+    val texts = operators.Curation.chunk(docs.select("doc_id", "text"), 64, 8)
+      .select(operators.CorpusIndex.chunkKey($"doc_id", $"chunk_no").as("vec_id"), $"chunk_text")
+    def rag = Similarity.ragContextIvf(docModel, docEmb, chunkModel, texts, 0L,
+      coarseK = 5, poolK = 10, tokenBudget = 300L)
+    val want = rag.collect()
+    // the two-stage retrieval: the coarse cut's collect and the result
+    val retrieve = InferenceJobs.launched(spark)(Similarity.topKTwoStageIvf(docModel, docEmb,
+      chunkModel, 0L, coarseK = 5, k = 10).collect())
+    assert(retrieve.size === 2, s"jobs: ${retrieve.mkString(", ")}")
+    // building the packing plan runs only the coarse cut's collect
+    var df: org.apache.spark.sql.DataFrame = null
+    val built = InferenceJobs.launched(spark) { df = rag }
+    assert(built.size === 1, s"jobs: ${built.mkString(", ")}")
+    assert(df.collect().toSeq === want.toSeq && want.nonEmpty)
+  }
+
+  test("a probe through a model held from before a re-balance equals one through the committed model") {
+    val held = Ivf.buildIndex(sfDir + "#staleprobe", emb, nlist = 8)
+    val m2 = Ivf.rebalanceIndex(spark, held, maxRatio = 1.01)
+    assert((held.coarse.get.centroids.map(_._1).toSet -- m2.coarse.get.centroids.map(_._1)).nonEmpty,
+      "no list was split")
+    val cur = CodesIndex.currentModel(spark, held)
+    (0L until 5L).foreach { q =>
+      assert(Ivf.probe(held, emb, q, 10, nprobe = 2).as[(Long, Double)].collect().toSeq ===
+        Ivf.probe(cur, emb, q, 10, nprobe = 2).as[(Long, Double)].collect().toSeq, s"query $q")
+    }
   }
 
   test("a probe masks up to MaskedTombstones tombstoned ids; one more takes the anti-join") {
